@@ -2,7 +2,9 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+  Project, Sort}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.SceneCatalog
@@ -59,7 +61,7 @@ object StepRunner {
   def runStep(spark: SparkSession, cat: SceneCatalog, step: SceneStep,
               parallelism: Int, audit: Option[AuditLog] = None): (Long, Long) = {
     import spark.implicits._
-    val work = step.workList(cat).select("PID").as[Long]
+    val work = unordered(spark, step.workList(cat).select("PID")).as[Long]
     val results = work
       .repartition(parallelism)
       .mapPartitions { pids => step.processPartition(pids) }
@@ -83,6 +85,25 @@ object StepRunner {
     audit.foreach(_.append(step.name, s"processed=$nTotal ok=$nOk"))
     results.unpersist()
     (nTotal, nOk)
+  }
+
+  /** `df` without the global sorts at the top of its plan: the
+    * work-list selectors keep the reference's order for callers that
+    * read them (SceneCatalog.scnlist*), but [[runStep]] repartitions
+    * the list round-robin, which discards any order — and a global
+    * sort costs a range-partition sampling job plus a shuffle. Only
+    * sorts reached through deterministic projections and filters are
+    * dropped; a sort under a limit or an aggregate keeps deciding
+    * which rows the list holds.
+    */
+  private def unordered(spark: SparkSession, df: DataFrame): DataFrame = {
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case s: Sort if s.global => strip(s.child)
+      case u @ (_: Project | _: Filter) if u.expressions.forall(_.deterministic) =>
+        u.withNewChildren(Seq(strip(u.children.head)))
+      case other => other
+    }
+    GraftPlanBridge.ofRows(spark, strip(df.queryExecution.analyzed))
   }
 
   /** Ordered multi-step run (download → ard → … as in

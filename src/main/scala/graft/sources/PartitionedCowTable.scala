@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, StructType,
@@ -22,8 +22,11 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   * table — unchanged bytes are shared across versions, the same
   * file-re-listing idea as Delta/Iceberg, without the dependency.
   *
-  * Layout: `<root>/w_<n>/__part=<value>/part-*.parquet` (data; one
-  * Spark job per commit via `partitionBy`), `<root>/v_<n>.json`
+  * Layout: `<root>/w_<n>/__part=<value>/part-*.parquet` (data,
+  * written by `partitionBy` into a `_stage_<uuid>` dir and renamed
+  * into place — a write stages its delta first and reads the touched
+  * partitions off the stage's listing, see [[commit]]),
+  * `<root>/v_<n>.json`
   * (manifest: partitions + schema DDL), `<root>/_current` (atomic
   * pointer). Readers follow `_current` → manifest → dirs, so a
   * crashed writer never tears the table and re-runs are idempotent
@@ -53,7 +56,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
                           val bloomColumns: Seq[String] = Seq.empty)
     extends VersionedTable {
 
-  import PartitionedCowTable.Entry
+  import PartitionedCowTable.{Entry, HiveSentinel}
 
   private val mapper = new ObjectMapper()
 
@@ -295,27 +298,31 @@ class PartitionedCowTable(val root: String, val partCol: String,
     }.toMap
   }
 
-  /** Align a caller frame to the committed schema: columns added by
-    * [[evolveSchema]] that the frame lacks materialize their default
-    * (or null); columns the schema doesn't know fail loudly. Applied
-    * at every mutation entry point so unions against table reads are
-    * shape-safe after an evolve.
+  /** Align a caller frame to version `v`'s committed schema: columns
+    * added by [[evolveSchema]] that the frame lacks materialize their
+    * default (or null); a column of another type is cast to the
+    * committed one (ANSI casts fail loudly on a value that does not
+    * fit); columns the schema doesn't know fail loudly. Applied at
+    * every mutation entry point, so the delta a commit stages and the
+    * table rows it carries beside it share one file schema.
     */
-  private def conformInput(df: DataFrame): DataFrame = {
-    if (!exists) return df
-    val target = schemaAt(requireVersion)
-    val dfl = defaultsAt(requireVersion)
+  private def conformInput(v: Int, df: DataFrame): DataFrame = {
+    val target = schemaAt(v)
+    val dfl = defaultsAt(v)
     val extra = df.columns.filterNot(target.fieldNames.contains)
     require(extra.isEmpty,
       s"commit: columns ${extra.mkString(", ")} not in the " +
         s"committed schema — use overwrite() to change the schema" +
         s" or evolveSchema() to add columns")
-    target.fields.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name,
-        dfl.get(f.name).map(v => expr(v._1)).getOrElse(lit(null))
-          .cast(f.dataType))
-    }.select(target.fieldNames.map(col): _*)
+    val have = df.schema.map(f => f.name -> f.dataType).toMap
+    df.select(target.fields.map { f =>
+      have.get(f.name) match {
+        case Some(t) if t == f.dataType => col(f.name)
+        case Some(_) => col(f.name).cast(f.dataType).as(f.name)
+        case None => dfl.get(f.name).map(d => expr(d._1)).getOrElse(lit(null))
+          .cast(f.dataType).as(f.name)
+      }
+    }.toIndexedSeq: _*)
   }
 
   /** The scans of the most recent [[readConformed]], for
@@ -727,19 +734,30 @@ class PartitionedCowTable(val root: String, val partCol: String,
 
   /** The distinct partition values present in a DataFrame — small by
     * construction (a commit touches few partitions), so the collect is
-    * bounded by partition count, not data size.
+    * bounded by partition count, not data size. Only for mutations
+    * whose touched set is NOT the data they write (a predicate's hits,
+    * an ops log's keys, migrated legacy rows); a written delta's
+    * touched set comes from its staged listing ([[stagedValues]]).
     */
-  private def touchedValues(df: DataFrame): Set[String] = {
-    val vals = df.select(col(currentPartCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    // Path-unsafe values ROUND-TRIP: partitionBy percent-escapes them
-    // into the dir name and commit's listing unescapes them back into
-    // Entry.value (escapePathName/unescapePathName are exact
-    // inverses — '%' itself is escaped), so 'a:b' or 'x%y' are fine.
-    // What can NOT round-trip is null and the empty string — Spark
-    // writes BOTH as the __HIVE_DEFAULT_PARTITION__ sentinel dir, so
-    // the raw value is unrecoverable (and a literal sentinel string
-    // would collide with it). Reject those loudly.
+  private def touchedValues(df: DataFrame, spec: String): Set[String] = {
+    // each task dedups its own values and the driver merges the sets:
+    // one job, where distinct() is two under AQE (its map stage, then
+    // its result stage)
+    val vals = df.select(col(spec).cast("string")).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
+    refuseUnroundtrippable(vals)
+    vals
+  }
+
+  // Path-unsafe values ROUND-TRIP: partitionBy percent-escapes them
+  // into the dir name and the staged listing unescapes them back into
+  // Entry.value (escapePathName/unescapePathName are exact inverses —
+  // '%' itself is escaped), so 'a:b' or 'x%y' are fine. What can NOT
+  // round-trip is null and the empty string — Spark writes BOTH as the
+  // __HIVE_DEFAULT_PARTITION__ sentinel dir, so the raw value is
+  // unrecoverable (and a literal sentinel string would collide with
+  // it). Reject those loudly.
+  private def refuseUnroundtrippable(vals: Set[String]): Unit =
     vals.foreach { v =>
       require(v != null,
         s"partition column '$partCol' contains null — not supported")
@@ -747,12 +765,92 @@ class PartitionedCowTable(val root: String, val partCol: String,
         s"partition column '$partCol' contains an empty string — " +
           s"Spark writes it as the default-partition sentinel dir, " +
           s"which cannot round-trip; not supported")
-      require(v != "__HIVE_DEFAULT_PARTITION__",
+      require(v != HiveSentinel,
         s"partition value collides with Spark's default-partition " +
           s"sentinel — not supported")
     }
+
+  /** Run one stage-first mutation: `body` gets a fresh writer-unique
+    * `_stage_<uuid>` name, stages the commit's rows there and ends in
+    * [[commit]], which claims the dir. A failure before the claim — a
+    * refused partition value, a failed job — deletes the stage, so a
+    * write that does not commit leaves nothing behind.
+    */
+  private def staging(body: String => Unit): Unit = {
+    val stage = s"_stage_${java.util.UUID.randomUUID()}"
+    try body(stage)
+    catch {
+      case e: Throwable =>
+        val p = Paths.get(root, stage)
+        if (Files.exists(p))
+          try CowTable.walkDelete(p)
+          catch { case c: Exception => e.addSuppressed(c) }
+        throw e
+    }
+  }
+
+  /** Append `rows` to the stage, one `__part=<value>` dir per value of
+    * the spec column. The first call is the ONLY evaluation of the
+    * caller's plan; a second call adds the rows that carry forward
+    * from the touched partitions (a fresh job id names each call's
+    * files, so they never collide).
+    *
+    * (Optimization-round probe, kept as a finding: hash-clustering
+    * this write by (__part, content-salt) — Iceberg's distribution-
+    * mode=hash — was measured SLOWER at gate scale (q226 5.7 → 9.6 s
+    * steady): the stage-write phase is dominated by the commit's
+    * input-side compute (the touched partitions' post-image
+    * read/union/filter), not by file fan-out, and the extra exchange
+    * + per-task writer setup cost more than the serial dynamic write
+    * saved. File-count layout remains [[compact]]'s job (targetBytes
+    * sizing), where the rewrite IS the point.)
+    */
+  private def stageRows(rows: DataFrame, spec: String, stage: String): Unit =
+    rows.withColumn("__part", col(spec).cast("string"))
+      .write.partitionBy("__part").mode("append").parquet(s"$root/$stage")
+
+  /** The raw partition values of `dir`'s `__part=` children — no job.
+    * Entry.value is ALWAYS the RAW partition value: partitionBy
+    * percent-escapes path-unsafe chars into the dir name (':' →
+    * '%3A'), so the listed name is UNESCAPED back before it is
+    * compared to anything literal-side — `touched` membership,
+    * GraftFileIndex exact pruning, deleteWhereDV's scoped attach and
+    * the zone-map stats lookup all compare raw values (a value kept
+    * escaped would silently miss every one of them). Entry.dir keeps
+    * the on-disk (escaped) name.
+    */
+  private def listParts(dir: String, spec: String): Seq[Entry] = {
+    val listing = Files.list(Paths.get(root, dir))
+    try listing.iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(_.startsWith("__part="))
+      .map(n => Entry(spec,
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(n.stripPrefix("__part=")),
+        s"$dir/$n")).toSeq
+    finally listing.close()
+  }
+
+  /** The partition values staged so far: the stage's listing, with
+    * [[touchedValues]]' refusals. Null, '' and a literal sentinel all
+    * land in the one sentinel dir; only then are that dir's rows read
+    * back, so the refusal can name which it was.
+    */
+  private def stagedValues(stage: String, spec: String): Set[String] = {
+    val vals = listParts(stage, spec).map(_.value).toSet
+    if (vals.contains(HiveSentinel))
+      touchedValues(spark.read.parquet(s"$root/$stage/__part=$HiveSentinel"),
+        spec)
+    refuseUnroundtrippable(vals)
     vals
   }
+
+  /** The staged delta's rows as written (files listed now, so rows a
+    * later [[stageRows]] call adds are not part of it).
+    */
+  private def stagedDelta(stage: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true")
+      .parquet(s"$root/$stage")
 
   /** Test seam: fires after the commit's data is staged, before the
     * claim/publish loop — the window where a competing writer's full
@@ -807,10 +905,29 @@ class PartitionedCowTable(val root: String, val partCol: String,
         !eb.get((e.pcol, e.value)).contains(e.dir)))
   }
 
-  /** Core commit: write `data` as the new content of exactly the
-    * partitions in `touched` (a touched partition absent from `data`
-    * is dropped — it became empty); carry every untouched partition
-    * from `carried`.
+  /** Core commit: publish the rows staged in `stage` as the new
+    * content of exactly the partitions in `touched` (a touched
+    * partition absent from the stage is dropped — it became empty);
+    * carry every untouched partition from `carried`.
+    *
+    * STAGE-FIRST: the caller has already written every row of the
+    * touched partitions into `stage` (see [[staging]]) — usually the
+    * delta first, read back by listing for the touched set, then the
+    * rows that carry forward — so the caller's plan is evaluated once
+    * and this method starts no job of its own except the optional
+    * zone-map and bloom passes over the written dirs.
+    *
+    * PINNED BASE: `base0` is the version the mutation snapshotted when
+    * it started; its read, its carried entries and the schema the
+    * stage was conformed to all come from that one version, and this
+    * commit publishes as its successor. A writer that commits while
+    * this one stages therefore surfaces as a version race below —
+    * rebased when sound, aborted otherwise — never as a silent
+    * overwrite.
+    *
+    * `schema` is set only by a commit that SETS the table's schema
+    * (overwrite); every other commit keeps `base0`'s schema and
+    * defaults.
     *
     * `narrowRead` declares the commit's READ SCOPE: true means the
     * caller read only the partitions it rewrites or drops (append,
@@ -835,36 +952,19 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * still never rebase: any concurrent change could invalidate what
     * they computed.
     */
-  // dev-only phase timing (GRAFT_COW_TIMING=1): the mutation paths are
-  // the scale hot path; this is how the r14 O(touched-dirs) work was
-  // measured
-  private val timing = sys.env.get("GRAFT_COW_TIMING").contains("1")
-  private def tphase[T](tag: String)(f: => T): T =
-    if (!timing) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cowcommit] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
-  private def commit(data0: DataFrame, touched: Set[String],
-                     carried: Seq[Entry],
-                     resetSchema: Boolean = false,
+  private def commit(base0: Option[Int], stage: String,
+                     touched: Set[String], carried: Seq[Entry],
+                     schema: Option[StructType] = None,
                      narrowRead: Boolean = false,
                      keyProbe: Option[(Seq[Entry], String) => Boolean] =
                        None)
       : Unit = {
-    val spec = currentPartCol
-    val base0 = currentVersion
-    // conform to the committed schema unless this commit SETS the
-    // schema (overwrite / first write): columns [[evolveSchema]]
-    // added but the caller's frame lacks materialize their default
-    // (or null); extra caller columns fail loudly
-    val (data, schemaDdl, defaults) =
-      if (resetSchema || !exists)
-        (data0, data0.schema.toDDL, Map.empty[String, (String, Int)])
-      else (conformInput(data0), schemaAt(requireVersion).toDDL,
-        defaultsAt(requireVersion))
+    val spec = base0.map(partColAt).getOrElse(partCol)
+    val dataSchema = schema.getOrElse(schemaAt(base0.get))
+    val schemaDdl = dataSchema.toDDL
+    val defaults =
+      if (schema.isDefined) Map.empty[String, (String, Int)]
+      else defaultsAt(base0.get)
     // this commit's affected scope: the partitions it rewrites plus
     // every entry the caller deliberately dropped (migrated legacy
     // dirs) — a rebase is sound only when the winner touched none
@@ -873,26 +973,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
         (base0.map(entriesAt).getOrElse(Seq.empty)
           .map(e => (e.pcol, e.value)).toSet --
           carried.map(e => (e.pcol, e.value)).toSet)
-    // stage under a writer-unique name, then claim w_<next> with a
+    // the stage has a writer-unique name; claim w_<next> with a
     // no-replace rename (see CowTable.commit): two writers racing from
     // the same base both target w_<next>, and the loser's overwrite
     // could delete the winner's committed files mid-write — the
     // dir-name collision fails the loser before shared state is touched
-    val stage = s"_stage_${java.util.UUID.randomUUID()}"
-    // (Optimization-round probe, kept as a finding: hash-clustering
-    // this write by (__part, content-salt) — Iceberg's distribution-
-    // mode=hash — was measured SLOWER at gate scale (q226 5.7 → 9.6 s
-    // steady): the stage-write phase is dominated by the commit's
-    // input-side compute (the touched partitions' post-image
-    // read/union/filter), not by file fan-out, and the extra exchange
-    // + per-task writer setup cost more than the serial dynamic write
-    // saved. File-count layout remains [[compact]]'s job (targetBytes
-    // sizing), where the rewrite IS the point. The probe's preShaped
-    // opt-out parameter was dead code and is gone — re-derive it from
-    // this note if commit-side shaping ever returns.)
-    tphase("stage write")(data
-      .withColumn("__part", col(spec).cast("string"))
-      .write.partitionBy("__part").mode("overwrite").parquet(s"$root/$stage"))
     commitSeam()
     var base = base0
     var curCarried = carried
@@ -943,25 +1028,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // claim/publish loop below re-claims under the new base.
     def publishAttempt(wdir: String): Boolean = {
       val next = base.map(_ + 1).getOrElse(0)
-      val written: Seq[Entry] = tphase("list written") {
-        val listing = Files.list(Paths.get(root, wdir))
-        // Entry.value is ALWAYS the RAW partition value: partitionBy
-        // percent-escapes path-unsafe chars into the dir name (':' →
-        // '%3A'), so the listed name must be UNESCAPED back before it
-        // is compared to anything literal-side — `touched` membership,
-        // GraftFileIndex exact pruning, deleteWhereDV's scoped attach
-        // and the zone-map stats lookup all compare raw values (a
-        // value kept escaped would silently miss every one of them).
-        // Entry.dir keeps the on-disk (escaped) name.
-        try listing.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("__part="))
-          .map(n => Entry(spec,
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(n.stripPrefix("__part=")),
-            s"$wdir/$n")).toSeq
-        finally listing.close()
-      }
+      val written: Seq[Entry] = listParts(wdir, spec)
       // carried minus current-spec entries being replaced (an evolved
       // table's legacy entries are dropped only when explicitly absent
       // from `carried` — the migration paths pass them pre-filtered;
@@ -974,8 +1041,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // footer-sized aggregate over the new files. Zero jobs when
       // statsColumns is empty. Read from `base` — the version this
       // attempt publishes against.
-      val carriedStats = tphase("carried maps")(
-        base.map(statsAt).getOrElse(Map.empty))
+      val carriedStats = base.map(statsAt).getOrElse(Map.empty)
       val carriedSStats = base.map(strStatsAt).getOrElse(Map.empty)
       val carriedDStats = base.map(dblStatsAt).getOrElse(Map.empty)
       val carriedKinds = base.map(kindsAt).getOrElse(Map.empty)
@@ -986,7 +1052,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // per-dir data bytes from the just-written local files (the same
       // name filter the index's listing applies) — recorded so plan-time
       // sizeInBytes never needs a listing
-      val writtenBytes: Map[String, Long] = tphase("written bytes") {
+      val writtenBytes: Map[String, Long] = {
         def sizeOf(dir: String): Long = {
           val listing = Files.list(Paths.get(root, dir))
           try listing.iterator().asScala
@@ -1030,9 +1096,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
       val writtenBlooms: Map[String, Seq[String]] =
         if (bloomColumns.isEmpty || written.isEmpty) Map.empty
         else {
-          val cols = bloomColumns.filter(data.columns.contains)
+          val cols = bloomColumns.filter(dataSchema.fieldNames.contains)
           cols.foreach { c =>
-            data.schema.fields.find(_.name == c).get.dataType match {
+            dataSchema(c).dataType match {
               case StringType | ByteType | ShortType | IntegerType |
                    LongType => ()
               case other => throw new IllegalArgumentException(
@@ -1130,7 +1196,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // a silently mis-unit'd zone map is a wrong-prune hazard, not a
       // perf miss. One footer-sized aggregate covers all families.
       def statFamily(c: String): String = {
-        val f = data.schema.fields.find(_.name == c).get
+        val f = dataSchema(c)
         f.dataType match {
           case StringType => "str"
           case DoubleType | FloatType => "dbl"
@@ -1156,7 +1222,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
         if (statsColumns.isEmpty || written.isEmpty)
           (Map.empty, Map.empty, Map.empty, Map.empty)
         else {
-          val cols = statsColumns.filter(data.columns.contains)
+          val cols = statsColumns.filter(dataSchema.fieldNames.contains)
           val fam = cols.map(c => c -> statFamily(c)).toMap
           if (cols.isEmpty) (Map.empty, Map.empty, Map.empty, Map.empty)
           else {
@@ -1245,14 +1311,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
           }
         }
       try {
-        tphase("writeVersion")(
         writeVersion(next, schemaDdl, spec, kept ++ written, defaults,
           carriedStats ++ writtenStats, carriedDvs,
           carriedSStats ++ writtenSStats,
           carriedDStats ++ writtenDStats,
           carriedKinds ++ writtenKinds,
           carriedBytes ++ writtenBytes,
-          carriedBlooms ++ writtenBlooms))
+          carriedBlooms ++ writtenBlooms)
         true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1409,9 +1474,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def currentEntriesOrEmpty: Seq[Entry] =
-    currentVersion.map(entriesAt).getOrElse(Seq.empty)
-
   /** Switch the partition spec for future writes — a METADATA-ONLY
     * commit (no data job, no byte rewritten): every existing dir
     * becomes a legacy entry under its own spec. `newPartCol` must be
@@ -1474,43 +1536,47 @@ class PartitionedCowTable(val root: String, val partCol: String,
       dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
   }
 
-  /** An empty DataFrame with the table's committed schema (safe to
+  /** An empty DataFrame with version `v`'s committed schema (safe to
     * unionByName against any read of this table).
     */
-  private def emptyLike(): DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[Row], schemaAt(requireVersion))
+  private def emptyLike(v: Int): DataFrame = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[Row], schemaAt(v))
 
-  /** Pruned read over CURRENT-SPEC dirs only — the mutation paths'
-    * base read. Legacy dirs are handled explicitly by migration;
-    * using the legacy-inclusive [[readWhere]] here would double-count
-    * their rows into a commit.
-    */
-  private def readSpec(values: Set[String]): DataFrame = {
-    val spec = currentPartCol
-    val dirs = currentEntriesOrEmpty
-      .filter(e => e.pcol == spec && values.contains(e.value))
+  /** Version `v`'s CURRENT-SPEC dirs holding `values`. */
+  private def specDirs(v: Int, values: Set[String]): Seq[String] = {
+    val spec = partColAt(v)
+    entriesAt(v).filter(e => e.pcol == spec && values.contains(e.value))
       .map(e => s"$root/${e.dir}")
-    if (dirs.isEmpty) emptyLike()
-    else readConformed(requireVersion, dirs)
   }
 
-  /** Legacy dirs containing at least one row `mark` keeps (for
-    * upsert/merge that is a KEY semi-join — a dir migrates because a
-    * touched key lives there, never because it merely shares a
-    * partition value), found by one scan of legacy data only (shrinks
-    * as migration proceeds; the scan goes through [[GraftFileIndex]],
-    * so pushable key predicates in `mark` prune legacy dirs by their
-    * zone maps too). Returns (their entries, ALL rows of
-    * those dirs) — migration rewrites whole dirs, so unrelated rows
-    * ride along.
+  /** Pruned read over version `v`'s CURRENT-SPEC dirs only — the
+    * mutation paths' base read. Legacy dirs are handled explicitly by
+    * migration; using the legacy-inclusive [[readWhere]] here would
+    * double-count their rows into a commit.
     */
-  private def legacyTouching(mark: DataFrame => DataFrame)
-      : (Seq[Entry], DataFrame) = {
-    val spec = currentPartCol
-    val legacy = currentEntriesOrEmpty.filter(_.pcol != spec)
-    if (legacy.isEmpty) return (Seq.empty, emptyLike())
+  private def readSpec(v: Int, values: Set[String]): DataFrame = {
+    val dirs = specDirs(v, values)
+    if (dirs.isEmpty) emptyLike(v) else readConformed(v, dirs)
+  }
+
+  /** Version `v`'s legacy dirs containing at least one row `mark`
+    * keeps (for upsert/merge that is a KEY semi-join — a dir migrates
+    * because a touched key lives there, never because it merely
+    * shares a partition value), found by one scan of legacy data only
+    * (shrinks as migration proceeds; the scan goes through
+    * [[GraftFileIndex]], so pushable key predicates in `mark` prune
+    * legacy dirs by their zone maps too). Returns (their entries, ALL
+    * rows of those dirs, those rows' current-spec values) — migration
+    * rewrites whole dirs, so unrelated rows ride along. A table with
+    * no legacy dirs, or none hit, costs no job.
+    */
+  private def legacyTouching(v: Int, mark: DataFrame => DataFrame)
+      : (Seq[Entry], DataFrame, Set[String]) = {
+    val spec = partColAt(v)
+    val legacy = entriesAt(v).filter(_.pcol != spec)
+    if (legacy.isEmpty) return (Seq.empty, emptyLike(v), Set.empty)
     val hitFiles = mark(
-      readConformed(requireVersion, legacy.map(e => s"$root/${e.dir}"))
+      readConformed(v, legacy.map(e => s"$root/${e.dir}"))
         .withColumn("__f", input_file_name()))
       .select("__f").distinct().collect().map(_.getString(0))
     // input_file_name() returns a URI-encoded path (space -> %20,
@@ -1525,38 +1591,55 @@ class PartitionedCowTable(val root: String, val partCol: String,
       try new java.net.URI(f).getPath catch { case _: Exception => f }
     }
     val hit = legacy.filter(e => hitPaths.exists(_.contains(s"/${e.dir}/")))
-    if (hit.isEmpty) (Seq.empty, emptyLike())
-    else (hit, readConformed(requireVersion,
-      hit.map(e => s"$root/${e.dir}")))
+    if (hit.isEmpty) (Seq.empty, emptyLike(v), Set.empty)
+    else {
+      val rows = readConformed(v, hit.map(e => s"$root/${e.dir}"))
+      (hit, rows, touchedValues(rows, spec))
+    }
   }
 
   /** Create or fully replace the table (every partition rewritten,
     * legacy dirs dropped — a full rewrite is also a full migration).
+    * Stage-first: `df` is written once into the stage and the
+    * published partitions are exactly its listing.
     */
-  override def overwrite(df: DataFrame): Unit =
-    commit(df, touchedValues(df), Seq.empty, resetSchema = true)
+  override def overwrite(df: DataFrame): Unit = staging { stage =>
+    val base = currentVersion
+    val spec = base.map(partColAt).getOrElse(partCol)
+    stageRows(df, spec, stage)
+    commit(base, stage, stagedValues(stage, spec), Seq.empty,
+      schema = Some(df.schema))
+  }
 
   /** Append rows: only the partitions the batch lands in are
     * rewritten (existing rows of those partitions union the batch).
     * Needs no legacy migration — appends never replace keys, and
     * reads union legacy dirs regardless.
+    *
+    * Stage-first against one pinned base version: the batch is staged
+    * once, its `__part=` listing names the touched partitions, their
+    * existing rows are appended to the same stage, and the stage is
+    * published as the base's successor (see [[commit]]).
     */
   override def append(df0: DataFrame): Unit =
     if (!exists) overwrite(df0)
-    else {
-      val df = conformInput(df0)
-      val touched = touchedValues(df)
-      commit(readSpec(touched).unionByName(df), touched,
-        currentEntriesOrEmpty, narrowRead = true)
+    else staging { stage =>
+      val base = requireVersion
+      val spec = partColAt(base)
+      stageRows(conformInput(base, df0), spec, stage)
+      val touched = stagedValues(stage, spec)
+      if (specDirs(base, touched).nonEmpty)
+        stageRows(readSpec(base, touched), spec, stage)
+      commit(Some(base), stage, touched, entriesAt(base), narrowRead = true)
     }
 
   /** Wholesale partition replacement — ONE commit that makes the
     * named current-spec partitions' content equal `rows` (a value in
     * `values` contributing no rows is dropped from the manifest; a
     * partition value appearing in `rows` but not in `values` is
-    * replaced too — `touchedValues` over `rows` catches it, so the
-    * committed scope always covers the staged data), carrying every
-    * other partition by reference. The partition-ALIGNED maintenance
+    * replaced too — the staged listing names it, so the committed
+    * scope always covers the staged data), carrying every other
+    * partition by reference. The partition-ALIGNED maintenance
     * reconcile (r15, guide §1.2; IncrementalInvertedIndex's partials
     * tier): the caller already KNOWS which partitions are superseded
     * and has their full replacement content in hand, so the
@@ -1564,23 +1647,25 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * keyed full-outer diff with row hashing, two driver collects —
     * re-derives information the caller started with, at a cost that
     * grows with TABLE size instead of delta size. No diff, no read
-    * of superseded data at all: one pass over `rows` for the touched
-    * values plus the stage write. Refuses tables with legacy-spec
-    * dirs (replacement scope is defined in current-spec values;
-    * legacy rows would silently survive alongside the replacement).
+    * of superseded data at all: one stage write of `rows`. Refuses
+    * tables with legacy-spec dirs (replacement scope is defined in
+    * current-spec values; legacy rows would silently survive
+    * alongside the replacement).
     */
   def replacePartitions(values: Set[String], rows: DataFrame): Unit =
     if (!exists) overwrite(rows)
-    else {
-      require(currentEntriesOrEmpty.forall(_.pcol == currentPartCol),
+    else staging { stage =>
+      val base = requireVersion
+      val spec = partColAt(base)
+      require(entriesAt(base).forall(_.pcol == spec),
         s"replacePartitions: $root has legacy-spec dirs — wholesale " +
           "replacement is defined over current-spec values only; " +
           "compact() first or use mergeSync")
-      val data = conformInput(rows)
+      stageRows(conformInput(base, rows), spec, stage)
       // narrowRead: like append, the commit's affected scope IS the
       // touched partitions, so an entry-disjoint winner can rebase
-      commit(data, values ++ touchedValues(data), currentEntriesOrEmpty,
-        narrowRead = true)
+      commit(Some(base), stage, values ++ stagedValues(stage, spec),
+        entriesAt(base), narrowRead = true)
     }
 
   /** PK upsert (J7): incoming rows replace same-key rows; untouched
@@ -1588,6 +1673,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * evolved table, legacy dirs holding touched keys are migrated
     * whole to the current spec in the same commit (their unrelated
     * rows ride along — progressive migration, never key duplication).
+    *
+    * Stage-first against one pinned base version: the updates are
+    * staged once (the only evaluation of the caller's plan), the
+    * stage's `__part=` listing names the touched partitions, and
+    * those partitions' other rows — the base's rows anti-joined on the
+    * keys read back from the staged delta — are appended to the same
+    * stage before [[commit]] publishes it as the base's successor.
     *
     * Concurrency: losing a version race to an entry-disjoint winner
     * REBASES when the winner's new content provably carries none of
@@ -1598,17 +1690,22 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def upsert(updates0: DataFrame, keys: Seq[String]): Unit =
     if (!exists) overwrite(updates0)
-    else {
-      val updates = conformInput(updates0)
-      val touched0 = touchedValues(updates)
-      val (mig, migRows) = legacyTouching(
-        _.join(updates.select(keys.map(col): _*), keys, "left_semi"))
-      val touched = touched0 ++ touchedValues(migRows)
-      commit(
-        readSpec(touched).unionByName(migRows)
-          .join(updates.select(keys.map(col): _*), keys, "left_anti")
-          .unionByName(updates),
-        touched, currentEntriesOrEmpty.filterNot(mig.contains),
+    else staging { stage =>
+      val base = requireVersion
+      val spec = partColAt(base)
+      val updates = conformInput(base, updates0)
+      stageRows(updates, spec, stage)
+      val staged = stagedValues(stage, spec)
+      val stagedKeys = stagedDelta(stage, updates.schema)
+        .select(keys.map(col): _*)
+      val (mig, migRows, migTouched) = legacyTouching(base,
+        _.join(stagedKeys, keys, "left_semi"))
+      val touched = staged ++ migTouched
+      if (specDirs(base, touched).nonEmpty || mig.nonEmpty)
+        stageRows(readSpec(base, touched).unionByName(migRows)
+          .join(stagedKeys, keys, "left_anti"), spec, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(mig.contains),
         keyProbe = Some(keyDisjointProbe(keys)))
     }
 
@@ -1649,18 +1746,18 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def updateWhere(pred: Column,
                            sets: Map[String, Column]): Unit = {
-    val (mig, migRows) = tphase("uw legacyTouching")(
-      legacyTouching(_.filter(pred)))
-    val touched = tphase("uw touchedValues")(
-      touchedValues(read().filter(pred))) ++
-      tphase("uw touchedValues mig")(touchedValues(migRows))
-    if (touched.nonEmpty) {
-      val updated = sets.foldLeft(
-        readSpec(touched).unionByName(migRows)) {
+    val base = requireVersion
+    val spec = partColAt(base)
+    val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
+    val touched =
+      touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
+    if (touched.nonEmpty) staging { stage =>
+      stageRows(sets.foldLeft(readSpec(base, touched).unionByName(migRows)) {
         case (df, (name, value)) =>
           df.withColumn(name, when(pred, value).otherwise(col(name)))
-      }
-      commit(updated, touched, currentEntriesOrEmpty.filterNot(mig.contains))
+      }, spec, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(mig.contains))
     }
   }
 
@@ -1669,12 +1766,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * dirs with matching rows migrate to the current spec.
     */
   override def deleteWhere(pred: Column): Unit = {
-    val (mig, migRows) = legacyTouching(_.filter(pred))
-    val touched = touchedValues(read().filter(pred)) ++
-      touchedValues(migRows)
-    if (touched.nonEmpty)
-      commit(readSpec(touched).unionByName(migRows).filter(!pred),
-        touched, currentEntriesOrEmpty.filterNot(mig.contains))
+    val base = requireVersion
+    val spec = partColAt(base)
+    val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
+    val touched =
+      touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
+    if (touched.nonEmpty) staging { stage =>
+      stageRows(readSpec(base, touched).unionByName(migRows).filter(!pred),
+        spec, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(mig.contains))
+    }
   }
 
   /** Single-commit CDC apply — MERGE INTO semantics over an ops log:
@@ -1699,22 +1801,27 @@ class PartitionedCowTable(val root: String, val partCol: String,
     require(dup == 0,
       s"mergeApply: multiple ops for one key — consolidate the batch " +
         s"to final state per key before applying")
-    val data = conformInput(ops.filter(col(opCol) =!= "D").drop(opCol))
-    if (!exists) { overwrite(data); return }
-    val touched0 = touchedValues(ops)
+    val upserts = ops.filter(col(opCol) =!= "D").drop(opCol)
+    if (!exists) { overwrite(upserts); return }
+    val base = requireVersion
+    val spec = partColAt(base)
+    val data = conformInput(base, upserts)
+    val touched0 = touchedValues(ops, spec)
     val touchedKeys = ops.select(keys.map(col): _*)
-    val (mig, migRows) = legacyTouching(
+    val (mig, migRows, migTouched) = legacyTouching(base,
       _.join(touchedKeys, keys, "left_semi"))
-    val touched = touched0 ++ touchedValues(migRows)
-    commit(
-      readSpec(touched).unionByName(migRows)
+    val touched = touched0 ++ migTouched
+    staging { stage =>
+      stageRows(readSpec(base, touched).unionByName(migRows)
         .join(touchedKeys, keys, "left_anti")
-        .unionByName(data),
-      touched, currentEntriesOrEmpty.filterNot(mig.contains),
-      // same key-scoped result as upsert (I/U/D all key-addressed):
-      // rebase past an entry-disjoint winner whose new content holds
-      // none of this batch's keys
-      keyProbe = Some(keyDisjointProbe(keys)))
+        .unionByName(data), spec, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(mig.contains),
+        // same key-scoped result as upsert (I/U/D all key-addressed):
+        // rebase past an entry-disjoint winner whose new content holds
+        // none of this batch's keys
+        keyProbe = Some(keyDisjointProbe(keys)))
+    }
   }
 
   /** Declarative reconcile — make the table's content EQUAL `source`
@@ -1749,7 +1856,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def mergeSyncInPartitions(values: Set[String], source0: DataFrame,
                             keys: Seq[String]): (Long, Long, Long) = {
-    require(currentEntriesOrEmpty.forall(_.pcol == currentPartCol),
+    require(!exists || legacyEntries.isEmpty,
       s"mergeSyncInPartitions: $root has legacy-spec dirs — the " +
         "partition-scoped diff cannot prove them unchanged; use " +
         "mergeSync")
@@ -1760,20 +1867,22 @@ class PartitionedCowTable(val root: String, val partCol: String,
                             scope: Option[Set[String]])
       : (Long, Long, Long) = {
     if (!exists) { overwrite(source0); return (source0.count(), 0L, 0L) }
-    val source = conformInput(source0)
-    val cols = read().columns.sorted.toSeq
+    val base = requireVersion
+    val spec = partColAt(base)
+    val source = conformInput(base, source0)
+    val cols = schemaAt(base).fieldNames.sorted.toSeq
     // 64-bit row hash: at billions of changed keys a 32-bit hash
     // WOULD silently miss ~n/2^32 updates; 64-bit pushes that past
     // any realistic sync volume
     def hashed(df: DataFrame, tag: String) =
       df.select(keys.map(col) :+
-        col(currentPartCol).cast("string").as(s"__v_$tag") :+
+        col(spec).cast("string").as(s"__v_$tag") :+
         xxhash64(cols.map(col): _*).as(s"__h_$tag"): _*)
     val (srcSide, tgtSide) = scope match {
       case Some(vs) =>
-        (source.filter(col(currentPartCol).cast("string")
-          .isInCollection(vs.toSeq)), readWhere(vs.contains))
-      case None => (source, read())
+        (source.filter(col(spec).cast("string")
+          .isInCollection(vs.toSeq)), readVersionWhere(base, vs.contains))
+      case None => (source, readVersion(base))
     }
     val diff = hashed(srcSide, "s")
       .join(hashed(tgtSide, "t"), keys, "full_outer")
@@ -1790,24 +1899,25 @@ class PartitionedCowTable(val root: String, val partCol: String,
       .select(coalesce(col("__v_s"), col("__v_t")).as("v"))
       .distinct().collect().map(_.getString(0)).toSet
     val changedKeys = diff.select(keys.map(col): _*)
-    val (mig, migRows) = legacyTouching(
+    val (mig, migRows, migTouched) = legacyTouching(base,
       _.join(changedKeys, keys, "left_semi"))
-    val touched = touched0 ++ touchedValues(migRows)
+    val touched = touched0 ++ migTouched
     // keys that stay behind in NON-migrated legacy dirs are unchanged
     // by construction (their dirs held no changed key) — exclude them
     // from the rewritten partitions so they aren't duplicated
-    val specR = currentPartCol
-    val remain = currentEntriesOrEmpty
-      .filter(e => e.pcol != specR && !mig.contains(e))
+    val remain = entriesAt(base)
+      .filter(e => e.pcol != spec && !mig.contains(e))
     val remainKeys =
-      if (remain.isEmpty) emptyLike().select(keys.map(col): _*)
-      else readConformed(requireVersion,
+      if (remain.isEmpty) emptyLike(base).select(keys.map(col): _*)
+      else readConformed(base,
         remain.map(e => s"$root/${e.dir}")).select(keys.map(col): _*)
-    commit(
-      source.filter(col(currentPartCol).cast("string")
+    staging { stage =>
+      stageRows(source.filter(col(spec).cast("string")
           .isInCollection(touched.toSeq))
-        .join(remainKeys, keys, "left_anti"),
-      touched, currentEntriesOrEmpty.filterNot(mig.contains))
+        .join(remainKeys, keys, "left_anti"), spec, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(mig.contains))
+    }
     (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
       counts.getOrElse("D", 0L))
   }
@@ -1826,16 +1936,19 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // compaction is also the full-migration vehicle: every remaining
     // legacy dir is rewritten under the current spec alongside the
     // selected partitions (one layout commit, row content unchanged)
-    val spec0 = currentPartCol
-    val legacy = currentEntriesOrEmpty.filter(_.pcol != spec0)
-    val migRows =
-      if (legacy.isEmpty) emptyLike()
-      else readConformed(requireVersion,
-        legacy.map(e => s"$root/${e.dir}"))
-    val touched = manifest.keySet.filter(partFilter) ++
-      touchedValues(migRows)
+    val base = requireVersion
+    val spec0 = partColAt(base)
+    val legacy = entriesAt(base).filter(_.pcol != spec0)
+    val (migRows, migTouched) =
+      if (legacy.isEmpty) (emptyLike(base), Set.empty[String])
+      else {
+        val rows = readConformed(base, legacy.map(e => s"$root/${e.dir}"))
+        (rows, touchedValues(rows, spec0))
+      }
+    val touched = entriesAt(base).filter(_.pcol == spec0).map(_.value)
+      .filter(partFilter).toSet ++ migTouched
     if (touched.isEmpty) return
-    val rows = readSpec(touched).unionByName(migRows)
+    val rows = readSpec(base, touched).unionByName(migRows)
     // With no target, one partition = one RDD partition = ~one file
     // (the small-file collapse). With targetBytes > 0, a partition's
     // manifest-recorded byte count sizes its FILE FAN-OUT — a 500 GB
@@ -1848,16 +1961,15 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // never split one, so file count per dir ∈ [1, ceil(b/target)].
     // Dirs without recorded bytes (pre-upgrade) collapse to 1.
     val shaped =
-      if (targetBytes <= 0L) rows.repartition(col(currentPartCol))
+      if (targetBytes <= 0L) rows.repartition(col(spec0))
       else {
-        val cur = requireVersion
-        val byt = bytesAt(cur)
+        val byt = bytesAt(base)
         import spark.implicits._
         // current-spec entries ONLY: a legacy entry whose value string
         // collides with a live partition value would duplicate the
         // __pv join key and double every matching row in the rewrite.
         // Legacy rows joining to no key fall to the coalesce(1) arm.
-        val nfSeq = entriesAt(cur)
+        val nfSeq = entriesAt(base)
           .filter(_.pcol == spec0)
           .map(e => e.value -> math.max(1L, math.ceil(
             byt.getOrElse(e.dir, 0L).toDouble / targetBytes).toLong))
@@ -1870,15 +1982,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
         val width = math.min(math.max(32L, nfSeq.map(_._2).sum),
           1000000L).toInt
         rows.join(broadcast(nf),
-            col(currentPartCol).cast("string") === col("__pv"), "left")
+            col(spec0).cast("string") === col("__pv"), "left")
           .withColumn("__salt",
             pmod(xxhash64(dataCols: _*), coalesce(col("__nf"), lit(1L))))
-          .repartition(width, col(currentPartCol), col("__salt"))
+          .repartition(width, col(spec0), col("__salt"))
           .drop("__pv", "__nf", "__salt")
       }
-    commit(shaped, touched,
-      currentEntriesOrEmpty.filterNot(legacy.contains),
-      narrowRead = true)
+    staging { stage =>
+      stageRows(shaped, spec0, stage)
+      commit(Some(base), stage, touched,
+        entriesAt(base).filterNot(legacy.contains), narrowRead = true)
+    }
   }
 
   /** OPTIMIZE ZORDER BY for an EXISTING table (q285 demonstrates the
@@ -1932,8 +2046,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // the one data job: every row rewritten under its cell; carried
     // is empty because every pre-relayout entry (now legacy under the
     // old spec) is superseded by this commit
-    val rows = read().withColumn(cellCol, cell)
-    commit(rows, touchedValues(rows), Seq.empty)
+    staging { stage =>
+      val base = requireVersion
+      stageRows(read().withColumn(cellCol, cell), cellCol, stage)
+      commit(Some(base), stage, stagedValues(stage, cellCol), Seq.empty)
+    }
   }
 
   /** Drop every `w_*` dir and `v_*.json` no longer reachable from the
@@ -2067,6 +2184,9 @@ object PartitionedCowTable {
     */
   private[sources] case class Entry(pcol: String, value: String,
                                     dir: String)
+
+  /** The dir name Spark writes null and '' partition values under. */
+  private val HiveSentinel = "__HIVE_DEFAULT_PARTITION__"
 
   def apply(root: String, partCol: String)
            (implicit spark: SparkSession): PartitionedCowTable =

@@ -10,7 +10,7 @@ import graft.SparkSpec
 import graft.catalog.SceneCatalog
 import graft.model.Scene
 import graft.pipeline.StepRunner.{SceneStep, StepResult}
-import graft.sources.CowTable
+import graft.sources.{CowTable, PartitionedCowTable}
 
 /** Top-level (not inner) classes: steps ship to executors and must not
   * capture the test suite.
@@ -28,6 +28,16 @@ private[pipeline] class ArdStep extends SceneStep {
   def workList(cat: SceneCatalog): DataFrame = cat.scnlistNeedArd()
   def process(pid: Long): StepResult = StepResult(pid, success = true, s"ard $pid")
   def onSuccess = Map("ARDProduct" -> lit(true))
+}
+
+/** A capped work-list: the sort under the limit decides WHICH scenes
+  * run, so the step runner must keep it.
+  */
+private[pipeline] class FirstNDownloadStep(n: Int) extends SceneStep {
+  val name = "first-n-download"
+  def workList(cat: SceneCatalog): DataFrame = cat.scnlistNeedDownload().limit(n)
+  def process(pid: Long): StepResult = StepResult(pid, success = true, s"dl $pid")
+  def onSuccess = Map("Downloaded" -> lit(true))
 }
 
 /** Counts partition-level inits (local mode: executors share the JVM,
@@ -79,6 +89,36 @@ class StepRunnerSpec extends SparkSpec {
     val (n2, ok2) = StepRunner.runStep(spark, cat, new DownloadStep(0), 4)
     assert(n2 == 3 && ok2 == 3)
     assert(cat.scnlistNeedDownload().isEmpty)
+  }
+
+  test("runStep job count is pinned on a date-partitioned catalogue: " +
+    "the work-list sort is dropped, the write-back stages its delta " +
+    "once; the catalogue's own work-lists keep their order") {
+    val root = Files.createTempDirectory("pipe_pcow").toString + "/scenes"
+    val cat = new SceneCatalog(
+      new PartitionedCowTable(root, "Date_Acquired", spark), spark)
+    cat.table.overwrite((1 to 12).map(i =>
+      scene(i.toLong, f"2020-03-${i % 3 + 1}%02d")).toDF())
+    val ((n, ok), jobs) = org.apache.spark.JobCount(spark.sparkContext)(
+      StepRunner.runStep(spark, cat, new DownloadStep(4), parallelism = 4))
+    assert(n == 12 && ok == 9)
+    // the tallies over the cached results, then the upsert's two
+    // stage writes (the flagged rows, then the touched dates' others)
+    assert(jobs == 8)
+    // failures 12 (03-01), 4 (03-02), 8 (03-03): date order, then PID
+    assert(cat.scnlistNeedDownload().as[Long].collect().toSeq ==
+      Seq(12L, 4L, 8L))
+  }
+
+  test("a work-list sort under a limit is kept: the step processes " +
+    "the first scenes in catalogue order, not the first rows stored") {
+    val root = Files.createTempDirectory("pipe_lim").toString + "/scenes"
+    val cat = new SceneCatalog(new CowTable(root, spark), spark)
+    cat.table.overwrite((10 to 1 by -1).map(i =>
+      scene(i.toLong, "2020-03-01")).toDF().coalesce(1))
+    val (n, ok) = StepRunner.runStep(spark, cat, new FirstNDownloadStep(3), 4)
+    assert(n == 3 && ok == 3)
+    assert(cat.scnlistNeedDownload().as[Long].collect().toSeq == (4L to 10L))
   }
 
   test("batched step: one init per partition, results identical") {

@@ -432,6 +432,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     t.upsert(Seq((2L, "2020-03", "B-CLOBBER", true))
       .toDF("pid", "month", "v", "flag")
       .withColumn("pid", race($"pid")), Seq("pid"))
+    assert(PcowRacer.calls.get() == 1) // the delta is evaluated once
     assert(t.version == 2) // B's no-op v1, A rebased as v2
     assert(t.read().count() == 4)
     val vs = t.read().select("pid", "v").as[(Long, String)].collect().toMap
@@ -440,6 +441,91 @@ class PartitionedCowTableSpec extends SparkSpec {
     val names = Files.list(java.nio.file.Paths.get(t.root))
       .iterator().asScala.map(_.getFileName.toString).toSet
     assert(!names.exists(_.startsWith("_stage_")))
+  }
+
+  test("a KEY-overlapping winner committing during the stage write: " +
+    "the pinned base turns it into a version race, the upsert aborts " +
+    "and leaves no stage dir") {
+    implicit val s = spark
+    val t = mk() // pid 4 → 2020-05
+    // the winner lands the loser's key pid 4 in a NEW month, from
+    // inside the loser's one evaluation of its updates: entries are
+    // disjoint, so only the key probe can refuse the rebase
+    val winner = Files.createTempDirectory("pcow_win").toString + "/w"
+    Seq((4L, "2020-09", "dup", false)).toDF("pid", "month", "v", "flag")
+      .coalesce(1).write.parquet(winner)
+    PcowKeyRacer.root = t.root
+    PcowKeyRacer.winnerFiles = winner
+    PcowKeyRacer.calls.set(0)
+    val race = udf(PcowKeyRacer.fire)
+    intercept[java.util.ConcurrentModificationException] {
+      t.upsert(Seq((4L, "2020-05", "L", true))
+        .toDF("pid", "month", "v", "flag")
+        .withColumn("pid", race($"pid")), Seq("pid"))
+    }
+    assert(PcowKeyRacer.calls.get() == 1)
+    assert(t.version == 1) // the winner only
+    assert(t.read().filter($"pid" === 4L).select("v").as[String]
+      .collect().toSet == Set("d", "dup"))
+    import scala.jdk.CollectionConverters._
+    val names = Files.list(java.nio.file.Paths.get(t.root))
+      .iterator().asScala.map(_.getFileName.toString).toSet
+    assert(!names.exists(_.startsWith("_stage_")))
+    assert(!names.contains("w_000002"))
+  }
+
+  test("null, empty and sentinel partition values fail loudly through " +
+    "append, upsert and overwrite of an existing table, leaving the " +
+    "table as it was and no stage dir") {
+    val t = mk()
+    val v0 = t.version
+    def row(month: String) =
+      Seq((9L, month, "x", true)).toDF("pid", "month", "v", "flag")
+    val e1 = intercept[IllegalArgumentException] {
+      t.append(row(null))
+    }
+    assert(e1.getMessage.contains("contains null"))
+    val e2 = intercept[IllegalArgumentException] {
+      t.upsert(row(""), Seq("pid"))
+    }
+    assert(e2.getMessage.contains("empty string"))
+    val e3 = intercept[IllegalArgumentException] {
+      t.overwrite(row("__HIVE_DEFAULT_PARTITION__"))
+    }
+    assert(e3.getMessage.contains("sentinel"))
+    assert(t.version == v0 && t.read().count() == 4)
+    import scala.jdk.CollectionConverters._
+    assert(!Files.list(java.nio.file.Paths.get(t.root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("_stage_")))
+  }
+
+  test("commit job counts are pinned: append, upsert and overwrite each " +
+    "stage their delta once and take the touched set from the listing; " +
+    "deleteWhere collects its touched set in one job") {
+    val t = mk()
+    // deltas come from files, as a landed catalogue page does: a local
+    // Seq's distinct is answered without a job, which would hide every
+    // re-evaluation of the delta this spec is here to count
+    def landed(rows: (Long, String, String, Boolean)*) = {
+      val p = Files.createTempDirectory("pcow_delta").toString + "/d"
+      rows.toDF("pid", "month", "v", "flag").write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val (add, up, all) = (landed((5L, "2020-05", "e", false)),
+      landed((2L, "2020-03", "B", true)),
+      landed((1L, "2020-03", "a", false), (3L, "2020-04", "c", false)))
+    def count(f: => Unit): Int =
+      org.apache.spark.JobCount(spark.sparkContext)(f)._2
+    val app = count(t.append(add))
+    val ups = count(t.upsert(up, Seq("pid")))
+    val ow = count(t.overwrite(all))
+    val del = count(t.deleteWhere($"month" === "2020-04"))
+    // append: stage the delta, carry 2020-05's rows; upsert: stage,
+    // then carry 2020-03's other rows anti-joined on the staged keys
+    // (broadcast + write); overwrite: the one stage write; delete: the
+    // predicate's touched values (one job), then the stage write
+    assert((app, ups, ow, del) === ((2, 3, 1, 2)))
+    assert(t.read().count() == 1)
   }
 
   test("key-disjoint upsert races REBASE: interleaved upserts on " +
@@ -1426,18 +1512,50 @@ class PartitionedCowTableSpec extends SparkSpec {
 object PcowRacer extends Serializable {
   @volatile var root: String = _
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-  // upsert() runs TWO actions over the updates frame: the
-  // touchedValues collect (before commit() snapshots its base
-  // version), then the staged parquet write (after). Firing on the
-  // second evaluation lands the competing commit exactly in the
-  // stale-base window the optimistic check must catch.
+  // upsert() evaluates the updates frame exactly ONCE — the stage
+  // write, after the upsert pinned its base version — and reads the
+  // staged files back for everything else. Firing on that single
+  // evaluation lands the competing commit exactly in the stale-base
+  // window the optimistic check must catch.
   val fire: Long => Long = { x =>
-    if (calls.incrementAndGet() >= 2) {
+    if (calls.incrementAndGet() == 1) {
       val r = java.nio.file.Paths.get(root)
       java.nio.file.Files.copy(r.resolve("v_000000.json"),
         r.resolve("v_000001.json"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       java.nio.file.Files.write(r.resolve("_current"), "1".getBytes("UTF-8"))
+    }
+    x
+  }
+}
+
+/** A KEY-overlapping winner firing from inside another writer's one
+  * evaluation of its updates: it copies pre-written parquet files for
+  * pid 4 into `w_000001/__part=2020-09` and publishes version 1 as
+  * version 0's manifest plus that partition.
+  */
+object PcowKeyRacer extends Serializable {
+  @volatile var root: String = _
+  @volatile var winnerFiles: String = _
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val fire: Long => Long = { x =>
+    if (calls.incrementAndGet() == 1) {
+      import java.nio.file.{Files, Paths}
+      val r = Paths.get(root)
+      val dir = r.resolve("w_000001/__part=2020-09")
+      Files.createDirectories(dir)
+      val listing = Files.list(Paths.get(winnerFiles))
+      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
+      finally listing.close()
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val node = mapper.readTree(r.resolve("v_000000.json").toFile)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.get("partitions")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .put("2020-09", "w_000001/__part=2020-09")
+      Files.write(r.resolve("v_000001.json"), mapper.writeValueAsBytes(node))
+      Files.write(r.resolve("_current"), "1".getBytes("UTF-8"))
     }
     x
   }

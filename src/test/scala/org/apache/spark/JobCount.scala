@@ -1,0 +1,39 @@
+package org.apache.spark
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Exact count of the Spark jobs a block starts, through a
+  * SparkListener. Jobs are attributed by a thread-local property that
+  * Spark hands on to the threads it starts for a query (broadcasts,
+  * subqueries), so jobs of anything else running in the session are
+  * not counted. Lives in this package only to drain the listener bus,
+  * which is private to Spark, so no event is still in flight when the
+  * count is read.
+  */
+object JobCount {
+  private val key = "graft.test.jobcount"
+
+  def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val token = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty(key) == token))
+          n.incrementAndGet()
+    }
+    sc.listenerBus.waitUntilEmpty(60000L)
+    sc.addSparkListener(listener)
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, token)
+    try {
+      val r = body
+      sc.listenerBus.waitUntilEmpty(60000L)
+      (r, n.get())
+    } finally {
+      sc.setLocalProperty(key, prev)
+      sc.removeSparkListener(listener)
+    }
+  }
+}
