@@ -204,11 +204,8 @@ object Bench {
     // always gets at least one rep, so the artifact is complete even
     // when estimates undershoot.
     val estTail = names.scanRight(0.0)((n, acc) => acc + est(n))
-    // solo-phase reservation (r14 verdict item 1; see soloReserve).
-    // Env override for dev sittings; 0 disables.
-    val soloReserveSec = sys.env.get("SPARK_GRAFT_BENCH_SOLO_RESERVE_SEC")
-      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
-      .getOrElse(Bench.soloReserve(names.map(est), budget))
+    // solo-phase reservation (r14 verdict item 1; see soloReserve)
+    val soloReserveSec = Bench.soloReserve(names.map(est), budget)
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var degraded = 0
     // Incremental artifact (round-13 lesson: the sf10 sitting that

@@ -14,8 +14,8 @@ object ScaleOps {
     * state (q184's positives, q190's undirected edge table, the CC
     * label rounds). Default = plain `localCheckpoint()` (Spark's
     * MEMORY_AND_DISK block store — right when state fits executor
-    * memory). With `spark.graft.stage.diskOnly=true` (or env
-    * `SPARK_GRAFT_DISK_STAGE=1`) the blocks go to DISK_ONLY instead:
+    * memory). With `spark.graft.stage.diskOnly=true` the blocks go
+    * to DISK_ONLY instead:
     * on a single JVM whose MemoryStore a multi-GB checkpoint would
     * thrash ("Not enough space to cache" → eviction storms, the
     * round-8 sf10 probes on q184/q190), paying the sequential disk
@@ -26,7 +26,6 @@ object ScaleOps {
   def stage(df: DataFrame): DataFrame = {
     val disk = df.sparkSession.conf
       .getOption("spark.graft.stage.diskOnly")
-      .orElse(sys.env.get("SPARK_GRAFT_DISK_STAGE"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     if (disk)
       df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -44,8 +43,7 @@ object ScaleOps {
     * three near-serial rounds saved at sf0.1 (q134 3.63→4.27 s,
     * q190 6.62→7.77 s). Width must track EDGE VOLUME, not core
     * count: ceil(estBytes / spark.graft.graph.bytesPerEdgePartition)
-    * (default 8 MB, conf + env `SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES`
-    * overridable), clamped to [1, session shuffle partitions] — a
+    * (default 8 MB), clamped to [1, session shuffle partitions] — a
     * cluster sitting with thousands of shuffle partitions and a
     * TB-scale edge table scales up automatically, a gate-scale graph
     * gets 2-4 blocks instead of 32 single-digit-MB tasks, and width 1
@@ -68,13 +66,11 @@ object ScaleOps {
   def edgeWidth(s: org.apache.spark.sql.SparkSession,
                 estBytes: Long): Int = {
     val per = s.conf.getOption("spark.graft.graph.bytesPerEdgePartition")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES"))
       .flatMap { v =>
         val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
         if (parsed.isEmpty) System.err.println(
           "[graft] ignoring malformed " +
-            "spark.graft.graph.bytesPerEdgePartition / " +
-            s"SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES value '$v' — " +
+            s"spark.graft.graph.bytesPerEdgePartition value '$v' — " +
             "using the 8 MiB default")
         parsed
       }.getOrElse(8L << 20)
@@ -297,8 +293,13 @@ object ScaleOps {
     // `both` is dead once the spread copy and the label init are
     // materialized (r14 advice: holding TWO staged copies of the edge
     // table for the whole run doubles edge storage at exactly the
-    // scale this path targets)
-    if (!(bothByDst eq both)) both.unpersist(false)
+    // scale this path targets). `Dataset.unpersist` cannot free it: a
+    // checkpointed frame is not in the cache manager, its blocks
+    // belong to the RDD under its LogicalRDD
+    if (!(bothByDst eq both))
+      both.queryExecution.analyzed
+        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+        .rdd.unpersist(blocking = false)
     def labelSum(): Long =
       labels.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
     var lastSum = labelSum()

@@ -2091,8 +2091,8 @@ object CoverageQueries {
       val draws = 4
       val keep = 2
       // SO.stage: lineage cut; DISK_ONLY under the single-JVM sf10
-      // probe flag (SPARK_GRAFT_DISK_STAGE) where this table thrashed
-      // the MemoryStore in round 8
+      // probe conf (spark.graft.stage.diskOnly) where this table
+      // thrashed the MemoryStore in round 8
       val pos = SO.stage(t(s, dir, "orders")
         .select(col("o_custkey").as("u"), col("o_orderkey"))
         .join(t(s, dir, "lineitem")

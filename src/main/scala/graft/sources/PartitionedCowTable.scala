@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,10 +28,12 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   * into place — a write stages its delta first and reads the touched
   * partitions off the stage's listing, see [[commit]]),
   * `<root>/v_<n>.json`
-  * (manifest: partitions + schema DDL), `<root>/_current` (atomic
-  * pointer). Readers follow `_current` → manifest → dirs, so a
-  * crashed writer never tears the table and re-runs are idempotent
-  * (the reference's recovery story, SURVEY.md §7.5 #1).
+  * (the version's manifest: schema, spec, partitions and per-dir
+  * metadata; `PartitionedCowTable.Manifest` is the one description of
+  * its format), `<root>/_current` (atomic pointer). Readers follow
+  * `_current` → manifest → dirs, so a crashed writer never tears the
+  * table and re-runs are idempotent (the reference's recovery story,
+  * SURVEY.md §7.5 #1).
   *
   * Constraints (pinned in PartitionedCowTableSpec): `partCol` values
   * must be non-null and path-safe (dates/months are); a key's
@@ -56,29 +59,28 @@ class PartitionedCowTable(val root: String, val partCol: String,
                           val bloomColumns: Seq[String] = Seq.empty)
     extends VersionedTable {
 
-  import PartitionedCowTable.{Entry, HiveSentinel}
+  import PartitionedCowTable.{DirMeta, Entry, HiveSentinel, Manifest,
+    mapper}
 
-  private val mapper = new ObjectMapper()
-
-  /** Parsed-manifest cache. Manifest files are IMMUTABLE per version
+  /** Decoded-manifest cache. Manifest files are IMMUTABLE per version
     * (a commit writes v_N exactly once; vacuum deletes, never
     * rewrites), but a table deleted and recreated — or restored
     * out-of-band — at the same root reuses version numbers, so the
     * key pins (version, file size, mtime) like the bloom sidecar
     * cache: a recreated manifest misses and reloads. Why it exists:
-    * every accessor used to re-read + re-parse the manifest from
+    * every metadata read used to re-read + re-parse the manifest from
     * disk, and the manifest grows with the table's DIR COUNT — worse,
-    * some call sites evaluated an accessor once per ENTRY inside a
-    * filter, making driver work O(dirs · parse(dirs)) per mutation.
+    * some call sites read it once per ENTRY inside a filter, making
+    * the metadata work of a mutation O(dirs · parse(dirs)).
     * At sf10 (3000 dirs) that was 16 s of repeated JSON parsing per
     * updateWhere — the q130/q126 r13 signature; at 100k dirs it would
     * be the driver wall. With the cache a commit parses each manifest
     * version once per content, and the per-entry sites become map
-    * lookups. Bounded (cleared wholesale past 64 versions) — nodes
+    * lookups. Bounded (cleared wholesale past 64 versions) — manifests
     * are metadata-sized and sessions touch a handful of versions.
     */
   private val nodeCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Long, Long), com.fasterxml.jackson.databind.JsonNode]()
+    (Int, Long, Long), Manifest]()
 
   /** Manifest parses actually performed (cache misses) — the ledger
     * the O(touched-dirs) commit spec reads: a mutation's metadata
@@ -88,15 +90,18 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private[sources] val manifestParses =
     new java.util.concurrent.atomic.AtomicLong()
 
-  private def nodeAt(v: Int): com.fasterxml.jackson.databind.JsonNode = {
-    val p = Paths.get(root, f"v_$v%06d.json")
+  private def versionFile(v: Int) = Paths.get(root, f"v_$v%06d.json")
+
+  /** Version `v`'s manifest, decoded once per file identity. */
+  private def manifestAt(v: Int): Manifest = {
+    val p = versionFile(v)
     val attrs = Files.readAttributes(
       p, classOf[java.nio.file.attribute.BasicFileAttributes])
     if (nodeCache.size > 64) nodeCache.clear()
     nodeCache.computeIfAbsent(
       (v, attrs.size(), attrs.lastModifiedTime().toMillis),
       _ => { manifestParses.incrementAndGet()
-        mapper.readTree(Files.readAllBytes(p)) })
+        Manifest.decode(Files.readAllBytes(p), partCol) })
   }
   private def pointer = Paths.get(root, "_current")
 
@@ -115,188 +120,21 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * analogue. Legacy-spec dirs are listed by [[legacyEntries]].
     */
   def manifest: Map[String, String] = {
-    val spec = currentPartCol
-    entriesAt(requireVersion).filter(_.pcol == spec)
-      .map(e => e.value -> e.dir).toMap
+    val m = manifestAt(requireVersion)
+    m.entries.filter(_.pcol == m.spec).map(e => e.value -> e.dir).toMap
   }
 
   /** (specCol, value, dir) of every dir still on an older spec. */
   def legacyEntries: Seq[(String, String, String)] = {
-    val spec = currentPartCol
-    entriesAt(requireVersion).filter(_.pcol != spec)
-      .map(e => (e.pcol, e.value, e.dir))
+    val m = manifestAt(requireVersion)
+    m.entries.filter(_.pcol != m.spec).map(e => (e.pcol, e.value, e.dir))
   }
 
   /** The spec column NEW commits partition by — the constructor's
     * `partCol` until [[evolvePartitioning]] changes it.
     */
   def currentPartCol: String =
-    currentVersion.map(partColAt).getOrElse(partCol)
-
-  private def partColAt(v: Int): String = {
-    val node = nodeAt(v)
-    if (node.has("partcol")) node.get("partcol").asText() else partCol
-  }
-
-  private def entriesAt(v: Int): Seq[Entry] = {
-    val node = nodeAt(v)
-    val spec = if (node.has("partcol")) node.get("partcol").asText()
-      else partCol
-    val cur = node.get("partitions").fields().asScala
-      .map(e => Entry(spec, e.getKey, e.getValue.asText())).toSeq
-    val legacy =
-      if (!node.has("legacy")) Seq.empty
-      else node.get("legacy").elements().asScala.map { n =>
-        Entry(n.get("col").asText(), n.get("value").asText(),
-          n.get("dir").asText())
-      }.toSeq
-    cur ++ legacy
-  }
-
-  private def schemaAt(v: Int): StructType =
-    StructType.fromDDL(nodeAt(v).get("schema").asText())
-
-  /** dir → column → (min, max) ZONE MAPS for the integral columns in
-    * [[statsColumns]], recorded at commit time (one extra aggregate
-    * over just-written dirs — zero cost when statsColumns is empty)
-    * and carried with the dir across versions (an untouched dir's
-    * bytes don't change, so neither do its stats — the same sharing
-    * as the data itself). [[readWhereStats]] prunes on them; a dir
-    * with no recorded stats for a column is kept conservatively.
-    */
-  private def statsAt(v: Int): Map[String, Map[String, (Long, Long)]] = {
-    val node = nodeAt(v)
-    if (!node.has("stats")) Map.empty
-    else node.get("stats").fields().asScala.map { e =>
-      e.getKey -> e.getValue.fields().asScala.map { c =>
-        c.getKey -> (c.getValue.get(0).asLong(),
-          c.getValue.get(1).asLong())
-      }.toMap
-    }.toMap
-  }
-
-  /** STRING zone maps — [[statsColumns]] entries whose schema type is
-    * string record per-dir (min, max) STRINGS at commit (ISO dates,
-    * month keys, status codes). [[GraftFileIndex]] prunes on them
-    * with byte-order-safe lexicographic bounds; same carry-by-
-    * reference sharing as the integral stats.
-    */
-  private def strStatsAt(v: Int)
-      : Map[String, Map[String, (String, String)]] = {
-    val node = nodeAt(v)
-    if (!node.has("sstats")) Map.empty
-    else node.get("sstats").fields().asScala.map { e =>
-      e.getKey -> e.getValue.fields().asScala.map { c =>
-        c.getKey -> (c.getValue.get(0).asText(),
-          c.getValue.get(1).asText())
-      }.toMap
-    }.toMap
-  }
-
-  /** DOUBLE zone maps — [[statsColumns]] entries whose schema type is
-    * float/double record per-dir (min, max) DOUBLES at commit (lat/
-    * lon bbox bounds, measurements). [[GraftFileIndex]] prunes
-    * double/float comparison literals on them — the reference's
-    * date+bbox hot path opens only intersecting dirs.
-    */
-  private def dblStatsAt(v: Int)
-      : Map[String, Map[String, (Double, Double)]] = {
-    val node = nodeAt(v)
-    if (!node.has("dstats")) Map.empty
-    else node.get("dstats").fields().asScala.map { e =>
-      e.getKey -> e.getValue.fields().asScala.map { c =>
-        c.getKey -> (c.getValue.get(0).asDouble(),
-          c.getValue.get(1).asDouble())
-      }.toMap
-    }.toMap
-  }
-
-  /** dir → total DATA bytes, recorded at commit from the just-written
-    * files (carried by reference like the zone maps — an untouched
-    * dir's bytes don't change). Serves [[GraftFileIndex.sizeInBytes]]
-    * at plan time so Catalyst's join-strategy stats need no
-    * filesystem listing (the Delta AddFile.size contract); a dir
-    * absent here (pre-upgrade manifest) falls back to a cached
-    * listing in the index.
-    */
-  private def bytesAt(v: Int): Map[String, Long] = {
-    val node = nodeAt(v)
-    if (!node.has("bytes")) Map.empty
-    else node.get("bytes").fields().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap
-  }
-
-  /** column → UNIT of its long-family zone maps ("micros" for
-    * TimestampType, "days" for DateType; plain integral columns are
-    * implicit "long" and not persisted). The commit side records
-    * Catalyst INTERNAL units so a pushed literal's value compares
-    * directly, and [[GraftFileIndex]] prunes only when the literal's
-    * dataType matches the recorded kind — a manifest without this
-    * node (pre-upgrade, integral-only) defaults every column to
-    * "long", which a timestamp/date literal never matches: stale
-    * zone maps go conservative, never wrong.
-    */
-  private def kindsAt(v: Int): Map[String, String] = {
-    val node = nodeAt(v)
-    if (!node.has("statskinds")) Map.empty
-    else node.get("statskinds").fields().asScala
-      .map(e => e.getKey -> e.getValue.asText()).toMap
-  }
-
-  /** dir → columns with a BLOOM sidecar (`_bloom_<col>.bf` inside the
-    * data dir, so vacuum reclaims it with the dir and a rebase's
-    * rename carries it along). Declared [[bloomColumns]] get one
-    * filter per freshly-written dir at commit — built executor-side
-    * in one pass, bits capped so each sidecar stays metadata-sized —
-    * and [[GraftFileIndex]] prunes EQUALITY literals on them: the PK
-    * point-lookup that zone maps can't help (high-cardinality key,
-    * uncorrelated with layout) opens only dirs that might contain the
-    * key, and a lookup of an ABSENT key opens nothing. The Iceberg-
-    * Puffin / Delta-bloom-index contract.
-    */
-  private def bloomsAt(v: Int): Map[String, Seq[String]] = {
-    val node = nodeAt(v)
-    if (!node.has("blooms")) Map.empty
-    else node.get("blooms").fields().asScala.map { e =>
-      e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq
-    }.toMap
-  }
-
-  /** dir → DELETION-VECTOR files (paths relative to root) in force
-    * for that dir — the Delta-DV/Iceberg-delete-file idea at key
-    * grain: [[deleteWhereDV]] commits a tiny key file instead of
-    * rewriting data dirs, readers anti-join it, and any REWRITE of a
-    * dir (upsert, compact, merge) reads through the vector and drops
-    * it — the rewrite materializes the deletion, so re-inserted keys
-    * live again (new dirs never reference old vectors).
-    */
-  private def dvsAt(v: Int): Map[String, Seq[String]] = {
-    val node = nodeAt(v)
-    if (!node.has("dvs")) Map.empty
-    else node.get("dvs").fields().asScala.map { e =>
-      e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq
-    }.toMap
-  }
-
-  /** column → (SQL default literal, version the column was ADDED at)
-    * for columns added by [[evolveSchema]] with a default. The `since`
-    * version scopes the default to dirs that PREDATE the column
-    * (Iceberg's initial-default contract): a dir written at version
-    * >= since stored the column physically — including explicit
-    * NULLs — and must read back verbatim. Reads tolerate the legacy
-    * bare-string form (treated as since=MaxValue, the old
-    * fill-everywhere behavior) so pre-upgrade manifests stay readable.
-    */
-  private def defaultsAt(v: Int): Map[String, (String, Int)] = {
-    val node = nodeAt(v)
-    if (!node.has("defaults")) Map.empty
-    else node.get("defaults").fields().asScala.map { e =>
-      val n = e.getValue
-      if (n.isObject)
-        e.getKey -> (n.get("sql").asText(), n.get("since").asInt())
-      else e.getKey -> (n.asText(), Int.MaxValue)
-    }.toMap
-  }
+    currentVersion.map(manifestAt(_).spec).getOrElse(partCol)
 
   /** Align a caller frame to version `v`'s committed schema: columns
     * added by [[evolveSchema]] that the frame lacks materialize their
@@ -307,8 +145,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * table rows it carries beside it share one file schema.
     */
   private def conformInput(v: Int, df: DataFrame): DataFrame = {
-    val target = schemaAt(v)
-    val dfl = defaultsAt(v)
+    val m = manifestAt(v)
+    val target = m.schema
     val extra = df.columns.filterNot(target.fieldNames.contains)
     require(extra.isEmpty,
       s"commit: columns ${extra.mkString(", ")} not in the " +
@@ -319,7 +157,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
       have.get(f.name) match {
         case Some(t) if t == f.dataType => col(f.name)
         case Some(_) => col(f.name).cast(f.dataType).as(f.name)
-        case None => dfl.get(f.name).map(d => expr(d._1)).getOrElse(lit(null))
+        case None => m.defaults.get(f.name).map(d => expr(d._1))
+          .getOrElse(lit(null))
           .cast(f.dataType).as(f.name)
       }
     }.toIndexedSeq: _*)
@@ -391,30 +230,19 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * are grouped by which defaults apply and each group is one scan.
     */
   private def readConformed(v: Int, dirs: Seq[String]): DataFrame = {
-    val sch = schemaAt(v)
-    val dfl = defaultsAt(v).filter { case (c, _) =>
-      sch.fieldNames.contains(c) }
-    val dvs = dvsAt(v)
-    val st = statsAt(v)
-    val sst = strStatsAt(v)
-    val dst = dblStatsAt(v)
-    val knd = kindsAt(v)
-    val byt = bytesAt(v)
-    val blm = bloomsAt(v)
+    val m = manifestAt(v)
+    val sch = m.schema
+    val dfl = m.defaults.filter { case (c, _) => sch.fieldNames.contains(c) }
     val info: Map[String, GraftFileIndex.ScanDir] =
-      entriesAt(v).map { e =>
+      m.entries.map { e =>
         val p = s"$root/${e.dir}"
-        p -> GraftFileIndex.ScanDir(p, Map(e.pcol -> e.value),
-          st.getOrElse(e.dir, Map.empty),
-          sst.getOrElse(e.dir, Map.empty),
-          dst.getOrElse(e.dir, Map.empty),
-          knd,
-          byt.getOrElse(e.dir, -1L),
-          blm.getOrElse(e.dir, Seq.empty)
-            .map(c => c -> s"$p/_bloom_$c.bf").toMap)
+        val d = m.dir(e.dir)
+        p -> GraftFileIndex.ScanDir(p, Map(e.pcol -> e.value), d.stats,
+          d.sstats, d.dstats, m.kinds, d.bytes.getOrElse(-1L),
+          d.blooms.map(c => c -> s"$p/_bloom_$c.bf").toMap)
       }.toMap
     val buf = scala.collection.mutable.ArrayBuffer.empty[GraftFileIndex]
-    if (dfl.isEmpty && dvs.isEmpty) {
+    if (dfl.isEmpty && m.dirs.values.forall(_.dvs.isEmpty)) {
       val df = indexedScan(v, sch, dirs, info, buf)
       lastIndexes = buf.toSeq
       return df
@@ -427,7 +255,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // identical conformance needs read together
     val out = dirs.groupBy(d => (
         dfl.filter(_._2._2 > writeVer(d)).keys.toSeq.sorted,
-        dvs.getOrElse(relDir(d), Seq.empty).sorted))
+        m.dir(relDir(d)).dvs.sorted))
       .map { case ((cols, dvFiles), ds) =>
         val base = indexedScan(v, sch, ds, info, buf)
         val defaulted = cols.foldLeft(base)((df, c) =>
@@ -478,15 +306,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def readVersionWhere(v: Int,
                        partFilter: String => Boolean): DataFrame = {
-    require(Files.exists(Paths.get(root, f"v_$v%06d.json")),
+    require(Files.exists(versionFile(v)),
       s"no version $v at $root (never committed, or vacuumed away)")
-    val spec = partColAt(v)
-    val dirs = entriesAt(v)
-      .filter(e => e.pcol != spec || partFilter(e.value))
+    val m = manifestAt(v)
+    val dirs = m.entries
+      .filter(e => e.pcol != m.spec || partFilter(e.value))
       .map(e => s"$root/${e.dir}")
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaAt(v))
-    else readConformed(v, dirs)
+    if (dirs.isEmpty) emptyLike(v) else readConformed(v, dirs)
   }
 
   /** ZONE-MAP pruned read: only dirs whose recorded [min, max] for
@@ -502,23 +328,23 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def readWhereStats(c: String, lo: Long, hi: Long): DataFrame = {
     val v = requireVersion
-    val dirs = statsKept(c, lo, hi).map(e => s"$root/${e.dir}")
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaAt(v))
-    else readConformed(v, dirs)
+    val dirs = statsKept(v, c, lo, hi).map(e => s"$root/${e.dir}")
+    if (dirs.isEmpty) emptyLike(v) else readConformed(v, dirs)
   }
 
   /** (total dirs, dirs kept) for a [[readWhereStats]] predicate —
     * the pruning ledger an I/O audit gates on.
     */
-  def pruneLedger(c: String, lo: Long, hi: Long): (Int, Int) =
-    (entriesAt(requireVersion).size, statsKept(c, lo, hi).size)
-
-  private def statsKept(c: String, lo: Long, hi: Long): Seq[Entry] = {
+  def pruneLedger(c: String, lo: Long, hi: Long): (Int, Int) = {
     val v = requireVersion
-    val st = statsAt(v)
-    entriesAt(v).filter { e =>
-      st.get(e.dir).flatMap(_.get(c)) match {
+    (manifestAt(v).entries.size, statsKept(v, c, lo, hi).size)
+  }
+
+  private def statsKept(v: Int, c: String, lo: Long, hi: Long)
+      : Seq[Entry] = {
+    val m = manifestAt(v)
+    m.entries.filter { e =>
+      m.dir(e.dir).stats.get(c) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // no stats -> never prune
       }
@@ -543,26 +369,24 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def changedPartitionValuesSince(sinceVersion: Int)
       : (Set[String], Set[String]) = {
-    val cur = requireVersion
-    require(Files.exists(Paths.get(root, f"v_$sinceVersion%06d.json")),
+    val cur = manifestAt(requireVersion)
+    require(Files.exists(versionFile(sinceVersion)),
       s"changedPartitionValuesSince: no version $sinceVersion at " +
         s"$root (never committed, or vacuumed)")
-    val spec = currentPartCol
-    require(partColAt(sinceVersion) == spec,
+    val old = manifestAt(sinceVersion)
+    val spec = cur.spec
+    require(old.spec == spec,
       s"changedPartitionValuesSince: partition spec changed " +
-        s"(${partColAt(sinceVersion)} -> $spec) across the window — " +
+        s"(${old.spec} -> $spec) across the window — " +
         s"value-grain diff undefined")
-    val oldE = entriesAt(sinceVersion)
-    val curE = entriesAt(cur)
-    require(oldE.forall(_.pcol == spec) && curE.forall(_.pcol == spec),
+    require(old.entries.forall(_.pcol == spec) &&
+      cur.entries.forall(_.pcol == spec),
       s"changedPartitionValuesSince: legacy-spec dirs present — " +
         s"migrate (compact) before value-grain diffing")
-    val dvO = dvsAt(sinceVersion)
-    val dvC = dvsAt(cur)
-    val om = oldE.map(e =>
-      e.value -> (e.dir, dvO.getOrElse(e.dir, Seq.empty))).toMap
-    val cm = curE.map(e =>
-      e.value -> (e.dir, dvC.getOrElse(e.dir, Seq.empty))).toMap
+    def byValue(m: Manifest) =
+      m.entries.map(e => e.value -> (e.dir, m.dir(e.dir).dvs)).toMap
+    val om = byValue(old)
+    val cm = byValue(cur)
     val changed = cm.collect {
       case (v, s) if !om.get(v).contains(s) => v }.toSet
     (changed, om.keySet -- cm.keySet)
@@ -588,25 +412,20 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val old: Map[String, Seq[String]] =
       if (sinceVersion < 0) Map.empty
       else {
-        val dv0 = dvsAt(sinceVersion)
-        entriesAt(sinceVersion)
-          .map(e => e.dir -> dv0.getOrElse(e.dir, Seq.empty)).toMap
+        val m0 = manifestAt(sinceVersion)
+        m0.entries.map(e => e.dir -> m0.dir(e.dir).dvs).toMap
       }
-    val dvc = dvsAt(cur)
-    val dirs = entriesAt(cur)
+    val m = manifestAt(cur)
+    val dirs = m.entries
       .filter { e =>
         if (sinceVersion < 0) true
         else old.get(e.dir) match {
-          case Some(prevDv) =>
-            dvc.getOrElse(e.dir, Seq.empty) != prevDv
+          case Some(prevDv) => m.dir(e.dir).dvs != prevDv
           case None => true
         }
       }
       .map(e => s"$root/${e.dir}")
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schemaAt(cur))
-    else readConformed(cur, dirs)
+    if (dirs.isEmpty) emptyLike(cur) else readConformed(cur, dirs)
   }
 
   /** DELETION-VECTOR delete: commit the matching rows' KEYS as a tiny
@@ -646,7 +465,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
   def deleteWhereDV(pred: Column, keys: Seq[String],
                     shardRows: Long = 8L * 1024 * 1024): Unit = {
     val cur = requireVersion
-    val spec = partColAt(cur)
+    val m = manifestAt(cur)
+    val spec = m.spec
     val selCols = (keys :+ spec).distinct
     val hit = read().filter(pred).select(selCols.map(col): _*)
       .localCheckpoint() // reused: key projection + touched values
@@ -660,19 +480,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
     (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
       .write.parquet(s"$root/$rel")
-    val entries = entriesAt(cur)
-    val dv0 = dvsAt(cur)
-    val dvNew = entries.map { e =>
-      val attach = e.pcol != spec || touched.contains(e.value)
-      val prev = dv0.getOrElse(e.dir, Seq.empty)
-      e.dir -> (if (attach) prev :+ rel else prev)
-    }.toMap
+    val attached = m.entries
+      .filter(e => e.pcol != spec || touched.contains(e.value))
+      .map { e => val d = m.dir(e.dir); e.dir -> d.copy(dvs = d.dvs :+ rel) }
     raceSeam()
-    try {
-      writeVersion(cur + 1, schemaAt(cur).toDDL, spec, entries,
-        defaultsAt(cur), statsAt(cur), dvNew, strStatsAt(cur),
-        dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
-    } catch {
+    try publish(cur + 1, m.copy(dirs = m.dirs ++ attached))
+    catch {
       case e: java.util.ConcurrentModificationException =>
         // the just-written vector file is ours and no manifest
         // references it — reclaim it in the same failure path, the
@@ -686,7 +499,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
 
   /** Deletion-vector files the current version references (audit). */
   def liveDvFiles: Seq[String] =
-    dvsAt(requireVersion).values.flatten.toSeq.distinct.sorted
+    manifestAt(requireVersion).dirs.values.flatMap(_.dvs).toSeq
+      .distinct.sorted
 
   // ---- named refs (Iceberg-style tags) ----
 
@@ -709,7 +523,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def tag(name: String, v: Int = -1): Unit = {
     val target = if (v < 0) requireVersion else v
-    require(Files.exists(Paths.get(root, f"v_$target%06d.json")),
+    require(Files.exists(versionFile(target)),
       s"tag: no version $target at $root")
     writeRefs(tags + (name -> target))
   }
@@ -888,19 +702,19 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private def winnerDelta(b: Int, c: Int,
                           affected: Set[(String, String)])
       : Option[Seq[Entry]] = {
-    if (schemaAt(c).toDDL != schemaAt(b).toDDL) return None
-    if (partColAt(c) != partColAt(b)) return None
-    if (defaultsAt(c) != defaultsAt(b)) return None
-    if (kindsAt(c) != kindsAt(b)) return None
-    val eb = entriesAt(b).map(e => (e.pcol, e.value) -> e.dir).toMap
-    val ec = entriesAt(c).map(e => (e.pcol, e.value) -> e.dir).toMap
-    val dvb = dvsAt(b); val dvc = dvsAt(c)
+    val (mb, mc) = (manifestAt(b), manifestAt(c))
+    if (mc.schema.toDDL != mb.schema.toDDL) return None
+    if (mc.spec != mb.spec) return None
+    if (mc.defaults != mb.defaults) return None
+    if (mc.kinds != mb.kinds) return None
+    val eb = mb.entries.map(e => (e.pcol, e.value) -> e.dir).toMap
+    val ec = mc.entries.map(e => (e.pcol, e.value) -> e.dir).toMap
     val changed = (eb.keySet ++ ec.keySet).filter { k =>
       eb.get(k) != ec.get(k) ||
-        eb.get(k).flatMap(dvb.get) != ec.get(k).flatMap(dvc.get)
+        eb.get(k).map(mb.dir(_).dvs) != ec.get(k).map(mc.dir(_).dvs)
     }
     if ((changed & affected).nonEmpty) None
-    else Some(entriesAt(c).filter(e =>
+    else Some(mc.entries.filter(e =>
       changed((e.pcol, e.value)) &&
         !eb.get((e.pcol, e.value)).contains(e.dir)))
   }
@@ -959,18 +773,18 @@ class PartitionedCowTable(val root: String, val partCol: String,
                      keyProbe: Option[(Seq[Entry], String) => Boolean] =
                        None)
       : Unit = {
-    val spec = base0.map(partColAt).getOrElse(partCol)
-    val dataSchema = schema.getOrElse(schemaAt(base0.get))
-    val schemaDdl = dataSchema.toDDL
+    val m0 = base0.map(manifestAt)
+    val spec = m0.map(_.spec).getOrElse(partCol)
+    val dataSchema = schema.getOrElse(m0.get.schema)
     val defaults =
       if (schema.isDefined) Map.empty[String, (String, Int)]
-      else defaultsAt(base0.get)
+      else m0.get.defaults
     // this commit's affected scope: the partitions it rewrites plus
     // every entry the caller deliberately dropped (migrated legacy
     // dirs) — a rebase is sound only when the winner touched none
     val affected: Set[(String, String)] =
       touched.map(v => (spec, v)) ++
-        (base0.map(entriesAt).getOrElse(Seq.empty)
+        (m0.map(_.entries).getOrElse(Seq.empty)
           .map(e => (e.pcol, e.value)).toSet --
           carried.map(e => (e.pcol, e.value)).toSet)
     // the stage has a writer-unique name; claim w_<next> with a
@@ -1016,7 +830,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
             throw cme
         }
       }
-      curCarried = entriesAt(cur.get)
+      curCarried = manifestAt(cur.get).entries
         .filterNot(en => affected((en.pcol, en.value)))
       base = cur
       attempts += 1
@@ -1024,7 +838,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // The whole publish step for one claimed data dir: list written
     // entries, aggregate zone maps and byte counts, write the
     // manifest. Returns true when committed; a version race inside
-    // writeVersion rebases (when sound) and returns false so the
+    // publish rebases (when sound) and returns false so the
     // claim/publish loop below re-claims under the new base.
     def publishAttempt(wdir: String): Boolean = {
       val next = base.map(_ + 1).getOrElse(0)
@@ -1036,19 +850,15 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // commit's affected scope)
       val kept = curCarried.filterNot(e =>
         e.pcol == spec && touched.contains(e.value))
-      // zone maps: carried dirs keep their recorded stats verbatim
-      // (unchanged bytes, unchanged stats); freshly-written dirs get ONE
+      // carried dirs keep their records verbatim: zone maps, bytes and
+      // blooms (unchanged bytes, unchanged metadata), and deletion
+      // vectors (rewritten dirs read THROUGH their vectors above, so
+      // the rewrite materialized them); freshly-written dirs get ONE
       // footer-sized aggregate over the new files. Zero jobs when
       // statsColumns is empty. Read from `base` — the version this
       // attempt publishes against.
-      val carriedStats = base.map(statsAt).getOrElse(Map.empty)
-      val carriedSStats = base.map(strStatsAt).getOrElse(Map.empty)
-      val carriedDStats = base.map(dblStatsAt).getOrElse(Map.empty)
-      val carriedKinds = base.map(kindsAt).getOrElse(Map.empty)
-      // deletion vectors ride with carried dirs; rewritten dirs read
-      // THROUGH their vectors above, so the rewrite materialized them
-      val carriedDvs = base.map(dvsAt).getOrElse(Map.empty)
-      val carriedBytes = base.map(bytesAt).getOrElse(Map.empty)
+      val bm = base.map(manifestAt)
+        .getOrElse(Manifest(dataSchema, spec, Seq.empty))
       // per-dir data bytes from the just-written local files (the same
       // name filter the index's listing applies) — recorded so plan-time
       // sizeInBytes never needs a listing
@@ -1092,7 +902,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // so absence stays sound). Bits per filter are sized for fpp
       // 1e-6 and CAPPED at 2^22 (512 KiB) — a huge dir degrades to a
       // higher false-positive rate, never to an unbounded sidecar.
-      val carriedBlooms = base.map(bloomsAt).getOrElse(Map.empty)
       val writtenBlooms: Map[String, Seq[String]] =
         if (bloomColumns.isEmpty || written.isEmpty) Map.empty
         else {
@@ -1214,17 +1023,14 @@ class PartitionedCowTable(val root: String, val partCol: String,
               s"float/double, date, timestamp")
         }
       }
-      val (writtenStats, writtenSStats, writtenDStats, writtenKinds)
-          : (Map[String, Map[String, (Long, Long)]],
-             Map[String, Map[String, (String, String)]],
-             Map[String, Map[String, (Double, Double)]],
-             Map[String, String]) =
-        if (statsColumns.isEmpty || written.isEmpty)
-          (Map.empty, Map.empty, Map.empty, Map.empty)
+      // (partition value → its zone maps, column → recorded kind)
+      val (zones, writtenKinds)
+          : (Map[String, DirMeta], Map[String, String]) =
+        if (statsColumns.isEmpty || written.isEmpty) (Map.empty, Map.empty)
         else {
           val cols = statsColumns.filter(dataSchema.fieldNames.contains)
           val fam = cols.map(c => c -> statFamily(c)).toMap
-          if (cols.isEmpty) (Map.empty, Map.empty, Map.empty, Map.empty)
+          if (cols.isEmpty) (Map.empty, Map.empty)
           else {
             val aggs = cols.flatMap { c =>
               val e = fam(c) match {
@@ -1267,38 +1073,18 @@ class PartitionedCowTable(val root: String, val partCol: String,
                 spark.conf.set(infKey, infPrev)
                 spark.conf.set(tzKey, tzPrev)
               }
-            val longCols = cols.filter(c => Set("long", "micros",
-              "ntzmicros", "days").contains(fam(c)))
-            val byValueL = rows.map { r =>
-              r.getAs[String]("__part") ->
-                longCols.flatMap { c =>
-                  if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-                  else Some(c -> (r.getAs[Long](s"__mn_$c"),
-                    r.getAs[Long](s"__mx_$c")))
-                }.toMap
-            }.toMap
-            val byValueS = rows.map { r =>
-              r.getAs[String]("__part") ->
-                cols.filter(fam(_) == "str").flatMap { c =>
-                  if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-                  else Some(c -> (r.getAs[String](s"__mn_$c"),
-                    r.getAs[String](s"__mx_$c")))
-                }.toMap
-            }.toMap
-            val byValueD = rows.map { r =>
-              r.getAs[String]("__part") ->
-                cols.filter(fam(_) == "dbl").flatMap { c =>
-                  if (r.isNullAt(r.fieldIndex(s"__mn_$c"))) None
-                  else Some(c -> (r.getAs[Double](s"__mn_$c"),
-                    r.getAs[Double](s"__mx_$c")))
-                }.toMap
-            }.toMap
-            (written.flatMap(e =>
-               byValueL.get(e.value).map(e.dir -> _)).toMap,
-             written.flatMap(e =>
-               byValueS.get(e.value).map(e.dir -> _)).toMap,
-             written.flatMap(e =>
-               byValueD.get(e.value).map(e.dir -> _)).toMap,
+            (rows.map { r =>
+              // one (min, max) per non-null column of the given families
+              def bounds[A](fs: String*): Map[String, (A, A)] =
+                cols.filter(c => fs.contains(fam(c)) &&
+                    !r.isNullAt(r.fieldIndex(s"__mn_$c")))
+                  .map(c => c -> (r.getAs[A](s"__mn_$c"),
+                    r.getAs[A](s"__mx_$c"))).toMap
+              r.getAs[String]("__part") -> DirMeta(
+                stats = bounds[Long]("long", "micros", "ntzmicros", "days"),
+                sstats = bounds[String]("str"),
+                dstats = bounds[Double]("dbl"))
+            }.toMap,
              cols.flatMap(c => fam(c) match {
                case k @ ("micros" | "days") => Some(c -> k)
                // both timestamp flavors record micros; the literal a
@@ -1310,14 +1096,15 @@ class PartitionedCowTable(val root: String, val partCol: String,
              }).toMap)
           }
         }
+      val writtenDirs = written.map { e =>
+        e.dir -> zones.getOrElse(e.value, DirMeta()).copy(
+          bytes = Some(writtenBytes(e.dir)),
+          blooms = writtenBlooms.getOrElse(e.dir, Seq.empty))
+      }
       try {
-        writeVersion(next, schemaDdl, spec, kept ++ written, defaults,
-          carriedStats ++ writtenStats, carriedDvs,
-          carriedSStats ++ writtenSStats,
-          carriedDStats ++ writtenDStats,
-          carriedKinds ++ writtenKinds,
-          carriedBytes ++ writtenBytes,
-          carriedBlooms ++ writtenBlooms)
+        publish(next, bm.copy(schema = dataSchema, spec = spec,
+          entries = kept ++ written, defaults = defaults,
+          kinds = bm.kinds ++ writtenKinds, dirs = bm.dirs ++ writtenDirs))
         true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1355,21 +1142,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
     }
   }
 
-  private def writeVersion(v: Int, schemaDdl: String, spec: String,
-                           entries: Seq[Entry],
-                           defaults: Map[String, (String, Int)] =
-                             Map.empty,
-                           stats: Map[String, Map[String, (Long, Long)]] =
-                             Map.empty,
-                           dvs: Map[String, Seq[String]] = Map.empty,
-                           sstats: Map[String,
-                             Map[String, (String, String)]] = Map.empty,
-                           dstats: Map[String,
-                             Map[String, (Double, Double)]] = Map.empty,
-                           kinds: Map[String, String] = Map.empty,
-                           bytes: Map[String, Long] = Map.empty,
-                           blooms: Map[String, Seq[String]] = Map.empty)
-      : Unit = {
+  /** Write `m` as version `v` and flip the pointer to it. Only dirs
+    * `m`'s entries reference keep their records.
+    */
+  private def publish(v: Int, m: Manifest): Unit = {
     // optimistic concurrency (see CowTable.commit): a competing writer
     // advancing the pointer mid-commit means this manifest's carried
     // partitions derive from a stale read — fail loudly, don't
@@ -1380,94 +1156,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
         s"concurrent commit detected at $root: expected base " +
           s"${expected.getOrElse("<none>")}, found " +
           s"${currentVersion.getOrElse("<none>")}")
-    val node = mapper.createObjectNode()
-    node.put("schema", schemaDdl)
-    node.put("partcol", spec)
-    if (defaults.nonEmpty) {
-      val d = node.putObject("defaults")
-      defaults.toSeq.sortBy(_._1).foreach { case (k, (sql, since)) =>
-        val o = d.putObject(k)
-        o.put("sql", sql); o.put("since", since)
-      }
-    }
-    // persist zone maps only for dirs this manifest references
-    val live = entries.map(_.dir).toSet
-    val liveStats = stats.filter { case (d, m) =>
-      live.contains(d) && m.nonEmpty }
-    val liveDvs = dvs.filter { case (d, fs) =>
-      live.contains(d) && fs.nonEmpty }
-    if (liveDvs.nonEmpty) {
-      val dn = node.putObject("dvs")
-      liveDvs.toSeq.sortBy(_._1).foreach { case (d, fs) =>
-        val a = dn.putArray(d)
-        fs.foreach(a.add)
-      }
-    }
-    if (liveStats.nonEmpty) {
-      val st = node.putObject("stats")
-      liveStats.toSeq.sortBy(_._1).foreach { case (d, cols) =>
-        val o = st.putObject(d)
-        cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val a = o.putArray(c)
-          a.add(lo); a.add(hi)
-        }
-      }
-    }
-    val liveSStats = sstats.filter { case (d, m) =>
-      live.contains(d) && m.nonEmpty }
-    if (liveSStats.nonEmpty) {
-      val st = node.putObject("sstats")
-      liveSStats.toSeq.sortBy(_._1).foreach { case (d, cols) =>
-        val o = st.putObject(d)
-        cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val a = o.putArray(c)
-          a.add(lo); a.add(hi)
-        }
-      }
-    }
-    val liveDStats = dstats.filter { case (d, m) =>
-      live.contains(d) && m.nonEmpty }
-    if (liveDStats.nonEmpty) {
-      val st = node.putObject("dstats")
-      liveDStats.toSeq.sortBy(_._1).foreach { case (d, cols) =>
-        val o = st.putObject(d)
-        cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val a = o.putArray(c)
-          a.add(lo); a.add(hi)
-        }
-      }
-    }
-    if (kinds.nonEmpty) {
-      val kn = node.putObject("statskinds")
-      kinds.toSeq.sortBy(_._1).foreach { case (c, k) => kn.put(c, k) }
-    }
-    val liveBytes = bytes.filter { case (d, _) => live.contains(d) }
-    if (liveBytes.nonEmpty) {
-      val bn = node.putObject("bytes")
-      liveBytes.toSeq.sortBy(_._1).foreach { case (d, b) => bn.put(d, b) }
-    }
-    val liveBlooms = blooms.filter { case (d, cs) =>
-      live.contains(d) && cs.nonEmpty }
-    if (liveBlooms.nonEmpty) {
-      val bn = node.putObject("blooms")
-      liveBlooms.toSeq.sortBy(_._1).foreach { case (d, cs) =>
-        val a = bn.putArray(d)
-        cs.sorted.foreach(a.add)
-      }
-    }
-    val parts = node.putObject("partitions")
-    entries.filter(_.pcol == spec).sortBy(_.value)
-      .foreach(e => parts.put(e.value, e.dir))
-    val legacy = entries.filter(_.pcol != spec)
-    if (legacy.nonEmpty) {
-      val arr = node.putArray("legacy")
-      legacy.sortBy(e => (e.pcol, e.value)).foreach { e =>
-        val n = arr.addObject()
-        n.put("col", e.pcol); n.put("value", e.value); n.put("dir", e.dir)
-      }
-    }
-    Files.write(Paths.get(root, f"v_$v%06d.json"),
-      mapper.writeValueAsBytes(node))
+    val live = m.entries.map(_.dir).toSet
+    Files.write(versionFile(v),
+      m.copy(dirs = m.dirs.filter { case (d, _) => live(d) }).encode)
     val tmp = Paths.get(root, s"_current.tmp.$v")
     Files.write(tmp, v.toString.getBytes(UTF_8))
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
@@ -1485,12 +1176,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def evolvePartitioning(newPartCol: String): Unit = {
     val cur = requireVersion
-    require(schemaAt(cur).fieldNames.contains(newPartCol),
+    val m = manifestAt(cur)
+    require(m.schema.fieldNames.contains(newPartCol),
       s"evolvePartitioning: column '$newPartCol' not in schema")
-    if (newPartCol == currentPartCol) return
-    writeVersion(cur + 1, schemaAt(cur).toDDL, newPartCol,
-      entriesAt(cur), defaultsAt(cur), statsAt(cur), dvsAt(cur),
-      strStatsAt(cur), dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
+    if (newPartCol == m.spec) return
+    publish(cur + 1, m.copy(spec = newPartCol))
   }
 
   /** Delta-style RESTORE (`RESTORE TABLE ... TO VERSION AS OF v`):
@@ -1504,12 +1194,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def restore(v: Int): Unit = {
     val cur = requireVersion
-    require(Files.exists(Paths.get(root, f"v_$v%06d.json")),
+    require(Files.exists(versionFile(v)),
       s"restore: no version $v at $root (never committed, or vacuumed)")
     if (v == cur) return
-    writeVersion(cur + 1, schemaAt(v).toDDL, partColAt(v), entriesAt(v),
-      defaultsAt(v), statsAt(v), dvsAt(v), strStatsAt(v),
-      dblStatsAt(v), kindsAt(v), bytesAt(v), bloomsAt(v))
+    publish(cur + 1, manifestAt(v))
   }
 
   /** Add a column — a METADATA-ONLY commit (Iceberg's add-column
@@ -1523,29 +1211,27 @@ class PartitionedCowTable(val root: String, val partCol: String,
   def evolveSchema(name: String, sqlType: String,
                    defaultSql: Option[String] = None): Unit = {
     val cur = requireVersion
-    val sch = schemaAt(cur)
-    require(!sch.fieldNames.contains(name),
+    val m = manifestAt(cur)
+    require(!m.schema.fieldNames.contains(name),
       s"evolveSchema: column '$name' already exists")
-    val widened = StructType.fromDDL(s"${sch.toDDL}, `$name` $sqlType")
     // the column exists from version cur+1 onward: dirs whose embedded
     // write version is < cur+1 predate it and get the default on read;
     // dirs written by later commits store the column physically
-    writeVersion(cur + 1, widened.toDDL, partColAt(cur), entriesAt(cur),
-      defaultsAt(cur) ++ defaultSql.map(d => name -> (d, cur + 1)),
-      statsAt(cur), dvsAt(cur), strStatsAt(cur),
-      dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
+    publish(cur + 1, m.copy(
+      schema = StructType.fromDDL(s"${m.schema.toDDL}, `$name` $sqlType"),
+      defaults = m.defaults ++ defaultSql.map(d => name -> (d, cur + 1))))
   }
 
   /** An empty DataFrame with version `v`'s committed schema (safe to
     * unionByName against any read of this table).
     */
   private def emptyLike(v: Int): DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[Row], schemaAt(v))
+    spark.sparkContext.emptyRDD[Row], manifestAt(v).schema)
 
   /** Version `v`'s CURRENT-SPEC dirs holding `values`. */
   private def specDirs(v: Int, values: Set[String]): Seq[String] = {
-    val spec = partColAt(v)
-    entriesAt(v).filter(e => e.pcol == spec && values.contains(e.value))
+    val m = manifestAt(v)
+    m.entries.filter(e => e.pcol == m.spec && values.contains(e.value))
       .map(e => s"$root/${e.dir}")
   }
 
@@ -1572,8 +1258,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   private def legacyTouching(v: Int, mark: DataFrame => DataFrame)
       : (Seq[Entry], DataFrame, Set[String]) = {
-    val spec = partColAt(v)
-    val legacy = entriesAt(v).filter(_.pcol != spec)
+    val m = manifestAt(v)
+    val spec = m.spec
+    val legacy = m.entries.filter(_.pcol != spec)
     if (legacy.isEmpty) return (Seq.empty, emptyLike(v), Set.empty)
     val hitFiles = mark(
       readConformed(v, legacy.map(e => s"$root/${e.dir}"))
@@ -1605,7 +1292,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def overwrite(df: DataFrame): Unit = staging { stage =>
     val base = currentVersion
-    val spec = base.map(partColAt).getOrElse(partCol)
+    val spec = base.map(manifestAt(_).spec).getOrElse(partCol)
     stageRows(df, spec, stage)
     commit(base, stage, stagedValues(stage, spec), Seq.empty,
       schema = Some(df.schema))
@@ -1625,12 +1312,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (!exists) overwrite(df0)
     else staging { stage =>
       val base = requireVersion
-      val spec = partColAt(base)
+      val bm = manifestAt(base)
+      val spec = bm.spec
       stageRows(conformInput(base, df0), spec, stage)
       val touched = stagedValues(stage, spec)
       if (specDirs(base, touched).nonEmpty)
         stageRows(readSpec(base, touched), spec, stage)
-      commit(Some(base), stage, touched, entriesAt(base), narrowRead = true)
+      commit(Some(base), stage, touched, bm.entries, narrowRead = true)
     }
 
   /** Wholesale partition replacement — ONE commit that makes the
@@ -1656,8 +1344,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (!exists) overwrite(rows)
     else staging { stage =>
       val base = requireVersion
-      val spec = partColAt(base)
-      require(entriesAt(base).forall(_.pcol == spec),
+      val bm = manifestAt(base)
+      val spec = bm.spec
+      require(bm.entries.forall(_.pcol == spec),
         s"replacePartitions: $root has legacy-spec dirs — wholesale " +
           "replacement is defined over current-spec values only; " +
           "compact() first or use mergeSync")
@@ -1665,7 +1354,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // narrowRead: like append, the commit's affected scope IS the
       // touched partitions, so an entry-disjoint winner can rebase
       commit(Some(base), stage, values ++ stagedValues(stage, spec),
-        entriesAt(base), narrowRead = true)
+        bm.entries, narrowRead = true)
     }
 
   /** PK upsert (J7): incoming rows replace same-key rows; untouched
@@ -1692,7 +1381,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (!exists) overwrite(updates0)
     else staging { stage =>
       val base = requireVersion
-      val spec = partColAt(base)
+      val bm = manifestAt(base)
+      val spec = bm.spec
       val updates = conformInput(base, updates0)
       stageRows(updates, spec, stage)
       val staged = stagedValues(stage, spec)
@@ -1705,7 +1395,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
         stageRows(readSpec(base, touched).unionByName(migRows)
           .join(stagedKeys, keys, "left_anti"), spec, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(mig.contains),
+        bm.entries.filterNot(mig.contains),
         keyProbe = Some(keyDisjointProbe(keys)))
     }
 
@@ -1747,7 +1437,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
   override def updateWhere(pred: Column,
                            sets: Map[String, Column]): Unit = {
     val base = requireVersion
-    val spec = partColAt(base)
+    val bm = manifestAt(base)
+    val spec = bm.spec
     val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
     val touched =
       touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
@@ -1757,7 +1448,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
           df.withColumn(name, when(pred, value).otherwise(col(name)))
       }, spec, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(mig.contains))
+        bm.entries.filterNot(mig.contains))
     }
   }
 
@@ -1767,7 +1458,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def deleteWhere(pred: Column): Unit = {
     val base = requireVersion
-    val spec = partColAt(base)
+    val bm = manifestAt(base)
+    val spec = bm.spec
     val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
     val touched =
       touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
@@ -1775,7 +1467,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       stageRows(readSpec(base, touched).unionByName(migRows).filter(!pred),
         spec, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(mig.contains))
+        bm.entries.filterNot(mig.contains))
     }
   }
 
@@ -1804,7 +1496,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val upserts = ops.filter(col(opCol) =!= "D").drop(opCol)
     if (!exists) { overwrite(upserts); return }
     val base = requireVersion
-    val spec = partColAt(base)
+    val bm = manifestAt(base)
+    val spec = bm.spec
     val data = conformInput(base, upserts)
     val touched0 = touchedValues(ops, spec)
     val touchedKeys = ops.select(keys.map(col): _*)
@@ -1816,7 +1509,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
         .join(touchedKeys, keys, "left_anti")
         .unionByName(data), spec, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(mig.contains),
+        bm.entries.filterNot(mig.contains),
         // same key-scoped result as upsert (I/U/D all key-addressed):
         // rebase past an entry-disjoint winner whose new content holds
         // none of this batch's keys
@@ -1868,9 +1561,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
       : (Long, Long, Long) = {
     if (!exists) { overwrite(source0); return (source0.count(), 0L, 0L) }
     val base = requireVersion
-    val spec = partColAt(base)
+    val bm = manifestAt(base)
+    val spec = bm.spec
     val source = conformInput(base, source0)
-    val cols = schemaAt(base).fieldNames.sorted.toSeq
+    val cols = bm.schema.fieldNames.sorted.toSeq
     // 64-bit row hash: at billions of changed keys a 32-bit hash
     // WOULD silently miss ~n/2^32 updates; 64-bit pushes that past
     // any realistic sync volume
@@ -1905,7 +1599,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // keys that stay behind in NON-migrated legacy dirs are unchanged
     // by construction (their dirs held no changed key) — exclude them
     // from the rewritten partitions so they aren't duplicated
-    val remain = entriesAt(base)
+    val remain = bm.entries
       .filter(e => e.pcol != spec && !mig.contains(e))
     val remainKeys =
       if (remain.isEmpty) emptyLike(base).select(keys.map(col): _*)
@@ -1916,7 +1610,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
           .isInCollection(touched.toSeq))
         .join(remainKeys, keys, "left_anti"), spec, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(mig.contains))
+        bm.entries.filterNot(mig.contains))
     }
     (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
       counts.getOrElse("D", 0L))
@@ -1937,15 +1631,16 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // legacy dir is rewritten under the current spec alongside the
     // selected partitions (one layout commit, row content unchanged)
     val base = requireVersion
-    val spec0 = partColAt(base)
-    val legacy = entriesAt(base).filter(_.pcol != spec0)
+    val bm = manifestAt(base)
+    val spec0 = bm.spec
+    val legacy = bm.entries.filter(_.pcol != spec0)
     val (migRows, migTouched) =
       if (legacy.isEmpty) (emptyLike(base), Set.empty[String])
       else {
         val rows = readConformed(base, legacy.map(e => s"$root/${e.dir}"))
         (rows, touchedValues(rows, spec0))
       }
-    val touched = entriesAt(base).filter(_.pcol == spec0).map(_.value)
+    val touched = bm.entries.filter(_.pcol == spec0).map(_.value)
       .filter(partFilter).toSet ++ migTouched
     if (touched.isEmpty) return
     val rows = readSpec(base, touched).unionByName(migRows)
@@ -1963,16 +1658,16 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val shaped =
       if (targetBytes <= 0L) rows.repartition(col(spec0))
       else {
-        val byt = bytesAt(base)
         import spark.implicits._
         // current-spec entries ONLY: a legacy entry whose value string
         // collides with a live partition value would duplicate the
         // __pv join key and double every matching row in the rewrite.
         // Legacy rows joining to no key fall to the coalesce(1) arm.
-        val nfSeq = entriesAt(base)
+        val nfSeq = bm.entries
           .filter(_.pcol == spec0)
           .map(e => e.value -> math.max(1L, math.ceil(
-            byt.getOrElse(e.dir, 0L).toDouble / targetBytes).toLong))
+            bm.dir(e.dir).bytes.getOrElse(0L).toDouble / targetBytes)
+            .toLong))
         val nf = nfSeq.toDF("__pv", "__nf")
         val dataCols = rows.columns.map(col)
         // EXPLICIT partition count (AQE coalesces a keys-only
@@ -1991,7 +1686,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     staging { stage =>
       stageRows(shaped, spec0, stage)
       commit(Some(base), stage, touched,
-        entriesAt(base).filterNot(legacy.contains), narrowRead = true)
+        bm.entries.filterNot(legacy.contains), narrowRead = true)
     }
   }
 
@@ -2013,7 +1708,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def zOrderRelayout(xCol: String, yCol: String, bits: Int,
                      cellCol: String = "z_cell"): Unit = {
-    val sch = schemaAt(requireVersion)
+    val sch = manifestAt(requireVersion).schema
     require(sch.fieldNames.contains(xCol) &&
       sch.fieldNames.contains(yCol),
       s"zOrderRelayout: columns '$xCol'/'$yCol' not in schema")
@@ -2072,7 +1767,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private def protectedState(cur: Int, minAgeMillis: Long = 0L)
       : (Set[Int], Set[String], Set[String]) = {
     val anchored = (tags.values.toSet + cur).filter(v =>
-      Files.exists(Paths.get(root, f"v_$v%06d.json")))
+      Files.exists(versionFile(v)))
     val young: Set[Int] =
       if (minAgeMillis <= 0L) Set.empty
       else {
@@ -2087,10 +1782,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
         finally listing.close()
       }
     val versions = anchored ++ young
-    val dirs = versions.flatMap(v =>
-      entriesAt(v).map(_.dir.split('/').head))
-    val dvFiles = versions.flatMap(v =>
-      dvsAt(v).values.flatten.map(_.stripPrefix("dv/")))
+    val ms = versions.toSeq.map(manifestAt)
+    val dirs = ms.flatMap(_.entries.map(_.dir.split('/').head)).toSet
+    val dvFiles = ms.flatMap(_.dirs.values.flatMap(_.dvs)
+      .map(_.stripPrefix("dv/"))).toSet
     (versions, dirs, dvFiles)
   }
 
@@ -2184,6 +1879,208 @@ object PartitionedCowTable {
     */
   private[sources] case class Entry(pcol: String, value: String,
                                     dir: String)
+
+  private val mapper = new ObjectMapper()
+
+  /** What a manifest records about one data dir. Every field is
+    * written at the commit that writes the dir and carried with the
+    * dir across versions (an untouched dir's bytes don't change, so
+    * neither does its record — the same sharing as the data itself).
+    *
+    * @param stats  integral ZONE MAPS: column → (min, max) for the
+    *   [[statsColumns]] of integral, timestamp and date type, in
+    *   Catalyst INTERNAL units (see [[Manifest.kinds]]). One extra
+    *   aggregate over just-written dirs — zero cost when statsColumns
+    *   is empty. [[readWhereStats]] and [[GraftFileIndex]] prune on
+    *   them; a dir with no recorded stats for a column is kept
+    *   conservatively.
+    * @param sstats STRING zone maps (ISO dates, month keys, status
+    *   codes); [[GraftFileIndex]] prunes on them with byte-order-safe
+    *   lexicographic bounds.
+    * @param dstats DOUBLE zone maps for float/double columns (lat/lon
+    *   bbox bounds, measurements) — the reference's date+bbox hot path
+    *   opens only intersecting dirs.
+    * @param bytes  total DATA bytes of the dir. Serves
+    *   [[GraftFileIndex.sizeInBytes]] at plan time so Catalyst's
+    *   join-strategy stats need no filesystem listing (the Delta
+    *   AddFile.size contract); absent (pre-upgrade manifest), the
+    *   index falls back to a cached listing.
+    * @param blooms columns with a BLOOM sidecar (`_bloom_<col>.bf`
+    *   inside the data dir, so vacuum reclaims it with the dir and a
+    *   rebase's rename carries it along). [[GraftFileIndex]] prunes
+    *   EQUALITY literals on them: the PK point-lookup that zone maps
+    *   can't help opens only dirs that might contain the key, and a
+    *   lookup of an ABSENT key opens nothing (the Iceberg-Puffin /
+    *   Delta-bloom-index contract).
+    * @param dvs    DELETION-VECTOR files (paths relative to root) in
+    *   force for the dir — the Delta-DV/Iceberg-delete-file idea at
+    *   key grain: [[deleteWhereDV]] commits a tiny key file instead of
+    *   rewriting data dirs, readers anti-join it, and any REWRITE of a
+    *   dir (upsert, compact, merge) reads through the vector and drops
+    *   it — the rewrite materializes the deletion, so re-inserted keys
+    *   live again (new dirs never reference old vectors).
+    */
+  private case class DirMeta(
+      stats: Map[String, (Long, Long)] = Map.empty,
+      sstats: Map[String, (String, String)] = Map.empty,
+      dstats: Map[String, (Double, Double)] = Map.empty,
+      bytes: Option[Long] = None,
+      blooms: Seq[String] = Seq.empty,
+      dvs: Seq[String] = Seq.empty)
+
+  /** One version's manifest, `<root>/v_NNNNNN.json` — the one place its
+    * format is known: [[Manifest.decode]] reads it and [[encode]]
+    * writes it, and every reader and writer of the table goes through
+    * this record.
+    *
+    * On disk it is one JSON object with these keys, in this order,
+    * sections with nothing to record left out and every map sorted by
+    * key: `schema` (DDL), `partcol` (the spec column), `defaults`,
+    * the per-dir sections `dvs`, `stats`, `sstats`, `dstats`, then
+    * `statskinds`, the per-dir `bytes` and `blooms`, `partitions`
+    * (current-spec value → dir) and `legacy` (an array of
+    * {col, value, dir}, sorted by col then value). Older forms still
+    * decode: no `partcol` means the constructor's column, a bare-string
+    * default has no `since`, absent sections are empty.
+    *
+    * @param entries  every data dir: current-spec and legacy entries.
+    * @param defaults column → (SQL default literal, version the column
+    *   was ADDED at) for columns added by [[evolveSchema]] with a
+    *   default. The `since` version scopes the default to dirs that
+    *   PREDATE the column (Iceberg's initial-default contract): a dir
+    *   written at version >= since stored the column physically —
+    *   including explicit NULLs — and must read back verbatim. The
+    *   legacy bare-string form decodes as since=MaxValue, the old
+    *   fill-everywhere behavior.
+    * @param kinds    column → UNIT of its long-family zone maps
+    *   ("micros" for timestamps, "days" for DateType; plain integral
+    *   columns are implicit "long" and not persisted).
+    *   [[GraftFileIndex]] prunes only when a literal's dataType matches
+    *   the recorded kind — a manifest without it (pre-upgrade,
+    *   integral-only) defaults every column to "long", which a
+    *   timestamp/date literal never matches: stale zone maps go
+    *   conservative, never wrong.
+    * @param dirs     dir → its record; dirs with nothing recorded are
+    *   absent.
+    */
+  private case class Manifest(schema: StructType, spec: String,
+                              entries: Seq[Entry],
+                              defaults: Map[String, (String, Int)] =
+                                Map.empty,
+                              kinds: Map[String, String] = Map.empty,
+                              dirs: Map[String, DirMeta] = Map.empty) {
+    def dir(d: String): DirMeta = dirs.getOrElse(d, DirMeta())
+
+    def encode: Array[Byte] = {
+      val node = mapper.createObjectNode()
+      node.put("schema", schema.toDDL)
+      node.put("partcol", spec)
+      if (defaults.nonEmpty) {
+        val o = node.putObject("defaults")
+        defaults.toSeq.sortBy(_._1).foreach { case (c, (sql, since)) =>
+          val d = o.putObject(c)
+          d.put("sql", sql); d.put("since", since)
+        }
+      }
+      val sorted = dirs.toSeq.sortBy(_._1)
+      def perDir[A](key: String, get: DirMeta => Option[A])
+                   (put: (ObjectNode, String, A) => Unit): Unit = {
+        val recs = sorted.flatMap { case (d, m) => get(m).map(d -> _) }
+        if (recs.nonEmpty) {
+          val o = node.putObject(key)
+          recs.foreach { case (d, a) => put(o, d, a) }
+        }
+      }
+      def list(key: String, get: DirMeta => Seq[String]): Unit =
+        perDir(key, m => Some(get(m)).filter(_.nonEmpty)) { (o, d, xs) =>
+          val a = o.putArray(d)
+          xs.foreach(a.add)
+        }
+      def ranges[A](key: String, get: DirMeta => Map[String, (A, A)])
+                   (add: (ArrayNode, A) => Unit): Unit =
+        perDir(key, m => Some(get(m)).filter(_.nonEmpty)) { (o, d, cols) =>
+          val c = o.putObject(d)
+          cols.toSeq.sortBy(_._1).foreach { case (k, (lo, hi)) =>
+            val a = c.putArray(k)
+            add(a, lo); add(a, hi)
+          }
+        }
+      list("dvs", _.dvs)
+      ranges[Long]("stats", _.stats)(_.add(_))
+      ranges[String]("sstats", _.sstats)(_.add(_))
+      ranges[Double]("dstats", _.dstats)(_.add(_))
+      if (kinds.nonEmpty) {
+        val o = node.putObject("statskinds")
+        kinds.toSeq.sortBy(_._1).foreach { case (c, k) => o.put(c, k) }
+      }
+      perDir[Long]("bytes", _.bytes)((o, d, b) => o.put(d, b))
+      list("blooms", _.blooms.sorted)
+      val parts = node.putObject("partitions")
+      entries.filter(_.pcol == spec).sortBy(_.value)
+        .foreach(e => parts.put(e.value, e.dir))
+      val legacy = entries.filter(_.pcol != spec)
+      if (legacy.nonEmpty) {
+        val a = node.putArray("legacy")
+        legacy.sortBy(e => (e.pcol, e.value)).foreach { e =>
+          val n = a.addObject()
+          n.put("col", e.pcol); n.put("value", e.value); n.put("dir", e.dir)
+        }
+      }
+      mapper.writeValueAsBytes(node)
+    }
+  }
+
+  private object Manifest {
+    /** Decode a manifest file; `defaultSpec` is the spec column of a
+      * manifest that does not record one.
+      */
+    def decode(json: Array[Byte], defaultSpec: String): Manifest = {
+      val node = mapper.readTree(json)
+      def fields(key: String): Seq[(String, JsonNode)] =
+        if (!node.has(key)) Seq.empty
+        else node.get(key).fields().asScala
+          .map(e => e.getKey -> e.getValue).toSeq
+      def strs(n: JsonNode): Seq[String] =
+        n.elements().asScala.map(_.asText()).toSeq
+      def ranges[A](key: String)(f: JsonNode => A)
+          : Map[String, Map[String, (A, A)]] =
+        fields(key).map { case (d, cols) =>
+          d -> cols.fields().asScala.map { c =>
+            c.getKey -> (f(c.getValue.get(0)), f(c.getValue.get(1)))
+          }.toMap
+        }.toMap
+      val spec =
+        if (node.has("partcol")) node.get("partcol").asText() else defaultSpec
+      val legacy =
+        if (!node.has("legacy")) Seq.empty
+        else node.get("legacy").elements().asScala.map { n =>
+          Entry(n.get("col").asText(), n.get("value").asText(),
+            n.get("dir").asText())
+        }.toSeq
+      val stats = ranges("stats")(_.asLong())
+      val sstats = ranges("sstats")(_.asText())
+      val dstats = ranges("dstats")(_.asDouble())
+      val bytes = fields("bytes").map { case (d, b) => d -> b.asLong() }.toMap
+      val blooms = fields("blooms").map { case (d, a) => d -> strs(a) }.toMap
+      val dvs = fields("dvs").map { case (d, a) => d -> strs(a) }.toMap
+      val dirs = (stats.keySet ++ sstats.keySet ++ dstats.keySet ++
+        bytes.keySet ++ blooms.keySet ++ dvs.keySet).map { d =>
+        d -> DirMeta(stats.getOrElse(d, Map.empty),
+          sstats.getOrElse(d, Map.empty), dstats.getOrElse(d, Map.empty),
+          bytes.get(d), blooms.getOrElse(d, Seq.empty),
+          dvs.getOrElse(d, Seq.empty))
+      }.toMap
+      Manifest(StructType.fromDDL(node.get("schema").asText()), spec,
+        fields("partitions").map { case (v, d) => Entry(spec, v, d.asText()) }
+          ++ legacy,
+        fields("defaults").map { case (c, n) =>
+          c -> (if (n.isObject) (n.get("sql").asText(), n.get("since").asInt())
+            else (n.asText(), Int.MaxValue))
+        }.toMap,
+        fields("statskinds").map { case (c, k) => c -> k.asText() }.toMap,
+        dirs)
+    }
+  }
 
   /** The dir name Spark writes null and '' partition values under. */
   private val HiveSentinel = "__HIVE_DEFAULT_PARTITION__"

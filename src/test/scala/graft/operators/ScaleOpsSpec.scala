@@ -105,6 +105,30 @@ class ScaleOpsSpec extends SparkSpec {
       localEdgeThreshold = 0).count() == 0)
   }
 
+  test("connectedComponents frees the pre-spread edge table once the " +
+    "spread copy and the labels are staged") {
+    // a 1-byte block target forces the spread arm at test scale
+    spark.conf.set("spark.graft.graph.bytesPerEdgePartition", "1")
+    try {
+      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+      val (labs, jobs) = org.apache.spark.JobCount.jobs(spark.sparkContext) {
+        ScaleOps.connectedComponents(edges, localEdgeThreshold = 0)
+          .as[(Long, Long)].collect().toMap
+      }
+      assert(labs == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+        11L -> 10L))
+      // staged RDDs in creation order: the edge table, its spread
+      // copy, then the label rounds
+      val staged = jobs.flatMap(_.stageInfos.flatMap(_.rddInfos))
+        .filter(_.storageLevel.isValid).map(_.id).distinct.sorted
+      assert(staged.size >= 3, s"staged RDDs: $staged")
+      val live = spark.sparkContext.getPersistentRDDs
+      assert(!live.contains(staged.head),
+        s"pre-spread edge table (RDD ${staged.head}) still persisted")
+      assert(live.contains(staged(1)))
+    } finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
+  }
+
   test("stage() honors the disk-only flag without changing results") {
     val df = spark.range(0, 1000).toDF("id")
     // default path: plain localCheckpoint, results intact

@@ -1502,6 +1502,91 @@ class PartitionedCowTableSpec extends SparkSpec {
       .select("z_cell").distinct().count() > 1)
     assert(t.read().count() === 34)
   }
+
+  test("manifest round trip: restore republishes a version with every " +
+    "section populated as the same JSON tree, and reads match") {
+    implicit val s = spark
+    val t = new PartitionedCowTable(
+      Files.createTempDirectory("pcow_rt").toString + "/t", "month",
+      spark, statsColumns = Seq("name", "n", "x", "ts", "d"),
+      bloomColumns = Seq("pid"))
+    def ts(v: String) = java.sql.Timestamp.valueOf(v)
+    def dt(v: String) = java.sql.Date.valueOf(v)
+    t.overwrite(Seq(
+      (1L, "2020-03", "a", 1, 0.5, ts("2020-03-05 10:00:00"),
+        dt("2020-03-05"), "r1"),
+      (2L, "2020-03", "b", 2, 1.5, ts("2020-03-28 23:30:00"),
+        dt("2020-03-28"), "r1"),
+      (3L, "2020-04", "c", 3, 2.5, ts("2020-04-07 10:00:00"),
+        dt("2020-04-07"), "r2"))
+      .toDF("pid", "month", "name", "n", "x", "ts", "d", "region"))
+    t.evolveSchema("note", "STRING", Some("'pending'"))
+    t.evolvePartitioning("region")
+    t.append(Seq((4L, "2020-05", "d", 4, 3.5, ts("2020-05-09 10:00:00"),
+        dt("2020-05-09"), "r3", "done"))
+      .toDF("pid", "month", "name", "n", "x", "ts", "d", "region", "note"))
+    t.deleteWhereDV(col("pid") === 2L, Seq("pid"))
+    val v = t.version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def tree(version: Int) = mapper.readTree(java.nio.file.Paths.get(
+      t.root, f"v_$version%06d.json").toFile)
+    val keys = Seq("schema", "partcol", "defaults", "dvs", "stats",
+      "sstats", "dstats", "statskinds", "bytes", "blooms", "partitions",
+      "legacy")
+    import scala.jdk.CollectionConverters._
+    assert(tree(v).fieldNames().asScala.toSeq === keys)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("pid").collect().toSeq
+    val atV = rows(t.readVersion(v))
+    assert(atV.map(_.getAs[Long]("pid")) === Seq(1L, 3L, 4L))
+    t.append(Seq((5L, "2020-05", "e", 5, 4.5, ts("2020-05-10 10:00:00"),
+        dt("2020-05-10"), "r3", "x"))
+      .toDF("pid", "month", "name", "n", "x", "ts", "d", "region", "note"))
+    t.restore(v)
+    assert(t.version === v + 2)
+    assert(tree(t.version) == tree(v))
+    assert(rows(t.read()) === atV)
+    // the restored zone maps, blooms and deletion vector still prune
+    // and filter exactly as at version v
+    assert(t.read().filter(col("name") === "c").count() === 1)
+    assert(t.read().filter(col("pid") === 2L).count() === 0)
+    assert(t.read().filter(col("note") === "pending").count() === 2)
+  }
+
+  test("manifest decoding: a manifest without partcol reads under the " +
+    "constructor's column; a bare-string default fills every dir") {
+    implicit val s = spark
+    val t = mk()
+    t.evolveSchema("state", "STRING", Some("'pending'"))
+    // written after the evolve: since-scoping reads this NULL back
+    t.upsert(Seq((1L, "2020-03", "A", true, null: String))
+      .toDF("pid", "month", "v", "flag", "state"), Seq("pid"))
+    assert(t.read().filter(col("state").isNull).count() === 1)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val path = java.nio.file.Paths.get(t.root, f"v_${t.version}%06d.json")
+    val node = mapper.readTree(path.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("partcol")
+    node.get("defaults")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("state", "'pending'")
+    Files.write(path, mapper.writeValueAsBytes(node))
+    val t2 = PartitionedCowTable(t.root, "month")
+    assert(t2.currentPartCol === "month")
+    assert(t2.manifest.keySet === Set("2020-03", "2020-04", "2020-05"))
+    assert(t2.readWhere(_ == "2020-04").count() === 1)
+    // the bare-string form predates since-scoping: it fills everywhere
+    assert(t2.read().filter(col("state") === "pending").count() === 4)
+    // the next commit re-records both in the current form
+    t2.append(Seq((9L, "2020-06", "z", false, "done"))
+      .toDF("pid", "month", "v", "flag", "state"))
+    val next = mapper.readTree(java.nio.file.Paths.get(
+      t.root, f"v_${t2.version}%06d.json").toFile)
+    assert(next.get("partcol").asText() === "month")
+    assert(next.get("defaults").get("state").get("since").asInt() ===
+      Int.MaxValue)
+    assert(t2.read().count() === 5)
+  }
 }
 
 /** Simulates a competing writer's COMPLETED commit firing from inside

@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -16,12 +18,20 @@ object JobCount {
   private val key = "graft.test.jobcount"
 
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val (r, js) = jobs(sc)(body)
+    (r, js.size)
+  }
+
+  /** The start events of the jobs `body` starts, attributed as above;
+    * their stage infos name the RDDs each job reads and writes.
+    */
+  def jobs[T](sc: SparkContext)(body: => T): (T, Seq[SparkListenerJobStart]) = {
     val token = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger(0)
+    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(p => p.getProperty(key) == token))
-          n.incrementAndGet()
+          seen.add(e)
     }
     sc.listenerBus.waitUntilEmpty(60000L)
     sc.addSparkListener(listener)
@@ -30,7 +40,7 @@ object JobCount {
     try {
       val r = body
       sc.listenerBus.waitUntilEmpty(60000L)
-      (r, n.get())
+      (r, seen.asScala.toSeq)
     } finally {
       sc.setLocalProperty(key, prev)
       sc.removeSparkListener(listener)

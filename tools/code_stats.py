@@ -1,0 +1,140 @@
+#!/usr/bin/env python3
+"""Size, duplication and knob inventory of the engine's main sources.
+
+    python3 tools/code_stats.py            # from the repository root
+    python3 tools/code_stats.py --root DIR # another checkout
+    python3 tools/code_stats.py --json     # one JSON object instead
+
+Prints three sections for `src/main/scala`:
+
+- lines: physical lines and code lines (not blank, not comment) per
+  file and in total, so a change that only strips comments or blank
+  lines shows in the first count and not the second;
+- duplicated windows: per file, how many windows of 8 consecutive code
+  lines (stripped, blank and comment-only lines skipped) occur more
+  than once anywhere in the tree;
+- knobs: every setting a user can change without editing code — the
+  environment variables read through `sys.env` / `System.getenv`, and
+  the `spark.graft.*` conf keys — with the places that read them.
+  Comment text is ignored, so a knob named only in a doc comment does
+  not count.
+"""
+import argparse
+import collections
+import json
+import os
+import re
+import sys
+
+WINDOW = 8
+ENV_RE = re.compile(
+    r'(?:sys\.env\.(?:get|getOrElse|contains)\(\s*|sys\.env\(\s*|'
+    r'System\.getenv\(\s*)"([^"]+)"')
+CONF_RE = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
+
+
+def sources(root):
+    base = os.path.join(root, "src", "main", "scala")
+    if not os.path.isdir(base):
+        sys.exit(f"no src/main/scala under {root}")
+    out = []
+    for d, _, files in os.walk(base):
+        out += [os.path.join(d, f) for f in files if f.endswith(".scala")]
+    return sorted(out)
+
+
+def code_lines(text):
+    """(line number, code) per line, comments blanked: `//` tails and
+    `/* ... */` blocks (scaladoc included)."""
+    out, in_block = [], False
+    for n, line in enumerate(text.split("\n"), 1):
+        code, i = [], 0
+        while i < len(line):
+            if in_block:
+                end = line.find("*/", i)
+                if end < 0:
+                    i = len(line)
+                else:
+                    in_block, i = False, end + 2
+            elif line.startswith("/*", i):
+                in_block, i = True, i + 2
+            elif line.startswith("//", i):
+                i = len(line)
+            elif line[i] == '"':
+                end = i + 1
+                while end < len(line) and line[end] != '"':
+                    end += 2 if line[end] == "\\" else 1
+                code.append(line[i:end + 1])
+                i = end + 1
+            else:
+                code.append(line[i])
+                i += 1
+        out.append((n, "".join(code)))
+    return out
+
+
+def stats(root):
+    files = sources(root)
+    lines, code_n, windows = {}, {}, {}
+    knobs = collections.defaultdict(list)
+    where = collections.defaultdict(list)
+    for f in files:
+        rel = os.path.relpath(f, root)
+        with open(f, encoding="utf-8", errors="replace") as fh:
+            text = fh.read()
+        lines[rel] = text.count("\n") + (0 if text.endswith("\n") else 1)
+        code = code_lines(text)
+        kept = [c.strip() for _, c in code if c.strip()]
+        code_n[rel] = len(kept)
+        windows[rel] = [tuple(kept[i:i + WINDOW])
+                        for i in range(len(kept) - WINDOW + 1)]
+        for w in windows[rel]:
+            where[w].append(rel)
+        for n, c in code:
+            for m in ENV_RE.finditer(c):
+                knobs[("env", m.group(1))].append(f"{rel}:{n}")
+            for m in CONF_RE.finditer(c):
+                knobs[("conf", m.group(1))].append(f"{rel}:{n}")
+    dup = {rel: sum(1 for w in ws if len(where[w]) > 1)
+           for rel, ws in windows.items()}
+    return {
+        "lines": lines,
+        "lines_total": sum(lines.values()),
+        "code": code_n,
+        "code_total": sum(code_n.values()),
+        "files": len(lines),
+        "dup_windows": {k: v for k, v in dup.items() if v},
+        "dup_windows_total": sum(dup.values()),
+        "knobs": {f"{kind} {name}": sorted(set(at))
+                  for (kind, name), at in sorted(knobs.items())},
+    }
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--root", default=".", help="repository root")
+    ap.add_argument("--json", action="store_true", help="print JSON")
+    a = ap.parse_args()
+    s = stats(a.root)
+    if a.json:
+        print(json.dumps(s, indent=1, sort_keys=True))
+        return
+    print("== lines, code lines (src/main/scala)")
+    for rel, n in sorted(s["lines"].items()):
+        print(f"  {n:6d} {s['code'][rel]:6d}  {rel}")
+    print(f"  {s['lines_total']:6d} {s['code_total']:6d}  total "
+          f"({s['files']} files)")
+    print(f"== duplicated {WINDOW}-line windows")
+    for rel, n in sorted(s["dup_windows"].items(), key=lambda x: -x[1]):
+        print(f"  {n:6d}  {rel}")
+    print(f"  {s['dup_windows_total']:6d}  total")
+    print("== knobs")
+    for k, at in s["knobs"].items():
+        print(f"  {k}  {', '.join(at)}")
+    kinds = collections.Counter(k.split()[0] for k in s["knobs"])
+    print(f"  {len(s['knobs'])} total ({kinds['env']} env, "
+          f"{kinds['conf']} conf)")
+
+
+if __name__ == "__main__":
+    main()
