@@ -228,9 +228,12 @@ object ScaleOps {
     * broadcast-join-threshold pattern): below `localEdgeThreshold`
     * distinct edges, collecting (long, long) pairs and path-compressed
     * union-find beat any number of distributed rounds — identical
-    * output, zero iterations. Above it, the iterative dataflow runs;
-    * the threshold probe is a short-circuiting `limit(n+1).count()`,
-    * not a full count.
+    * output, zero iterations. The probe IS the collect: one
+    * short-circuiting `limit(n+1)` collect of the staged symmetric
+    * edge table (n = 2 × threshold rows), whose rows feed the
+    * union-find when it holds ≤ n of them. The trade-off: above the
+    * threshold, those n+1 rows (32 MB at the default) cross the driver
+    * once before the iterative dataflow runs.
     *
     * @return (id, rep) for every vertex in `edges`; `rep` = the
     *         component's minimum id. Vertices with no edges are absent
@@ -250,26 +253,9 @@ object ScaleOps {
     // `both` holds TWO rows per distinct undirected edge — probe
     // against 2×threshold so the knob means what the scaladoc says
     val symRowCap = (2L * localEdgeThreshold).min(Int.MaxValue.toLong - 1)
-    if (localEdgeThreshold > 0 &&
-        both.limit(symRowCap.toInt + 1).count() <= symRowCap) {
-      import spark.implicits._
-      val pairs = both.as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // union toward the smaller root = min-id rep
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val vertices = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-      return vertices.toSeq.sorted.map(v => (v, find(v))).toDF("id", "rep")
+    if (localEdgeThreshold > 0) {
+      val local = localComponents(both, symRowCap.toInt)
+      if (local.isDefined) return local.get
     }
     // Iterative path only: spread the edge table's blocks before the
     // per-round loop (explicit repartition is exempt from AQE
@@ -329,6 +315,34 @@ object ScaleOps {
           "component diameter exceeds maxIters; raise it (rounds are " +
           "O(diameter), so this graph is unusually chainlike)")
     labels.select(col("id"), col("lab").as("rep"))
+  }
+
+  /** [[connectedComponents]]' driver-side path: one `limit(cap + 1)`
+    * collect of the symmetric edge table `both` (src, dst); when it
+    * holds ≤ `cap` rows, path-compressed union-find over them gives
+    * (id, rep = component min id), else None. The collected rows are
+    * released on return, before any iterative round runs.
+    */
+  private def localComponents(both: DataFrame, cap: Int): Option[DataFrame] = {
+    import both.sparkSession.implicits._
+    val pairs = both.limit(cap + 1).as[(Long, Long)].collect()
+    if (pairs.length > cap) return None
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // union toward the smaller root = min-id rep
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val vertices = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+    Some(vertices.toSeq.sorted.map(v => (v, find(v))).toDF("id", "rep"))
   }
 
   /** Range-partition pruning predicate for date-partitioned tables:

@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions => G}
+import graft.functions.expressions.VectorImpl
 
 /** Blocked EXACT nearest-neighbor over embeddings.
   *
@@ -31,13 +34,29 @@ object VectorOps {
     least(lit(1.0), greatest(lit(-1.0), c))
 
   /** Spherical k-means (cosine metric) for IVF coarse centroids —
-    * Lloyd's iterations as dataflow: assign via broadcast crossJoin +
-    * argmax, recompute centroids as element-wise member means. The
-    * centroid set is bounded metadata (k × dim doubles), so each
-    * iteration collects it to the driver and re-broadcasts — constant
-    * driver memory, no lineage growth, the same loop structure every
-    * production implementation uses. Deterministic: seeded from the k
-    * smallest `vec_id`s, ties toward the smaller cid.
+    * Lloyd's iterations over ONE planned scan of `v`. The centroid set
+    * is bounded metadata (k × dim doubles), so it travels in the task
+    * closure: each iteration is one `mapPartitions` job with no
+    * shuffle, in which every partition assigns its rows to their
+    * nearest centroid and returns one partial of per-(cid, position)
+    * sums and counts; the driver merges the P partials in partition
+    * order (deterministic run to run) and divides. Work per iteration:
+    * one scan of `e`, N×k cosines on the executors, P × k × dim
+    * doubles collected — no shuffle, no per-iteration Catalyst plan,
+    * constant driver memory, no lineage growth. Seeded from the k
+    * smallest `vec_id`s (one `orderBy.limit` collect), so a fit costs
+    * 1 + iters jobs.
+    *
+    * The assignment is the SQL argmax `max_by(cid, struct(cos, -cid))`
+    * over the same [[VectorImpl.cosine]] that `cosineSim` calls:
+    * largest unrounded cosine in Spark's double order (NaN largest,
+    * -0.0 = 0.0, a null centroid below any cosine), ties toward the
+    * smaller cid. Each row is one vector. A centroid is its members'
+    * per-position mean (ragged arrays average each position over the
+    * members that have it; null vectors and null elements contribute
+    * nothing); a cluster that captured no element keeps its previous
+    * centroid, so the result always has exactly k rows when `e` has at
+    * least k.
     *
     * @return (cid, cv) centroid DataFrame, directly usable as the
     *         `cents` input of [[exactNnPerVector]] / the q35 probe.
@@ -48,27 +67,91 @@ object VectorOps {
     var cents: Seq[(Int, Seq[Double])] = e.orderBy("vec_id").limit(k)
       .select(col("v")).as[Seq[Double]].collect()
       .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+    // planned once: every iteration runs a job over the same rows
+    val rows = e.select(col("v").cast("array<double>")).queryExecution.toRdd
     for (_ <- 1 to iters) {
-      val cdf = broadcast(cents.toDF("cid", "cv"))
-      val updated = e.crossJoin(cdf)
-        .withColumn("cc", G.cosineSim(col("v"), col("cv").cast("array<double>")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), struct(col("cc"), -col("cid"))).as("cid"),
-          first(col("v")).as("v"))
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy("cid", "pos").agg(avg("col").as("m"))
-        .groupBy("cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("cv"))
-        .as[(Int, Seq[Double])].collect().toMap
-      // a cluster that captured no vectors keeps its previous centroid,
-      // so the result always has exactly k rows (the k × dim contract)
+      val cvs = cents.map(c => if (c._2 == null) null else c._2.toArray).toArray
+      val total = rows.mapPartitions { it =>
+        val cs: Array[ArrayData] = cvs.map(c =>
+          if (c == null) null else UnsafeArrayData.fromPrimitiveArray(c))
+        val acc = new LloydSums(cs.length)
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val v = r.getArray(0)
+            acc.add(nearest(v, cs), v)
+          }
+        }
+        Iterator(acc)
+      }.collect().foldLeft(new LloydSums(cvs.length))(_.merge(_))
       cents = cents.map { case (cid, prev) =>
-        (cid, updated.getOrElse(cid, prev))
+        (cid, total.mean(cid).getOrElse(prev))
       }
     }
     cents.toDF("cid", "cv").select(col("cid"), col("cv").cast("array<double>").as("cv"))
+  }
+
+  /** [[kmeansFit]]'s assignment: the index of the centroid with the
+    * largest cosine to `v` in Spark's double order, the smaller index
+    * on ties; a null centroid loses to any non-null one.
+    */
+  private def nearest(v: ArrayData, cs: Array[ArrayData]): Int = {
+    var best = -1
+    var bestCos = Double.NaN
+    var c = 0
+    while (c < cs.length) {
+      if (cs(c) != null) {
+        val cc = VectorImpl.cosine(v, cs(c))
+        if (best < 0 || cs(best) == null ||
+            SQLOrderingUtil.compareDoubles(cc, bestCos) > 0) {
+          best = c
+          bestCos = cc
+        }
+      } else if (best < 0) best = c
+      c += 1
+    }
+    best
+  }
+
+  /** A [[kmeansFit]] partial: per centroid, the per-position sums and
+    * non-null counts of its members' elements.
+    */
+  private final class LloydSums(k: Int) extends Serializable {
+    private val sums = Array.fill(k)(Array.emptyDoubleArray)
+    private val counts = Array.fill(k)(Array.emptyLongArray)
+
+    private def grow(c: Int, n: Int): Unit =
+      if (sums(c).length < n) {
+        sums(c) = java.util.Arrays.copyOf(sums(c), n)
+        counts(c) = java.util.Arrays.copyOf(counts(c), n)
+      }
+
+    def add(c: Int, v: ArrayData): Unit = {
+      grow(c, v.numElements())
+      var i = 0
+      while (i < v.numElements()) {
+        if (!v.isNullAt(i)) {
+          sums(c)(i) += v.getDouble(i)
+          counts(c)(i) += 1
+        }
+        i += 1
+      }
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      for (c <- 0 until k) {
+        grow(c, o.sums(c).length)
+        for (i <- o.sums(c).indices) {
+          sums(c)(i) += o.sums(c)(i)
+          counts(c)(i) += o.counts(c)(i)
+        }
+      }
+      this
+    }
+
+    /** Centroid c's member mean; None if it captured no element. */
+    def mean(c: Int): Option[Seq[Double]] =
+      if (sums(c).isEmpty) None
+      else Some(sums(c).indices.map(i => sums(c)(i) / counts(c)(i)))
   }
 
   /** [[kmeansFit]] with the FAISS-IVF nlist rule applied: k =
@@ -86,8 +169,8 @@ object VectorOps {
     * Lloyd's passes need not see every vector — only the ASSIGNMENT
     * pass must, and that stays where it was (the caller's n·k·d).
     * The row count is one 1-row aggregate — bounded driver metadata,
-    * the same budget class as the k×dim centroid collect kmeansFit
-    * already performs per iteration.
+    * the same budget class as the per-partition k×dim centroid sums
+    * kmeansFit already collects per iteration.
     *
     * @param idCol id column used for the deterministic training stride
     */

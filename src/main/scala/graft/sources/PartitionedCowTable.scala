@@ -1248,8 +1248,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
   /** Version `v`'s legacy dirs containing at least one row `mark`
     * keeps (for upsert/merge that is a KEY semi-join — a dir migrates
     * because a touched key lives there, never because it merely
-    * shares a partition value), found by one scan of legacy data only
-    * (shrinks as migration proceeds; the scan goes through
+    * shares a partition value), found by one pass over legacy data only
+    * (shrinks as migration proceeds; each dir's scan goes through
     * [[GraftFileIndex]], so pushable key predicates in `mark` prune
     * legacy dirs by their zone maps too). Returns (their entries, ALL
     * rows of those dirs, those rows' current-spec values) — migration
@@ -1262,22 +1262,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val spec = m.spec
     val legacy = m.entries.filter(_.pcol != spec)
     if (legacy.isEmpty) return (Seq.empty, emptyLike(v), Set.empty)
-    val hitFiles = mark(
-      readConformed(v, legacy.map(e => s"$root/${e.dir}"))
-        .withColumn("__f", input_file_name()))
-      .select("__f").distinct().collect().map(_.getString(0))
-    // input_file_name() returns a URI-encoded path (space -> %20,
-    // etc.) while manifest dir names are the raw on-disk names; a
-    // value that URI-encodes differently (space passes the
-    // escapePathName guard but not URI encoding) would never
-    // substring-match and its legacy dir would silently skip
-    // migration, duplicating keys. Decode back to the filesystem path
-    // before comparing (URI.getPath exactly reverses the encoding and
-    // leaves literal %XX from escapePathName'd dir names intact).
-    val hitPaths = hitFiles.map { f =>
-      try new java.net.URI(f).getPath catch { case _: Exception => f }
-    }
-    val hit = legacy.filter(e => hitPaths.exists(_.contains(s"/${e.dir}/")))
+    // each dir's rows carry its manifest name: input_file_name() fails
+    // analysis once a deletion vector's anti-join joins the scan
+    val tagged = legacy.map(e => readConformed(v, Seq(s"$root/${e.dir}"))
+      .withColumn("__d", lit(e.dir))).reduce(_.unionByName(_))
+    val hitDirs = mark(tagged).select("__d").distinct()
+      .collect().map(_.getString(0)).toSet
+    val hit = legacy.filter(e => hitDirs(e.dir))
     if (hit.isEmpty) (Seq.empty, emptyLike(v), Set.empty)
     else {
       val rows = readConformed(v, hit.map(e => s"$root/${e.dir}"))

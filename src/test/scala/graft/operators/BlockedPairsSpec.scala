@@ -160,4 +160,101 @@ class BlockedPairsSpec extends SparkSpec {
     val (et, es) = (totalErr(trained), totalErr(standIn))
     assert(et <= es, s"trained codebooks worse than stand-ins: $et > $es")
   }
+
+  // ---- kmeansFit: one job per Lloyd iteration ----
+
+  /** The SQL Lloyd iteration kmeansFit ran before its one-job form —
+    * broadcast crossJoin + argmax, posexplode, per-position avg, four
+    * shuffles per iteration — kept as the reference its output must
+    * match.
+    */
+  private def sqlKmeans(e: DataFrame, k: Int, iters: Int): Map[Int, Seq[Double]] = {
+    var cents: Seq[(Int, Seq[Double])] = e.orderBy("vec_id").limit(k)
+      .select(col("v")).as[Seq[Double]].collect()
+      .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+    for (_ <- 1 to iters) {
+      val cdf = broadcast(cents.toDF("cid", "cv"))
+      val updated = e.crossJoin(cdf)
+        .withColumn("cc", G.cosineSim(col("v"), col("cv").cast("array<double>")))
+        .groupBy(col("vec_id"))
+        .agg(max_by(col("cid"), struct(col("cc"), -col("cid"))).as("cid"),
+          first(col("v")).as("v"))
+        .select(col("cid"), posexplode(col("v")))
+        .groupBy("cid", "pos").agg(avg("col").as("m"))
+        .groupBy("cid")
+        .agg(transform(
+          array_sort(collect_list(struct(col("pos"), col("m")))),
+          x => x.getField("m")).as("cv"))
+        .as[(Int, Seq[Double])].collect().toMap
+      cents = cents.map { case (cid, prev) =>
+        (cid, updated.getOrElse(cid, prev))
+      }
+    }
+    cents.toMap
+  }
+
+  private def fit(e: DataFrame, k: Int, iters: Int): Map[Int, Seq[Double]] = {
+    val out = V.kmeansFit(e, k, iters)
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString)) ===
+      Seq(("cid", "int"), ("cv", "array<double>")))
+    out.as[(Int, Seq[Double])].collect().toMap
+  }
+
+  private def assertSameCentroids(got: Map[Int, Seq[Double]],
+                                  want: Map[Int, Seq[Double]]): Unit = {
+    assert(got.keySet === want.keySet)
+    for ((cid, w) <- want) {
+      val g = got(cid)
+      assert(g.length === w.length, s"cid $cid dim")
+      g.zip(w).foreach { case (a, b) =>
+        assert(math.abs(a - b) <= 1e-9, s"cid $cid: $a vs $b")
+      }
+    }
+  }
+
+  for (sf <- Seq("0.001", "0.01"); (k, iters) <- Seq((8, 2), (16, 3)))
+    test(s"kmeansFit($k, $iters) == the SQL Lloyd iteration, sf$sf") {
+      val e = emb(s"/root/testdata/sf$sf")
+      assertSameCentroids(fit(e, k, iters), sqlKmeans(e, k, iters))
+    }
+
+  test("kmeansFit == the SQL Lloyd iteration on the clustered corpus, " +
+    "including k above the natural cluster count") {
+    val e = clustered()
+    for ((k, iters) <- Seq((6, 3), (10, 3))) {
+      val got = fit(e, k, iters)
+      assert(got.size === k)
+      assertSameCentroids(got, sqlKmeans(e, k, iters))
+    }
+  }
+
+  test("kmeansFit edge cases: a null vector contributes nothing; " +
+    "identical seeds tie toward the smaller cid") {
+    val e = clustered()
+    val withNull = e.union(Seq((1000L, "x", null: Seq[Double]))
+      .toDF("vec_id", "label", "v"))
+    val base = fit(e, 6, 3)
+    assert(fit(withNull, 6, 3) === base)
+    assertSameCentroids(base, sqlKmeans(withNull, 6, 3))
+    // vec_id -1 duplicates vec_id 0: seeds cid 0 and cid 1 are the same
+    // vector, every member ties between them and goes to cid 0, and
+    // cid 1 keeps its seed
+    val seed0 = e.filter(col("vec_id") === 0L).select("v").as[Seq[Double]].head()
+    val twin = e.union(Seq((-1L, "x", seed0)).toDF("vec_id", "label", "v"))
+    val once = fit(twin, 4, 1)
+    assert(once(1) === seed0)
+    assert(once(0) != seed0)
+    assertSameCentroids(once, sqlKmeans(twin, 4, 1))
+    assertSameCentroids(fit(twin, 4, 2), sqlKmeans(twin, 4, 2))
+  }
+
+  test("kmeansFit(e, 8, 2) runs 3 Spark jobs: the seed collect and one " +
+    "per iteration") {
+    val e = emb("/root/testdata/sf0.001")
+    val (cents, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      V.kmeansFit(e, k = 8, iters = 2)
+    }
+    assert(jobs === 3)
+    assert(cents.count() === 8)
+  }
 }

@@ -105,6 +105,22 @@ class ScaleOpsSpec extends SparkSpec {
       localEdgeThreshold = 0).count() == 0)
   }
 
+  test("connectedComponents' local path collects the edge table once: " +
+    "3 jobs in all") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (13L, 10L),
+      (20L, 21L), (21L, 20L), (30L, 30L)).toDF("id_a", "id_b")
+    val (labs, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      ScaleOps.connectedComponents(edges).as[(Long, Long)].collect().toMap
+    }
+    // staging the symmetric edge table (its distinct's shuffle, then
+    // the checkpoint) and one limit collect feeding the union-find
+    assert(jobs === 3)
+    assert(labs == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 13L -> 10L, 20L -> 20L, 21L -> 20L))
+    assert(labs == ScaleOps.connectedComponents(edges, localEdgeThreshold = 0)
+      .as[(Long, Long)].collect().toMap)
+  }
+
   test("connectedComponents frees the pre-spread edge table once the " +
     "spread copy and the labels are staged") {
     // a 1-byte block target forces the spread arm at test scale

@@ -1319,6 +1319,23 @@ class PartitionedCowTableSpec extends SparkSpec {
     assert(t.manifest.keySet === Set("x2", "y"))
   }
 
+  test("upsert after deleteWhereDV on an evolved table migrates the " +
+    "legacy dir through its deletion vector") {
+    val t = mk()
+    t.evolvePartitioning("v")
+    t.deleteWhereDV(col("pid") === 2L, Seq("pid")) // legacy 2020-03
+    t.upsert(Seq((1L, "2020-03", "a2", true)).toDF("pid", "month", "v", "flag"),
+      Seq("pid"))
+    // pid 1 replaced, pid 2 stays deleted through the migration, the
+    // other legacy dirs untouched
+    assert(t.read().select("pid", "month", "v", "flag").orderBy("pid")
+      .as[(Long, String, String, Boolean)].collect().toSeq === Seq(
+        (1L, "2020-03", "a2", true), (3L, "2020-04", "c", false),
+        (4L, "2020-05", "d", false)))
+    assert(t.legacyEntries.map(_._2).toSet === Set("2020-04", "2020-05"))
+    assert(t.manifest.keySet === Set("a2"))
+  }
+
   test("evolveSchema without a default reads null for old rows") {
     val t = mk()
     t.evolveSchema("score", "BIGINT")
