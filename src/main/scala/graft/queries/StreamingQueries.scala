@@ -1,10 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.operators.ScaleOps
 import graft.streaming.StreamOps
 
 /** SURVEY.md §2.9 under the DRIVER GATE (round-5 verdict item 3):
@@ -16,14 +20,21 @@ import graft.streaming.StreamOps
   * query.
   *
   * Determinism contract (what makes a streaming operator gateable):
-  *  - the input is staged to scratch parquet and read with
-  *    `Trigger.Once` — ONE micro-batch, so per-batch emission
-  *    (flatMapGroupsWithState emits one consolidated row per key per
-  *    batch) yields exactly one final row per key, and intra-batch
-  *    event-time sorting corrects all input disorder;
+  *  - the input is staged to scratch parquet and drained to its end.
+  *    q91/q92/q94/q95 read it in ONE `Trigger.Once` micro-batch
+  *    ([[runOnce]]), so per-batch emission (flatMapGroupsWithState
+  *    emits one consolidated row per key per batch) yields exactly one
+  *    final row per key, and intra-batch event-time sorting corrects
+  *    all input disorder. Every other gate drains `batches` >= 2
+  *    event-time slices, one per micro-batch ([[drain]],
+  *    [[drainEach]]), whose contract extends this one across batch
+  *    boundaries;
   *  - lateness is set far beyond the data's time span, so the
   *    watermark never finalizes state mid-stream and event-time
-  *    timeouts never fire — nothing depends on arrival timing;
+  *    timeouts never fire — nothing depends on arrival timing. The
+  *    gates that test watermark semantics on purpose (q176, q177,
+  *    q260, q265, q277, q278, q283) instead pin the micro-batch
+  *    watermark protocol, which their oracles replay closed-form;
   *  - every fold in the operators is order-independent (bool OR, max,
   *    count) or explicitly event-time-sorted.
   * Under that contract the streaming result equals the batch
@@ -55,29 +66,17 @@ object StreamingQueries {
     */
   private[graft] def statePartitionsFor(s: SparkSession,
                                         stagedDirs: Seq[String]): Int = {
-    val bytes = stagedDirs.map { d =>
-      val p = java.nio.file.Paths.get(d)
-      if (!java.nio.file.Files.isDirectory(p)) 0L
-      else {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.mapToLong(f =>
-          if (java.nio.file.Files.isRegularFile(f)) f.toFile.length else 0L
-        ).sum()
-        finally walk.close()
-      }
-    }.sum
+    val bytes = stagedDirs.map(ScaleOps.pathBytes).sum
     // malformed overrides degrade LOUDLY to the default instead of
     // throwing NumberFormatException from inside every streaming gate
-    // (r14 advice): the message names the knob so a typo'd sitting is
+    // (r14 advice): the message names the conf so a typo'd sitting is
     // diagnosable from stderr
     val per = s.conf.getOption("spark.graft.stream.bytesPerStatePartition")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES"))
       .flatMap { v =>
         val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
         if (parsed.isEmpty) System.err.println(
           "[graft] ignoring malformed " +
-            "spark.graft.stream.bytesPerStatePartition / " +
-            s"SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES value '$v' — " +
+            s"spark.graft.stream.bytesPerStatePartition value '$v' — " +
             "using the 8 MiB default")
         parsed
       }.getOrElse(8L << 20)
@@ -111,83 +110,92 @@ object StreamingQueries {
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Stage a finite DataFrame as a file stream and drain it through
-    * `build` into a memory sink in one `Trigger.Once` micro-batch.
-    * The sink's rows are spilled to scratch parquet and the in-memory
-    * sink + staging/checkpoint dirs are RELEASED before returning —
-    * without that, every bench rep would pin a full copy of the
-    * result in driver memory for the rest of the session (8 reps ×
-    * the enriched event stream at sf1+ is a driver OOM).
+  /** A fresh scratch root per CALL (q58's pattern): a reused
+    * checkpoint would make a re-run see "no new data" and emit
+    * nothing — bench reps must each drain the full stream.
     */
-  /** `mode`: "append" for row-emitting operators (dedup, flatMap
-    * state); "complete" for windowed AGGREGATIONS — under the
-    * never-advancing watermark no window ever finalizes, so append
-    * mode would emit NOTHING for them (the one Structured Streaming
-    * trap this harness has to dodge).
+  private def freshBase(s: SparkSession, tag: String): String =
+    s"${Tables.scratchBase}/graft_${tag}_${s.sparkContext.applicationId}/" +
+      java.util.UUID.randomUUID().toString.take(8)
+
+  /** The result sink of [[runOnce]] and [[drain]]: foreachBatch →
+    * parquet at `dir`, NOT a memory sink. The memory sink collects
+    * every result row to the driver and decodes it through a row
+    * encoder — at sf10 the q95 complete-mode rollup died there with
+    * EXPRESSION_DECODING_FAILED in the r13 board sitting (and pinned a
+    * full result copy per rep besides). Executors write the parquet
+    * directly; the driver never holds rows. Append mode appends each
+    * micro-batch's new rows; complete mode delivers the FULL result
+    * table every micro-batch, so each one overwrites the last.
+    */
+  private def parquetSink(out: DataFrame, mode: String,
+                          dir: String): DataStreamWriter[Row] =
+    out.writeStream.outputMode(mode)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(if (mode == "complete") "overwrite" else "append")
+          .parquet(dir)
+      }
+
+  /** Read back the [[parquetSink]] under `base`. The returned DataFrame
+    * reads it lazily, so it must outlive the call — but a fresh root
+    * per rep means bench/verify sessions would otherwise accumulate one
+    * orphan dir per rep forever (round-6 advice), so it is reclaimed at
+    * JVM exit. A degenerate run with zero triggered batches writes no
+    * sink dir; surface the operator's (empty) result, not a read error.
+    */
+  private def readSink(s: SparkSession, base: String,
+                       schema: StructType): DataFrame = {
+    registerDeleteOnExit(Paths.get(base))
+    if (Files.exists(Paths.get(s"$base/out"))) s.read.parquet(s"$base/out")
+    else s.createDataFrame(new java.util.ArrayList[Row](), schema)
+  }
+
+  /** The single-batch form (q91/q92/q94/q95): stage `input` as a file
+    * stream and drain it through `build` into the [[parquetSink]] in
+    * ONE `Trigger.Once` micro-batch, releasing the staging and
+    * checkpoint dirs before returning. `mode`: "append" for
+    * row-emitting operators (dedup, flatMap state); "complete" for
+    * windowed AGGREGATIONS — under the never-advancing watermark no
+    * window ever finalizes, so append mode would emit NOTHING for them
+    * (the one Structured Streaming trap this harness has to dodge).
     */
   private def runOnce(s: SparkSession, tag: String, input: DataFrame,
                       build: DataFrame => DataFrame,
                       mode: String = "append"): DataFrame = {
-    // fresh root + sink name per CALL (q58's pattern): a reused
-    // checkpoint would make a re-run see "no new data" and emit
-    // nothing — bench reps must each drain the full stream
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
+    val base = freshBase(s, tag)
     input.write.mode("overwrite").parquet(s"$base/in")
-    val stream = s.readStream.schema(input.schema).parquet(s"$base/in")
-    val out = build(stream)
-    val outSchema = out.schema
-    // foreachBatch → parquet, NOT a memory sink: the memory sink
-    // collects every result row to the driver and decodes it through
-    // a row encoder — at sf10 the q95 complete-mode rollup died there
-    // with EXPRESSION_DECODING_FAILED in the r13 board sitting (and
-    // pinned a full result copy per rep besides). Executors write the
-    // sink parquet directly; the driver never holds rows. Complete
-    // mode delivers the FULL result as the one Trigger.Once batch, so
-    // overwrite-per-batch is exact for both modes.
+    val out = build(s.readStream.schema(input.schema).parquet(s"$base/in"))
     withStatePartitions(s, Seq(s"$base/in")) {
-      val q = out.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(s"$base/out")
-        }
+      parquetSink(out, mode, s"$base/out")
         .option("checkpointLocation", s"$base/ckpt")
         .trigger(Trigger.Once())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     }
-    deleteRec(java.nio.file.Paths.get(s"$base/in"))
-    deleteRec(java.nio.file.Paths.get(s"$base/ckpt"))
-    // $base/out must OUTLIVE this call (the returned DataFrame reads
-    // it lazily), so it can't be deleted here — but a fresh uid per
-    // rep means bench/verify sessions would otherwise accumulate one
-    // orphan dir per rep forever (round-6 advice). deleteOnExit walks
-    // parent-before-child and the JVM deletes in REVERSE registration
-    // order, so files go before their dirs.
-    registerDeleteOnExit(java.nio.file.Paths.get(base))
-    // a degenerate run with zero triggered batches writes no out dir;
-    // surface the operator's (empty) result, not a read error
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/out")))
-      s.read.parquet(s"$base/out")
-    else s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
+    deleteRec(Paths.get(s"$base/in"))
+    deleteRec(Paths.get(s"$base/ckpt"))
+    readSink(s, base, out.schema)
   }
 
-  /** Multi-batch drain — the CROSS-BATCH twin of [[runOnce]] (round-6
-    * verdict item 1: the Trigger.Once harness never exercises state
-    * carried ACROSS micro-batches, the thing `flatMapGroupsWithState`
-    * exists for). The input is split into `batches` CONTIGUOUS
-    * event-time slices (sorted by `orderCols`), each staged as ONE
-    * parquet file with strictly increasing modification times, and the
-    * stream drains under `Trigger.AvailableNow` with
-    * `maxFilesPerTrigger=1` — so the file source admits exactly one
+  /** The multi-batch core behind [[drain]] and [[drainEach]] — the
+    * CROSS-BATCH twin of [[runOnce]] (round-6 verdict item 1: the
+    * Trigger.Once harness never exercises state carried ACROSS
+    * micro-batches, the thing `flatMapGroupsWithState` exists for).
+    * Each input is split into `batches` CONTIGUOUS slices sorted by
+    * its order columns, each staged as ONE parquet file with strictly
+    * increasing modification times ([[stagedSlices]]), and read as its
+    * own file stream with `maxFilesPerTrigger=1`. The query `sink`
+    * builds over those streams drains under `Trigger.AvailableNow`
+    * from a fresh checkpoint, so every file source admits exactly one
     * slice per micro-batch, oldest first, and keyed state / the dedup
     * store / watermarks must SURVIVE from batch to batch for the
-    * result to come out right.
+    * result to come out right. With two inputs (the stream-STREAM
+    * join shape) every micro-batch carries a slice of EACH side, and
+    * cross-batch matches (side A's batch-0 rows joining side B's
+    * batch-2 rows) exercise the buffered join state.
     *
     * Determinism contract, extended from [[runOnce]]:
-    *  - slices are contiguous in `orderCols` order, so anything a
+    *  - slices are contiguous in order-column order, so anything a
     *    later event depends on (a dimension version, a first
     *    occurrence) is drained in the same or an earlier batch — the
     *    cross-batch disorder the operators explicitly do NOT
@@ -198,214 +206,111 @@ object StreamingQueries {
     *    state consolidate with max_by over a monotonic field
     *    (n_events) — order-independent, so the result is
     *    batch-count-invariant;
-    *  - the run FAILS LOUDLY if fewer than `batches` non-empty
-    *    micro-batches were observed in the progress log: a silent
-    *    fall-back to one batch would gate nothing.
+    *  - the run FAILS LOUDLY when asked for fewer than 2 batches, and
+    *    when the progress log shows fewer than `batches` non-empty
+    *    micro-batches: a silent fall-back to one batch would gate
+    *    nothing.
+    *
+    * Returns the non-empty micro-batches' progress in trigger order.
+    * `sizeState` runs the query under [[withStatePartitions]] sized
+    * from the staged slices.
     *
     * The global-window ntile sort is staging machinery (drives the
     * slicing of a finite replay corpus), not operator cost — a real
     * deployment's batches arrive pre-sliced by time.
     */
-  private[graft] def runMultiBatch(s: SparkSession, tag: String,
-                                   input: DataFrame,
-                                   build: DataFrame => DataFrame,
-                                   orderCols: Seq[org.apache.spark.sql.Column],
-                                   batches: Int = 3,
-                                   mode: String = "append"): DataFrame =
-    runMultiBatchCounted(s, tag, input, build, orderCols, batches, mode)._1
-
-  /** [[runMultiBatchCounted]] also returning the per-batch STATE-STORE
-    * row count (`StreamingQueryProgress.stateOperators.numRowsTotal`,
-    * non-empty batches in trigger order) — the observable that PROVES
-    * a bounded-state claim: dropDuplicatesWithinWatermark's curve must
-    * plateau as the watermark evicts, while plain dropDuplicates grows
-    * monotonically with every key ever seen.
-    */
-  private[graft] def runMultiBatchStateCounted(s: SparkSession, tag: String,
-      input: DataFrame, build: DataFrame => DataFrame,
-      orderCols: Seq[org.apache.spark.sql.Column],
-      batches: Int = 3,
-      mode: String = "append"): (DataFrame, Seq[Long]) = {
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
-    val sink = s"${tag}_$uid"
-    val inDir = stagedSlices(s, tag, input, orderCols, batches)
-    val stream = s.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val q = withStatePartitions(s, Seq(inDir)) {
-      val q0 = build(stream).writeStream
-        .format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    }
-    val nonEmpty = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-    require(nonEmpty.size >= batches,
-      s"runMultiBatchState($tag): expected >= $batches non-empty " +
-        s"micro-batches, progress log shows ${nonEmpty.size}")
-    val curve = nonEmpty.map(p =>
-      p.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L))
-    s.table(sink).write.mode("overwrite").parquet(s"$base/out")
-    s.catalog.dropTempView(sink)
-    deleteRec(java.nio.file.Paths.get(s"$base/ckpt"))
-    registerDeleteOnExit(java.nio.file.Paths.get(base))
-    (s.read.parquet(s"$base/out"), curve)
-  }
-
-  /** [[runMultiBatch]] exposing the observed micro-batch count (spec
-    * hook — MultiBatchStreamingSpec pins that the drain really ran
-    * `batches` separate batches, not one big one).
-    */
-  private[graft] def runMultiBatchCounted(s: SparkSession, tag: String,
-                                          input: DataFrame,
-                                          build: DataFrame => DataFrame,
-                                          orderCols: Seq[org.apache.spark.sql.Column],
-                                          batches: Int = 3,
-                                          mode: String = "append"): (DataFrame, Int) = {
-    import org.apache.spark.sql.expressions.Window
+  private def drainCore(s: SparkSession, tag: String, base: String,
+      inputs: Seq[(DataFrame, Seq[Column])], batches: Int,
+      sizeState: Boolean)(
+      sink: Seq[DataFrame] => DataStreamWriter[Row])
+      : Seq[StreamingQueryProgress] = {
     require(batches >= 2,
-      s"runMultiBatch($tag): need >= 2 batches to exercise cross-batch " +
-        s"state, got $batches — use runOnce for the single-batch form")
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
-    val sink = s"${tag}_$uid"
-    val inDir = stagedSlices(s, tag, input, orderCols, batches)
-    val stream = s.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val q = withStatePartitions(s, Seq(inDir)) {
-      val q0 = build(stream).writeStream
-        .format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
+      s"drain($tag): need >= 2 batches to exercise cross-batch state, " +
+        s"got $batches — use runOnce for the single-batch form")
+    val dirs = inputs.zipWithIndex.map { case ((in, order), i) =>
+      stagedSlices(s, tag, in, order, batches, s"in$i")
     }
-    val observed = q.recentProgress.count(_.numInputRows > 0)
-    require(observed >= batches,
-      s"runMultiBatch($tag): expected >= $batches non-empty " +
-        s"micro-batches, progress log shows $observed — the cross-batch " +
-        "contract was not exercised")
-    s.table(sink).write.mode("overwrite").parquet(s"$base/out")
-    s.catalog.dropTempView(sink)
-    deleteRec(java.nio.file.Paths.get(s"$base/ckpt"))
-    registerDeleteOnExit(java.nio.file.Paths.get(base))
-    (s.read.parquet(s"$base/out"), observed)
-  }
-
-  /** The TWO-SOURCE twin of [[runMultiBatchCounted]] — the
-    * stream-STREAM shape (both join sides are unbounded; the engine
-    * must buffer each side's state and match across micro-batch
-    * boundaries, where stream-static forms like q114 probe a fixed
-    * table). Each input stages into its own sliced dir; both file
-    * sources admit one file per trigger, so every micro-batch carries
-    * a slice of EACH side and cross-batch matches (side A's batch-0
-    * rows joining side B's batch-2 rows) exercise the buffered state.
-    * Same loud-failure contract: fewer than `batches` non-empty
-    * micro-batches in the progress log is a staging bug, not a pass.
-    */
-  private[graft] def runMultiBatchTwoCounted(s: SparkSession, tag: String,
-      inputA: DataFrame, inputB: DataFrame,
-      build: (DataFrame, DataFrame) => DataFrame,
-      orderColsA: Seq[org.apache.spark.sql.Column],
-      orderColsB: Seq[org.apache.spark.sql.Column],
-      batches: Int = 3,
-      mode: String = "append"): (DataFrame, Int) = {
-    require(batches >= 2,
-      s"runMultiBatchTwo($tag): need >= 2 batches to exercise " +
-        s"cross-batch state, got $batches")
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
-    val sink = s"${tag}_$uid"
-    val dirA = stagedSlices(s, tag, inputA, orderColsA, batches, "inA")
-    val dirB = stagedSlices(s, tag, inputB, orderColsB, batches, "inB")
-    def src(dir: String, schema: org.apache.spark.sql.types.StructType) =
-      s.readStream.schema(schema)
+    val streams = inputs.zip(dirs).map { case ((in, _), dir) =>
+      s.readStream.schema(in.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
-    val q = withStatePartitions(s, Seq(dirA, dirB)) {
-      val q0 = build(src(dirA, inputA.schema), src(dirB, inputB.schema))
-        .writeStream
-        .format("memory").queryName(sink)
-        .outputMode(mode)
+    }
+    def run(): Seq[StreamingQueryProgress] = {
+      val q = sink(streams)
         .option("checkpointLocation", s"$base/ckpt")
         .trigger(Trigger.AvailableNow())
         .start()
-      q0.awaitTermination()
-      q0
+      q.awaitTermination()
+      q.recentProgress.toSeq.filter(_.numInputRows > 0)
     }
-    val observed = q.recentProgress.count(_.numInputRows > 0)
-    require(observed >= batches,
-      s"runMultiBatchTwo($tag): expected >= $batches non-empty " +
-        s"micro-batches, progress log shows $observed — the cross-batch " +
+    val progress =
+      try if (sizeState) withStatePartitions(s, dirs)(run()) else run()
+      finally deleteRec(Paths.get(s"$base/ckpt"))
+    require(progress.size >= batches,
+      s"drain($tag): expected >= $batches non-empty micro-batches, " +
+        s"progress log shows ${progress.size} — the cross-batch " +
         "contract was not exercised")
-    s.table(sink).write.mode("overwrite").parquet(s"$base/out")
-    s.catalog.dropTempView(sink)
-    deleteRec(java.nio.file.Paths.get(s"$base/ckpt"))
-    registerDeleteOnExit(java.nio.file.Paths.get(base))
-    (s.read.parquet(s"$base/out"), observed)
+    progress
   }
 
-  /** [[runMultiBatchTwoCounted]] also returning the join's per-batch
-    * state-store row count (`numRowsTotal` of the symmetric-hash-join
-    * state operator, non-empty batches in trigger order) — q278's
-    * bounded-state observable applied to the stream-stream JOIN
-    * family: the curve must RISE while both sides buffer and FALL as
-    * the watermark evicts matched-and-closed intervals, or the join's
-    * state would grow with the stream (the 100 TB/day OOM).
+  /** Drain `inputs` — each with the columns its slices are ordered by —
+    * over `batches` micro-batches through `build`, which gets one
+    * stream per input in the same order, into the [[parquetSink]]
+    * (`mode` as in [[runOnce]]). Returns the sink's rows and the
+    * non-empty micro-batches' progress ([[drainCore]]): its size is the
+    * observed batch count, and `progress.map(stateRows)` the per-batch
+    * state curve. State partitions are sized from the staged slices.
     */
-  private[graft] def runMultiBatchTwoStateCounted(s: SparkSession,
-      tag: String,
-      inputA: DataFrame, inputB: DataFrame,
-      build: (DataFrame, DataFrame) => DataFrame,
-      orderColsA: Seq[org.apache.spark.sql.Column],
-      orderColsB: Seq[org.apache.spark.sql.Column],
-      batches: Int = 3,
-      mode: String = "append"): (DataFrame, Seq[Long]) = {
-    require(batches >= 2,
-      s"runMultiBatchTwoState($tag): need >= 2 batches to exercise " +
-        s"cross-batch state, got $batches")
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
-    val sink = s"${tag}_$uid"
-    val dirA = stagedSlices(s, tag, inputA, orderColsA, batches, "inA")
-    val dirB = stagedSlices(s, tag, inputB, orderColsB, batches, "inB")
-    def src(dir: String, schema: org.apache.spark.sql.types.StructType) =
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-    val q = withStatePartitions(s, Seq(dirA, dirB)) {
-      val q0 = build(src(dirA, inputA.schema), src(dirB, inputB.schema))
-        .writeStream
-        .format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
+  private[graft] def drain(s: SparkSession, tag: String,
+      inputs: Seq[(DataFrame, Seq[Column])], batches: Int = 3,
+      mode: String = "append")(build: Seq[DataFrame] => DataFrame)
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val base = freshBase(s, tag)
+    var schema = new StructType()
+    val progress = drainCore(s, tag, base, inputs, batches,
+        sizeState = true) { streams =>
+      val out = build(streams)
+      schema = out.schema
+      parquetSink(out, mode, s"$base/out")
     }
-    val nonEmpty = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-    require(nonEmpty.size >= batches,
-      s"runMultiBatchTwoState($tag): expected >= $batches non-empty " +
-        s"micro-batches, progress log shows ${nonEmpty.size}")
-    val curve = nonEmpty.map(p =>
-      p.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L))
-    s.table(sink).write.mode("overwrite").parquet(s"$base/out")
-    s.catalog.dropTempView(sink)
-    deleteRec(java.nio.file.Paths.get(s"$base/ckpt"))
-    registerDeleteOnExit(java.nio.file.Paths.get(base))
-    (s.read.parquet(s"$base/out"), curve)
+    (readSink(s, base, schema), progress)
+  }
+
+  /** State-store rows after one micro-batch (`numRowsTotal` of the
+    * query's first stateful operator, 0 without one) — the observable
+    * that PROVES a bounded-state claim: dropDuplicatesWithinWatermark's
+    * curve must plateau as the watermark evicts, while plain
+    * dropDuplicates grows monotonically with every key ever seen.
+    */
+  private[graft] def stateRows(p: StreamingQueryProgress): Long =
+    p.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L)
+
+  /** Drain `input` over `batches` micro-batches like [[drain]], but hand
+    * each micro-batch and Spark's batchId to `perBatch` to COMMIT
+    * somewhere external (a CoW table version, an export) — the
+    * streaming-ingest-into-storage shape (continuous q57). The batchId
+    * is the exactly-once ingredient: an idempotent sink records the id
+    * with its commit and skips replays (q266 gates that recipe).
+    * Returns the observed non-empty micro-batch count.
+    *
+    * NO state-partition sizing here (deliberate asymmetry with
+    * [[drain]]): this drain has no stateful operator — the per-batch
+    * work is EXTERNAL batch jobs (CoW commits, rollup refreshes)
+    * executed inside `perBatch`, and shrinking the session shuffle
+    * partitions around them serializes that batch work for zero
+    * state-store savings (measured: q288 8.1 → 13.3 s in-suite with
+    * the sizing applied here; reverted to the session value).
+    */
+  private[graft] def drainEach(s: SparkSession, tag: String,
+      input: DataFrame, orderCols: Seq[Column], batches: Int = 3)(
+      perBatch: (DataFrame, Long) => Unit): Int = {
+    val base = freshBase(s, tag)
+    val progress = drainCore(s, tag, base, Seq(input -> orderCols),
+        batches, sizeState = false) { streams =>
+      streams.head.writeStream.foreachBatch(perBatch)
+    }
+    deleteRec(Paths.get(base))
+    progress.size
   }
 
   /** Session-scoped cache of staged slice dirs: (tag, input
@@ -426,14 +331,14 @@ object StreamingQueries {
 
   private def stagedSlices(s: SparkSession, tag: String,
                            input: DataFrame,
-                           orderCols: Seq[org.apache.spark.sql.Column],
+                           orderCols: Seq[Column],
                            batches: Int,
-                           inSub: String = "in"): String = {
+                           inSub: String): String = {
     // orderCols are part of the identity: the same input plan sliced
     // in a different order is DIFFERENT staged data (arrival order is
     // what multi-batch gates test) — it must not hit a cached dir
     val planNorm = (input.queryExecution.analyzed.toString +
-      orderCols.map(_.toString).mkString(" "))
+      orderCols.map(_.toString).mkString("\u0000"))
       .replaceAll("#\\d+", "#")
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(planNorm.getBytes("UTF-8"))
@@ -441,9 +346,7 @@ object StreamingQueries {
     val key = s"${tag}_${inSub}_${batches}_$fp"
     stageCache.synchronized {
       stageCache.get(key) match {
-        case Some(dir)
-          if java.nio.file.Files.exists(java.nio.file.Paths.get(dir)) =>
-          return dir
+        case Some(dir) if Files.exists(Paths.get(dir)) => return dir
         case _ =>
       }
     }
@@ -452,19 +355,16 @@ object StreamingQueries {
     val inDir0 = s"$root/$key"
     stageSliceFiles(s, tag, s"$root/_build_$key", input, orderCols,
       batches, inSub)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$root/_build_$key/$inSub"),
-      java.nio.file.Paths.get(inDir0))
-    deleteRec(java.nio.file.Paths.get(s"$root/_build_$key"))
-    registerDeleteOnExit(java.nio.file.Paths.get(inDir0))
+    Files.move(Paths.get(s"$root/_build_$key/$inSub"), Paths.get(inDir0))
+    deleteRec(Paths.get(s"$root/_build_$key"))
+    registerDeleteOnExit(Paths.get(inDir0))
     stageCache.synchronized { stageCache(key) = inDir0 }
     inDir0
   }
 
-  /** Stage `input` into `base/in` as `batches` contiguous
+  /** Stage `input` into `base/inSub` as `batches` contiguous
     * `orderCols`-sorted slice files with strictly increasing mtimes —
-    * the shared slicing step of [[runMultiBatchCounted]] and
-    * [[runMultiBatchForeachCounted]]. ONE staging job: the
+    * the build step behind [[stagedSlices]]. ONE staging job: the
     * global-window ntile leaves the data in a single partition, so
     * partitionBy writes exactly one part file per slice in one pass
     * (a per-slice filter+write loop would re-run the window sort
@@ -472,19 +372,19 @@ object StreamingQueries {
     */
   private def stageSliceFiles(s: SparkSession, tag: String, base: String,
                               input: DataFrame,
-                              orderCols: Seq[org.apache.spark.sql.Column],
-                              batches: Int, inSub: String = "in"): Unit = {
+                              orderCols: Seq[Column],
+                              batches: Int, inSub: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val inDir = java.nio.file.Paths.get(s"$base/$inSub")
-    java.nio.file.Files.createDirectories(inDir)
+    val inDir = Paths.get(s"$base/$inSub")
+    Files.createDirectories(inDir)
     val stage = s"$base/stage"
     input.withColumn("__b",
         ntile(batches).over(Window.orderBy(orderCols: _*)) - 1)
       .write.partitionBy("__b").parquet(stage)
     for (b <- 0 until batches) {
-      val sliceDir = java.nio.file.Paths.get(s"$stage/__b=$b")
+      val sliceDir = Paths.get(s"$stage/__b=$b")
       val parts = {
-        val walk = java.nio.file.Files.list(sliceDir)
+        val walk = Files.list(sliceDir)
         try {
           val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
           walk.forEach { p =>
@@ -495,74 +395,17 @@ object StreamingQueries {
         } finally walk.close()
       }
       require(parts.length == 1,
-        s"runMultiBatch($tag): slice $b staged ${parts.length} part " +
+        s"drain($tag): slice $b staged ${parts.length} part " +
           "files (expected 1 from the single-partition window)")
       val target = inDir.resolve(f"batch$b%03d.parquet")
-      java.nio.file.Files.move(parts.head, target)
+      Files.move(parts.head, target)
       // strictly increasing mtimes: the file source admits oldest
       // first (latestFirst=false default), so slice order == batch
       // order deterministically, independent of staging wall-clock
-      java.nio.file.Files.setLastModifiedTime(target,
+      Files.setLastModifiedTime(target,
         java.nio.file.attribute.FileTime.fromMillis(1600000000000L + b * 60000L))
     }
-    deleteRec(java.nio.file.Paths.get(stage))
-  }
-
-  /** The foreachBatch twin of [[runMultiBatchCounted]]: drains the
-    * same sliced file stream, but each micro-batch is handed to
-    * `perBatch` to COMMIT somewhere external (a CoW table version, an
-    * export) instead of accumulating in a memory sink — the
-    * streaming-ingest-into-storage shape (continuous q57). Returns
-    * the observed non-empty micro-batch count, failing loudly below
-    * `batches` (same contract as the memory-sink form).
-    */
-  private[graft] def runMultiBatchForeach(s: SparkSession, tag: String,
-                                          input: DataFrame,
-                                          orderCols: Seq[org.apache.spark.sql.Column],
-                                          batches: Int = 3)(
-                                          perBatch: DataFrame => Unit): Int =
-    runMultiBatchForeachById(s, tag, input, orderCols, batches) {
-      (df, _) => perBatch(df) }
-
-  /** [[runMultiBatchForeach]] exposing Spark's batchId — the
-    * exactly-once ingredient: an idempotent sink records the id with
-    * its commit and skips replays (q266 gates that recipe).
-    */
-  private[graft] def runMultiBatchForeachById(s: SparkSession, tag: String,
-                                          input: DataFrame,
-                                          orderCols: Seq[org.apache.spark.sql.Column],
-                                          batches: Int = 3)(
-                                          perBatchId: (DataFrame, Long) => Unit): Int = {
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val base = s"${Tables.scratchBase}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}/$uid"
-    val inDir = stagedSlices(s, tag, input, orderCols, batches)
-    val stream = s.readStream.schema(input.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    // NO state-partition sizing here (deliberate asymmetry with the
-    // memory-sink runners): this drain has no stateful operator — the
-    // per-batch work is EXTERNAL batch jobs (CoW commits, rollup
-    // refreshes) executed inside perBatchId, and shrinking the session
-    // shuffle partitions around them serializes that batch work for
-    // zero state-store savings (measured: q288 8.1 → 13.3 s in-suite
-    // with the sizing applied here; reverted to the session value).
-    val q = {
-      val q0 = stream.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         bid: Long) => perBatchId(df, bid) }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    }
-    val observed = q.recentProgress.count(_.numInputRows > 0)
-    require(observed >= batches,
-      s"runMultiBatchForeach($tag): expected >= $batches non-empty " +
-        s"micro-batches, progress log shows $observed")
-    deleteRec(java.nio.file.Paths.get(base))
-    observed
+    deleteRec(Paths.get(stage))
   }
 
   /** Register `p` and everything under it for deletion at JVM exit
@@ -570,8 +413,8 @@ object StreamingQueries {
     * rest of the session). Walk stream closed, as in [[deleteRec]].
     */
   private def registerDeleteOnExit(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
       try walk.forEach(f => f.toFile.deleteOnExit())
       finally walk.close()
     }
@@ -581,10 +424,10 @@ object StreamingQueries {
     * a leaked directory stream is an fd leak under bench reps).
     */
   private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+        .forEach(f => Files.deleteIfExists(f))
       finally walk.close()
     }
   }
@@ -738,10 +581,11 @@ object StreamingQueries {
     // picks the FINAL state — batch-count-invariant by construction.
     "q97_multibatch_state_machine" -> { (s, dir) =>
       import s.implicits._
-      val out = runMultiBatch(s, "q97", stepEvents(s, dir), in =>
+      val (out, _) = drain(s, "q97", Seq(stepEvents(s, dir) ->
+          Seq(col("ts"), col("scene_id"), col("step")))) { case Seq(in) =>
         StreamOps.sceneStateMachine(in.as[StreamOps.StepEvent],
-            lateness = "36500 days", idleGapMs = Long.MaxValue / 4).toDF(),
-        orderCols = Seq(col("ts"), col("scene_id"), col("step")))
+          lateness = "36500 days", idleGapMs = Long.MaxValue / 4).toDF()
+      }
       out.groupBy("scene_id")
         .agg(max_by(struct(col("downloaded"), col("ard"), col("dcloaded"),
           col("last_ts"), col("n_events")), col("n_events")).as("fin"))
@@ -760,11 +604,12 @@ object StreamingQueries {
     // batch outputs IS the batch-semantics answer, no consolidation.
     "q98_multibatch_asof" -> { (s, dir) =>
       import s.implicits._
-      runMultiBatch(s, "q98", asofInput(s, dir), in =>
+      drain(s, "q98", Seq(asofInput(s, dir) ->
+          Seq(col("ts"), col("side"), col("event_id")))) { case Seq(in) =>
         StreamOps.streamingAsofEnrich(in.as[StreamOps.AsofInput],
-            lateness = "36500 days", retainVersions = 8,
-            idleGapMs = Long.MaxValue / 4).toDF(),
-        orderCols = Seq(col("ts"), col("side"), col("event_id")))
+          lateness = "36500 days", retainVersions = 8,
+          idleGapMs = Long.MaxValue / 4).toDF()
+      }._1
         .select(col("event_id"), col("key").as("user_id"),
           col("asof_payload").cast("long").as("as_of_orderkey"),
           to_date(col("asof_ts")).as("as_of_date"))
@@ -782,9 +627,9 @@ object StreamingQueries {
           docs.withColumn("doc_id", col("doc_id") + 1000000L))
         .withColumn("ts", expr(
           "timestampadd(SECOND, doc_id, TIMESTAMP'2024-01-01 00:00:00')"))
-      runMultiBatch(s, "q99", input, in =>
-        StreamOps.streamingDedup(in, "text", "ts", "36500 days"),
-        orderCols = Seq(col("ts"), col("doc_id")))
+      drain(s, "q99", Seq(input -> Seq(col("ts"), col("doc_id")))) {
+        case Seq(in) => StreamOps.streamingDedup(in, "text", "ts", "36500 days")
+      }._1
         .select(md5(col("text")).as("content_hash"))
         .orderBy("content_hash")
     },
@@ -803,10 +648,10 @@ object StreamingQueries {
       val input = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("status"))
-      runMultiBatch(s, "q208", input, in =>
-        StreamOps.scdIntervals(in.as[StreamOps.StatusEvent],
-          lateness = "36500 days", idleGapMs = Long.MaxValue / 4).toDF(),
-        orderCols = Seq(col("ts"), col("event_id")))
+      drain(s, "q208", Seq(input -> Seq(col("ts"), col("event_id")))) {
+        case Seq(in) => StreamOps.scdIntervals(in.as[StreamOps.StatusEvent],
+          lateness = "36500 days", idleGapMs = Long.MaxValue / 4).toDF()
+      }._1
         .select("user_id", "status", "valid_from", "valid_to", "n_events")
         .orderBy("user_id", "valid_from")
     },
@@ -852,7 +697,8 @@ object StreamingQueries {
       val input = t(s, dir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
-      runMultiBatch(s, "q114", input, in => {
+      drain(s, "q114", Seq(input -> Seq(col("doc_id"))),
+          mode = "complete") { case Seq(in) =>
         val k = 128; val bands = 16; val rows = k / bands
         val sets = in
           .select(col("doc_id"), G.sortedWordSet(col("text")).as("ws"))
@@ -877,7 +723,7 @@ object StreamingQueries {
           .agg(max_by(col("osid"), struct(col("jac"), -col("osid")))
               .as("match_id"),
             max("jac").as("jac"))
-      }, orderCols = Seq(col("doc_id")), mode = "complete")
+      }._1
         .select(col("doc_id"), col("match_id"),
           round(col("jac"), 6).as("jac"))
         .orderBy("doc_id")
@@ -901,12 +747,10 @@ object StreamingQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val root = s"${Tables.scratchBase}/graft_q126_" +
-        s"${s.sparkContext.applicationId}/$uid"
+      val root = freshBase(s, "q126")
       val table = new graft.sources.CowTable(root, s)
-      runMultiBatchForeach(s, "q126", ev,
-        orderCols = Seq(col("ts"), col("event_id"))) { batch =>
+      drainEach(s, "q126", ev,
+        orderCols = Seq(col("ts"), col("event_id"))) { (batch, _) =>
         val latest = batch
           .groupBy("user_id")
           .agg(max(struct(col("ts"), col("event_id"), col("event_type")))
@@ -945,13 +789,13 @@ object StreamingQueries {
           key.cast("string"))), 1, 8), 16, 10).cast("long") % w
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"))
-      val cells = runMultiBatch(s, "q150", ev, in =>
+      val cells = drain(s, "q150", Seq(ev -> Seq(col("ts"), col("event_id"))),
+          mode = "complete") { case Seq(in) =>
         in.select(col("user_id"),
             explode(sequence(lit(0), lit(d - 1))).as("r"))
           .withColumn("c", cellOf(col("r"), col("user_id")))
-          .groupBy("r", "c").agg(count(lit(1)).as("cnt")),
-        orderCols = Seq(col("ts"), col("event_id")), mode = "complete")
-        .localCheckpoint()
+          .groupBy("r", "c").agg(count(lit(1)).as("cnt"))
+      }._1.localCheckpoint()
       val exact = t(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("exact_n"))
       exact.orderBy(col("exact_n").desc, col("user_id")).limit(10)
@@ -989,13 +833,13 @@ object StreamingQueries {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"))
-      runMultiBatchTwoCounted(s, "q165", clicks, purchases,
-        (cs, ps) => cs.withWatermark("c_ts", "720 hours")
+      drain(s, "q165", Seq(clicks -> Seq(col("c_ts"), col("click_id")),
+          purchases -> Seq(col("p_ts"), col("purchase_id")))) {
+        case Seq(cs, ps) => cs.withWatermark("c_ts", "720 hours")
           .join(ps.withWatermark("p_ts", "720 hours"),
             expr("c_user = p_user AND p_ts >= c_ts AND " +
-              "p_ts <= c_ts + interval 1 hour")),
-        orderColsA = Seq(col("c_ts"), col("click_id")),
-        orderColsB = Seq(col("p_ts"), col("purchase_id")))._1
+              "p_ts <= c_ts + interval 1 hour"))
+      }._1
         .select(col("c_user").as("user_id"), col("click_id"),
           col("purchase_id"))
         .orderBy("user_id", "click_id", "purchase_id")
@@ -1016,16 +860,16 @@ object StreamingQueries {
     "q176_streaming_sessions" -> { (s, dir) =>
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"))
-      runMultiBatch(s, "q176", ev, in =>
-        in.withWatermark("ts", "1 hour")
+      drain(s, "q176", Seq(ev -> Seq(col("ts"), col("event_id")))) {
+        case Seq(in) => in.withWatermark("ts", "1 hour")
           .groupBy(col("user_id"),
             session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n_events"))
           .select(col("user_id"),
             col("session_window.start").as("session_start"),
             col("session_window.end").as("session_end"),
-            col("n_events")),
-        orderCols = Seq(col("ts"), col("event_id")))
+            col("n_events"))
+      }._1
         .orderBy("user_id", "session_start")
     },
 
@@ -1052,13 +896,13 @@ object StreamingQueries {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"))
-      runMultiBatchTwoCounted(s, "q177", clicks, purchases,
-        (cs, ps) => cs.withWatermark("c_ts", "1 hour")
+      drain(s, "q177", Seq(clicks -> Seq(col("c_ts"), col("click_id")),
+          purchases -> Seq(col("p_ts"), col("purchase_id")))) {
+        case Seq(cs, ps) => cs.withWatermark("c_ts", "1 hour")
           .join(ps.withWatermark("p_ts", "1 hour"),
             expr("c_user = p_user AND p_ts >= c_ts AND " +
-              "p_ts <= c_ts + interval 1 hour"), "left_outer"),
-        orderColsA = Seq(col("c_ts"), col("click_id")),
-        orderColsB = Seq(col("p_ts"), col("purchase_id")))._1
+              "p_ts <= c_ts + interval 1 hour"), "left_outer")
+      }._1
         .select(col("c_user").as("user_id"), col("click_id"),
           col("purchase_id"))
         .orderBy("user_id", "click_id", "purchase_id")
@@ -1080,9 +924,7 @@ object StreamingQueries {
     // steps × 3 ticks) rides as a column, so a lost append or a
     // spurious 4th tick also fails the hash.
     "q216_monitor_loop_drain" -> { (s, dir) =>
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val root = s"${Tables.scratchBase}/graft_q216_" +
-        s"${s.sparkContext.applicationId}/$uid"
+      val root = freshBase(s, "q216")
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("PID"),
           to_date(col("o_orderdate")).as("Date_Acquired"),
@@ -1112,8 +954,8 @@ object StreamingQueries {
       // and the replayed PIDs (first half) sit ≥ a full slice ahead
       // of their replays — the replay ALWAYS crosses a batch boundary
       // and must die in the anti-join, never in-batch dedup
-      runMultiBatchForeach(s, "q216", rows,
-        orderCols = Seq(col("rev"), col("PID")), batches = 3) { b =>
+      drainEach(s, "q216", rows,
+        orderCols = Seq(col("rev"), col("PID")), batches = 3) { (b, _) =>
         if (!b.isEmpty)
           graft.streaming.MonitorLoop.tick(s, cat, b, Seq("PID"),
             newestFirst = Seq(col("rev").desc), steps = steps,
@@ -1152,13 +994,13 @@ object StreamingQueries {
         .withColumn("arr",
           conv(substring(md5(concat_ws(":", lit("arr"),
             col("event_id"))), 1, 15), 16, 10).cast("long"))
-      runMultiBatch(s, "q260", ev, in =>
-        in.withWatermark("ts", "1 hour")
+      drain(s, "q260", Seq(ev -> Seq(col("arr"), col("event_id")))) {
+        case Seq(in) => in.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(date_format(col("window.start"), "yyyy-MM-dd")
-            .as("day"), col("event_type"), col("n")),
-        orderCols = Seq(col("arr"), col("event_id")))
+            .as("day"), col("event_type"), col("n"))
+      }._1
         .orderBy("day", "event_type")
     },
 
@@ -1181,12 +1023,12 @@ object StreamingQueries {
         .withColumn("arr",
           conv(substring(md5(concat_ws(":", lit("ddw"),
             col("event_id"))), 1, 15), 16, 10).cast("long"))
-      runMultiBatch(s, "q265", ev, in =>
-        in.withWatermark("hts", "2 hours")
+      drain(s, "q265", Seq(ev -> Seq(col("arr"), col("event_id")))) {
+        case Seq(in) => in.withWatermark("hts", "2 hours")
           .dropDuplicatesWithinWatermark("user_id", "hts")
           .select(col("user_id"),
-            date_format(col("hts"), "yyyy-MM-dd-HH").as("hr")),
-        orderCols = Seq(col("arr"), col("event_id")))
+            date_format(col("hts"), "yyyy-MM-dd-HH").as("hr"))
+      }._1
         .orderBy("user_id", "hr")
     },
 
@@ -1217,9 +1059,7 @@ object StreamingQueries {
     // (one version per applied batch — ledger rides free).
     "q287_partitioned_stream_sink" -> { (s, dir) =>
       import s.implicits._
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val root = s"${Tables.scratchBase}/graft_q287_" +
-        s"${s.sparkContext.applicationId}/$uid"
+      val root = freshBase(s, "q287")
       val sink = new graft.sources.PartitionedCowTable(
         s"$root/sink", "month", s)
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
@@ -1238,7 +1078,7 @@ object StreamingQueries {
           sink.append(data.unionByName(ledger)) // ONE atomic commit
         }
       }
-      runMultiBatchForeachById(s, "q287", base,
+      drainEach(s, "q287", base,
         orderCols = Seq(col("PID")), batches = 3) { (df, bid) =>
         if (!df.isEmpty) tick(df, bid)
       }
@@ -1271,9 +1111,7 @@ object StreamingQueries {
     // O(table)") is the measured, gated quantity.
     "q288_streaming_rollup_maintenance" -> { (s, dir) =>
       import s.implicits._
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val root = s"${Tables.scratchBase}/graft_q288_" +
-        s"${s.sparkContext.applicationId}/$uid"
+      val root = freshBase(s, "q288")
       val sink = new graft.sources.PartitionedCowTable(
         s"$root/sink", "month", s)
       val ru = new graft.sources.IncrementalRollup(sink, s"$root/sum",
@@ -1285,7 +1123,7 @@ object StreamingQueries {
             .as("month"),
           round(col("o_totalprice") * 100).cast("long").as("cents"))
       var recomputedTotal = 0L
-      runMultiBatchForeachById(s, "q288", base,
+      drainEach(s, "q288", base,
         orderCols = Seq(col("PID")), batches = 3) { (df, bid) =>
         if (!df.isEmpty) {
           sink.append(df)
@@ -1304,9 +1142,7 @@ object StreamingQueries {
 
     "q266_exactly_once_sink" -> { (s, dir) =>
       import s.implicits._
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val root = s"${Tables.scratchBase}/graft_q266_" +
-        s"${s.sparkContext.applicationId}/$uid"
+      val root = freshBase(s, "q266")
       val sink = new graft.sources.CowTable(s"$root/sink", s)
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("PID"),
@@ -1322,7 +1158,7 @@ object StreamingQueries {
           sink.append(data.unionByName(ledger)) // ONE atomic commit
         }
       }
-      runMultiBatchForeachById(s, "q266", base,
+      drainEach(s, "q266", base,
         orderCols = Seq(col("PID")), batches = 3) { (df, bid) =>
         if (!df.isEmpty) tick(df, bid)
       }
@@ -1359,13 +1195,13 @@ object StreamingQueries {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"))
-      runMultiBatchTwoCounted(s, "q277", clicks, purchases,
-        (cs, ps) => cs.withWatermark("c_ts", "1 hour")
+      drain(s, "q277", Seq(clicks -> Seq(col("c_ts"), col("click_id")),
+          purchases -> Seq(col("p_ts"), col("purchase_id")))) {
+        case Seq(cs, ps) => cs.withWatermark("c_ts", "1 hour")
           .join(ps.withWatermark("p_ts", "1 hour"),
             expr("c_user = p_user AND p_ts >= c_ts AND " +
-              "p_ts <= c_ts + interval 1 hour"), "full_outer"),
-        orderColsA = Seq(col("c_ts"), col("click_id")),
-        orderColsB = Seq(col("p_ts"), col("purchase_id")))._1
+              "p_ts <= c_ts + interval 1 hour"), "full_outer")
+      }._1
         // null sides surface as -1: the ids are positive, and a
         // sentinel keeps the gate's sort/hash total (mixed null/value
         // columns have engine-specific orderings)
@@ -1396,15 +1232,15 @@ object StreamingQueries {
             col("event_id"))), 1, 15), 16, 10).cast("long"))
       val b = 5
       val ord = Seq(col("arr"), col("event_id"))
-      val (_, unbounded) = runMultiBatchStateCounted(s, "q278", ev,
-        in => in.dropDuplicates("user_id", "hts")
-          .select(col("user_id"), col("hts")),
-        orderCols = ord, batches = b)
-      val (_, bounded) = runMultiBatchStateCounted(s, "q278", ev,
-        in => in.withWatermark("hts", "2 hours")
+      val unbounded = drain(s, "q278", Seq(ev -> ord), batches = b) {
+        case Seq(in) => in.dropDuplicates("user_id", "hts")
+          .select(col("user_id"), col("hts"))
+      }._2.map(stateRows)
+      val bounded = drain(s, "q278", Seq(ev -> ord), batches = b) {
+        case Seq(in) => in.withWatermark("hts", "2 hours")
           .dropDuplicatesWithinWatermark("user_id", "hts")
-          .select(col("user_id"), col("hts")),
-        orderCols = ord, batches = b)
+          .select(col("user_id"), col("hts"))
+      }._2.map(stateRows)
       unbounded.take(b).zip(bounded.take(b)).zipWithIndex
         .map { case ((u, w), i) => (i.toLong, u, w) }
         .toDF("batch", "unbounded_state_rows", "bounded_state_rows")
@@ -1434,15 +1270,15 @@ object StreamingQueries {
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
           col("event_id").as("purchase_id"))
       val b = 4
-      val (_, curve) = runMultiBatchTwoStateCounted(s, "q283",
-        clicks, purchases,
-        (cs, ps) => cs.withWatermark("c_ts", "1 hour")
+      val curve = drain(s, "q283",
+          Seq(clicks -> Seq(col("c_ts"), col("click_id")),
+            purchases -> Seq(col("p_ts"), col("purchase_id"))),
+          batches = b) {
+        case Seq(cs, ps) => cs.withWatermark("c_ts", "1 hour")
           .join(ps.withWatermark("p_ts", "1 hour"),
             expr("c_user = p_user AND p_ts >= c_ts AND " +
-              "p_ts <= c_ts + interval 1 hour"), "full_outer"),
-        orderColsA = Seq(col("c_ts"), col("click_id")),
-        orderColsB = Seq(col("p_ts"), col("purchase_id")),
-        batches = b)
+              "p_ts <= c_ts + interval 1 hour"), "full_outer")
+      }._2.map(stateRows)
       curve.take(b).zipWithIndex
         .map { case (n, i) => (i.toLong, n) }
         .toDF("batch", "state_rows")

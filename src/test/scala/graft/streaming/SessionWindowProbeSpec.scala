@@ -35,15 +35,16 @@ class SessionWindowProbeSpec extends SparkSpec {
       (1L, t(1, 0)), (2L, t(2, 0)),
       (1L, t(23, 0)), (2L, t(23, 0)))
       .toDF("user_id", "ts")
-    val (out, nBatches) = StreamingQueries.runMultiBatchCounted(
-      spark, "swprobe", rows,
-      in => in.withWatermark("ts", "30 minutes")
+    val (out, progress) = StreamingQueries.drain(
+      spark, "swprobe", Seq(rows -> Seq(col("ts"), col("user_id"))),
+      batches = 3) { case Seq(in) =>
+      in.withWatermark("ts", "30 minutes")
         .groupBy(col("user_id"), session_window(col("ts"), "15 minutes"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("session_window.start").as("start"),
-          col("session_window.end").as("end"), col("n_events")),
-      orderCols = Seq(col("ts"), col("user_id")),
-      batches = 3)
+          col("session_window.end").as("end"), col("n_events"))
+    }
+    val nBatches = progress.size
     assert(nBatches >= 3)
     val got = out.select("user_id", "start", "end", "n_events")
       .as[(Long, Timestamp, Timestamp, Long)].collect().sorted.toSeq
@@ -69,15 +70,16 @@ class SessionWindowProbeSpec extends SparkSpec {
       (3L, t(22, 50), 103L)).toDF("c_user", "c_ts", "click_id")
     val purchases = Seq((2L, t(1, 30), 11L), (8L, t(2, 0), 12L),
       (9L, t(23, 0), 13L)).toDF("p_user", "p_ts", "purchase_id")
-    val (out, nBatches) = StreamingQueries.runMultiBatchTwoCounted(
-      spark, "lojprobe", clicks, purchases,
-      (cs, ps) => cs.withWatermark("c_ts", "30 minutes")
+    val (out, progress) = StreamingQueries.drain(
+      spark, "lojprobe",
+      Seq(clicks -> Seq(col("c_ts")), purchases -> Seq(col("p_ts"))),
+      batches = 3) { case Seq(cs, ps) =>
+      cs.withWatermark("c_ts", "30 minutes")
         .join(ps.withWatermark("p_ts", "30 minutes"),
           expr("c_user = p_user AND p_ts >= c_ts AND " +
-            "p_ts <= c_ts + interval 1 hour"), "left_outer"),
-      orderColsA = Seq(col("c_ts")),
-      orderColsB = Seq(col("p_ts")),
-      batches = 3)
+            "p_ts <= c_ts + interval 1 hour"), "left_outer")
+    }
+    val nBatches = progress.size
     assert(nBatches >= 3)
     val got = out.select(col("click_id"), col("purchase_id"))
       .collect().map(r => (r.getLong(0),
@@ -101,15 +103,16 @@ class SessionWindowProbeSpec extends SparkSpec {
       (3L, t(22, 50), 103L)).toDF("c_user", "c_ts", "click_id")
     val purchases = Seq((2L, t(1, 30), 11L), (8L, t(2, 0), 12L),
       (9L, t(23, 0), 13L)).toDF("p_user", "p_ts", "purchase_id")
-    val (out, nBatches) = StreamingQueries.runMultiBatchTwoCounted(
-      spark, "fojprobe", clicks, purchases,
-      (cs, ps) => cs.withWatermark("c_ts", "30 minutes")
+    val (out, progress) = StreamingQueries.drain(
+      spark, "fojprobe",
+      Seq(clicks -> Seq(col("c_ts")), purchases -> Seq(col("p_ts"))),
+      batches = 3) { case Seq(cs, ps) =>
+      cs.withWatermark("c_ts", "30 minutes")
         .join(ps.withWatermark("p_ts", "30 minutes"),
           expr("c_user = p_user AND p_ts >= c_ts AND " +
-            "p_ts <= c_ts + interval 1 hour"), "full_outer"),
-      orderColsA = Seq(col("c_ts")),
-      orderColsB = Seq(col("p_ts")),
-      batches = 3)
+            "p_ts <= c_ts + interval 1 hour"), "full_outer")
+    }
+    val nBatches = progress.size
     assert(nBatches >= 3)
     val got = out.select(col("click_id"), col("purchase_id"))
       .collect().map(r => (
@@ -139,15 +142,16 @@ class SessionWindowProbeSpec extends SparkSpec {
     val purchases = Seq((5L, t(0, 20), 11L), (6L, t(3, 20), 12L),
       (7L, t(6, 20), 13L), (8L, t(9, 20), 14L))
       .toDF("p_user", "p_ts", "purchase_id")
-    val (out, curve) = StreamingQueries.runMultiBatchTwoStateCounted(
-      spark, "fojcurve", clicks, purchases,
-      (cs, ps) => cs.withWatermark("c_ts", "1 hour")
+    val (out, progress) = StreamingQueries.drain(
+      spark, "fojcurve",
+      Seq(clicks -> Seq(col("c_ts")), purchases -> Seq(col("p_ts"))),
+      batches = 4) { case Seq(cs, ps) =>
+      cs.withWatermark("c_ts", "1 hour")
         .join(ps.withWatermark("p_ts", "1 hour"),
           expr("c_user = p_user AND p_ts >= c_ts AND " +
-            "p_ts <= c_ts + interval 1 hour"), "full_outer"),
-      orderColsA = Seq(col("c_ts")),
-      orderColsB = Seq(col("p_ts")),
-      batches = 4)
+            "p_ts <= c_ts + interval 1 hour"), "full_outer")
+    }
+    val curve = progress.map(StreamingQueries.stateRows)
     assert(curve === Seq(2L, 4L, 4L, 4L), s"observed state curve: $curve")
     // final watermark min(09:10, 09:20) - 1h = 08:10: everything but
     // the last slice pair null-emitted (all rows are unmatched)

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.SparkSpec
 
@@ -15,6 +16,18 @@ class StreamOpsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** `df` on a foreachBatch → parquet sink under a fresh temp dir, the
+    * sink the streaming gates drain into: every micro-batch's rows
+    * append to the returned path.
+    */
+  private def toParquet(df: DataFrame): (DataStreamWriter[Row], String) = {
+    val dir = java.nio.file.Files.createTempDirectory("sosink").toString
+    (df.writeStream.option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.write.mode("append").parquet(s"$dir/out")
+      }, s"$dir/out")
+  }
+
   test("streaming dedup keeps first occurrence, bounded by watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -23,12 +36,12 @@ class StreamOpsSpec extends SparkSpec {
       Ev(ts("2024-01-01 10:00:00"), "docA", 1.0),
       Ev(ts("2024-01-01 10:05:00"), "docA", 2.0), // dup within watermark
       Ev(ts("2024-01-01 10:10:00"), "docB", 3.0))
-    val q = dedup.writeStream.format("memory").queryName("sdedup")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    val (sink, sdedup) = toParquet(dedup)
+    val q = sink.outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     // exactly one survivor per content key (which of the two docA
     // rows survives within a micro-batch is partition-order dependent)
-    val got = spark.table("sdedup").select("kind", "value")
+    val got = spark.read.parquet(sdedup).select("kind", "value")
       .as[(String, Double)].collect().sortBy(_._1)
     assert(got.map(_._1).sameElements(Array("docA", "docB")))
   }
@@ -44,12 +57,12 @@ class StreamOpsSpec extends SparkSpec {
       Ev(ts("2024-01-01 13:00:00"), "a", 9.0))
     val agg = StreamOps.tumblingAgg(mem.toDF(), "ts", "1 hour", "10 minutes",
       Seq(col("kind")), Seq(count(lit(1)).as("n"), sum($"value").as("s")))
-    val q = agg.writeStream.format("memory").queryName("tumbling")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    val (sink, tumbling) = toParquet(agg)
+    val q = sink.outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
     // append mode emits only windows the watermark has passed:
     // the 10:00 and 11:00 windows are final; 13:00 is still open
-    val rows = spark.table("tumbling")
+    val rows = spark.read.parquet(tumbling)
       .select(col("window.start").cast("string"), $"kind", $"n", $"s")
       .as[(String, String, Long, Double)].collect().sortBy(r => (r._1, r._2))
     assert(rows.sameElements(Array(
@@ -110,10 +123,10 @@ class StreamOpsSpec extends SparkSpec {
       Ev(ts("2024-01-05 00:00:00"), "a", 1.0)) // advances watermark
     val roll = StreamOps.obsDateRollup(mem.toDF(), "ts", "1 hour",
       Seq(col("kind")))
-    val q = roll.writeStream.format("memory").queryName("obsroll")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    val (sink, obsroll) = toParquet(roll)
+    val q = sink.outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
-    val rows = spark.table("obsroll")
+    val rows = spark.read.parquet(obsroll)
       .select($"obs_date".cast("string"), $"kind", $"n_events")
       .as[(String, String, Long)].collect().sortBy(r => (r._1, r._2))
     assert(rows.sameElements(Array(
@@ -141,8 +154,8 @@ class StreamOpsSpec extends SparkSpec {
     // watermark filtering
     val out = StreamOps.streamingAsofEnrich(mem.toDS(), "10 hours",
       retainVersions = 4, idleGapMs = 36000000L)
-    val q = out.writeStream.format("memory").queryName("sasof")
-      .outputMode("append").start()
+    val (sink, sasof) = toParquet(out.toDF())
+    val q = sink.outputMode("append").start()
     q.processAllAvailable()
     // second batch: a fact later than every retained version — the
     // dim state must survive across micro-batches
@@ -154,7 +167,7 @@ class StreamOpsSpec extends SparkSpec {
       fact(15L, 1L, "2024-01-01 12:30:00"))
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("sasof")
+    val got = spark.read.parquet(sasof)
       .select("event_id", "asof_payload")
       .as[(Long, Option[String])].collect().sortBy(_._1)
     assert(got.sameElements(Array(
