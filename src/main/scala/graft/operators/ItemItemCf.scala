@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
+import org.apache.spark.sql.{DataFrame, Encoders, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +34,15 @@ import org.apache.spark.sql.functions._
   * decision onto every output row, so a pipeline reading the result
   * can SEE which contract produced it.
   *
+  * One basket kernel serves every arm ([[baskets]]): a single u-keyed
+  * grouping of (u, p) applies the md5 cap (none for the exact arm),
+  * a compiled pass enumerates each basket's pairs for the co-count
+  * aggregate ([[pairCounts]]), and the norms count the same baskets'
+  * items ([[norms]]). Only the exact cosine/rank tail is SQL.
+  *
   * Column contract: input `pos` has columns (u, p) — one row per
-  * (user, item) positive signal, already distinct. Output: (part,
+  * (user, item) positive signal, already distinct; p an integral item
+  * id. Output: (part,
   * rank, similar, cosine) — top-k neighbors per item, similarity
   * rounded to 6dp BEFORE ranking with an item-id tiebreak, so the
   * top-k is engine-exact in every arm.
@@ -77,20 +87,70 @@ object ItemItemCf {
     Preflight(pe, pc, r.getLong(2), r.getLong(3), regime)
   }
 
-  /** Deterministic per-user basket cap: keep the `cap` items with the
-    * smallest md5("cap:u:p") draw — the q211 contract, replayable in
-    * any engine.
+  /** The basket kernel: ONE u-keyed grouping of (u, p), one row per
+    * user out — (u, sp), the user's kept items ascending. A user with
+    * more than `cap` rows keeps the `cap` with the smallest
+    * ([[capKey]], p), nulls first on p: the q211 contract, replayable
+    * in any engine as `row_number() OVER (PARTITION BY u ORDER BY
+    * conv(substring(md5(concat_ws(':', 'cap', u, p)), 1, 15), 16, 10),
+    * p) <= cap`. A null p takes a cap slot (under md5("cap:u")) but is
+    * not an item, so it is dropped from `sp` and never pairs. With no
+    * cap (`Int.MaxValue`) no key is drawn: every item is kept.
+    *
+    * u travels as its string form — the form `concat_ws` hashes — and
+    * p as a long (items are integral ids), cast back to the caller's
+    * type where the kernel's output leaves this object.
     */
-  private def capBaskets(pos: DataFrame, cap: Int): DataFrame =
-    pos.withColumn("rk", row_number().over(
-        Window.partitionBy("u").orderBy(
-          conv(substring(md5(concat_ws(":", lit("cap"), col("u"),
-            col("p"))), 1, 15), 16, 10).cast("long"), col("p"))))
-      .filter(col("rk") <= cap).select("u", "p")
+  private def baskets(pos: DataFrame, cap: Int): DataFrame = {
+    import pos.sparkSession.implicits._
+    pos.select(col("u").cast("string").as("u"), col("p").cast("long").as("p"))
+      .groupBy("u")
+      .as[String, (String, java.lang.Long)](Encoders.STRING,
+        Encoders.tuple(Encoders.STRING, Encoders.LONG))
+      .mapGroups((u, rows) => (u, kept(u, rows.map(_._2).toArray, cap)))
+      .toDF("u", "sp")
+  }
 
-  /** Map-side pair enumeration within each user's (sorted) basket —
-    * array algebra, NOT a self-join: the only exchange left is the
-    * (p1,p2) count itself, the exact-CF lower bound.
+  /** One user's kept items, ascending (see [[baskets]]). */
+  private def kept(u: String, ps: Array[java.lang.Long],
+                   cap: Int): Array[Long] = {
+    val slots =
+      if (ps.length <= cap) ps
+      else {
+        val md = MessageDigest.getInstance("MD5")
+        ps.map(p => ((capKey(md, u, p), Option(p).map(_.longValue)), p))
+          .sortBy(_._1).take(cap).map(_._2)
+      }
+    val items = slots.filter(_ != null).map(_.longValue)
+    java.util.Arrays.sort(items)
+    items
+  }
+
+  /** The cap draw of (u, p): the first 15 hex digits of
+    * md5(concat_ws(':', 'cap', u, p)) read base 16 — Spark's
+    * `conv(substring(md5(..), 1, 15), 16, 10)`. `concat_ws` skips
+    * nulls, so a null u or p leaves its field (and its ':') out.
+    */
+  private[operators] def capKey(md: MessageDigest, u: String,
+                                p: java.lang.Long): Long = {
+    val sb = new java.lang.StringBuilder("cap")
+    if (u != null) sb.append(':').append(u)
+    if (p != null) sb.append(':').append(p.longValue)
+    val d = md.digest(sb.toString.getBytes(UTF_8))
+    var k = 0L
+    var i = 0
+    while (i < 7) {
+      k = (k << 8) | (d(i) & 0xffL)
+      i += 1
+    }
+    (k << 4) | ((d(7) & 0xff) >>> 4)
+  }
+
+  /** Pair co-counts (p1, p2, c) over the kernel's baskets: every
+    * pair p1 < p2 of a basket (positions i < j of its sorted items) is
+    * enumerated in compiled Scala — no lambda HOF, no self-join — and
+    * Spark's partial → exchange → final hash aggregate counts them: the
+    * (p1,p2) exchange is the exact-CF lower bound.
     *
     * (r15 optimization probe, kept as a finding: moving BOTH
     * aggregate passes above an explicit (p1,p2) repartition — the
@@ -105,16 +165,25 @@ object ItemItemCf {
     * map-side combine pass it removed. Reverted; the default
     * partial→exchange→final pipeline stays.)
     */
-  private def pairCounts(pos: DataFrame): DataFrame =
-    pos.groupBy("u").agg(sort_array(collect_list("p")).as("sp"))
-      .select(explode(expr(
-        """flatten(transform(sp, (a, i) ->
-          |  transform(slice(sp, i + 2, size(sp)), b ->
-          |    named_struct('p1', a, 'p2', b))))""".stripMargin))
-        .as("pr"))
-      .select(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
+  private def pairCounts(b: DataFrame): DataFrame = {
+    import b.sparkSession.implicits._
+    b.select("sp").as[Array[Long]]
+      .flatMap { sp =>
+        Iterator.range(0, sp.length).flatMap(i =>
+          Iterator.range(i + 1, sp.length).map(j => (sp(i), sp(j))))
+      }
+      .toDF("p1", "p2")
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("c"))
+  }
+
+  /** Per-item basket counts (p, n) from the same kept baskets. Its own
+    * small aggregate: sharing the pair aggregate would make both
+    * consumers re-run that aggregate's final pass over every pair.
+    */
+  private def norms(b: DataFrame): DataFrame =
+    b.select(explode(col("sp")).as("p")).groupBy("p")
+      .agg(count(lit(1)).as("n"))
 
   /** Cosine + symmetrize + top-k with the 6dp-then-tiebreak rank.
     *
@@ -131,7 +200,7 @@ object ItemItemCf {
     * materialization. Spark 4's partial WindowGroupLimit still bounds
     * the window input map-side, now over the exploded stream.
     */
-  private def rankTopK(sim: DataFrame, k: Int): DataFrame = {
+  private[operators] def rankTopK(sim: DataFrame, k: Int): DataFrame = {
     val both = sim.select(explode(array(
         struct(col("p1").as("a"), col("p2").as("b"),
           col("cosine").as("cosine")),
@@ -147,30 +216,32 @@ object ItemItemCf {
       .orderBy("part", "rank")
   }
 
-  private def cosineJoin(co: DataFrame, nu: DataFrame): DataFrame =
+  private[operators] def cosineJoin(co: DataFrame, nu: DataFrame): DataFrame =
     co.join(nu.select(col("p").as("p1"), col("n").as("n1")), "p1")
       .join(nu.select(col("p").as("p2"), col("n").as("n2")), "p2")
       .select(col("p1"), col("p2"),
         round(col("c") / sqrt(col("n1") * col("n2")), 6).as("cosine"))
 
   /** q199's arm: exact cosines over the full baskets. */
-  def exact(pos0: DataFrame, k: Int = 3): DataFrame =
-    exactOn(pos0.localCheckpoint(), k) // reused by co-count and norms
-
-  /** [[exact]] over an ALREADY-MATERIALIZED positives frame — the
-    * shared-scan path [[auto]] uses so the preflight and the routed
-    * arm evaluate the caller's (possibly join-heavy) input plan once,
-    * not once per action.
-    */
-  private def exactOn(pos: DataFrame, k: Int): DataFrame =
-    rankTopK(cosineJoin(pairCounts(pos),
-      pos.groupBy("p").agg(count(lit(1)).as("n"))), k)
+  def exact(pos: DataFrame, k: Int = 3): DataFrame =
+    cosineTopK(pos, Int.MaxValue, k)
 
   /** q211's arm: exact cosines over md5-capped baskets. */
-  def capped(pos: DataFrame, cap: Int = 8, k: Int = 3): DataFrame = {
-    val c = capBaskets(pos, cap).localCheckpoint()
-    rankTopK(cosineJoin(pairCounts(c),
-      c.groupBy("p").agg(count(lit(1)).as("n"))), k)
+  def capped(pos: DataFrame, cap: Int = 8, k: Int = 3): DataFrame =
+    cosineTopK(pos, cap, k)
+
+  /** [[exact]] and [[capped]]: the basket kernel feeds both the pair
+    * co-counts and the norms. Both read the one u-keyed exchange of
+    * `pos` (Spark reuses it), so the caller's plan runs once without a
+    * checkpoint. Items leave with the caller's type of p.
+    */
+  private def cosineTopK(pos: DataFrame, cap: Int, k: Int): DataFrame = {
+    val pt = pos.schema("p").dataType
+    val b = baskets(pos, cap)
+    val co = pairCounts(b).select(col("p1").cast(pt).as("p1"),
+      col("p2").cast(pt).as("p2"), col("c"))
+    val nu = norms(b).select(col("p").cast(pt).as("p"), col("n"))
+    rankTopK(cosineJoin(co, nu), k)
   }
 
   /** q227's arm: md5-capped baskets + DIMSUM-sampled pair emissions
@@ -182,7 +253,10 @@ object ItemItemCf {
   def cappedDimsum(pos: DataFrame, cap: Int = 8, gamma: Double = 8.0,
                    k: Int = 3): DataFrame = {
     val M = 1L << 20
-    val c = capBaskets(pos, cap).localCheckpoint()
+    val c = baskets(pos, cap)
+      .select(col("u"), explode(col("sp")).as("p"))
+      .select(col("u"), col("p").cast(pos.schema("p").dataType).as("p"))
+      .localCheckpoint()
     val nu = c.groupBy("p").agg(count(lit(1)).as("n"))
     val sampled = c.join(nu, "p")
       .groupBy("u")
@@ -230,12 +304,11 @@ object ItemItemCf {
     // so without this the caller's input plan (for q290 a join+distinct
     // over the fact tables) is evaluated twice — once for the decision
     // pass and again inside the routed arm (guide §1.2: don't compute
-    // things twice; the id-pair frame is exactly what exact() already
-    // checkpoints)
+    // things twice)
     val posM = pos.localCheckpoint()
     val pf = preflight(posM, cap, exactBudget, cappedBudget)
     val arm = pf.regime match {
-      case "exact" => exactOn(posM, k)
+      case "exact" => exact(posM, k)
       case "capped" => capped(posM, cap, k)
       case _ => cappedDimsum(posM, cap, gamma, k)
     }

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
+  JoinedRow, UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField,
+  StructType}
 
 import graft.functions.{GraftFunctions => G}
 import graft.functions.expressions.VectorImpl
@@ -452,6 +456,30 @@ object VectorOps {
     * cosine verify — exposed so BlockedPairsSpec can MEASURE the cell
     * pruning (candidate count ≪ n²/2 on clustered corpora) that the
     * public operator's output, being exact, cannot reveal.
+    *
+    * One executor pass assigns every vector to its cell and measures
+    * its angle; everything else the bound needs is bounded metadata on
+    * the driver:
+    *
+    *  1. the centroids, collected and sorted by cid (any cid values);
+    *  2. one `toRdd` pass over (extras, vec_id, v): [[nearest]] —
+    *     [[kmeansFit]]'s argmax, the largest unrounded cosine with ties
+    *     to the smaller cid, i.e. SQL's `max_by(struct(cid, uc),
+    *     struct(uc, -cid))` — and the angle acos(clamp(uc)) with
+    *     Spark's `least`/`greatest` NaN order, so clamp(NaN) = 1.0. A
+    *     null vector goes to the smallest cid with a null angle; it is
+    *     a candidate where its cell pairs admit one, and the verify
+    *     drops it. The extras ride along as `InternalRow` fields of
+    *     any type;
+    *  3. per-(extras, cell) radii — the max non-null angle — collected
+    *     from that pass (one job, P partials merged on the driver);
+    *  4. the admissible ORDERED cell pairs, a driver loop over the K²
+    *     centroid angles with the `θ_τ + eps + r_a + r_b` bound,
+    *     broadcast as a local relation.
+    *
+    * The candidate equi-join (keyed by extras + cell) stays SQL, so its
+    * null and floating-point key semantics are Spark's. `vec_id` must
+    * be a key of `e` and `cid` of `cents`.
     */
   private[graft] def blockedCosineCandidates(
       e: DataFrame, cents: DataFrame, tau: Double,
@@ -466,52 +494,118 @@ object VectorOps {
     // float/acos conditioning only (exactNnPerVector's rationale).
     val thetaTau = math.acos(math.max(-1.0, tau - 5e-7))
     val eps = 1e-6
+    val spark = e.sparkSession
+    val nx = extraBlockCols.size
+    // 1. centroids by cid: a cell is its index in this order, so the
+    //    index tie-break is the smaller-cid tie-break
+    val byCid = cents
+      .select(col("cid").cast("long"), col("cv").cast("array<double>"))
+      .collect().map { r =>
+        require(!r.isNullAt(0), "blockedCosineCandidates: null cid")
+        (r.getLong(0),
+          if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
+      }.sortBy(_._1)
+    require(byCid.map(_._1).distinct.length == byCid.length,
+      "blockedCosineCandidates: duplicate cid")
+    val cs: Array[Array[Double]] = byCid.map(_._2)
+    // 2. the assignment pass: (extras..., vec_id, v, vd, cell, ang).
+    //    The angle to the assigned centroid is UNROUNDED (the radius
+    //    input). ANY total assignment preserves completeness — the
+    //    bound only narrows which cell pairs get verified.
+    val in = e.select(extraBlockCols.map(col) ++ Seq(col("vec_id"), col("v"),
+      col("v").cast("array<double>").as("vd")): _*)
+    val xTypes = in.schema.fields.take(nx).map(_.dataType)
+    val assignedRows = in.queryExecution.toRdd.mapPartitions { it =>
+      val cvs: Array[ArrayData] = cs.map(c =>
+        if (c == null) null else UnsafeArrayData.fromPrimitiveArray(c))
+      val out = new GenericInternalRow(2)
+      val joined = new JoinedRow
+      if (cvs.isEmpty) Iterator.empty
+      else it.map { r =>
+        out.setInt(0, 0)
+        out.setNullAt(1)
+        if (!r.isNullAt(nx + 2)) {
+          val v = r.getArray(nx + 2)
+          val c = nearest(v, cvs)
+          out.setInt(0, c)
+          if (cvs(c) != null) out.setDouble(1, angle(v, cvs(c)))
+        }
+        joined(r, out): InternalRow
+      }
+    }
+    val assigned = GraftPlanBridge.ofInternalRows(spark, assignedRows,
+      StructType(in.schema.fields.toSeq ++ Seq(
+        StructField("cell", IntegerType, nullable = false),
+        StructField("ang", DoubleType))))
+    // 3. per-(extras, cell) radius: each partition's max angle per key,
+    //    merged on the driver. Extras key as unsafe bytes, with
+    //    top-level -0.0 and NaN normalized as Spark's join keys are.
+    val radii = assignedRows.mapPartitions { it =>
+      val key = UnsafeProjection.create(xTypes)
+      val xs = new GenericInternalRow(nx)
+      val m = scala.collection.mutable.HashMap.empty[(UnsafeRow, Int), Double]
+      it.foreach { r =>
+        if (!r.isNullAt(nx + 4)) {
+          for (i <- 0 until nx) xs.update(i, normalized(r.get(i, xTypes(i))))
+          val (k, a) = ((key(xs), r.getInt(nx + 3)), r.getDouble(nx + 4))
+          if (!m.get(k).exists(_ >= a)) m((k._1.copy(), k._2)) = a
+        }
+      }
+      m.iterator
+    }.collect().foldLeft(Map.empty[(UnsafeRow, Int), Double]) {
+      case (m, (k, a)) => if (m.get(k).exists(_ >= a)) m else m + (k -> a)
+    }
+    // 4. admissible ORDERED cell pairs per extras-group, kept iff the
+    //    triangle bound admits a qualifying pair; a null centroid has
+    //    no angle. Ordered pairs + the id_a < id_b filter below emit
+    //    each pair exactly once.
+    val cvs = cs.map(c =>
+      if (c == null) null else UnsafeArrayData.fromPrimitiveArray(c))
+    val cang = cvs.map(a => cvs.map(b =>
+      if (a == null || b == null) None else Some(angle(a, b))))
+    val admissibleRows: Seq[InternalRow] = (for {
+      (x, cells) <- radii.toSeq.groupBy(_._1._1).toSeq
+      ((_, ca), ra) <- cells
+      ((_, cb), rb) <- cells
+      ang <- cang(ca)(cb) if ang <= thetaTau + eps + ra + rb
+    } yield {
+      val row = new GenericInternalRow(nx + 2)
+      for (i <- 0 until nx) row.update(i, x.get(i, xTypes(i)))
+      row.setInt(nx, ca)
+      row.setInt(nx + 1, cb)
+      row: InternalRow
+    }).toSeq
+    val admissible = GraftPlanBridge.ofLocalRows(spark, admissibleRows,
+      StructType(in.schema.fields.take(nx).toSeq ++ Seq(
+        StructField("ca", IntegerType, nullable = false),
+        StructField("cb", IntegerType, nullable = false))))
+    // 5. candidates for admissible cell pairs only (the exact verify is
+    //    the caller's)
     val extras = extraBlockCols.map(col)
-    // 1. nearest-centroid assignment carrying the UNROUNDED angle to
-    //    the assigned centroid (the radius input; the argmax itself
-    //    tie-breaks like assignToCentroids, but ANY total assignment
-    //    preserves completeness — the bound only narrows which cell
-    //    pairs get verified)
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("uc", G.cosineSim(col("v"), col("cv")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cid"), col("uc")),
-          struct(col("uc"), -col("cid"))).as("b"),
-        first(col("v")).as("v") +: extraBlockCols.map(c =>
-          first(col(c)).as(c)): _*)
-      .select(col("vec_id") +: col("v") +: extras :+
-        col("b.cid").as("cluster") :+
-        acos(clamp(col("b.uc"))).as("ang"): _*)
-    // 2. per-(extras, cell) angular radius — bounded metadata
-    val radii = assigned.groupBy(extras :+ col("cluster"): _*)
-      .agg(max("ang").as("r"))
-    // 3. admissible ORDERED cell pairs per extras-group: K² centroid
-    //    angles (broadcast-sized) joined to both radii, kept iff the
-    //    triangle bound admits a qualifying pair. Ordered pairs +
-    //    the id_a < id_b filter below emit each pair exactly once.
-    val cang = cents.select(col("cid").as("ca"), col("cv").as("cva"))
-      .crossJoin(cents.select(col("cid").as("cb"), col("cv").as("cvb")))
-      .select(col("ca"), col("cb"),
-        acos(clamp(G.cosineSim(col("cva"), col("cvb")))).as("cang"))
-    val ra = radii.select(extras :+ col("cluster").as("ca") :+
-      col("r").as("ra"): _*)
-    val rb = radii.select(extras :+ col("cluster").as("cb") :+
-      col("r").as("rb"): _*)
-    val admissible =
-      (if (extraBlockCols.isEmpty) ra.crossJoin(rb)
-       else ra.join(rb, extraBlockCols))
-        .join(cang, Seq("ca", "cb"))
-        .filter(col("cang") <=
-          lit(thetaTau + eps) + col("ra") + col("rb"))
-        .select(extras :+ col("ca") :+ col("cb"): _*)
-    // 4. candidates for admissible cell pairs only, exact verify
-    val aSide = assigned.select(extras :+ col("cluster").as("ca") :+
+    val aSide = assigned.select(extras :+ col("cell").as("ca") :+
       col("vec_id").as("id_a") :+ col("v").as("va"): _*)
-    val bSide = assigned.select(extras :+ col("cluster").as("cb") :+
+    val bSide = assigned.select(extras :+ col("cell").as("cb") :+
       col("vec_id").as("id_b") :+ col("v").as("vb"): _*)
     aSide.join(broadcast(admissible), extraBlockCols :+ "ca")
       .join(bSide, extraBlockCols :+ "cb")
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), col("va"), col("vb"))
+  }
+
+  /** A top-level key value with -0.0 as 0.0 and one NaN, as Spark
+    * normalizes floating-point join and grouping keys.
+    */
+  private def normalized(x: Any): Any = x match {
+    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case other => other
+  }
+
+  /** acos(clamp(cosine)) with Spark's `least(1, greatest(-1, c))` NaN
+    * order: NaN is the largest double, so clamp(NaN) = 1.0.
+    */
+  private def angle(a: ArrayData, b: ArrayData): Double = {
+    val uc = VectorImpl.cosine(a, b)
+    math.acos(if (uc.isNaN) 1.0 else math.min(1.0, math.max(-1.0, uc)))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, StructType,
-  TimestampNTZType, TimestampType}
+  StructField, TimestampNTZType, TimestampType}
 
 /** Partition-level copy-on-write table — the 100 TB layout promised by
   * [[CowTable]]'s scaladoc, implemented. A version is a MANIFEST
@@ -1446,19 +1446,72 @@ class PartitionedCowTable(val root: String, val partCol: String,
   /** Anti-delete: only partitions containing matching rows are
     * rewritten; a partition deleted empty leaves the manifest; legacy
     * dirs with matching rows migrate to the current spec.
+    *
+    * A predicate over the spec column alone (see [[wholePartitionHits]])
+    * is a metadata-only retire: every row of a matching partition
+    * matches, so the commit drops those entries — no Spark job, no row
+    * staged, one new version, the same abort on a concurrent commit.
     */
   override def deleteWhere(pred: Column): Unit = {
     val base = requireVersion
     val bm = manifestAt(base)
     val spec = bm.spec
-    val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
-    val touched =
-      touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
-    if (touched.nonEmpty) staging { stage =>
-      stageRows(readSpec(base, touched).unionByName(migRows).filter(!pred),
-        spec, stage)
-      commit(Some(base), stage, touched,
-        bm.entries.filterNot(mig.contains))
+    wholePartitionHits(base, pred) match {
+      case Some(hit) =>
+        if (hit.nonEmpty) {
+          commitSeam()
+          publish(base + 1,
+            bm.copy(entries = bm.entries.filterNot(e => hit(e.value))))
+        }
+      case None =>
+        val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
+        val touched =
+          touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
+        if (touched.nonEmpty) staging { stage =>
+          stageRows(readSpec(base, touched).unionByName(migRows).filter(!pred),
+            spec, stage)
+          commit(Some(base), stage, touched,
+            bm.entries.filterNot(mig.contains))
+        }
+    }
+  }
+
+  /** The current-spec partition values whose partitions `pred` matches
+    * WHOLE, decided from the manifest alone: `pred` must be a
+    * deterministic, subquery-free predicate over the spec column only,
+    * the spec type's string form must round-trip exactly (string,
+    * date, integral — a dir's rows all hold the value its name
+    * carries), and the base must have no legacy-spec dir and no
+    * deletion vector. The predicate runs over a local relation of the
+    * manifest's values, which Spark folds without a job. None when
+    * any condition fails: the caller takes the row path.
+    */
+  private def wholePartitionHits(v: Int, pred: Column)
+      : Option[Set[String]] = {
+    val m = manifestAt(v)
+    val specType = m.schema(m.spec).dataType
+    val exact = specType match {
+      case StringType | DateType | ByteType | ShortType | IntegerType |
+           LongType => true
+      case _ => false
+    }
+    def onSpecOnly = scala.util.Try {
+      val cond = emptyLike(v).filter(pred).queryExecution.analyzed
+        .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]
+        .condition
+      cond.deterministic &&
+        cond.references.map(_.name).toSet == Set(m.spec) &&
+        !org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+          .hasSubquery(cond)
+    }.getOrElse(false)
+    if (!exact || m.entries.exists(_.pcol != m.spec) ||
+        m.dirs.values.exists(_.dvs.nonEmpty) || !onSpecOnly) None
+    else {
+      val values = m.entries.map(_.value)
+      Some(spark.createDataFrame(values.map(Row(_)).asJava,
+          StructType(Seq(StructField("__v", StringType))))
+        .select(col("__v"), col("__v").cast(specType).as(m.spec))
+        .filter(pred).select("__v").as(Encoders.STRING).collect().toSet)
     }
   }
 

@@ -257,4 +257,115 @@ class BlockedPairsSpec extends SparkSpec {
     assert(jobs === 3)
     assert(cents.count() === 8)
   }
+
+  // ---- blockedCosineCandidates: one assignment pass ----
+
+  /** The SQL candidate stage the assignment pass replaced — broadcast
+    * crossJoin + `max_by` assignment, radii and K² centroid angles as
+    * joins — kept as the reference its candidates must equal.
+    */
+  private def sqlCandidates(e: DataFrame, cents: DataFrame, tau: Double,
+                            extraBlockCols: Seq[String]): DataFrame = {
+    def clamp(c: org.apache.spark.sql.Column) =
+      least(lit(1.0), greatest(lit(-1.0), c))
+    val thetaTau = math.acos(math.max(-1.0, tau - 5e-7))
+    val eps = 1e-6
+    val extras = extraBlockCols.map(col)
+    val assigned = e.crossJoin(broadcast(cents))
+      .withColumn("uc", G.cosineSim(col("v"), col("cv")))
+      .groupBy(col("vec_id"))
+      .agg(max_by(struct(col("cid"), col("uc")),
+          struct(col("uc"), -col("cid"))).as("b"),
+        first(col("v")).as("v") +: extraBlockCols.map(c =>
+          first(col(c)).as(c)): _*)
+      .select(col("vec_id") +: col("v") +: extras :+
+        col("b.cid").as("cluster") :+
+        acos(clamp(col("b.uc"))).as("ang"): _*)
+    val radii = assigned.groupBy(extras :+ col("cluster"): _*)
+      .agg(max("ang").as("r"))
+    val cang = cents.select(col("cid").as("ca"), col("cv").as("cva"))
+      .crossJoin(cents.select(col("cid").as("cb"), col("cv").as("cvb")))
+      .select(col("ca"), col("cb"),
+        acos(clamp(G.cosineSim(col("cva"), col("cvb")))).as("cang"))
+    val ra = radii.select(extras :+ col("cluster").as("ca") :+
+      col("r").as("ra"): _*)
+    val rb = radii.select(extras :+ col("cluster").as("cb") :+
+      col("r").as("rb"): _*)
+    val admissible =
+      (if (extraBlockCols.isEmpty) ra.crossJoin(rb)
+       else ra.join(rb, extraBlockCols))
+        .join(cang, Seq("ca", "cb"))
+        .filter(col("cang") <=
+          lit(thetaTau + eps) + col("ra") + col("rb"))
+        .select(extras :+ col("ca") :+ col("cb"): _*)
+    val aSide = assigned.select(extras :+ col("cluster").as("ca") :+
+      col("vec_id").as("id_a") :+ col("v").as("va"): _*)
+    val bSide = assigned.select(extras :+ col("cluster").as("cb") :+
+      col("vec_id").as("id_b") :+ col("v").as("vb"): _*)
+    aSide.join(broadcast(admissible), extraBlockCols :+ "ca")
+      .join(bSide, extraBlockCols :+ "cb")
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), col("va"), col("vb"))
+  }
+
+  private def idPairs(df: DataFrame): Seq[(Long, Long)] =
+    df.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .as[(Long, Long)].collect().toSeq.sorted
+
+  private def assertSameCandidates(e: DataFrame, cents: DataFrame,
+                                   tau: Double, extras: Seq[String]): Long = {
+    val got = idPairs(V.blockedCosineCandidates(e, cents, tau, extras))
+    assert(got === idPairs(sqlCandidates(e, cents, tau, extras)),
+      s"extras $extras, tau $tau")
+    got.size.toLong
+  }
+
+  test("candidates == the SQL candidate stage on the flat corpus: an " +
+    "int extra, an int + string extra, no extras") {
+    val e = emb("/root/testdata/sf0.001")
+      .withColumn("grp", (col("vec_id") % 3).cast("string"))
+    val cents = V.kmeansFit(e, k = 8, iters = 2)
+    for (extras <- Seq(Seq("label"), Seq("label", "grp"), Seq("grp"), Nil);
+         tau <- Seq(0.35, 0.6))
+      assertSameCandidates(e, cents, tau, extras)
+  }
+
+  test("candidates == the SQL candidate stage on the pruning corpus, " +
+    "with cids that are not 0..k-1, a null, a zero and a NaN vector") {
+    val base = clustered()
+    // a second dedup domain "y" holding the odd vectors: a zero vector
+    // ties every centroid at cosine 0 (smallest cid wins), a NaN
+    // element makes every cosine NaN, a null vector has none
+    val odd = Seq((1000L, "y", null: Seq[Double]),
+      (1001L, "y", Seq(0.0, 0.0, 0.0, 0.0)),
+      (1002L, "y", Seq(Double.NaN, 1.0, 0.0, 0.0)),
+      (1003L, "y", Seq(1.0, 0.02, 0.0, 0.1)),
+      (1004L, "y", Seq(0.0, 0.03, 1.0, 0.1)),
+      (1005L, "y", Seq(0.01, 1.0, 0.0, -0.1))).toDF("vec_id", "label", "v")
+    val e = base.union(odd)
+    val fitted = V.kmeansFit(base, k = 6, iters = 3)
+    // reversed, sparse cids: the smaller cid is the later-fitted centroid
+    val cents = fitted.select((lit(100) - col("cid") * 7).as("cid"), col("cv"))
+    for (tau <- Seq(0.9, 0.99)) {
+      val n = assertSameCandidates(e, cents, tau, Seq("label"))
+      assert(n < 126L * 125L / 2 / 2, s"pruning lost: $n candidates")
+      assertSameCandidates(e, cents, tau, Nil)
+    }
+    // the null vector is assigned but never paired
+    val pairs = V.blockedCosinePairs(e, cents, 0.9, Seq("label"))
+      .as[(Long, Long)].collect()
+    assert(!pairs.exists { case (a, b) => a == 1000L || b == 1000L })
+  }
+
+  test("q59's pair stage (assignment, radii, candidates, verify) runs " +
+    "7 Spark jobs at sf0.001: the radii collect and the candidate join's " +
+    "stages") {
+    val e = emb("/root/testdata/sf0.001")
+    val cents = V.kmeansFit(e, k = 8, iters = 2)
+    val (n, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      V.blockedCosinePairs(e, cents, 0.35, Seq("label")).count()
+    }
+    assert(n > 0)
+    assert(jobs === 7)
+  }
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 
 /** Pins the CF auto regime switch (r12 verdict item 2): the
   * pre-flight's measured numbers, the budget routing across all
@@ -82,5 +84,113 @@ class ItemItemCfSpec extends SparkSpec {
     val pf = ItemItemCf.preflight(pos, cap = 8, 1L, Long.MaxValue)
     assert(pf.regime === "capped")
     assert(pf.pairRowsCapped <= 30L * (8 * 7 / 2))
+  }
+
+  // ---- the basket kernel against the SQL forms it replaced ----
+
+  /** The md5 cap as the window it used to be — the q211 contract. */
+  private def sqlCapBaskets(pos: DataFrame, cap: Int): DataFrame =
+    pos.withColumn("rk", row_number().over(
+        Window.partitionBy("u").orderBy(
+          conv(substring(md5(concat_ws(":", lit("cap"), col("u"),
+            col("p"))), 1, 15), 16, 10).cast("long"), col("p"))))
+      .filter(col("rk") <= cap).select("u", "p")
+
+  /** Pair co-counts as the basket-array lambda explode. */
+  private def sqlPairCounts(pos: DataFrame): DataFrame =
+    pos.groupBy("u").agg(sort_array(collect_list("p")).as("sp"))
+      .select(explode(expr(
+        """flatten(transform(sp, (a, i) ->
+          |  transform(slice(sp, i + 2, size(sp)), b ->
+          |    named_struct('p1', a, 'p2', b))))""".stripMargin))
+        .as("pr"))
+      .select(col("pr.p1").as("p1"), col("pr.p2").as("p2"))
+      .groupBy("p1", "p2")
+      .agg(count(lit(1)).as("c"))
+
+  private def sqlCosineTopK(c: DataFrame, k: Int = 3): DataFrame =
+    ItemItemCf.rankTopK(ItemItemCf.cosineJoin(sqlPairCounts(c),
+      c.groupBy("p").agg(count(lit(1)).as("n"))), k)
+
+  /** The capped∘DIMSUM arm over the SQL cap. */
+  private def sqlCappedDimsum(pos: DataFrame, cap: Int = 8,
+                              gamma: Double = 8.0, k: Int = 3): DataFrame = {
+    val M = 1L << 20
+    val c = sqlCapBaskets(pos, cap)
+    val nu = c.groupBy("p").agg(count(lit(1)).as("n"))
+    val sampled = c.join(nu, "p")
+      .groupBy("u")
+      .agg(sort_array(collect_list(struct(col("p"), col("n")))).as("sp"))
+      .select(col("u"), explode(expr(
+        """flatten(transform(sp, (a, i) ->
+          |  transform(slice(sp, i + 2, size(sp)), b ->
+          |    named_struct('p1', a.p, 'n1', a.n,
+          |                 'p2', b.p, 'n2', b.n))))""".stripMargin))
+        .as("pr"))
+      .select(col("u"), col("pr.p1").as("p1"), col("pr.n1").as("n1"),
+        col("pr.p2").as("p2"), col("pr.n2").as("n2"))
+      .withColumn("pq", round(least(lit(1.0),
+        lit(gamma) / sqrt(col("n1") * col("n2"))) * M).cast("long"))
+      .filter(col("pq") >= M ||
+        conv(substring(md5(concat_ws(":", lit("ds"), col("u"),
+          col("p1"), col("p2"))), 1, 10), 16, 10).cast("long") <
+          col("pq") * M)
+    ItemItemCf.rankTopK(sampled.groupBy("p1", "p2", "n1", "n2", "pq")
+      .agg(count(lit(1)).as("c"))
+      .select(col("p1"), col("p2"),
+        round(col("c") * M.toDouble / col("pq") /
+          sqrt(col("n1") * col("n2")), 6).as("cosine")), k)
+  }
+
+  // the whale fixture plus two users with a null item: user 31's
+  // basket fits the cap, user 32's (10 items + null) does not, so its
+  // null competes for a cap slot under md5("cap:32")
+  private lazy val posNull: DataFrame = pos.union(
+    (Seq((31L, Some(5L)), (31L, Some(6L)), (31L, None)) ++
+      (1 to 10).map(p => (32L, Some(p * 3L))) :+ ((32L, None: Option[Long])))
+      .toDF("u", "p"))
+
+  test("basket kernel: capped == the md5-window cap + lambda-explode " +
+    "pairs, with and without null items, at several caps") {
+    for (fx <- Seq(pos, posNull); cap <- Seq(1, 3, 8, 50)) {
+      val got = rows(ItemItemCf.capped(fx, cap = cap))
+      assert(got === rows(sqlCosineTopK(sqlCapBaskets(fx, cap))), s"cap $cap")
+      assert(got.nonEmpty || cap == 1)
+    }
+  }
+
+  test("basket kernel: exact == the lambda-explode pairs over full baskets") {
+    for (fx <- Seq(pos, posNull))
+      assert(rows(ItemItemCf.exact(fx)) === rows(sqlCosineTopK(fx)))
+  }
+
+  test("basket kernel: capped∘DIMSUM takes its capped rows from the " +
+    "kernel and equals the SQL-capped arm") {
+    for (fx <- Seq(pos, posNull); cap <- Seq(3, 8))
+      assert(rows(ItemItemCf.cappedDimsum(fx, cap = cap)) ===
+        rows(sqlCappedDimsum(fx, cap = cap)), s"cap $cap")
+  }
+
+  test("basket kernel: the cap key is Spark's conv(substring(md5), 16, 10)") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val want = Seq[(String, java.lang.Long)](("7", 12L), ("7", null),
+      (null, 12L), (null, null), ("123456789012", -4L))
+      .toDF("u", "p")
+      .select(conv(substring(md5(concat_ws(":", lit("cap"), col("u"),
+        col("p"))), 1, 15), 16, 10).cast("long"))
+      .as[Long].collect().toSeq
+    val got = Seq[(String, java.lang.Long)](("7", 12L), ("7", null),
+      (null, 12L), (null, null), ("123456789012", -4L))
+      .map { case (u, p) => ItemItemCf.capKey(md, u, p) }
+    assert(got === want)
+  }
+
+  test("q211 (capped CF) runs 11 Spark jobs at sf0.001, build and count") {
+    val (n, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      SparkEntry.queries("q211_item_item_cf_capped")(spark,
+        "/root/testdata/sf0.001").count()
+    }
+    assert(n > 0)
+    assert(jobs === 11)
   }
 }

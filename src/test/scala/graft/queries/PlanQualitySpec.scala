@@ -907,14 +907,16 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  // q199/q211: pair generation is basket-array algebra after ONE
-  // u-keyed aggregate — a Generate over collect_list output, never a
-  // pos⋈pos self-join (the form that shuffled the full pair stream
-  // twice). The only joins in the plan are the norm lookups.
+  // q199/q211: pair generation is the basket kernel after ONE u-keyed
+  // grouping — a MapGroups whose baskets a compiled pass pairs up, no
+  // lambda HOF, never a pos⋈pos self-join (the form that shuffled the
+  // full pair stream twice). The only joins in the plan are the norm
+  // lookups.
   test("q199 CF: pairs from basket arrays, no self-join on u") {
     for (qn <- Seq("q199_item_item_cf", "q211_item_item_cf_capped")) {
       val p = plan(qn)
-      assert(p.contains("Generate"), qn + "\n" + p)
+      assert(p.contains("MapGroups"), qn + "\n" + p)
+      assert(!p.contains("lambdafunction"), qn + "\n" + p)
       assert(!p.contains("CartesianProduct"), qn + "\n" + p)
       // no join keyed by the customer column: the u-shuffle feeds an
       // aggregate, not a join

@@ -519,7 +519,9 @@ class PartitionedCowTableSpec extends SparkSpec {
     val app = count(t.append(add))
     val ups = count(t.upsert(up, Seq("pid")))
     val ow = count(t.overwrite(all))
-    val del = count(t.deleteWhere($"month" === "2020-04"))
+    // pid in the predicate keeps the delete on the row path; a
+    // spec-column-only predicate is a metadata-only retire (0 jobs)
+    val del = count(t.deleteWhere($"month" === "2020-04" && $"pid" === 3L))
     // append: stage the delta, carry 2020-05's rows; upsert: stage,
     // then carry 2020-03's other rows anti-joined on the staged keys
     // (broadcast + write); overwrite: the one stage write; delete: the
@@ -1603,6 +1605,100 @@ class PartitionedCowTableSpec extends SparkSpec {
     assert(next.get("defaults").get("state").get("since").asInt() ===
       Int.MaxValue)
     assert(t2.read().count() === 5)
+  }
+
+  // ---- metadata-only retire ----
+
+  private def jobs(f: => Unit): Int =
+    org.apache.spark.JobCount(spark.sparkContext)(f)._2
+
+  private def contents(t: PartitionedCowTable): Seq[String] =
+    t.read().collect().map(_.toString).toSeq.sorted
+
+  test("deleteWhere over the spec column alone retires whole partitions " +
+    "from the manifest: 0 jobs, one version, the row path's content") {
+    implicit val s = spark
+    def dateTable() = {
+      val t = PartitionedCowTable(
+        Files.createTempDirectory("pcow_retire").toString + "/t", "day")
+      t.overwrite(Seq(
+        (1L, java.sql.Date.valueOf("2020-03-01"), "a"),
+        (2L, java.sql.Date.valueOf("2020-03-01"), "b"),
+        (3L, java.sql.Date.valueOf("2020-03-02"), "c"),
+        (4L, java.sql.Date.valueOf("2020-03-03"), "d")).toDF("pid", "day", "v"))
+      t
+    }
+    def intTable() = {
+      val t = PartitionedCowTable(
+        Files.createTempDirectory("pcow_retire").toString + "/t", "bucket")
+      t.overwrite(Seq((1L, 7, "a"), (2L, 7, "b"), (3L, 8, "c"), (4L, 9, "d"))
+        .toDF("pid", "bucket", "v"))
+      t
+    }
+    val cases = Seq[(() => PartitionedCowTable, org.apache.spark.sql.Column,
+        org.apache.spark.sql.Column)](
+      (() => mk(), $"month" === "2020-04", $"pid" === 3L),
+      (() => mk(), $"month" >= "2020-04", $"pid" >= 3L),
+      (() => dateTable(), $"day" === java.sql.Date.valueOf("2020-03-01"),
+        $"pid" <= 2L),
+      (() => dateTable(), $"day".isin(java.sql.Date.valueOf("2020-03-02"),
+        java.sql.Date.valueOf("2020-03-03")), $"pid" >= 3L),
+      (() => intTable(), $"bucket" < 9, $"pid" <= 3L))
+    for ((mkT, onSpec, sameRows) <- cases) {
+      val (meta, rows) = (mkT(), mkT())
+      val v0 = meta.version
+      assert(jobs(meta.deleteWhere(onSpec)) === 0, onSpec.toString)
+      assert(meta.version === v0 + 1)
+      // the row path, on a predicate naming a non-spec column that
+      // selects the same rows
+      assert(jobs(rows.deleteWhere(sameRows)) > 0)
+      assert(contents(meta) === contents(rows), onSpec.toString)
+      assert(meta.manifest.keySet === rows.manifest.keySet)
+      // the retired partitions stay readable at their old version
+      assert(meta.readVersion(v0).count() === 4L)
+    }
+    // a predicate matching no partition commits nothing
+    val t = mk()
+    assert(jobs(t.deleteWhere($"month" === "1999-01")) === 0)
+    assert(t.version === 0)
+  }
+
+  test("metadata-only retire aborts on a concurrent commit like the row " +
+    "path does") {
+    implicit val s = spark
+    for (pred <- Seq($"month" === "2020-04", $"month" === "2020-04" &&
+        $"pid" === 3L)) {
+      val t = mk()
+      val t2 = PartitionedCowTable(t.root, "month")
+      t.commitSeam = () => {
+        t.commitSeam = () => ()
+        t2.append(Seq((9L, "2020-06", "z", false))
+          .toDF("pid", "month", "v", "flag"))
+      }
+      intercept[java.util.ConcurrentModificationException] {
+        t.deleteWhere(pred)
+      }
+      // the winner's version stands, the loser's delete is not in it
+      assert(t.version === 1)
+      assert(t.read().count() === 5L)
+    }
+  }
+
+  test("deleteWhere keeps the row path where the manifest cannot decide: " +
+    "a timestamp spec, a non-spec column, a legacy dir") {
+    implicit val s = spark
+    val ts = PartitionedCowTable(
+      Files.createTempDirectory("pcow_ts").toString + "/t", "at")
+    val at = java.sql.Timestamp.valueOf("2020-03-01 10:00:00")
+    ts.overwrite(Seq((1L, at, "a"),
+      (2L, java.sql.Timestamp.valueOf("2020-03-02 10:00:00"), "b"))
+      .toDF("pid", "at", "v"))
+    assert(jobs(ts.deleteWhere($"at" === at)) === 2)
+    assert(ts.read().select("pid").as[Long].collect().toSeq === Seq(2L))
+    val t = mk()
+    t.evolvePartitioning("flag")
+    assert(jobs(t.deleteWhere($"flag" === false)) > 0)
+    assert(t.read().count() === 0L)
   }
 }
 

@@ -13,6 +13,13 @@ Prints three sections for `src/main/scala`:
 - duplicated windows: per file, how many windows of 8 consecutive code
   lines (stripped, blank and comment-only lines skipped) occur more
   than once anywhere in the tree;
+- engine / contract split: the same three counts for the code inside
+  the query files' `val oracleSql: Map[String, String] = Map(` blocks
+  (the DuckDB oracle SQL, a frozen contract) and for everything else
+  (the engine). A block runs from its header to the `)` that closes
+  `Map(`, found by paren matching with comments and string literals
+  masked; a duplicated window belongs to the part holding its first
+  line;
 - knobs: every setting a user can change without editing code — the
   environment variables read through `sys.env` / `System.getenv`, and
   the `spark.graft.*` conf keys — with the places that read them.
@@ -31,6 +38,8 @@ ENV_RE = re.compile(
     r'(?:sys\.env\.(?:get|getOrElse|contains)\(\s*|sys\.env\(\s*|'
     r'System\.getenv\(\s*)"([^"]+)"')
 CONF_RE = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
+ORACLE_RE = re.compile(
+    r'val\s+oracleSql\s*:\s*Map\[\s*String\s*,\s*String\s*\]\s*=\s*Map\(')
 
 
 def sources(root):
@@ -73,9 +82,66 @@ def code_lines(text):
     return out
 
 
+def masked(text):
+    """`text` with comments and string/char literal contents replaced by
+    spaces (newlines kept, so offsets and line numbers still match)."""
+    out, i, n = list(text), 0, len(text)
+
+    def blank(a, b):
+        for k in range(a, b):
+            if out[k] != "\n":
+                out[k] = " "
+    while i < n:
+        if text.startswith("//", i):
+            end = text.find("\n", i)
+            end = n if end < 0 else end
+            blank(i, end)
+            i = end
+        elif text.startswith("/*", i):
+            end = text.find("*/", i + 2)
+            end = n if end < 0 else end + 2
+            blank(i, end)
+            i = end
+        elif text.startswith('"""', i):
+            end = text.find('"""', i + 3)
+            end = n if end < 0 else end + 3
+            while end < n and text[end] == '"':
+                end += 1
+            blank(i + 1, end - 1)
+            i = end
+        elif text[i] == '"':
+            end = i + 1
+            while end < n and text[end] not in '"\n':
+                end += 2 if text[end] == "\\" else 1
+            blank(i + 1, end)
+            i = end + 1
+        elif re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4]):
+            end = text.index("'", i + 2) + 1
+            blank(i + 1, end - 1)
+            i = end
+        else:
+            i += 1
+    return "".join(out)
+
+
+def oracle_lines(text):
+    """Line numbers inside the file's `oracleSql` Map( ... ) blocks."""
+    m_text, lines = masked(text), set()
+    for m in ORACLE_RE.finditer(m_text):
+        depth, i = 1, m.end()
+        while i < len(m_text) and depth:
+            depth += {"(": 1, ")": -1}.get(m_text[i], 0)
+            i += 1
+        first = m_text.count("\n", 0, m.start()) + 1
+        last = m_text.count("\n", 0, i - 1) + 1
+        lines.update(range(first, last + 1))
+    return lines
+
+
 def stats(root):
     files = sources(root)
     lines, code_n, windows = {}, {}, {}
+    contract_lines, contract_code, first_in = {}, {}, {}
     knobs = collections.defaultdict(list)
     where = collections.defaultdict(list)
     for f in files:
@@ -83,11 +149,16 @@ def stats(root):
         with open(f, encoding="utf-8", errors="replace") as fh:
             text = fh.read()
         lines[rel] = text.count("\n") + (0 if text.endswith("\n") else 1)
+        oracle = oracle_lines(text)
+        contract_lines[rel] = len(oracle)
         code = code_lines(text)
-        kept = [c.strip() for _, c in code if c.strip()]
+        kept = [(n, c.strip()) for n, c in code if c.strip()]
         code_n[rel] = len(kept)
-        windows[rel] = [tuple(kept[i:i + WINDOW])
+        contract_code[rel] = sum(1 for n, _ in kept if n in oracle)
+        windows[rel] = [tuple(c for _, c in kept[i:i + WINDOW])
                         for i in range(len(kept) - WINDOW + 1)]
+        first_in[rel] = [kept[i][0] in oracle
+                         for i in range(len(kept) - WINDOW + 1)]
         for w in windows[rel]:
             where[w].append(rel)
         for n, c in code:
@@ -95,8 +166,22 @@ def stats(root):
                 knobs[("env", m.group(1))].append(f"{rel}:{n}")
             for m in CONF_RE.finditer(c):
                 knobs[("conf", m.group(1))].append(f"{rel}:{n}")
-    dup = {rel: sum(1 for w in ws if len(where[w]) > 1)
-           for rel, ws in windows.items()}
+    dup, dup_contract = {}, {}
+    for rel, ws in windows.items():
+        hits = [len(where[w]) > 1 for w in ws]
+        dup[rel] = sum(hits)
+        dup_contract[rel] = sum(h and c for h, c in zip(hits, first_in[rel]))
+
+    def part(contract):
+        pick = (lambda a, c: c) if contract else (lambda a, c: a - c)
+        return {
+            "lines_total": sum(pick(lines[r], contract_lines[r])
+                               for r in lines),
+            "code_total": sum(pick(code_n[r], contract_code[r])
+                              for r in lines),
+            "dup_windows_total": sum(pick(dup[r], dup_contract[r])
+                                     for r in lines),
+        }
     return {
         "lines": lines,
         "lines_total": sum(lines.values()),
@@ -105,6 +190,10 @@ def stats(root):
         "files": len(lines),
         "dup_windows": {k: v for k, v in dup.items() if v},
         "dup_windows_total": sum(dup.values()),
+        "contract": {k: (contract_lines[k], contract_code[k], dup_contract[k])
+                     for k in lines if contract_lines[k]},
+        "engine_totals": part(False),
+        "contract_totals": part(True),
         "knobs": {f"{kind} {name}": sorted(set(at))
                   for (kind, name), at in sorted(knobs.items())},
     }
@@ -128,6 +217,14 @@ def main():
     for rel, n in sorted(s["dup_windows"].items(), key=lambda x: -x[1]):
         print(f"  {n:6d}  {rel}")
     print(f"  {s['dup_windows_total']:6d}  total")
+    print("== engine / contract (oracleSql blocks): lines, code lines, "
+          "duplicated windows")
+    for rel, (ln, cn, dn) in sorted(s["contract"].items()):
+        print(f"  {ln:6d} {cn:6d} {dn:6d}  {rel} (contract)")
+    for name in ("engine", "contract"):
+        t = s[f"{name}_totals"]
+        print(f"  {t['lines_total']:6d} {t['code_total']:6d} "
+              f"{t['dup_windows_total']:6d}  {name} total")
     print("== knobs")
     for k, at in s["knobs"].items():
         print(f"  {k}  {', '.join(at)}")
