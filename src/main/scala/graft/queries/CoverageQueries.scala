@@ -4098,13 +4098,13 @@ object CoverageQueries {
         .orderBy("event_type", "p")
     },
 
-    // ZONE-MAP pruning end-to-end (PartitionedCowTable.statsColumns +
-    // readWhereStats) — the per-dir min/max stats path both pruning
-    // scaladocs deferred as "the production refinement", now real: a
-    // month-partitioned orders table records each dir's [min, max]
+    // ZONE-MAP pruning end-to-end (PartitionedCowTable.statsColumns):
+    // a month-partitioned orders table records each dir's [min, max]
     // datekey at commit (one footer-sized aggregate per commit), and
-    // a date-range query on the NON-partition datekey column opens
-    // only the intersecting dirs. The gate pins both the ANSWER
+    // a plain range filter on the NON-partition datekey column opens
+    // only the intersecting dirs — the table's GraftFileIndex prunes
+    // them at plan time, and autoPruneLedger reads what the forced
+    // aggregate's scan listed. The gate pins both the ANSWER
     // (identical to the full-scan filter by construction — pruning is
     // advisory, the predicate still applies) and the I/O LEDGER
     // (dirs_total vs dirs_kept, the number a 100 TB scan cares
@@ -4124,11 +4124,12 @@ object CoverageQueries {
         s"$root/t", "month", s, statsColumns = Seq("dk"))
       tbl.overwrite(o)
       val (lo, hi) = (19960101L, 19960315L)
-      val (total, kept) = tbl.pruneLedger("dk", lo, hi)
-      tbl.readWhereStats("dk", lo, hi)
-        .filter(col("dk").between(lo, hi))
+      val agg = tbl.read().filter(col("dk").between(lo, hi))
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("dk").as("min_dk"), max("dk").as("max_dk"))
+      val row = agg.collect()
+      val (total, kept) = tbl.autoPruneLedger
+      s.createDataFrame(java.util.Arrays.asList(row: _*), agg.schema)
         .withColumn("dirs_total", lit(total.toLong))
         .withColumn("dirs_kept", lit(kept.toLong))
     },
@@ -4412,7 +4413,7 @@ object CoverageQueries {
     },
 
     // PLAN-AUTOMATIC pruning (GraftFileIndex): a plain
-    // `read().filter(...)` — no bespoke readWhere/readWhereStats —
+    // `read().filter(...)` — no bespoke read call —
     // prunes directories through the manifest, because the table's
     // scan is a FileIndex that evaluates Spark's own pushed-down data
     // filters against each dir's partition value and zone-map

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * their dirs, so the diff IS the change list):
   *  1. read only CHANGED base partitions (pruned read) and
   *     re-aggregate them;
-  *  2. reconcile the summary declaratively with `mergeSync`: source =
-  *     summary's untouched rows + the fresh aggregate, so summary
-  *     partitions rewrite only where a value changed, in ONE commit
+  *  2. reconcile the summary's touched partitions declaratively with
+  *     `mergeSyncInPartitions`: source = the fresh aggregate, the new
+  *     content of exactly those partitions, so summary partitions
+  *     rewrite only where a value changed, in ONE commit
   *     (inserts for new base partitions, updates for re-aggregated
   *     ones, deletes for base partitions that vanished or emptied —
   *     a DV-emptied partition yields no aggregate row and falls out
@@ -82,22 +83,15 @@ class IncrementalRollup(val base: PartitionedCowTable,
     }
     val touched = changed ++ removed
     val fresh = aggregate(base.readWhere(changed.contains))
-    val source =
-      if (!summary.exists) fresh
-      else summary.read()
-        .filter(!col(base.currentPartCol).isin(touched.toSeq: _*))
-        .unionByName(fresh)
     val iud =
       if (!summary.exists) { summary.overwrite(fresh); (-1L, -1L, -1L) }
-      // partition-scoped diff (r15, guide §1.2): outside `touched`
-      // the source rows ARE the summary's rows by construction (they
-      // were read from it two lines up), so the unrestricted
-      // mergeSync hashed and full-outer-joined the WHOLE summary —
-      // twice — to re-discover a change set this refresh derived
-      // from the manifest diff in the first place. The scoped form
-      // diffs only touched partitions (manifest-pruned on the table
-      // side) and returns identical I/U/D counts and content.
-      else summary.mergeSyncInPartitions(touched, source, dims)
+      // partition-scoped diff (r15, guide §1.2): every other summary
+      // partition is unchanged by construction, so only the touched
+      // ones are diffed (manifest-pruned on the table side) — the
+      // unrestricted mergeSync would hash and full-outer-join the
+      // WHOLE summary to re-discover a change set this refresh
+      // derived from the manifest diff in the first place
+      else summary.mergeSyncInPartitions(touched, fresh, dims)
     Files.write(syncFile, s"""{"base": $cur}""".getBytes("UTF-8"))
     (last.getOrElse(-1), changed.size, removed.size, iud)
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -52,6 +52,14 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   * legacy dir rewrites that whole dir's rows under the current spec,
   * so hot data migrates itself and cold data is never rewritten
   * until [[compact]] (which migrates all remaining legacy dirs).
+  *
+  * WRITES: [[append]], [[replacePartitions]] and [[compact]] stage
+  * their rows and call [[commit]] themselves. The row-level mutators
+  * ([[upsert]], [[updateWhere]], [[deleteWhere]]'s row path,
+  * [[mergeApply]], [[mergeSync]]) share one rewrite core, `rewrite`:
+  * it migrates the legacy dirs they touch, stages the rewritten
+  * partitions' new rows and commits. [[vacuum]] deletes exactly what
+  * [[orphanReport]] counts: both read one reclaim plan.
   */
 class PartitionedCowTable(val root: String, val partCol: String,
                           spark: SparkSession,
@@ -60,7 +68,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     extends VersionedTable {
 
   import PartitionedCowTable.{DirMeta, Entry, HiveSentinel, Manifest,
-    mapper}
+    ManifestName, mapper}
 
   /** Decoded-manifest cache. Manifest files are IMMUTABLE per version
     * (a commit writes v_N exactly once; vacuum deletes, never
@@ -315,42 +323,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (dirs.isEmpty) emptyLike(v) else readConformed(v, dirs)
   }
 
-  /** ZONE-MAP pruned read: only dirs whose recorded [min, max] for
-    * `c` intersects [lo, hi] are listed, opened, or scheduled — the
-    * per-file-stats pruning [[readWhere]]'s scaladoc promises, for
-    * predicates on a NON-partition column that correlates with the
-    * layout (dates inside month dirs, monotone keys inside ingest
-    * batches — the classic zone-map win). Dirs without recorded
-    * stats for `c` (table built without [[statsColumns]], legacy
-    * dirs predating it) are kept CONSERVATIVELY: pruning is an
-    * optimization, never a filter — callers still apply their
-    * predicate to the returned rows.
-    */
-  def readWhereStats(c: String, lo: Long, hi: Long): DataFrame = {
-    val v = requireVersion
-    val dirs = statsKept(v, c, lo, hi).map(e => s"$root/${e.dir}")
-    if (dirs.isEmpty) emptyLike(v) else readConformed(v, dirs)
-  }
-
-  /** (total dirs, dirs kept) for a [[readWhereStats]] predicate —
-    * the pruning ledger an I/O audit gates on.
-    */
-  def pruneLedger(c: String, lo: Long, hi: Long): (Int, Int) = {
-    val v = requireVersion
-    (manifestAt(v).entries.size, statsKept(v, c, lo, hi).size)
-  }
-
-  private def statsKept(v: Int, c: String, lo: Long, hi: Long)
-      : Seq[Entry] = {
-    val m = manifestAt(v)
-    m.entries.filter { e =>
-      m.dir(e.dir).stats.get(c) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // no stats -> never prune
-      }
-    }
-  }
-
   /** Current committed version number (for [[changedSince]]). */
   def version: Int = requireVersion
 
@@ -470,31 +442,37 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val selCols = (keys :+ spec).distinct
     val hit = read().filter(pred).select(selCols.map(col): _*)
       .localCheckpoint() // reused: key projection + touched values
-    val matches = hit.select(keys.map(col): _*).distinct()
-    val nKeys = matches.count()
-    if (nKeys == 0) return
-    val touched = hit.select(col(spec).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val rel = f"dv/dv_${cur + 1}%06d_" +
-      s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-    val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
-    (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
-      .write.parquet(s"$root/$rel")
-    val attached = m.entries
-      .filter(e => e.pcol != spec || touched.contains(e.value))
-      .map { e => val d = m.dir(e.dir); e.dir -> d.copy(dvs = d.dvs :+ rel) }
-    raceSeam()
-    try publish(cur + 1, m.copy(dirs = m.dirs ++ attached))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // the just-written vector file is ours and no manifest
-        // references it — reclaim it in the same failure path, the
-        // commit() symmetry (an orphan would otherwise linger until
-        // vacuum)
-        try CowTable.walkDelete(Paths.get(root, rel))
-        catch { case c: Exception => e.addSuppressed(c) }
-        throw e
-    }
+    // the block is this call's alone, so every way out frees it: a
+    // checkpointed frame's blocks belong to the RDD under its
+    // LogicalRDD, which Dataset.unpersist does not reach
+    try {
+      val matches = hit.select(keys.map(col): _*).distinct()
+      val nKeys = matches.count()
+      if (nKeys == 0) return
+      val touched = touchedValues(hit, spec)
+      val rel = f"dv/dv_${cur + 1}%06d_" +
+        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+      val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
+      (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
+        .write.parquet(s"$root/$rel")
+      val attached = m.entries
+        .filter(e => e.pcol != spec || touched.contains(e.value))
+        .map { e => val d = m.dir(e.dir); e.dir -> d.copy(dvs = d.dvs :+ rel) }
+      raceSeam()
+      try publish(cur + 1, m.copy(dirs = m.dirs ++ attached))
+      catch {
+        case e: java.util.ConcurrentModificationException =>
+          // the just-written vector file is ours and no manifest
+          // references it — reclaim it in the same failure path, the
+          // commit() symmetry (an orphan would otherwise linger until
+          // vacuum)
+          try CowTable.walkDelete(Paths.get(root, rel))
+          catch { case c: Exception => e.addSuppressed(c) }
+          throw e
+      }
+    } finally hit.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+      .rdd.unpersist(blocking = false)
   }
 
   /** Deletion-vector files the current version references (audit). */
@@ -674,23 +652,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   private[sources] var commitSeam: () => Unit = () => ()
 
-  /** Can a commit based on `base` rebase onto `cur` (a competing
-    * writer's result) instead of aborting? Yes iff the winner left
-    * the table's METADATA contract intact (schema, partition spec,
-    * defaults, stats kinds — our staged data was conformed against
-    * base's versions of all four) AND every entry the winner changed
-    * — added, removed, re-pointed, or DV-touched — is DISJOINT from
-    * `affected`, the (specCol, value) pairs this commit read-modifies
-    * or drops. Delta's WriteSerializable reconcile, at partition
-    * grain: disjoint-partition appends compose in either order, so
-    * replaying ours on the winner's manifest commits both.
-    */
-  private def rebaseCompatible(b: Int, c: Int,
-                               affected: Set[(String, String)]): Boolean =
-    winnerDelta(b, c, affected).isDefined
-
   /** The winner's NEW-CONTENT delta when a rebase from `b` onto `c`
-    * is metadata-compatible and entry-disjoint from `affected`:
+    * is metadata-compatible (schema, spec, defaults and stats kinds
+    * unchanged — the staged data was conformed against `b`'s) and
+    * entry-disjoint from `affected`, the (specCol, value) pairs the
+    * commit read-modifies or drops (Delta's WriteSerializable
+    * reconcile at partition grain):
     * Some(entries in `c` that are new or re-pointed vs `b` — the dirs
     * whose content the loser's read snapshot never saw), None when
     * the rebase is ineligible. DV-only changes are excluded from the
@@ -1276,6 +1243,56 @@ class PartitionedCowTable(val root: String, val partCol: String,
     }
   }
 
+  /** The one read-modify-write commit of the row-level mutators
+    * (upsert, updateWhere, deleteWhere's row path, mergeApply,
+    * mergeSync), against the pinned version `base`:
+    *  1. the legacy dirs holding a row `mark` keeps migrate whole to
+    *     the current spec ([[legacyTouching]]); the rewritten values
+    *     are `touched0` plus the migrated rows' values;
+    *  2. `rows` maps (the current rows of the rewritten partitions,
+    *     migrated rows included; the rewritten values; the entries
+    *     carried by reference) to the rows to stage beside whatever
+    *     the caller already staged in `stage`;
+    *  3. [[commit]] publishes the stage as the base's successor,
+    *     carrying the base's entries minus the migrated dirs.
+    * When no current-spec dir is rewritten and nothing migrates, the
+    * current rows are an empty local relation and the rows are staged
+    * only if the optimizer does not fold them to an empty one: a map
+    * of the current rows alone (upsert's carried rows) costs no write,
+    * while rows the caller adds (a merge's inserts into new
+    * partitions) still land.
+    */
+  private def rewrite(base: Int, stage: String, touched0: Set[String],
+                      mark: DataFrame => DataFrame,
+                      keyProbe: Option[(Seq[Entry], String) => Boolean] =
+                        None)
+                     (rows: (DataFrame, Set[String], Seq[Entry]) => DataFrame)
+      : Unit = {
+    val bm = manifestAt(base)
+    val (mig, migRows, migTouched) = legacyTouching(base, mark)
+    val touched = touched0 ++ migTouched
+    val carried = bm.entries.filterNot(mig.contains)
+    val current = specDirs(base, touched).nonEmpty || mig.nonEmpty
+    val out = rows(
+      if (current) readSpec(base, touched).unionByName(migRows)
+      else spark.createDataFrame(java.util.List.of[Row](), bm.schema),
+      touched, carried)
+    val folded = !current && (out.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        r.data.isEmpty
+      case _ => false
+    })
+    if (!folded) stageRows(out, bm.spec, stage)
+    commit(Some(base), stage, touched, carried, keyProbe = keyProbe)
+  }
+
+  /** The partition values of the rows `pred` matches in version `v`,
+    * legacy dirs included — their rows carry current-spec values too,
+    * so a hit there names the partition its migration rewrites.
+    */
+  private def predicateHits(v: Int, pred: Column): Set[String] =
+    touchedValues(readVersion(v).filter(pred), manifestAt(v).spec)
+
   /** Create or fully replace the table (every partition rewritten,
     * legacy dirs dropped — a full rewrite is also a full migration).
     * Stage-first: `df` is written once into the stage and the
@@ -1323,7 +1340,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * tier): the caller already KNOWS which partitions are superseded
     * and has their full replacement content in hand, so the
     * declarative [[mergeSync]] route — two full table reads, a
-    * keyed full-outer diff with row hashing, two driver collects —
+    * keyed full-outer diff with row hashing, a driver collect —
     * re-derives information the caller started with, at a cost that
     * grows with TABLE size instead of delta size. No diff, no read
     * of superseded data at all: one stage write of `rows`. Refuses
@@ -1372,22 +1389,16 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (!exists) overwrite(updates0)
     else staging { stage =>
       val base = requireVersion
-      val bm = manifestAt(base)
-      val spec = bm.spec
+      val spec = manifestAt(base).spec
       val updates = conformInput(base, updates0)
       stageRows(updates, spec, stage)
       val staged = stagedValues(stage, spec)
       val stagedKeys = stagedDelta(stage, updates.schema)
         .select(keys.map(col): _*)
-      val (mig, migRows, migTouched) = legacyTouching(base,
-        _.join(stagedKeys, keys, "left_semi"))
-      val touched = staged ++ migTouched
-      if (specDirs(base, touched).nonEmpty || mig.nonEmpty)
-        stageRows(readSpec(base, touched).unionByName(migRows)
-          .join(stagedKeys, keys, "left_anti"), spec, stage)
-      commit(Some(base), stage, touched,
-        bm.entries.filterNot(mig.contains),
-        keyProbe = Some(keyDisjointProbe(keys)))
+      rewrite(base, stage, staged, _.join(stagedKeys, keys, "left_semi"),
+          Some(keyDisjointProbe(keys))) { (cur, _, _) =>
+        cur.join(stagedKeys, keys, "left_anti")
+      }
     }
 
   /** keyProbe body shared by the key-scoped mutators: true iff the
@@ -1428,18 +1439,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
   override def updateWhere(pred: Column,
                            sets: Map[String, Column]): Unit = {
     val base = requireVersion
-    val bm = manifestAt(base)
-    val spec = bm.spec
-    val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
-    val touched =
-      touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
-    if (touched.nonEmpty) staging { stage =>
-      stageRows(sets.foldLeft(readSpec(base, touched).unionByName(migRows)) {
-        case (df, (name, value)) =>
+    val hits = predicateHits(base, pred)
+    if (hits.nonEmpty) staging { stage =>
+      rewrite(base, stage, hits, _.filter(pred)) { (cur, _, _) =>
+        sets.foldLeft(cur) { case (df, (name, value)) =>
           df.withColumn(name, when(pred, value).otherwise(col(name)))
-      }, spec, stage)
-      commit(Some(base), stage, touched,
-        bm.entries.filterNot(mig.contains))
+        }
+      }
     }
   }
 
@@ -1455,7 +1461,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
   override def deleteWhere(pred: Column): Unit = {
     val base = requireVersion
     val bm = manifestAt(base)
-    val spec = bm.spec
     wholePartitionHits(base, pred) match {
       case Some(hit) =>
         if (hit.nonEmpty) {
@@ -1464,14 +1469,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
             bm.copy(entries = bm.entries.filterNot(e => hit(e.value))))
         }
       case None =>
-        val (mig, migRows, migTouched) = legacyTouching(base, _.filter(pred))
-        val touched =
-          touchedValues(readVersion(base).filter(pred), spec) ++ migTouched
-        if (touched.nonEmpty) staging { stage =>
-          stageRows(readSpec(base, touched).unionByName(migRows).filter(!pred),
-            spec, stage)
-          commit(Some(base), stage, touched,
-            bm.entries.filterNot(mig.contains))
+        val hits = predicateHits(base, pred)
+        if (hits.nonEmpty) staging { stage =>
+          rewrite(base, stage, hits, _.filter(pred))((cur, _, _) =>
+            cur.filter(!pred))
         }
     }
   }
@@ -1540,24 +1541,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val upserts = ops.filter(col(opCol) =!= "D").drop(opCol)
     if (!exists) { overwrite(upserts); return }
     val base = requireVersion
-    val bm = manifestAt(base)
-    val spec = bm.spec
     val data = conformInput(base, upserts)
-    val touched0 = touchedValues(ops, spec)
+    val touched = touchedValues(ops, manifestAt(base).spec)
     val touchedKeys = ops.select(keys.map(col): _*)
-    val (mig, migRows, migTouched) = legacyTouching(base,
-      _.join(touchedKeys, keys, "left_semi"))
-    val touched = touched0 ++ migTouched
+    // same key-scoped result as upsert (I/U/D all key-addressed):
+    // rebase past an entry-disjoint winner whose new content holds
+    // none of this batch's keys
     staging { stage =>
-      stageRows(readSpec(base, touched).unionByName(migRows)
-        .join(touchedKeys, keys, "left_anti")
-        .unionByName(data), spec, stage)
-      commit(Some(base), stage, touched,
-        bm.entries.filterNot(mig.contains),
-        // same key-scoped result as upsert (I/U/D all key-addressed):
-        // rebase past an entry-disjoint winner whose new content holds
-        // none of this batch's keys
-        keyProbe = Some(keyDisjointProbe(keys)))
+      rewrite(base, stage, touched, _.join(touchedKeys, keys, "left_semi"),
+          Some(keyDisjointProbe(keys))) { (cur, _, _) =>
+        cur.join(touchedKeys, keys, "left_anti").unionByName(data)
+      }
     }
   }
 
@@ -1575,21 +1569,19 @@ class PartitionedCowTable(val root: String, val partCol: String,
                 keys: Seq[String]): (Long, Long, Long) =
     mergeSyncImpl(source0, keys, None)
 
-  /** [[mergeSync]] with the keyed diff RESTRICTED to the named
-    * partitions — the partition-aligned maintenance fast path (r15,
-    * guide §1.2/§2.3: don't hash and join rows that cannot have
-    * changed). Callers like [[IncrementalRollup]] build their source
-    * as `table.read().filter(untouched).unionByName(fresh)`: outside
-    * `values` the source rows ARE the table's rows by construction,
-    * so diffing them is pure overhead that grows with TABLE size
-    * instead of delta size. Here both diff sides restrict to
-    * `values` — the table side through manifest pruning
-    * ([[readWhere]], so untouched dirs are never even listed) — and
-    * the I/U/D counts, touched set and committed content are
-    * IDENTICAL to the unrestricted form exactly when the caller's
-    * assertion holds. Refuses tables with legacy-spec dirs (their
-    * rows cannot be partition-pruned, so the assertion is
-    * unverifiable); those callers use plain [[mergeSync]].
+  /** [[mergeSync]] where `source` is the new content of the named
+    * partitions ONLY — the partition-aligned maintenance fast path
+    * (r15, guide §1.2/§2.3: don't hash and join rows that cannot have
+    * changed). A caller like [[IncrementalRollup]] already knows which
+    * partitions it recomputed and has their full content in hand, so
+    * the table side of the diff reads only `values` through manifest
+    * pruning ([[readVersionWhere]], so untouched dirs are never even
+    * listed) and every other partition carries by reference. A source
+    * row whose partition value is outside `values` is REFUSED loudly,
+    * never dropped; a value in `values` the source has no row for
+    * loses its rows.
+    * Refuses tables with legacy-spec dirs (their rows cannot be
+    * partition-pruned); those callers use plain [[mergeSync]].
     */
   def mergeSyncInPartitions(values: Set[String], source0: DataFrame,
                             keys: Seq[String]): (Long, Long, Long) = {
@@ -1616,48 +1608,55 @@ class PartitionedCowTable(val root: String, val partCol: String,
       df.select(keys.map(col) :+
         col(spec).cast("string").as(s"__v_$tag") :+
         xxhash64(cols.map(col): _*).as(s"__h_$tag"): _*)
-    val (srcSide, tgtSide) = scope match {
-      case Some(vs) =>
-        (source.filter(col(spec).cast("string")
-          .isInCollection(vs.toSeq)), readVersionWhere(base, vs.contains))
-      case None => (source, readVersion(base))
-    }
-    val diff = hashed(srcSide, "s")
-      .join(hashed(tgtSide, "t"), keys, "full_outer")
+    val diff = hashed(source, "s")
+      .join(hashed(readVersionWhere(base, v => scope.forall(_(v))), "t"),
+        keys, "full_outer")
       .withColumn("__st",
         when(col("__h_t").isNull, "I")
           .when(col("__h_s").isNull, "D")
           .when(col("__h_s") =!= col("__h_t"), "U"))
       .filter(col("__st").isNotNull)
-      .localCheckpoint() // changed keys only; reused 4×
-    val counts = diff.groupBy("__st").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (diff.isEmpty) return (0L, 0L, 0L)
-    val touched0 = diff
-      .select(coalesce(col("__v_s"), col("__v_t")).as("v"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val changedKeys = diff.select(keys.map(col): _*)
-    val (mig, migRows, migTouched) = legacyTouching(base,
-      _.join(changedKeys, keys, "left_semi"))
-    val touched = touched0 ++ migTouched
-    // keys that stay behind in NON-migrated legacy dirs are unchanged
-    // by construction (their dirs held no changed key) — exclude them
-    // from the rewritten partitions so they aren't duplicated
-    val remain = bm.entries
-      .filter(e => e.pcol != spec && !mig.contains(e))
-    val remainKeys =
-      if (remain.isEmpty) emptyLike(base).select(keys.map(col): _*)
-      else readConformed(base,
-        remain.map(e => s"$root/${e.dir}")).select(keys.map(col): _*)
-    staging { stage =>
-      stageRows(source.filter(col(spec).cast("string")
-          .isInCollection(touched.toSeq))
-        .join(remainKeys, keys, "left_anti"), spec, stage)
-      commit(Some(base), stage, touched,
-        bm.entries.filterNot(mig.contains))
+    // ONE pass over the diff: each task counts its (status, partition
+    // value) pairs and the driver merges them into the I/U/D counts,
+    // the no-op check and the touched set; nothing is staged
+    val byStatus = diff
+      .select(col("__st"), coalesce(col("__v_s"), col("__v_t")))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .mapPartitions { it =>
+        val n = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        it.foreach(k => n(k) = n.getOrElse(k, 0L) + 1L)
+        n.iterator.map { case ((st, v), c) => (st, v, c) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))
+      .collect()
+    if (byStatus.isEmpty) return (0L, 0L, 0L)
+    val touched = byStatus.map(_._2).toSet
+    refuseUnroundtrippable(touched)
+    scope.foreach { vs =>
+      val outside = touched -- vs
+      require(outside.isEmpty,
+        s"mergeSyncInPartitions: the source has rows in partitions " +
+          s"outside the named ones (${outside.toSeq.sorted.mkString(", ")})" +
+          " — it must be the new content of those partitions only")
     }
-    (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
-      counts.getOrElse("D", 0L))
+    staging { stage =>
+      // the diff is read again only to mark legacy dirs
+      rewrite(base, stage, touched,
+          _.join(diff.select(keys.map(col): _*), keys, "left_semi")) {
+        (_, rewritten, carried) =>
+          val rows = source.filter(col(spec).cast("string")
+            .isInCollection(rewritten.toSeq))
+          // keys that stay behind in NON-migrated legacy dirs are
+          // unchanged by construction (their dirs held no changed key)
+          // — exclude them from the rewritten partitions so they aren't
+          // duplicated
+          val remain = carried.filter(_.pcol != spec)
+          if (remain.isEmpty) rows
+          else rows.join(readConformed(base, remain.map(e => s"$root/${e.dir}"))
+            .select(keys.map(col): _*), keys, "left_anti")
+      }
+    }
+    def n(st: String) = byStatus.collect { case (`st`, _, c) => c }.sum
+    (n("I"), n("U"), n("D"))
   }
 
   /** Compact the selected partitions: rewrite each as a single task's
@@ -1792,9 +1791,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
     }
   }
 
-  /** Drop every `w_*` dir and `v_*.json` no longer reachable from the
-    * current manifest; shared dirs it still references survive.
-    */
   /** The PROTECTED versions — current, every tagged version that
     * still has a manifest, and (when `minAgeMillis` > 0) every
     * version whose manifest is YOUNGER than the retention horizon —
@@ -1808,23 +1804,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * to drain, so reclaiming it is safe for any reader whose job
     * runtime is bounded by the horizon.
     */
-  private def protectedState(cur: Int, minAgeMillis: Long = 0L)
+  private def protectedState(cur: Int, minAgeMillis: Long)
       : (Set[Int], Set[String], Set[String]) = {
     val anchored = (tags.values.toSet + cur).filter(v =>
       Files.exists(versionFile(v)))
+    val horizon = System.currentTimeMillis() - minAgeMillis
     val young: Set[Int] =
       if (minAgeMillis <= 0L) Set.empty
-      else {
-        val horizon = System.currentTimeMillis() - minAgeMillis
-        val listing = Files.list(Paths.get(root))
-        try listing.iterator().asScala
-          .filter(p => p.getFileName.toString.matches("v_\\d{6}\\.json"))
-          .filter(p => Files.getLastModifiedTime(p).toMillis > horizon)
-          .map(_.getFileName.toString.stripPrefix("v_")
-            .stripSuffix(".json").toInt)
-          .toSet
-        finally listing.close()
-      }
+      else children(Paths.get(root)).map(_.getFileName.toString)
+        .collect { case ManifestName(v) => v.toInt }
+        .filter(v => Files.getLastModifiedTime(versionFile(v)).toMillis > horizon)
+        .toSet
     val versions = anchored ++ young
     val ms = versions.toSeq.map(manifestAt)
     val dirs = ms.flatMap(_.entries.map(_.dir.split('/').head)).toSet
@@ -1833,87 +1823,69 @@ class PartitionedCowTable(val root: String, val partCol: String,
     (versions, dirs, dvFiles)
   }
 
+  private def children(dir: Path): Seq[Path] =
+    if (!Files.exists(dir)) Seq.empty
+    else {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.toList finally listing.close()
+    }
+
+  /** The one reclaim plan: what a vacuum at age horizon `minAgeMillis`
+    * deletes — (dead data dirs, dead manifests, stage dirs, dead
+    * deletion-vector files). Dead means no protected version
+    * references it ([[protectedState]]). Only OUR manifest names
+    * (`v_NNNNNN.json`) count: a foreign v_*.json (backup, torn copy)
+    * is never parsed, counted or deleted. A `_stage_` dir counts once
+    * it is older than the horizon: a younger one may be an IN-FLIGHT
+    * writer's parquet job, not a crash leftover.
+    */
+  private def reclaimable(cur: Int, minAgeMillis: Long)
+      : (Seq[Path], Seq[Path], Seq[Path], Seq[Path]) = {
+    val (versions, live, liveDv) = protectedState(cur, minAgeMillis)
+    val horizon = System.currentTimeMillis() - minAgeMillis
+    val top = children(Paths.get(root)).map(p => p.getFileName.toString -> p)
+    def named(keep: String => Boolean) = top.collect { case (n, p) if keep(n) => p }
+    (named(n => n.startsWith("w_") && !live(n)),
+      named { case ManifestName(v) => !versions(v.toInt); case _ => false },
+      named(_.startsWith("_stage_")).filter(p => minAgeMillis <= 0L ||
+        Files.getLastModifiedTime(p).toMillis <= horizon),
+      children(Paths.get(root, "dv")).filterNot(p =>
+        liveDv(p.getFileName.toString)))
+  }
+
   /** What [[vacuum]] WOULD reclaim, without touching anything — the
     * pre-flight health check (a crashed writer's claimed-but-
     * unreferenced data dir, an interrupted stage, superseded
     * manifests, materialized deletion vectors). Returns
-    * (data dirs, manifests, stage dirs, dv files).
+    * (data dirs, manifests, stage dirs, dv files): exactly what the
+    * next `vacuum()` deletes.
     */
   def orphanReport: (Long, Long, Long, Long) =
     currentVersion.map { cur =>
-      val (versions, live, liveDv) = protectedState(cur)
-      val entries = {
-        val listing = Files.list(Paths.get(root))
-        try listing.iterator().asScala.toSeq finally listing.close()
-      }
-      var (dd, dm, ds) = (0L, 0L, 0L)
-      entries.foreach { p =>
-        val n = p.getFileName.toString
-        // only OUR manifest names (v_NNNNNN.json) parse — a foreign
-        // file like v_backup.json must be left untouched, not crash
-        // the audit on toInt
-        if (n.startsWith("w_") && !live.contains(n)) dd += 1
-        else if (n.matches("v_\\d{6}\\.json") &&
-          !versions.contains(n.stripPrefix("v_").stripSuffix(".json")
-            .toInt)) dm += 1
-        else if (n.startsWith("_stage_")) ds += 1
-      }
-      val dvDir = Paths.get(root, "dv")
-      val dvDead =
-        if (!Files.exists(dvDir)) 0L
-        else {
-          val listing = Files.list(dvDir)
-          try listing.iterator().asScala
-            .count(p => !liveDv.contains(p.getFileName.toString)).toLong
-          finally listing.close()
-        }
-      (dd, dm, ds, dvDead)
+      val (d, m, st, dv) = reclaimable(cur, 0L)
+      (d.size.toLong, m.size.toLong, st.size.toLong, dv.size.toLong)
     }.getOrElse((0L, 0L, 0L, 0L))
 
+  /** Drop every dir, manifest, stage and deletion vector no version
+    * that must survive references; shared dirs a survivor still
+    * references stay.
+    */
   override def vacuum(): Unit = vacuum(0L)
 
   /** [[vacuum]] with a concurrent-reader grace period: versions whose
     * manifest is younger than `minAgeMillis` are NOT reclaimed (their
     * manifests, data dirs and deletion vectors all survive), and
-    * neither are `_stage_` dirs younger than the horizon — a young
-    * stage dir may be an IN-FLIGHT writer's parquet job, not a crash
-    * leftover. `minAgeMillis = 0` is the test-friendly immediate
-    * reclaim; production callers pass their max expected reader/job
-    * runtime (Delta defaults the analogous knob to 7 days).
+    * neither are `_stage_` dirs younger than the horizon.
+    * `minAgeMillis = 0` is the test-friendly immediate reclaim;
+    * production callers pass their max expected reader/job runtime
+    * (Delta defaults the analogous knob to 7 days). Tagged versions
+    * are retention anchors: they survive until the tag drops.
     */
   def vacuum(minAgeMillis: Long): Unit = currentVersion.foreach { cur =>
-    // tagged versions are retention anchors: their manifests, data
-    // dirs and deletion vectors survive vacuum until the tag drops
-    val (versions, live, liveDv) = protectedState(cur, minAgeMillis)
-    val horizon = System.currentTimeMillis() - minAgeMillis
-    val entries = {
-      val listing = Files.list(Paths.get(root))
-      try listing.iterator().asScala.toSeq finally listing.close()
-    }
-    entries.foreach { p =>
-      val n = p.getFileName.toString
-      val deadData = n.startsWith("w_") && !live.contains(n)
-      // strict v_NNNNNN.json match: a foreign v_*.json (backup, torn
-      // copy) must never abort vacuum mid-delete on toInt — treat it
-      // as not ours and leave it alone
-      val deadManifest = n.matches("v_\\d{6}\\.json") &&
-        !versions.contains(
-          n.stripPrefix("v_").stripSuffix(".json").toInt)
-      val deadStage = n.startsWith("_stage_") &&
-        (minAgeMillis <= 0L ||
-          Files.getLastModifiedTime(p).toMillis <= horizon)
-      if (deadData || deadManifest || deadStage) CowTable.walkDelete(p)
-    }
-    val dvDir = Paths.get(root, "dv")
-    if (Files.exists(dvDir)) {
-      val listing = Files.list(dvDir)
-      val children = try listing.iterator().asScala.toSeq
-        finally listing.close()
-      children.foreach { p =>
-        if (!liveDv.contains(p.getFileName.toString))
-          CowTable.walkDelete(p)
-      }
-    }
+    val (dirs, manifests, stages, dvs) = reclaimable(cur, minAgeMillis)
+    // manifests first: a vacuum stopped part-way leaves no manifest
+    // whose data is already gone
+    (manifests ++ dirs ++ stages ++ dvs).foreach(CowTable.walkDelete)
   }
 }
 
@@ -1935,9 +1907,9 @@ object PartitionedCowTable {
     *   [[statsColumns]] of integral, timestamp and date type, in
     *   Catalyst INTERNAL units (see [[Manifest.kinds]]). One extra
     *   aggregate over just-written dirs — zero cost when statsColumns
-    *   is empty. [[readWhereStats]] and [[GraftFileIndex]] prune on
-    *   them; a dir with no recorded stats for a column is kept
-    *   conservatively.
+    *   is empty. [[GraftFileIndex]] prunes on them at plan time, so a
+    *   plain `read().filter(...)` opens only intersecting dirs; a dir
+    *   with no recorded stats for a column is kept conservatively.
     * @param sstats STRING zone maps (ISO dates, month keys, status
     *   codes); [[GraftFileIndex]] prunes on them with byte-order-safe
     *   lexicographic bounds.
@@ -2128,6 +2100,9 @@ object PartitionedCowTable {
 
   /** The dir name Spark writes null and '' partition values under. */
   private val HiveSentinel = "__HIVE_DEFAULT_PARTITION__"
+
+  /** A manifest file name, `v_NNNNNN.json`; the group is the version. */
+  private val ManifestName = """v_(\d{6})\.json""".r
 
   def apply(root: String, partCol: String)
            (implicit spark: SparkSession): PartitionedCowTable =

@@ -821,24 +821,29 @@ class PartitionedCowTableSpec extends SparkSpec {
       (1L, "2020-03", 10L), (2L, "2020-03", 20L),
       (3L, "2020-04", 100L), (4L, "2020-05", 1000L))
       .toDF("pid", "month", "k"))
+    // (dirs total, dirs the scan listed) of a plain range read, read
+    // off the plan-automatic ledger once the read has run
+    def pruned(c: String, lo: Long, hi: Long): (Int, Int) = {
+      t.read().filter(col(c).between(lo, hi)).collect()
+      t.autoPruneLedger
+    }
     // [15, 150] intersects 2020-03 [10,20] and 2020-04 [100,100]
-    assert(t.pruneLedger("k", 15L, 150L) === ((3, 2)))
-    assert(t.readWhereStats("k", 15L, 150L)
-      .filter(col("k").between(15L, 150L))
+    assert(pruned("k", 15L, 150L) === ((3, 2)))
+    assert(t.read().filter(col("k").between(15L, 150L))
       .collect().map(_.getAs[Long]("pid")).toSet === Set(2L, 3L))
     // a column with no recorded stats never prunes
-    assert(t.pruneLedger("pid", 999L, 9999L) === ((3, 3)))
+    assert(pruned("pid", 999L, 9999L) === ((3, 3)))
     // upsert rewrites 2020-03 -> its stats recompute; others carry
     t.upsert(Seq((1L, "2020-03", 500L)).toDF("pid", "month", "k"),
       Seq("pid"))
-    assert(t.pruneLedger("k", 400L, 600L) === ((3, 1))) // only 2020-03
-    assert(t.pruneLedger("k", 15L, 30L) === ((3, 1)))   // k=20 remains
+    assert(pruned("k", 400L, 600L) === ((3, 1))) // only 2020-03
+    assert(pruned("k", 15L, 30L) === ((3, 1)))   // k=20 remains
     // metadata-only commits carry the zone maps verbatim
     t.evolveSchema("note", "STRING")
-    assert(t.pruneLedger("k", 400L, 600L) === ((3, 1)))
+    assert(pruned("k", 400L, 600L) === ((3, 1)))
     // and restore brings the restored version's stats back
     t.restore(t.version - 1)
-    assert(t.pruneLedger("k", 400L, 600L) === ((3, 1)))
+    assert(pruned("k", 400L, 600L) === ((3, 1)))
   }
 
   test("deletion vectors: delete rewrites NO dir, rewrites " +
@@ -1384,7 +1389,9 @@ class PartitionedCowTableSpec extends SparkSpec {
       (4L, "2020-05", "d", false), (5L, "2020-06", "e", false))
       .toDF("pid", "month", "v", "flag")
     val touched = Set("2020-03", "2020-04", "2020-06")
-    assert(t.mergeSyncInPartitions(touched, src, Seq("pid")) ===
+    // the source is the new content of the named partitions only
+    assert(t.mergeSyncInPartitions(touched,
+      src.filter($"month".isin(touched.toSeq: _*)), Seq("pid")) ===
       ((1L, 1L, 1L)))
     assert(t.read().orderBy("pid").collect().toSeq ===
       src.orderBy("pid").collect().toSeq)
@@ -1395,8 +1402,8 @@ class PartitionedCowTableSpec extends SparkSpec {
     // (ledger attribution note: the commit's own reads ran since, so
     // probe with a fresh scoped diff instead)
     val v = t.version
-    assert(t.mergeSyncInPartitions(Set("2020-03"), t.read(),
-      Seq("pid")) === ((0L, 0L, 0L)))
+    assert(t.mergeSyncInPartitions(Set("2020-03"),
+      t.read().filter($"month" === "2020-03"), Seq("pid")) === ((0L, 0L, 0L)))
     assert(t.version === v) // no-op sync still commits nothing
     // legacy dirs make the unchanged-outside-scope assertion
     // unverifiable — refuse loudly
@@ -1699,6 +1706,162 @@ class PartitionedCowTableSpec extends SparkSpec {
     t.evolvePartitioning("flag")
     assert(jobs(t.deleteWhere($"flag" === false)) > 0)
     assert(t.read().count() === 0L)
+  }
+
+  // ---- the row-level mutators' job counts ----
+
+  /** `df` written to parquet and read back: a local Seq's distinct is
+    * answered without a job, which would hide every evaluation of the
+    * input that the job-count pins are here to count.
+    */
+  private def landed(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val p = Files.createTempDirectory("pcow_in").toString + "/d"
+    df.write.parquet(p)
+    spark.read.parquet(p)
+  }
+
+  private def counted[T](f: => T): (T, Int) =
+    org.apache.spark.JobCount(spark.sparkContext)(f)
+
+  test("mutator job counts are pinned: updateWhere, mergeApply, " +
+    "mergeSync, mergeSyncInPartitions and deleteWhereDV; into a new " +
+    "partition only, upsert stages just its delta and merge inserts land") {
+    val upd = mk()
+    val nUpd = jobs(upd.updateWhere($"pid" === 2L, Map("v" -> lit("B"))))
+    assert(contents(upd) === Seq("[1,2020-03,a,false]", "[2,2020-03,B,false]",
+      "[3,2020-04,c,false]", "[4,2020-05,d,false]"))
+    val ma = mk()
+    val ops = landed(Seq((2L, "2020-03", "B", true, "U"),
+      (3L, "2020-04", "c", false, "D"), (5L, "2020-06", "e", false, "I"))
+      .toDF("pid", "month", "v", "flag", "op"))
+    val nMa = jobs(ma.mergeApply(ops, Seq("pid")))
+    assert(contents(ma) === Seq("[1,2020-03,a,false]", "[2,2020-03,B,true]",
+      "[4,2020-05,d,false]", "[5,2020-06,e,false]"))
+    // pid 1 updated (2020-03), pid 3 deleted (2020-04), pid 5 inserted
+    // (2020-06), pid 4's 2020-05 unchanged
+    val rows = Seq((1L, "2020-03", "a", true), (2L, "2020-03", "b", false),
+      (4L, "2020-05", "d", false), (5L, "2020-06", "e", false))
+    val want = Seq("[1,2020-03,a,true]", "[2,2020-03,b,false]",
+      "[4,2020-05,d,false]", "[5,2020-06,e,false]")
+    val ms = mk()
+    val src = landed(rows.toDF("pid", "month", "v", "flag"))
+    val (iud, nMs) = counted(ms.mergeSync(src, Seq("pid")))
+    assert(iud === ((1L, 1L, 1L)))
+    assert(contents(ms) === want)
+    val msp = mk()
+    val scoped = landed(rows.filter(_._2 != "2020-05")
+      .toDF("pid", "month", "v", "flag"))
+    val (iudP, nMsp) = counted(msp.mergeSyncInPartitions(
+      Set("2020-03", "2020-04", "2020-06"), scoped, Seq("pid")))
+    assert(iudP === ((1L, 1L, 1L)))
+    assert(contents(msp) === want)
+    val dv = mk()
+    val nDv = jobs(dv.deleteWhereDV($"pid" === 2L, Seq("pid")))
+    assert(contents(dv) === Seq("[1,2020-03,a,false]", "[3,2020-04,c,false]",
+      "[4,2020-05,d,false]"))
+    // no current partition is rewritten: upsert has no carried rows to
+    // stage, mergeApply's inserts are all it stages
+    val fresh = Seq((6L, "2020-07", "f", false))
+    val upNew = mk()
+    val delta = landed(fresh.toDF("pid", "month", "v", "flag"))
+    val nUpNew = jobs(upNew.upsert(delta, Seq("pid")))
+    val maNew = mk()
+    maNew.mergeApply(landed(fresh.map { case (p, m, v, f) => (p, m, v, f, "I") }
+      .toDF("pid", "month", "v", "flag", "op")), Seq("pid"))
+    for (t <- Seq(upNew, maNew)) {
+      assert(t.read().count() === 5L)
+      assert(contents(t).contains("[6,2020-07,f,false]"))
+      assert(t.manifest.keySet === Set("2020-03", "2020-04", "2020-05",
+        "2020-07"))
+    }
+    // mergeSync reads its diff in one pass (10 jobs before), and
+    // deleteWhereDV collects its touched values in one job (8 before)
+    assert((nUpd, nMa, nMs, nMsp, nDv, nUpNew) === ((2, 6, 4, 4, 7, 1)))
+  }
+
+  test("mergeSync and deleteWhereDV leave no staged block behind: three " +
+    "rounds on one table, a no-match delete and a lost race") {
+    implicit val s = spark
+    val t = mk()
+    val sc = spark.sparkContext
+    val held = sc.getPersistentRDDs.keySet
+    def noneLeft(after: String): Unit =
+      assert((sc.getPersistentRDDs.keySet -- held).isEmpty, after)
+    for (r <- 1 to 3) {
+      // pid 1 changes (U) and pid 10 + r arrives (I); the previous
+      // round's arrival was deleted by its vector, so it is no D
+      val src = Seq((1L, "2020-03", s"a$r", false), (2L, "2020-03", "b", false),
+        (3L, "2020-04", "c", false), (4L, "2020-05", "d", false),
+        (10L + r, "2020-06", "n", false)).toDF("pid", "month", "v", "flag")
+      assert(t.mergeSync(src, Seq("pid")) === ((1L, 1L, 0L)))
+      noneLeft(s"mergeSync, round $r")
+      t.deleteWhereDV($"pid" === 10L + r, Seq("pid"))
+      noneLeft(s"deleteWhereDV, round $r")
+    }
+    assert(t.read().count() === 4L)
+    t.deleteWhereDV($"pid" === 999L, Seq("pid"))
+    noneLeft("deleteWhereDV matching nothing")
+    val t2 = PartitionedCowTable(t.root, "month")
+    t.raceSeam = () => {
+      t.raceSeam = () => ()
+      t2.append(Seq((9L, "2020-05", "z", false))
+        .toDF("pid", "month", "v", "flag"))
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      t.deleteWhereDV($"pid" === 1L, Seq("pid"))
+    }
+    noneLeft("deleteWhereDV losing a race")
+  }
+
+  test("mergeSyncInPartitions refuses a source row outside its " +
+    "partitions instead of dropping it") {
+    val t = mk()
+    val src = Seq((1L, "2020-03", "a", true), (2L, "2020-03", "b", false),
+      (9L, "2020-07", "z", false)).toDF("pid", "month", "v", "flag")
+    val e = intercept[IllegalArgumentException] {
+      t.mergeSyncInPartitions(Set("2020-03"), src, Seq("pid"))
+    }
+    assert(e.getMessage.contains("2020-07"))
+    assert(t.version === 0) // nothing committed
+    assert(t.read().count() === 4L)
+  }
+
+  test("orphanReport counts exactly what the next vacuum() removes: a " +
+    "tagged version, a foreign v_backup.json, a stale stage dir") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val t = mk() // v0
+    def rows(pid: Long, v: String) =
+      Seq((pid, "2020-03", v, true)).toDF("pid", "month", "v", "flag")
+    t.upsert(rows(1L, "A"), Seq("pid")) // v1 rewrites 2020-03
+    t.tag("keep") // v1 and the v0 dirs it shares stay live
+    t.deleteWhereDV($"pid" === 3L, Seq("pid")) // v2: a vector on 2020-04
+    t.upsert(rows(2L, "B"), Seq("pid")) // v3
+    t.compact() // v4: rewrites everything, the vector is dead
+    Files.write(Paths.get(t.root, "v_backup.json"), "{}".getBytes)
+    Files.createDirectories(Paths.get(t.root, "_stage_crashed", "__part=x"))
+    Files.createDirectories(Paths.get(t.root, "w_000099", "__part=x"))
+    def names(p: Path): Set[String] =
+      if (!Files.exists(p)) Set.empty
+      else { val l = Files.list(p)
+        try l.iterator().asScala.map(_.getFileName.toString).toSet
+        finally l.close() }
+    val (top0, dv0) = (names(Paths.get(t.root)), names(Paths.get(t.root, "dv")))
+    val report = t.orphanReport
+    t.vacuum()
+    val gone = top0 -- names(Paths.get(t.root))
+    val goneDv = dv0 -- names(Paths.get(t.root, "dv"))
+    assert(report === ((gone.count(_.startsWith("w_")).toLong,
+      gone.count(_.matches("v_\\d{6}\\.json")).toLong,
+      gone.count(_.startsWith("_stage_")).toLong, goneDv.size.toLong)))
+    // w_000003 and w_000099; v0, v2 and v3; the stage; the vector
+    assert(report === ((2L, 3L, 1L, 1L)))
+    assert(gone.size === 6)
+    assert(Files.exists(Paths.get(t.root, "v_backup.json")))
+    assert(t.readTag("keep").count() === 4L)
+    assert(t.read().count() === 3L)
+    assert(t.orphanReport === ((0L, 0L, 0L, 0L)))
   }
 }
 
