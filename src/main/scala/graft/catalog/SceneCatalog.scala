@@ -2,11 +2,13 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{GraftFunctions => G}
 import graft.model.{Scene, SensorSchema, SensorSchemas}
 import graft.operators.{RelationalOps => R, SceneQueryOps => S}
-import graft.sources.{CowTable, VersionedTable}
+import graft.sources.{CowTable, PartitionedCowTable, VersionedTable}
 
 /** The reference sensor's query API (EODataDownSensor's ~60 methods,
   * eodatadownsensor.py:71-469) re-expressed over one
@@ -19,14 +21,61 @@ import graft.sources.{CowTable, VersionedTable}
 class SceneCatalog(val table: VersionedTable, spark: SparkSession,
                    val sensor: SensorSchema = SensorSchemas.landsat) {
 
-  def scenes: DataFrame = table.read()
+  def scenes: DataFrame = current().merge
 
   /** Typed view for the Landsat-canonical schema only; other sensors
     * use their own case class via `scenes.as[...]`.
     */
   def typedScenes: Dataset[Scene] = {
     import spark.implicits._
-    table.read().as[Scene]
+    scenes.as[Scene]
+  }
+
+  /** The snapshot: (version, planned bytes, rows) of the version this
+    * catalogue last read, when that version was small enough to hold.
+    */
+  private var held: Option[(Int, BigInt, DataFrame)] = None
+
+  /** The table's current rows: Right when they come from the snapshot,
+    * Left when they are a file read.
+    *
+    * The catalogue's reads repeat over the same version (a step's work
+    * list and its write-back, then the cycle's reads), and each file
+    * read re-opens every day's parquet files; on a small table that
+    * per-file cost is most of the read. So a [[PartitionedCowTable]]
+    * version whose planned size is at most
+    * `spark.sql.autoBroadcastJoinThreshold` (the manifest's recorded
+    * bytes — the size at which Spark would ship the relation whole to
+    * every task) is read from its files once, into one in-memory
+    * partition; with one partition the catalogue's sorts and
+    * aggregates plan with no exchange. Every later read of that version
+    * is served from memory. The snapshot is keyed by the version in
+    * `_current`, so a commit through any writer moves the catalogue
+    * on, and the previous snapshot is released then, or as soon as the
+    * version no longer fits the threshold. A [[CowTable]] and a version
+    * above the threshold read their files every time. Synchronized: a
+    * monitor stream calls in from its own thread.
+    */
+  private def current(): Either[DataFrame, DataFrame] = table match {
+    case p: PartitionedCowTable => synchronized {
+      val v = p.version
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      held match {
+        case Some((`v`, bytes, rows)) if bytes <= limit => Right(rows)
+        case _ =>
+          held.foreach(_._3.unpersist(blocking = false))
+          held = None
+          val files = p.readVersion(v)
+          val bytes = files.queryExecution.optimizedPlan.stats.sizeInBytes
+          if (bytes > limit) Left(files)
+          else {
+            val rows = files.repartition(1).persist(StorageLevel.MEMORY_ONLY)
+            held = Some((v, bytes, rows))
+            Right(rows)
+          }
+      }
+    }
+    case t => Left(t.read())
   }
 
   private def obsDate: Column = sensor.obsDate
@@ -80,12 +129,12 @@ class SceneCatalog(val table: VersionedTable, spark: SparkSession,
     // ICESAT2) renders with a time suffix, and "2020-03-02 05:30:00"
     // <= "2020-03-02" is false — the upper-boundary day would be
     // silently pruned. Those sensors fall back to the full read + row
-    // filter (identical semantics, no pruning).
-    case p: graft.sources.PartitionedCowTable
+    // filter (identical semantics, no pruning). A snapshot opens no
+    // file, so it needs no pruning.
+    case p: PartitionedCowTable
         if p.partCol == sensor.obsDateCol &&
-          sensor.schema(sensor.obsDateCol).dataType ==
-            org.apache.spark.sql.types.DateType =>
-      p.readWhere(v => v >= lo && v <= hi)
+          sensor.schema(sensor.obsDateCol).dataType == DateType =>
+      current().getOrElse(p.readWhere(v => v >= lo && v <= hi))
     case _ => scenes
   }
 

@@ -193,6 +193,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * reads (build A, build B, execute A, query) misattributes the
     * ledger to B's scans; gates and specs follow the sequential
     * protocol.
+    *
+    * A [[graft.catalog.SceneCatalog]] read served from the catalogue's
+    * in-memory snapshot builds no read on this table, so it does not
+    * update the ledger: the ledger still describes the last read that
+    * was built.
     */
   def autoPruneLedger: (Int, Int) = {
     val l = lastIndexes.map(_.lastPrune)
@@ -1526,33 +1531,56 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * Only partitions containing op rows are rewritten (delete rows
     * must carry their partition value — the same never-rewrites-the-
     * partition-column contract as [[upsert]]). A batch with two ops
-    * for one key has no defined order and fails loudly (the probe is
-    * a limit-1 existence job, not a full count); callers consolidate
-    * to final-state-per-key first (the q126 latest-per-key device).
+    * for one key has no defined order and fails loudly; callers
+    * consolidate to final-state-per-key first (the q126 latest-per-key
+    * device). One keyed aggregate reads the batch for both the
+    * duplicate check and the touched partition values
+    * ([[opsProbe]]); the stage write is the batch's only other read.
     */
   def mergeApply(ops: DataFrame, keys: Seq[String],
                  opCol: String = "op"): Unit = {
-    val dup = ops.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .limit(1).count()
-    require(dup == 0,
+    val base = currentVersion
+    val (dup, touched) = opsProbe(ops, keys, base.map(manifestAt(_).spec))
+    require(!dup,
       s"mergeApply: multiple ops for one key — consolidate the batch " +
         s"to final state per key before applying")
     val upserts = ops.filter(col(opCol) =!= "D").drop(opCol)
-    if (!exists) { overwrite(upserts); return }
-    val base = requireVersion
-    val data = conformInput(base, upserts)
-    val touched = touchedValues(ops, manifestAt(base).spec)
-    val touchedKeys = ops.select(keys.map(col): _*)
-    // same key-scoped result as upsert (I/U/D all key-addressed):
-    // rebase past an entry-disjoint winner whose new content holds
-    // none of this batch's keys
-    staging { stage =>
-      rewrite(base, stage, touched, _.join(touchedKeys, keys, "left_semi"),
-          Some(keyDisjointProbe(keys))) { (cur, _, _) =>
-        cur.join(touchedKeys, keys, "left_anti").unionByName(data)
-      }
+    base match {
+      case None => overwrite(upserts)
+      case Some(b) =>
+        refuseUnroundtrippable(touched)
+        val data = conformInput(b, upserts)
+        val touchedKeys = ops.select(keys.map(col): _*)
+        // same key-scoped result as upsert (I/U/D all key-addressed):
+        // rebase past an entry-disjoint winner whose new content holds
+        // none of this batch's keys
+        staging { stage =>
+          rewrite(b, stage, touched, _.join(touchedKeys, keys, "left_semi"),
+              Some(keyDisjointProbe(keys))) { (cur, _, _) =>
+            cur.join(touchedKeys, keys, "left_anti").unionByName(data)
+          }
+        }
     }
+  }
+
+  /** (some key holds more than one op, the spec values of the batch's
+    * ops) in one action: the ops grouped by key, each task folding its
+    * groups to a distinct set the driver merges. A key with one op
+    * names its value exactly — null included, so the caller can refuse
+    * it; a repeated key only raises the flag. With no spec (a table
+    * not yet created) the values are not read.
+    */
+  private def opsProbe(ops: DataFrame, keys: Seq[String],
+                       spec: Option[String]): (Boolean, Set[String]) = {
+    val enc = Encoders.tuple(Encoders.scalaBoolean, Encoders.STRING)
+    val value = spec.map(col(_).cast("string")).getOrElse(lit(null).cast("string"))
+    val seen = ops.groupBy(keys.map(col): _*)
+      .agg((count(lit(1)) > 1).as("__dup"), first(value).as("__v"))
+      .select("__dup", "__v").as(enc)
+      .mapPartitions(_.map { case (d, v) => if (d) (true, null) else (false, v) }
+        .toSet.iterator)(enc)
+      .collect()
+    (seen.exists(_._1), seen.collect { case (false, v) => v }.toSet)
   }
 
   /** Declarative reconcile — make the table's content EQUAL `source`

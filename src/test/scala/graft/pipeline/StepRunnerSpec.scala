@@ -102,9 +102,11 @@ class StepRunnerSpec extends SparkSpec {
     val ((n, ok), jobs) = org.apache.spark.JobCount(spark.sparkContext)(
       StepRunner.runStep(spark, cat, new DownloadStep(4), parallelism = 4))
     assert(n == 12 && ok == 9)
-    // the tallies over the cached results, then the upsert's two
-    // stage writes (the flagged rows, then the touched dates' others)
-    assert(jobs == 8)
+    // the catalogue's snapshot of the new version (its one-partition
+    // exchange, then its cache), the tallies over the cached results,
+    // then the upsert's two stage writes (the flagged rows, then the
+    // touched dates' others); 8 with no snapshot
+    assert(jobs == 10)
     // failures 12 (03-01), 4 (03-02), 8 (03-03): date order, then PID
     assert(cat.scnlistNeedDownload().as[Long].collect().toSeq ==
       Seq(12L, 4L, 8L))

@@ -170,14 +170,30 @@ class PlanQualitySpec extends SparkSpec {
     cat.table.overwrite(Seq(scene(1, "2020-03-01"), scene(2, "2020-03-02"),
       scene(3, "2020-03-03")).toDF())
     val v0 = tbl.version
-    // closed range [03-01, 03-02]: the 03-03 dir must not even be listed
-    val pruned = cat.scenesForDateRange("2020-03-02", "2020-03-01",
+    // closed range [03-01, 03-02]: the 03-03 dir must not even be listed.
+    // A threshold of -1 keeps the catalogue on its file path; at the
+    // default the read is served from the in-memory snapshot and opens
+    // no parquet file at all
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val pruned = cat.scenesForDateRange("2020-03-02", "2020-03-01",
+        validOnly = false)
+      val prunedFiles = pruned.inputFiles
+      assert(prunedFiles.nonEmpty)
+      assert(prunedFiles.forall(f => f.contains("__part=2020-03-01") ||
+        f.contains("__part=2020-03-02")), prunedFiles.mkString("\n"))
+      assert(pruned.select("PID").as[Long].collect().toSet == Set(1L, 2L))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val held = cat.scenesForDateRange("2020-03-02", "2020-03-01",
       validOnly = false)
-    val prunedFiles = pruned.inputFiles
-    assert(prunedFiles.nonEmpty)
-    assert(prunedFiles.forall(f => f.contains("__part=2020-03-01") ||
-      f.contains("__part=2020-03-02")), prunedFiles.mkString("\n"))
-    assert(pruned.select("PID").as[Long].collect().toSet == Set(1L, 2L))
+    assert(held.collect().map(_.getAs[Long]("PID")).toSet == Set(1L, 2L))
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val heldPlan = held.queryExecution.executedPlan
+    assert(aqe.collect(heldPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.isEmpty, heldPlan)
     // upsert touching ONE date: the change feed reads only that
     // partition's rewritten dir in the new w_ version
     tbl.upsert(Seq(scene(4, "2020-03-03")).toDF(), Seq("PID"))

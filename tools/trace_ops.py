@@ -7,9 +7,14 @@ jobs came from (the innermost graft.* frame, with a job count each).
 Figures are medians over the traced ops of that kind; the site counts
 are per op.
 
+With --diff BEFORE AFTER it prints two traces side by side: per op kind,
+jobs/op and op ms before and after, and the call sites keyed by
+`Class.method` alone, so a site keeps its name when an edit moves its line.
+
 Usage:
     python3 tools/trace_ops.py .bench_run/catalog_cycle-s12-t1/records.jsonl
     python3 tools/trace_ops.py --markdown RECORDS > table.md
+    python3 tools/trace_ops.py --diff BEFORE AFTER [--markdown]
 """
 import argparse
 import collections
@@ -22,22 +27,30 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
 import metrics  # noqa: E402
 
 
-def short_site(site):
+def site_key(site):
     """`graft.sources.PartitionedCowTable.commit(PartitionedCowTable.scala:893)`
-    -> `PartitionedCowTable.commit:893`."""
+    -> `PartitionedCowTable.commit`."""
     if not site:
         return "(no graft frame)"
     cls, meth = site.split("(")[0].split(".")[-2:]
     # closures print as `$anonfun$<method>$<n>`: name the method
     if meth.startswith("$anonfun$"):
         meth = meth.split("$")[2]
+    return f"{cls.rstrip('$')}.{meth}"
+
+
+def short_site(site):
+    """`site_key` plus the line: `PartitionedCowTable.commit:893`."""
+    if not site:
+        return site_key(site)
     line = site.rsplit(":", 1)[-1].rstrip(")") if ":" in site else "?"
-    return f"{cls.rstrip('$')}.{meth}:{line}"
+    return f"{site_key(site)}:{line}"
 
 
-def op_table(run):
+def op_table(run, site_name=short_site):
     """[(kind, n_ops, jobs, job_ms, op_ms, max_tasks, [(site, jobs/op)])]
-    over the traced timed ops, in first-seen order."""
+    over the traced timed ops, in first-seen order; `site_name` names a
+    job's call site."""
     tasks_of = collections.defaultdict(int)
     for s in run.stages:
         tasks_of[s["job"]] = max(tasks_of[s["job"]], s["tasks"])
@@ -51,7 +64,7 @@ def op_table(run):
     rows = []
     for kind, ops in by_kind.items():
         per = [jobs_of[o["op"]] for o in ops]
-        sites = collections.Counter(short_site(j["site"]) for js in per for j in js)
+        sites = collections.Counter(site_name(j["site"]) for js in per for j in js)
         rows.append((
             kind, len(ops),
             statistics.median(len(js) for js in per),
@@ -63,12 +76,44 @@ def op_table(run):
     return rows
 
 
+def diff_rows(before, after):
+    """Rows of the side-by-side table of two `op_table`s keyed by
+    `site_key`: every op kind of either run, the before run's order
+    first."""
+    b = {r[0]: r for r in before}
+    a = {r[0]: r for r in after}
+    kinds = [r[0] for r in before] + [r[0] for r in after if r[0] not in b]
+    lines = []
+    for k in kinds:
+        rb, ra = b.get(k), a.get(k)
+        sb = dict(rb[6]) if rb else {}
+        sa = dict(ra[6]) if ra else {}
+        order = list(sb) + [s for s in sa if s not in sb]
+        site_txt = ", ".join(f"{s} {sb.get(s, 0):g}→{sa.get(s, 0):g}" for s in order)
+        ratio = f"{ra[4] / rb[4]:.2f}" if rb and ra and rb[4] > 0 else "-"
+        lines.append([k,
+                      f"{rb[2]:g}" if rb else "-", f"{ra[2]:g}" if ra else "-",
+                      f"{rb[4]:.0f}" if rb else "-", f"{ra[4]:.0f}" if ra else "-",
+                      ratio, site_txt])
+    return lines
+
+
+DIFF_HEAD = ["op", "jobs/op before", "jobs/op after", "op ms before",
+             "op ms after", "ms after/before", "call sites (jobs/op before→after)"]
+
+
 def render(rows, markdown):
     head = ["op", "ops", "jobs/op", "job ms/op", "op ms", "max tasks", "call sites (jobs/op)"]
     lines = []
     for kind, n, jobs, jms, oms, mt, sites in rows:
         site_txt = ", ".join(f"{s} ×{c:g}" for s, c in sites)
         lines.append([kind, str(n), f"{jobs:g}", f"{jms:.0f}", f"{oms:.0f}", str(mt), site_txt])
+    return layout(head, lines, markdown)
+
+
+def layout(head, lines, markdown):
+    """`lines` under `head` as a Markdown table or aligned columns, the
+    last column unpadded."""
     if markdown:
         out = ["| " + " | ".join(head) + " |", "|" + "---|" * len(head)]
         out += ["| " + " | ".join(c.replace("|", "\\|") for c in l) + " |" for l in lines]
@@ -82,13 +127,24 @@ def render(rows, markdown):
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("records", help="records.jsonl of a --trace 1 run")
+    ap.add_argument("records", nargs="?", help="records.jsonl of a --trace 1 run")
+    ap.add_argument("--diff", nargs=2, metavar=("BEFORE", "AFTER"),
+                    help="two records.jsonl files to print side by side")
     ap.add_argument("--markdown", action="store_true", help="print a Markdown table")
     a = ap.parse_args(argv)
-    rows = op_table(metrics.Run(metrics.load(a.records)))
-    if not rows:
-        sys.exit("no traced ops in " + a.records)
-    print(render(rows, a.markdown))
+    if (a.records is None) == (a.diff is None):
+        ap.error("give one RECORDS file, or --diff BEFORE AFTER")
+    tables = []
+    for path in a.diff or [a.records]:
+        rows = op_table(metrics.Run(metrics.load(path)),
+                        site_key if a.diff else short_site)
+        if not rows:
+            sys.exit("no traced ops in " + path)
+        tables.append(rows)
+    if a.diff:
+        print(layout(DIFF_HEAD, diff_rows(*tables), a.markdown))
+    else:
+        print(render(tables[0], a.markdown))
 
 
 if __name__ == "__main__":
