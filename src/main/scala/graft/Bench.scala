@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.Json
 object Bench {
   /** What to publish for one query given its suite (median, min) and
     * steady-state reference → (published median, published min,
@@ -48,21 +48,6 @@ object Bench {
     math.min(0.15 * budget,
       ests.filter(_ > 1.0).sorted.takeRight(8).map(_ * 3).sum)
 
-  /** Which of `all` runs in this sitting given the SKIP / ONLY prefix
-    * lists → (run, skipped). A name runs iff it matches some ONLY
-    * prefix (when ONLY is set) and matches no SKIP prefix; SKIP wins
-    * on conflict. Pure so BenchSpec pins the complement property:
-    * a board split into (SKIP=S) and (ONLY=S) sittings covers every
-    * query exactly once. Order of `all` is preserved in both outputs.
-    */
-  private[graft] def selectNames(all: Seq[String], skip: Set[String],
-                                 only: Option[Set[String]])
-      : (Seq[String], Seq[String]) = {
-    val skipped = all.filter(n => skip.exists(n.startsWith) ||
-      only.exists(sel => !sel.exists(n.startsWith)))
-    (all.filterNot(skipped.contains), skipped)
-  }
-
   /** One bench_progress.jsonl row — the incremental artifact's unit
     * (r13 verdict item 2: a hung query must never erase a sitting's
     * completed measurements, so every row lands on disk the moment
@@ -73,61 +58,42 @@ object Bench {
                                  min: Double, reps: Int,
                                  elapsed: Double,
                                  failure: Option[String]): String =
-    s"""{"q":"$name","median":$median,"min":$min""" +
-      s""","reps":$reps,"elapsed":$elapsed""" +
-      failure.map(f => s""","failed":"${f.replace("\\", "\\\\")
-        .replace("\"", "\\\"").replaceAll("[\\n\\r\\t]", " ")}"""")
-        .getOrElse("") + "}"
+    Json.line(Seq("q" -> name, "median" -> median, "min" -> min,
+      "reps" -> reps, "elapsed" -> elapsed) ++
+      failure.map(f => "failed" -> oneLine(f)): _*)
 
-  /** Parse a {"name":number,...} JSON object body found after `key`
-    * in `txt` (the artifact's flat maps need no real JSON parser).
-    */
-  private def parseMap(txt: String, key: String): Map[String, Double] = {
-    val sStart = txt.indexOf("\"" + key + "\":")
-    if (sStart < 0) return Map.empty
-    val body = txt.substring(txt.indexOf('{', sStart) + 1,
-      txt.indexOf('}', sStart))
-    "\"([^\"]+)\":(-?[0-9.eE+]+)".r.findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
+  /** A failure message on one line: the artifacts are read line-wise. */
+  private def oneLine(msg: String): String = msg.replaceAll("[\\n\\r\\t]", " ")
 
-  /** (suite medians, solo minima) from the previous round's artifact.
-    * Prefer the committed bench_full.json (complete — the driver's
-    * BENCH_r*.json keeps only ~2 KB of stdout tail, which truncated
-    * the round-8 maps); fall back to the newest BENCH_r*.json with
-    * the driver's quote-escaping undone. Read BEFORE this round's
-    * bench_full.json write, so the file still holds last round's
-    * ledger. The medians seed the per-query cost ESTIMATES that the
-    * wall budget plans with; the solo map is re-emitted as
-    * `solo_prev` so a phantom regression (box contention vs plan
-    * change) is visible in the artifact itself.
+  /** The sitting's one JSON line, headline metric LAST: log captures
+    * keep the tail of long output, and with 250+ queries the per-query
+    * map alone exceeds 2000 chars — a leading "value" would be
+    * truncated away. `published` is (name, (median, min)) in board
+    * order; the headline sums skip failed (negative) rows. The sum of
+    * per-query minima is the cost of the plan; the median is the cost
+    * of the box that day. Both are reported.
     */
-  private def prevMaps(cwd: String = ".")
-      : (Map[String, Double], Map[String, Double]) = {
-    val full = new java.io.File(cwd, "bench_full.json")
-    if (full.exists()) {
-      try {
-        val txt = java.nio.file.Files.readString(full.toPath)
-        val qs = parseMap(txt, "queries")
-        val solo = parseMap(txt, "solo")
-        if (qs.nonEmpty || solo.nonEmpty) return (qs, solo)
-      } catch { case _: Throwable => }
-    }
-    val files = Option(new java.io.File(cwd).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-    if (files.isEmpty) return (Map.empty, Map.empty)
-    val latest = files.maxBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
-    try {
-      val txt = java.nio.file.Files.readString(latest.toPath)
-        .replace("\\\"", "\"")
-      (parseMap(txt, "queries"), parseMap(txt, "solo"))
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
-  }
+  private[graft] def resultLine(published: Seq[(String, (Double, Double))],
+      solo: Seq[(String, Double)], soloPrev: Seq[(String, Double)],
+      soloSkipped: Seq[String], soloReserveSec: Double,
+      contended: Seq[(String, Double)], suiteSlow: Seq[(String, Double)],
+      failed: Seq[(String, String)], skipped: Seq[String], sf: String,
+      budget: Double, wall: Double, degraded: Int): String =
+    Json.line("queries" -> Json.obj(published.map { case (k, (med, _)) =>
+        k -> med }),
+      "solo" -> Json.obj(solo), "solo_prev" -> Json.obj(soloPrev),
+      "solo_skipped" -> Json.arr(soloSkipped),
+      "solo_reserve_sec" -> soloReserveSec,
+      "contended" -> Json.obj(contended), "suite_slow" -> Json.obj(suiteSlow),
+      "failed" -> Json.obj(failed.map { case (k, v) => k -> oneLine(v) }),
+      "skipped" -> Json.arr(skipped), "sf" -> sf, "budget_sec" -> budget,
+      "wall_sec" -> wall, "degraded_reps" -> degraded,
+      "value_min_sum" -> published.map(_._2._2).filter(_ >= 0).sum,
+      "metric" -> "total", "value" -> published.map(_._2._1).filter(_ >= 0).sum,
+      "unit" -> "sec")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Wall budget for the WHOLE run (suite + solo), in seconds. The
     // round-9 driver bench timed out (rc=124) running a flat 5 reps
     // over 253 queries plus an uncapped solo ledger; a budget that
@@ -145,27 +111,15 @@ object Bench {
     // skipped names ship in the artifact's `skipped` list, so a
     // sitting that excluded anything is self-describing.
     val skip: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
+      .flatMap(Harness.prefixes).getOrElse(Set.empty)
     // Dev-sitting ONLY list (comma-separated name prefixes): the dual
     // of SKIP, for the complement sittings — e.g. re-measuring exactly
     // the 81 queries a bounded board excluded without enumerating the
     // other 213 as skips. A query runs iff it matches ONLY (when set)
     // and does not match SKIP; everything not run ships in `skipped`.
     val onlySel: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a serialization failure must FAIL THE TASK, not hang the
-      // stage: SerializationDebugger crashes on JDK17 module access
-      // (ExceptionInInitializerError) and killed the r13 sf10 sitting
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .flatMap(Harness.prefixes)
+    val spark = Harness.session()
     // Neutral warmup: first job in a fresh session pays ~4s of codegen/
     // reader initialization that would otherwise be attributed to
     // whichever query happens to run first.
@@ -176,7 +130,12 @@ object Bench {
       if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
-    val (prevMed, prevSolo) = prevMaps()
+    // Read BEFORE this round's bench_full.json write, so the file still
+    // holds last round's ledger. The medians seed the per-query cost
+    // ESTIMATES that the wall budget plans with; the solo map is
+    // re-emitted as `solo_prev` so a phantom regression (box contention
+    // vs plan change) is visible in the artifact itself.
+    val (prevMed, prevSolo) = Harness.prevBoard()
     // Cost estimate per query: last round's suite median, else its
     // solo number, else 2 s. The never-seen default is deliberately
     // PESSIMISTIC: round 11's first sitting estimated 5 new queries
@@ -195,7 +154,7 @@ object Bench {
     def tier(e: Double): Int =
       if (e < 1.0) 5 else if (e < 5.0) 3 else 2
     val all = SparkEntry.queries.keys.toSeq.sorted
-    val (names, skipped) = Bench.selectNames(all, skip, onlySel)
+    val (names, skipped) = Harness.selectNames(all, skip, onlySel)
     val wall0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wall0) / 1e9
     // Budget invariant: before query i runs, reserve one rep's
@@ -302,7 +261,7 @@ object Bench {
           } catch { case _: Throwable => None }
         }
         val v = if (times.isEmpty) -1.0 else times.min
-        logProgress(s"""{"q":"$name","solo":$v,"elapsed":${elapsed()}}""")
+        logProgress(Json.line("q" -> name, "solo" -> v, "elapsed" -> elapsed()))
         Some(name -> v)
       }
     }
@@ -337,29 +296,10 @@ object Bench {
         case (pm, pmin, false) => name -> ((pm, pmin))
       }
     }
-    def js(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = js(published.map { case (k, (med, _)) => k -> med })
-    val soloJs = js(solo)
-    val soloPrevJs = js(solo.flatMap { case (k, _) =>
-      prevSolo.get(k).map(k -> _) })
-    val contendedJs = js(contended.toSeq)
-    val suiteSlowJs = js(suiteSlow.toSeq)
-    val failedJs = failures.map { case (k, v) =>
-      s"\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\n\\r\\t]", " ") + "\"" }
-      .mkString("{", ",", "}")
-    val total = published.map(_._2._1).filter(_ >= 0).sum
-    // Sum of per-query minima: the min is the cost of the plan; the
-    // median is the cost of the box that day. Both are reported.
-    val totalMin = published.map(_._2._2).filter(_ >= 0).sum
-    // One JSON line, headline metric LAST: log captures keep the tail
-    // of long output, and with 250+ queries the per-query map alone
-    // exceeds 2000 chars — a leading "value" would be truncated away.
-    val skippedJs = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val soloSkippedJs = soloSkipped.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val line = s"""{"queries":$qs,"solo":$soloJs,"solo_prev":$soloPrevJs,"solo_skipped":$soloSkippedJs,"solo_reserve_sec":$soloReserveSec,"contended":$contendedJs,"suite_slow":$suiteSlowJs,"failed":$failedJs,"skipped":$skippedJs,"sf":"$sfDir","budget_sec":$budget,"wall_sec":${elapsed()},"degraded_reps":$degraded,"value_min_sum":$totalMin,"metric":"total","value":$total,"unit":"sec"}"""
+    val line = resultLine(published, solo,
+      solo.flatMap { case (k, _) => prevSolo.get(k).map(k -> _) },
+      soloSkipped.toSeq, soloReserveSec, contended.toSeq, suiteSlow.toSeq,
+      failures.toSeq, skipped, sfDir, budget, elapsed(), degraded)
     println(line)
     // Persist the COMPLETE line to a file the driver copies whole —
     // round-over-round comparisons should not depend on what survives

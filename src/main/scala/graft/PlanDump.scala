@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump `.explain("formatted")` for named queries to files —
   * the optimization rounds' plan evidence (plans/r14/<q>_before|after.txt).
   * Not part of the driver contract; never run by the driver.
@@ -13,23 +11,13 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, sel) = args.take(4)
-    val prefixes = sel.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.exists(n.startsWith))
-    names.foreach { name =>
+    val queries = SparkEntry.queries
+    Harness.selectNames(queries.keys.toSeq.sorted, Set.empty,
+        Harness.prefixes(sel))._1.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
+        val plan = queries(name)(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -19,9 +21,32 @@ object Tables {
     * operator shape, not the scratch disk.
     */
   def scratchBase: String =
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm"
+    if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
     else System.getProperty("java.io.tmpdir")
+
+  /** The one owner of query scratch: `graft_<tag>_<appId>` under
+    * [[scratchBase]], plus a fresh UUID leaf when `fresh` (a root
+    * reused across reps would accumulate table versions, or make a
+    * stream checkpoint see "no new data"). Every per-app dir handed
+    * out is walk-deleted at JVM exit and never before: lazily returned
+    * results and the stage cache read their roots across reps.
+    */
+  def scratchDir(s: SparkSession, tag: String, fresh: Boolean = false): String = {
+    val root = Paths.get(scratchBase, s"graft_${tag}_${s.sparkContext.applicationId}")
+    scratchRoots.synchronized(scratchRoots += root)
+    if (fresh) root.resolve(java.util.UUID.randomUUID().toString).toString
+    else root.toString
+  }
+
+  private[graft] lazy val scratchRoots = {
+    val roots = scala.collection.mutable.LinkedHashSet.empty[Path]
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      roots.synchronized(roots.toList).foreach { p =>
+        try graft.sources.CowTable.walkDelete(p)
+        catch { case _: java.io.IOException => }
+      }))
+    roots
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, s"$dir/$name.parquet")

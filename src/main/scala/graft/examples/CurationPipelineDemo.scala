@@ -1,9 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** WORKED EXAMPLE: the LLM-training-data curation pipeline end-to-end,
   * chained from the same driver-gated operators a user would call one
@@ -35,14 +35,7 @@ object CurationPipelineDemo {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def q(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
     def one(df: DataFrame): org.apache.spark.sql.Row = df.collect()(0)

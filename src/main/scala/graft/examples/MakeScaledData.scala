@@ -1,7 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Dev tool: materialize an approximate sf1 dataset by replicating the
   * driver's sf0.1 tables with key offsets — used ONCE per round to
@@ -70,13 +72,8 @@ object MakeScaledData {
     val unknown = modes -- Set("dilate-time", "organic-vocab")
     require(unknown.isEmpty, s"unknown modes: ${unknown.mkString(",")} " +
       "(dilate-time | organic-vocab)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val OFF = 10000000L
     def load(name: String): DataFrame =

@@ -138,7 +138,8 @@ object ScaleOps {
     * duplicate GROUPS survive (transitive closure) even though
     * intra-bucket non-representative pairs are not emitted. Pick
     * `bucketCap` above the corpus's organic bucket sizes so the guard
-    * only fires on pathology (measure with `graft.examples.LshStats`).
+    * only fires on pathology (measure organic sizes with
+    * [[starReducedBuckets]] at `bucketCap = 0`).
     *
     * Bucket sizes come from a partial-aggregated groupBy joined back
     * (AQE broadcasts the small side) — deliberately NOT a window over

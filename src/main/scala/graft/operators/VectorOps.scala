@@ -190,17 +190,6 @@ object VectorOps {
     kmeansFit(train, k, iters)
   }
 
-  /** The IVF probe pipeline (q35's shape) as one reusable operator:
-    * assign every vector to its nearest centroid (broadcast + argmax,
-    * ties to the smaller cid), probe the `nprobe` clusters nearest the
-    * query vector, rank surviving candidates by exact cosine.
-    * APPROXIMATE unless nprobe = centroid count — on corpora without
-    * cluster structure the measured recall@10 plateaus below 1.0 at
-    * any partial nprobe (VectorSpec pins 9/10 on the test corpus);
-    * exact per-vector NN belongs to [[exactNnPerVector]]. Shared by
-    * the spec and the IvfProbeMeasure diagnostic so the pinned
-    * behavior and the measured sweep can never drift apart.
-    */
   /** Nearest-centroid assignment — the IVF/SemDeDup block key: one
     * broadcast of the centroid table, argmax cosine per vector,
     * smaller-cid tie-break. The argmax compares the 6dp-ROUNDED
@@ -219,6 +208,17 @@ object VectorOps {
       .agg(max_by(col("cid"), struct(col("cc"), -col("cid"))).as("cluster"),
         first(col("v")).as("v"))
 
+  /** The IVF probe pipeline (q35's shape) as one reusable operator:
+    * assign every vector to its nearest centroid (broadcast + argmax,
+    * ties to the smaller cid), probe the `nprobe` clusters nearest the
+    * query vector, rank surviving candidates by exact cosine.
+    * APPROXIMATE unless nprobe = centroid count — on corpora without
+    * cluster structure the measured recall@10 plateaus below 1.0 at
+    * any partial nprobe (VectorSpec pins 9/10 on the test corpus);
+    * exact per-vector NN belongs to [[exactNnPerVector]]. Shared by
+    * q35 and the spec, so the gated query and the pinned recall sweep
+    * can never drift apart.
+    */
   def ivfProbeTopK(e: DataFrame, cents: DataFrame, queryVecId: Long,
                    nprobe: Int, k: Int): DataFrame = {
     val q = e.filter(col("vec_id") === queryVecId).select(col("v").as("qv"))

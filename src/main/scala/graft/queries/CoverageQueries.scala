@@ -247,8 +247,7 @@ object CoverageQueries {
       // one scratch dir per Spark application (not per call): the export
       // is mode=overwrite, so repeated bench reps reuse it instead of
       // leaking a fresh temp dir + 5k JSON files into /tmp every run
-      val tmp =
-        s"${Tables.scratchBase}/graft_q44_${s.sparkContext.applicationId}/docs"
+      val tmp = s"${Tables.scratchDir(s, "q44")}/docs"
       graft.sources.ExportImport.exportJson(src, tmp)
       graft.sources.ExportImport.importJson(s, tmp, src.schema)
         .groupBy("lang")
@@ -268,8 +267,7 @@ object CoverageQueries {
     // query is deterministic under repetition; versions accumulate in
     // the per-application scratch dir by CoW design.)
     "q57_cow_upsert_roundtrip" -> { (s, dir) =>
-      val root =
-        s"${Tables.scratchBase}/graft_q57_${s.sparkContext.applicationId}/tbl"
+      val root = s"${Tables.scratchDir(s, "q57")}/tbl"
       val src = t(s, dir, "orders").filter(col("o_orderkey") <= 500)
         .select(col("o_orderkey").as("PID"),
           col("o_orderstatus").as("status"),
@@ -306,9 +304,7 @@ object CoverageQueries {
     "q58_step_runner_state" -> { (s, dir) =>
       // fresh roots per CALL: the audit log is append-only by design,
       // so reusing a root across bench reps would accumulate entries
-      val uid = java.util.UUID.randomUUID().toString
-      val root =
-        s"${Tables.scratchBase}/graft_q58_${s.sparkContext.applicationId}/$uid"
+      val root = Tables.scratchDir(s, "q58", fresh = true)
       val src = t(s, dir, "orders").filter(col("o_orderkey") <= 500)
         .select(col("o_orderkey").as("PID"),
           to_date(col("o_orderdate")).as("Date_Acquired"),
@@ -541,8 +537,7 @@ object CoverageQueries {
     // path had to touch. Money stays integer (cents) end to end —
     // a double sum would ride summation order across engines.
     "q130_incremental_agg" -> { (s, dir) =>
-      val root =
-        s"${Tables.scratchBase}/graft_q130_${s.sparkContext.applicationId}/tbl"
+      val root = s"${Tables.scratchDir(s, "q130")}/tbl"
       val ev = t(s, dir, "events").select(
         col("event_id"), col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
@@ -586,8 +581,7 @@ object CoverageQueries {
     // the hash. This is the audit/debug/reproducibility read path:
     // "what did the table say when yesterday's job ran".
     "q131_time_travel" -> { (s, dir) =>
-      val root =
-        s"${Tables.scratchBase}/graft_q131_${s.sparkContext.applicationId}/tbl"
+      val root = s"${Tables.scratchDir(s, "q131")}/tbl"
       val ev = t(s, dir, "events").select(
         col("event_id"), col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
@@ -1504,8 +1498,7 @@ object CoverageQueries {
     // gates the reader semantics those build on.)
     "q163_schema_evolution" -> { (s, dir) =>
       val docs = t(s, dir, "documents")
-      val base =
-        s"${Tables.scratchBase}/graft_q163_${s.sparkContext.applicationId}"
+      val base = Tables.scratchDir(s, "q163")
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text", "source")
         .write.mode("overwrite").parquet(s"$base/gen1")
@@ -2838,8 +2831,7 @@ object CoverageQueries {
     // true, so a compaction that fails to reduce files fails the
     // round's gate, not just a spec.
     "q209_compaction" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q209_" +
-        s"${s.sparkContext.applicationId}/tbl"
+      val root = s"${Tables.scratchDir(s, "q209")}/tbl"
       val ev = t(s, dir, "events")
         .select("event_id", "user_id", "event_type")
       val tbl = new graft.sources.CowTable(root, s)
@@ -3069,9 +3061,7 @@ object CoverageQueries {
     // second step rewrote), as does the version count — three commits,
     // exactly. Oracle = the same end state closed-form from orders.
     "q215_cow_step_interleave" -> { (s, dir) =>
-      val uid = java.util.UUID.randomUUID().toString
-      val root =
-        s"${Tables.scratchBase}/graft_q215_${s.sparkContext.applicationId}/$uid"
+      val root = Tables.scratchDir(s, "q215", fresh = true)
       val src = t(s, dir, "orders").filter(col("o_orderkey") <= 400)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -3186,9 +3176,7 @@ object CoverageQueries {
     // to the closed-form merge result; the version count (exactly 2:
     // create + merge) and the manifest-diff CDC row count ride along.
     "q218_cdc_merge_apply" -> { (s, dir) =>
-      val uid = java.util.UUID.randomUUID().toString
-      val root =
-        s"${Tables.scratchBase}/graft_q218_${s.sparkContext.applicationId}/$uid"
+      val root = Tables.scratchDir(s, "q218", fresh = true)
       val src = t(s, dir, "orders").filter(col("o_orderkey") <= 600)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -3400,9 +3388,7 @@ object CoverageQueries {
     // the pair AT each snapshot; the oracle computes both joined
     // states closed-form.
     "q226_snapshot_consistent_read" -> { (s, dir) =>
-      val uid = java.util.UUID.randomUUID().toString
-      val root =
-        s"${Tables.scratchBase}/graft_q226_${s.sparkContext.applicationId}/$uid"
+      val root = Tables.scratchDir(s, "q226", fresh = true)
       val o = t(s, dir, "orders").filter(col("o_orderkey") <= 400)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -3626,8 +3612,7 @@ object CoverageQueries {
     // legacy dirs remain (data-derived: months whose slice holds no
     // upserted key).
     "q241_partition_evolution" -> { (s, dir) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_pevo").toString
+      val root = Tables.scratchDir(s, "q241", fresh = true)
       def slice(lo: Long, hi: Long) = t(s, dir, "orders")
         .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
         .select(col("o_orderkey").as("pid"),
@@ -3662,8 +3647,7 @@ object CoverageQueries {
     // layouts. Gate = final per-priority content (must equal the
     // source exactly) + the derived I/U/D counts.
     "q242_merge_sync" -> { (s, dir) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_msync").toString
+      val root = Tables.scratchDir(s, "q242", fresh = true)
       def rows(hi: Long) = t(s, dir, "orders")
         .filter(col("o_orderkey") < hi)
         .select(col("o_orderkey").as("pid"),
@@ -3699,8 +3683,7 @@ object CoverageQueries {
     // default; time travel to v0 still has the original shape. The
     // gate hashes the final per-state content.
     "q251_schema_evolution_cow" -> { (s, dir) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sevo").toString
+      val root = Tables.scratchDir(s, "q251", fresh = true)
       def slice(lo: Long, hi: Long) = t(s, dir, "orders")
         .filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
         .select(col("o_orderkey").as("pid"),
@@ -3903,9 +3886,7 @@ object CoverageQueries {
     // reclaimed (5 = a's v0,v1,v2-orphan + b's v0,v1-orphan; the
     // restore commits are the survivors).
     "q254_snapshot_crash_recovery" -> { (s, dir) =>
-      val uid = java.util.UUID.randomUUID().toString
-      val root =
-        s"${Tables.scratchBase}/graft_q254_${s.sparkContext.applicationId}/$uid"
+      val root = Tables.scratchDir(s, "q254", fresh = true)
       val o = t(s, dir, "orders").filter(col("o_orderkey") <= 200)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4111,8 +4092,7 @@ object CoverageQueries {
     // about); the oracle derives the ledger from per-month datekey
     // extents — data, not engine internals.
     "q262_zone_map_pruning" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q262_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q262", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4146,8 +4126,7 @@ object CoverageQueries {
     // (the q200 referential-integrity audit — must be zero), and both
     // tables' version numbers (exactly one commit each).
     "q264_cascade_delete" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q264_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q264", fresh = true)
       val par = t(s, dir, "orders").filter(col("o_orderkey") <= 500)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4192,8 +4171,7 @@ object CoverageQueries {
     // users' original sum bit-for-bit, shredded rows count, and the
     // key table's version shows exactly one shred commit.
     "q267_crypto_shred" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q267_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q267", fresh = true)
       def keyOf(c: Column): Column =
         conv(substring(md5(concat_ws(":", lit("key"), c)), 1, 15),
           16, 10).cast("long")
@@ -4259,8 +4237,7 @@ object CoverageQueries {
     // the vector file (gated: zero live vectors at the end, content
     // unchanged by compaction).
     "q271_deletion_vectors" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q271_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q271", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4300,8 +4277,7 @@ object CoverageQueries {
     // (readVersion raises, emitted as a flag) while both tags read
     // back their exact states.
     "q272_version_tags" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q272_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q272", fresh = true)
       val o = t(s, dir, "orders").filter(col("o_orderkey") <= 400)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4334,8 +4310,7 @@ object CoverageQueries {
     // the report counts exactly them, vacuum reclaims exactly them,
     // and the table's rows never change.
     "q273_orphan_audit" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q273_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q273", fresh = true)
       val o = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("PID"),
           date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4376,8 +4351,7 @@ object CoverageQueries {
     // month and emits the survivor aggregate, the deleted count, the
     // CDC month ledger, and both plan flags.
     "q275_dv_scoping" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q275_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q275", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4424,8 +4398,7 @@ object CoverageQueries {
     // scan actually listed); the oracle derives the ledgers from
     // per-month data extents — data, not engine internals.
     "q276_auto_pruning" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q276_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q276", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4462,8 +4435,7 @@ object CoverageQueries {
     // Spark string orders provably agree). Ledger + answer gated; the
     // oracle derives the ledger from per-month string extents.
     "q280_string_zone_maps" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q280_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q280", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4496,8 +4468,7 @@ object CoverageQueries {
     // conservative). Both ledgers + answers gated; the oracle
     // derives the ledgers from per-month data extents.
     "q281_typed_zone_maps" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q281_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q281", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4535,8 +4506,7 @@ object CoverageQueries {
     // synthetic footprint grid); the oracle derives the ledger from
     // per-cell coordinate extents — data, not engine internals.
     "q282_bbox_zone_maps" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q282_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q282", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         round(col("o_totalprice") * 100).cast("long").as("cents"),
@@ -4574,8 +4544,7 @@ object CoverageQueries {
     // surface as a ledger mismatch: filters are sized at fpp 1e-6,
     // and the gate is deterministic for fixed data.
     "q284_bloom_point_lookup" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q284_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q284", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4612,8 +4581,7 @@ object CoverageQueries {
     // (min-max rank → magic-number bit spread → prefix), no sort, no
     // UDF — the oracle re-derives every cell bit-for-bit in SQL.
     "q285_zorder_clustering" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q285_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q285", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4663,8 +4631,7 @@ object CoverageQueries {
     // from the scripted mutations in the oracle, so both the ANSWER
     // and the INCREMENTALITY are checked.
     "q286_incremental_rollup" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q286_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q286", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4704,8 +4671,7 @@ object CoverageQueries {
     // (zero legacy dirs) are gated; the oracle re-derives the cells
     // bit-for-bit and both ledgers from per-dir coordinate extents.
     "q289_zorder_relayout" -> { (s, dir) =>
-      val root = s"${Tables.scratchBase}/graft_q289_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q289", fresh = true)
       val o = t(s, dir, "orders").select(
         col("o_orderkey").as("PID"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
@@ -4748,8 +4714,7 @@ object CoverageQueries {
     // replays closed-form in the oracle from range(N).
     "q292_paged_catalog_ingest" -> { (s, dir) =>
       val n = t(s, dir, "orders").count().toInt
-      val root = s"${Tables.scratchBase}/graft_q292_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q292", fresh = true)
       val table = new graft.sources.CowTable(s"$root/granules", s)
       val until = new java.sql.Timestamp(
         CmrFormulaFetcher.baseMs + 100000L * 3600000L)
@@ -4796,8 +4761,7 @@ object CoverageQueries {
     // closed-form — the refresh ledger is part of the ANSWER.
     "q293_incremental_inverted_index" -> { (s, dir) =>
       implicit val sp: SparkSession = s
-      val root = s"${Tables.scratchBase}/graft_q293_" +
-        s"${s.sparkContext.applicationId}/${java.util.UUID.randomUUID()}"
+      val root = Tables.scratchDir(s, "q293", fresh = true)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source").as("src"), col("text"))
       val base = graft.sources.PartitionedCowTable(s"$root/base", "src")

@@ -225,8 +225,7 @@ object GeoQueries {
     // ring fails the hash, not just a spec.
     "q56_geojson_roundtrip" -> { (s, dir) =>
       val fp = footprints(s, dir)
-      val path = s"${Tables.scratchBase}/graft_q56_" +
-        s"${s.sparkContext.applicationId}/fp.geojson"
+      val path = s"${Tables.scratchDir(s, "q56")}/fp.geojson"
       graft.sources.ExportImport.exportGeoJson(fp, path,
         props = Seq("c_custkey"),
         north = "north", south = "south", east = "east", west = "west")
@@ -256,8 +255,7 @@ object GeoQueries {
     "q101_geojson_sharded" -> { (s, dir) =>
       import org.apache.spark.sql.types._
       val fp = footprints(s, dir)
-      val out = s"${Tables.scratchBase}/graft_q101_" +
-        s"${s.sparkContext.applicationId}/export"
+      val out = s"${Tables.scratchDir(s, "q101")}/export"
       graft.sources.ExportImport.exportGeoJsonSharded(fp, out,
         props = Seq("c_custkey"),
         north = "north", south = "south", east = "east", west = "west")
@@ -282,8 +280,7 @@ object GeoQueries {
     "q294_geopackage_roundtrip" -> { (s, dir) =>
       import s.implicits._
       val fp = footprints(s, dir)
-      val path = s"${Tables.scratchBase}/graft_q294_" +
-        s"${s.sparkContext.applicationId}/fp.gpkg"
+      val path = s"${Tables.scratchDir(s, "q294")}/fp.gpkg"
       graft.sources.GeoPackage.exportGeoPackage(fp, path, "scenes",
         props = Seq("c_custkey"),
         north = "north", south = "south", east = "east", west = "west")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress,
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.sources.CowTable
 import graft.operators.ScaleOps
 import graft.streaming.StreamOps
 
@@ -97,7 +98,7 @@ object StreamingQueries {
     * shared session's `spark.sql.shuffle.partitions` around the drain
     * — a concurrent query on the same SparkSession could plan with
     * the shrunk value, and nesting would restore the inner value.
-    * Bench/Verify/Probe run one query at a time and no gate nests
+    * Bench and Verify run one query at a time and no gate nests
     * drains, so the set/restore is sound here; a concurrent caller
     * must clone the session (`s.cloneSession()`) and drain there.
     */
@@ -109,14 +110,6 @@ object StreamingQueries {
     try body
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
-
-  /** A fresh scratch root per CALL (q58's pattern): a reused
-    * checkpoint would make a re-run see "no new data" and emit
-    * nothing — bench reps must each drain the full stream.
-    */
-  private def freshBase(s: SparkSession, tag: String): String =
-    s"${Tables.scratchBase}/graft_${tag}_${s.sparkContext.applicationId}/" +
-      java.util.UUID.randomUUID().toString.take(8)
 
   /** The result sink of [[runOnce]] and [[drain]]: foreachBatch →
     * parquet at `dir`, NOT a memory sink. The memory sink collects
@@ -137,18 +130,15 @@ object StreamingQueries {
       }
 
   /** Read back the [[parquetSink]] under `base`. The returned DataFrame
-    * reads it lazily, so it must outlive the call — but a fresh root
-    * per rep means bench/verify sessions would otherwise accumulate one
-    * orphan dir per rep forever (round-6 advice), so it is reclaimed at
-    * JVM exit. A degenerate run with zero triggered batches writes no
-    * sink dir; surface the operator's (empty) result, not a read error.
+    * reads it lazily, so it must outlive the call; its fresh root is
+    * reclaimed at JVM exit ([[Tables.scratchDir]]). A degenerate run
+    * with zero triggered batches writes no sink dir; surface the
+    * operator's (empty) result, not a read error.
     */
   private def readSink(s: SparkSession, base: String,
-                       schema: StructType): DataFrame = {
-    registerDeleteOnExit(Paths.get(base))
+                       schema: StructType): DataFrame =
     if (Files.exists(Paths.get(s"$base/out"))) s.read.parquet(s"$base/out")
     else s.createDataFrame(new java.util.ArrayList[Row](), schema)
-  }
 
   /** The single-batch form (q91/q92/q94/q95): stage `input` as a file
     * stream and drain it through `build` into the [[parquetSink]] in
@@ -162,7 +152,7 @@ object StreamingQueries {
   private def runOnce(s: SparkSession, tag: String, input: DataFrame,
                       build: DataFrame => DataFrame,
                       mode: String = "append"): DataFrame = {
-    val base = freshBase(s, tag)
+    val base = Tables.scratchDir(s, tag, fresh = true)
     input.write.mode("overwrite").parquet(s"$base/in")
     val out = build(s.readStream.schema(input.schema).parquet(s"$base/in"))
     withStatePartitions(s, Seq(s"$base/in")) {
@@ -172,8 +162,8 @@ object StreamingQueries {
         .start()
         .awaitTermination()
     }
-    deleteRec(Paths.get(s"$base/in"))
-    deleteRec(Paths.get(s"$base/ckpt"))
+    CowTable.walkDelete(Paths.get(s"$base/in"))
+    CowTable.walkDelete(Paths.get(s"$base/ckpt"))
     readSink(s, base, out.schema)
   }
 
@@ -245,7 +235,7 @@ object StreamingQueries {
     }
     val progress =
       try if (sizeState) withStatePartitions(s, dirs)(run()) else run()
-      finally deleteRec(Paths.get(s"$base/ckpt"))
+      finally CowTable.walkDelete(Paths.get(s"$base/ckpt"))
     require(progress.size >= batches,
       s"drain($tag): expected >= $batches non-empty micro-batches, " +
         s"progress log shows ${progress.size} — the cross-batch " +
@@ -265,7 +255,7 @@ object StreamingQueries {
       inputs: Seq[(DataFrame, Seq[Column])], batches: Int = 3,
       mode: String = "append")(build: Seq[DataFrame] => DataFrame)
       : (DataFrame, Seq[StreamingQueryProgress]) = {
-    val base = freshBase(s, tag)
+    val base = Tables.scratchDir(s, tag, fresh = true)
     var schema = new StructType()
     val progress = drainCore(s, tag, base, inputs, batches,
         sizeState = true) { streams =>
@@ -304,12 +294,12 @@ object StreamingQueries {
   private[graft] def drainEach(s: SparkSession, tag: String,
       input: DataFrame, orderCols: Seq[Column], batches: Int = 3)(
       perBatch: (DataFrame, Long) => Unit): Int = {
-    val base = freshBase(s, tag)
+    val base = Tables.scratchDir(s, tag, fresh = true)
     val progress = drainCore(s, tag, base, Seq(input -> orderCols),
         batches, sizeState = false) { streams =>
       streams.head.writeStream.foreachBatch(perBatch)
     }
-    deleteRec(Paths.get(base))
+    CowTable.walkDelete(Paths.get(base))
     progress.size
   }
 
@@ -350,14 +340,12 @@ object StreamingQueries {
         case _ =>
       }
     }
-    val root = s"${Tables.scratchBase}/graft_stagecache_" +
-      s"${s.sparkContext.applicationId}"
+    val root = Tables.scratchDir(s, "stagecache")
     val inDir0 = s"$root/$key"
     stageSliceFiles(s, tag, s"$root/_build_$key", input, orderCols,
       batches, inSub)
     Files.move(Paths.get(s"$root/_build_$key/$inSub"), Paths.get(inDir0))
-    deleteRec(Paths.get(s"$root/_build_$key"))
-    registerDeleteOnExit(Paths.get(inDir0))
+    CowTable.walkDelete(Paths.get(s"$root/_build_$key"))
     stageCache.synchronized { stageCache(key) = inDir0 }
     inDir0
   }
@@ -405,31 +393,7 @@ object StreamingQueries {
       Files.setLastModifiedTime(target,
         java.nio.file.attribute.FileTime.fromMillis(1600000000000L + b * 60000L))
     }
-    deleteRec(Paths.get(stage))
-  }
-
-  /** Register `p` and everything under it for deletion at JVM exit
-    * (scratch reclamation for outputs that must stay readable for the
-    * rest of the session). Walk stream closed, as in [[deleteRec]].
-    */
-  private def registerDeleteOnExit(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.forEach(f => f.toFile.deleteOnExit())
-      finally walk.close()
-    }
-  }
-
-  /** Recursive delete that CLOSES its walk stream (CowTable's lesson —
-    * a leaked directory stream is an fd leak under bench reps).
-    */
-  private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    CowTable.walkDelete(Paths.get(stage))
   }
 
   /** q91/q98 shared input: dimension updates (per-user latest order
@@ -747,7 +711,7 @@ object StreamingQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
-      val root = freshBase(s, "q126")
+      val root = Tables.scratchDir(s, "q126", fresh = true)
       val table = new graft.sources.CowTable(root, s)
       drainEach(s, "q126", ev,
         orderCols = Seq(col("ts"), col("event_id"))) { (batch, _) =>
@@ -760,12 +724,10 @@ object StreamingQueries {
             col("m.event_type").as("event_type"))
         table.upsert(latest, Seq("user_id"))
       }
-      val out = table.read()
+      table.read()
         .select("user_id", "event_id", "event_type")
         .orderBy("user_id")
         .localCheckpoint()
-      registerDeleteOnExit(java.nio.file.Paths.get(root))
-      out
     },
 
     // q137's count-min sketch BUILT AS A STREAM — the proof that
@@ -924,7 +886,7 @@ object StreamingQueries {
     // steps × 3 ticks) rides as a column, so a lost append or a
     // spurious 4th tick also fails the hash.
     "q216_monitor_loop_drain" -> { (s, dir) =>
-      val root = freshBase(s, "q216")
+      val root = Tables.scratchDir(s, "q216", fresh = true)
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("PID"),
           to_date(col("o_orderdate")).as("Date_Acquired"),
@@ -962,7 +924,7 @@ object StreamingQueries {
             parallelism = 8, audit = Some(audit))
       }
       val auditRows = audit.entries().count()
-      val out = cat.scenes
+      cat.scenes
         .groupBy("Downloaded", "ARDProduct")
         .agg(count(lit(1)).as("n"),
           sum(when(col("Invalid"), 1L).otherwise(0L)).as("n_invalid"),
@@ -970,8 +932,6 @@ object StreamingQueries {
         .withColumn("audit_rows", lit(auditRows))
         .orderBy("Downloaded", "ARDProduct")
         .localCheckpoint()
-      registerDeleteOnExit(java.nio.file.Paths.get(root))
-      out
     },
 
     // Watermark LATE-DATA DROP semantics — the one streaming contract
@@ -1059,7 +1019,7 @@ object StreamingQueries {
     // (one version per applied batch — ledger rides free).
     "q287_partitioned_stream_sink" -> { (s, dir) =>
       import s.implicits._
-      val root = freshBase(s, "q287")
+      val root = Tables.scratchDir(s, "q287", fresh = true)
       val sink = new graft.sources.PartitionedCowTable(
         s"$root/sink", "month", s)
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
@@ -1087,7 +1047,7 @@ object StreamingQueries {
       val replaySkipped = if (sink.read().count() == before) 1L else 0L
       tick(base.filter(col("PID") % 10 === 0)
         .withColumn("PID", col("PID") + 100000L), 100L) // new id
-      val out = sink.read().filter(col("kind") === "d")
+      sink.read().filter(col("kind") === "d")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"),
           countDistinct("month").as("n_months"))
         .withColumn("n_batches_applied",
@@ -1095,8 +1055,6 @@ object StreamingQueries {
         .withColumn("replay_skipped", lit(replaySkipped))
         .withColumn("n_commits", lit(sink.version.toLong + 1L))
         .localCheckpoint()
-      registerDeleteOnExit(java.nio.file.Paths.get(root))
-      out
     },
 
     // END-TO-END incremental pipeline: q287's exactly-once partitioned
@@ -1111,7 +1069,7 @@ object StreamingQueries {
     // O(table)") is the measured, gated quantity.
     "q288_streaming_rollup_maintenance" -> { (s, dir) =>
       import s.implicits._
-      val root = freshBase(s, "q288")
+      val root = Tables.scratchDir(s, "q288", fresh = true)
       val sink = new graft.sources.PartitionedCowTable(
         s"$root/sink", "month", s)
       val ru = new graft.sources.IncrementalRollup(sink, s"$root/sum",
@@ -1131,18 +1089,16 @@ object StreamingQueries {
           recomputedTotal += rec
         }
       }
-      val out = ru.summary.read()
+      ru.summary.read()
         .agg(count(lit(1)).as("n_months"), sum("n").as("n_rows"),
           sum("cents").as("sum_cents"))
         .withColumn("recomputed_total", lit(recomputedTotal))
         .localCheckpoint()
-      registerDeleteOnExit(java.nio.file.Paths.get(root))
-      out
     },
 
     "q266_exactly_once_sink" -> { (s, dir) =>
       import s.implicits._
-      val root = freshBase(s, "q266")
+      val root = Tables.scratchDir(s, "q266", fresh = true)
       val sink = new graft.sources.CowTable(s"$root/sink", s)
       val base = t(s, dir, "orders").filter(col("o_orderkey") <= 300)
         .select(col("o_orderkey").as("PID"),
@@ -1167,14 +1123,12 @@ object StreamingQueries {
       val replaySkipped = if (sink.read().count() == before) 1L else 0L
       tick(base.filter(col("PID") % 10 === 0)
         .withColumn("PID", col("PID") + 100000L), 100L) // new id applies
-      val out = sink.read().filter(col("kind") === "d")
+      sink.read().filter(col("kind") === "d")
         .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
         .withColumn("n_batches_applied",
           lit(sink.read().filter(col("kind") === "b").count()))
         .withColumn("replay_skipped", lit(replaySkipped))
         .localCheckpoint()
-      registerDeleteOnExit(java.nio.file.Paths.get(root))
-      out
     },
 
     // FULL-OUTER stream-stream join — the last join mode (q165 inner,

@@ -291,12 +291,12 @@ object TextQueries {
     val rows = k / bands
     // degenerate-bucket guard (ScaleOps.bandedCandidatePairs): the cap
     // must sit above the corpus's organic bucket sizes among DISTINCT
-    // sets (LshStats measured max 2045 at sf0.1 pre-dedup; dedup only
+    // sets (max 2045 measured at sf0.1 pre-dedup; dedup only
     // shrinks buckets) so results stay identical to the unguarded
     // join and the exact-Jaccard oracle holds; a bucket beyond the
     // cap is star-reduced instead of exploding quadratically
-    // (SkewGuardSpec pins that behavior). Re-measure via LshStats
-    // when the corpus grows.
+    // (SkewGuardSpec pins that behavior). Re-measure with
+    // ScaleOps.starReducedBuckets at cap 0 when the corpus grows.
     val bucketCap = 5000
     // Degenerate-text semantics, aligned with the oracle on BOTH
     // engines: a whitespace-only doc tokenizes to [""] (split of an

@@ -101,10 +101,8 @@ class CowTable(val root: String, spark: SparkSession) extends VersionedTable {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def deleteRecursively(name: String): Unit = {
-    val p = Paths.get(root, name)
-    if (Files.exists(p)) CowTable.walkDelete(p)
-  }
+  private def deleteRecursively(name: String): Unit =
+    CowTable.walkDelete(Paths.get(root, name))
 
   /** Create or fully replace the table. */
   def overwrite(df: DataFrame): Unit = commit(df)
@@ -184,14 +182,15 @@ object CowTable {
   def apply(root: String)(implicit spark: SparkSession): CowTable =
     new CowTable(root, spark)
 
-  /** Depth-first delete, closing the walk stream (an unclosed
-    * `Files.walk` leaks a directory fd until GC — repeated
-    * commit-collision retries on a long-lived driver add up).
+  /** Depth-first delete of `p` if it exists, closing the walk stream
+    * (an unclosed `Files.walk` leaks a directory fd until GC —
+    * repeated commit-collision retries on a long-lived driver add up).
     */
-  private[sources] def walkDelete(p: java.nio.file.Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => Files.delete(f))
-    finally s.close()
-  }
+  private[graft] def walkDelete(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+      finally s.close()
+    }
 }

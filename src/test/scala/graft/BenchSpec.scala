@@ -82,21 +82,21 @@ class BenchSpec extends AnyFunSuite {
     "SKIP wins on conflict, order preserved") {
     val all = Seq("q01_a", "q02_b", "q100_c", "q10_d")
     // no filters: everything runs
-    assert(Bench.selectNames(all, Set.empty, None) ===
+    assert(Harness.selectNames(all, Set.empty, None) ===
       ((all, Seq.empty)))
     // prefix semantics: "q10" skips q100_c AND q10_d
-    assert(Bench.selectNames(all, Set("q10"), None) ===
+    assert(Harness.selectNames(all, Set("q10"), None) ===
       ((Seq("q01_a", "q02_b"), Seq("q100_c", "q10_d"))))
     // the complement sitting: ONLY the names the first one skipped —
     // together the two sittings cover every query exactly once
-    assert(Bench.selectNames(all, Set.empty, Some(Set("q10"))) ===
+    assert(Harness.selectNames(all, Set.empty, Some(Set("q10"))) ===
       ((Seq("q100_c", "q10_d"), Seq("q01_a", "q02_b"))))
     // SKIP beats ONLY when both match (a quadratic arm stays out of
     // the complement sitting even though ONLY names its family)
-    assert(Bench.selectNames(all, Set("q100"), Some(Set("q10"))) ===
+    assert(Harness.selectNames(all, Set("q100"), Some(Set("q10"))) ===
       ((Seq("q10_d"), Seq("q01_a", "q02_b", "q100_c"))))
     // empty ONLY set is "not set", not "run nothing"
-    assert(Bench.selectNames(all, Set.empty, None)._1 === all)
+    assert(Harness.selectNames(all, Set.empty, None)._1 === all)
   }
 
   test("solo-phase reservation (r14 verdict item 1): 3 reps of the 8 " +
@@ -112,5 +112,66 @@ class BenchSpec extends AnyFunSuite {
       3 * (10.0 + 20.0 + 6 * 2.0))
     // the 15% cap keeps a heavy-tailed board from starving the suite
     assert(Bench.soloReserve(Seq.fill(8)(100.0), 1500.0) === 225.0)
+  }
+
+  test("every string is escaped: a control character in a failure " +
+    "message or a quote or backslash in the sf dir keeps the progress " +
+    "row and the bench line valid JSON") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val msg = "IllegalStateException: bad \u0001 byte"
+    val row = Bench.progressRow("q01_a", -1.0, -1.0, 0, 1.5, Some(msg))
+    assert(mapper.readTree(row).get("failed").asText() === msg)
+    val sf = "/data/sf \"0.1\" \\ copy"
+    val line = Bench.resultLine(Seq("q01_a" -> ((-1.0, -1.0))), Nil, Nil,
+      Nil, 0.0, Nil, Nil, Seq("q01_a" -> msg), Nil, sf, 1500.0, 2.0, 0)
+    val n = mapper.readTree(line)
+    assert(n.get("sf").asText() === sf)
+    assert(n.get("failed").get("q01_a").asText() === msg)
+  }
+
+  /** The bench line as it was built by hand before the shared codec —
+    * the reference the codec's output must equal byte for byte.
+    */
+  private def handBuiltLine(published: Seq[(String, (Double, Double))],
+      solo: Seq[(String, Double)], soloPrev: Seq[(String, Double)],
+      soloSkipped: Seq[String], soloReserveSec: Double,
+      contended: Seq[(String, Double)], suiteSlow: Seq[(String, Double)],
+      failures: Seq[(String, String)], skipped: Seq[String], sfDir: String,
+      budget: Double, wall: Double, degraded: Int): String = {
+    def js(m: Seq[(String, Double)]): String =
+      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = js(published.map { case (k, (med, _)) => k -> med })
+    val failedJs = failures.map { case (k, v) =>
+      s"\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
+        .replaceAll("[\\n\\r\\t]", " ") + "\"" }
+      .mkString("{", ",", "}")
+    val total = published.map(_._2._1).filter(_ >= 0).sum
+    val totalMin = published.map(_._2._2).filter(_ >= 0).sum
+    val skippedJs = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val soloSkippedJs = soloSkipped.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
+    s"""{"queries":$qs,"solo":${js(solo)},"solo_prev":${js(soloPrev)},"solo_skipped":$soloSkippedJs,"solo_reserve_sec":$soloReserveSec,"contended":${js(contended)},"suite_slow":${js(suiteSlow)},"failed":$failedJs,"skipped":$skippedJs,"sf":"$sfDir","budget_sec":$budget,"wall_sec":$wall,"degraded_reps":$degraded,"value_min_sum":$totalMin,"metric":"total","value":$total,"unit":"sec"}"""
+  }
+
+  test("the codec's bench line equals the hand-built line byte for byte: " +
+    "same keys, same order, doubles as Double.toString, headline last") {
+    val published = Seq("q01_a" -> ((0.682584021, 0.61)),
+      "q02_b" -> ((-1.0, -1.0)), "q100_c" -> ((12.5, 1.0e-4)),
+      "q10_d" -> ((4.468389757000001, 3.0e7)))
+    val args = (published, Seq("q100_c" -> 1.25, "q10_d" -> -1.0),
+      Seq("q100_c" -> 2.0), Seq("q293_x"), 225.0,
+      Seq("q100_c" -> 40.0), Seq("q100_c" -> 9.5),
+      Seq("q02_b" -> "IOException: path \"a\\b\"\nline2\ttab"),
+      Seq("q9_skip", "q8_skip"), "/root/testdata/sf0.1", 1500.0, 812.3456, 3)
+    assert((Bench.resultLine _).tupled(args) ===
+      (handBuiltLine _).tupled(args))
+    val empty = (Seq.empty[(String, (Double, Double))], Nil, Nil, Nil, 0.0,
+      Nil, Nil, Nil, Nil, "sf", 1500.0, 0.5, 0)
+    assert((Bench.resultLine _).tupled(empty) ===
+      (handBuiltLine _).tupled(empty))
+    val keys = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree((Bench.resultLine _).tupled(args)).fieldNames()
+    assert(scala.jdk.CollectionConverters.IteratorHasAsScala(keys).asScala
+      .toSeq.last === "unit")
   }
 }

@@ -82,4 +82,16 @@ class TablesSpec extends SparkSpec {
       .getTimestamp(0)
     assert(mx.after(Timestamp.valueOf("2000-01-01 00:00:00")))
   }
+
+  test("scratch dirs: one per-app root per tag, fresh leaves under it, " +
+    "every root registered for the exit-time reclaim") {
+    val a = Tables.scratchDir(spark, "spec")
+    val b = Tables.scratchDir(spark, "spec", fresh = true)
+    assert(a === s"${Tables.scratchBase}/graft_spec_" +
+      spark.sparkContext.applicationId)
+    assert(java.nio.file.Paths.get(b).getParent.toString === a)
+    assert(Tables.scratchDir(spark, "spec", fresh = true) !== b)
+    assert(Tables.scratchRoots.synchronized(
+      Tables.scratchRoots.contains(java.nio.file.Paths.get(a))))
+  }
 }
