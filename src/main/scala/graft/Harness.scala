@@ -104,7 +104,7 @@ object Harness {
 
   /** (suite medians, solo minima) of the previous bench board in `cwd`.
     * Prefers the committed bench_full.json (Bench writes it whole);
-    * else the `parsed` object of the newest driver BENCH_r<N>.json;
+    * else the `parsed` object of the newest BENCH_r<N>.json board file;
     * else empty maps, which leave callers with name order and their
     * default estimates. A malformed file reads as absent, never throws.
     */
@@ -118,11 +118,11 @@ object Harness {
     def maps(n: JsonNode) = (nums(n.get("queries")), nums(n.get("solo")))
     val full = Json.read(new File(cwd, "bench_full.json")).map(maps)
       .filter { case (qs, solo) => qs.nonEmpty || solo.nonEmpty }
-    def driver = Option(new File(cwd).listFiles()).getOrElse(Array.empty)
+    def board = Option(new File(cwd).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("BENCH_r\\d+\\.json"))
       .maxByOption(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
       .flatMap(Json.read).map(_.get("parsed"))
       .filter(p => p != null && p.isObject).map(maps)
-    full.orElse(driver).getOrElse((Map.empty, Map.empty))
+    full.orElse(board).getOrElse((Map.empty, Map.empty))
   }
 }

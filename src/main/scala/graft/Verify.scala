@@ -16,8 +16,8 @@ import graft.Harness.Json
   *    failed — a broken query poisons the round's artifact visibly
   *    instead of vanishing;
   *  - queries run cheapest-first (by the previous bench board's
-  *    medians, [[Harness.prevBoard]]; name-sort fallback), so if the
-  *    driver's window ever truncates the run, only the most expensive
+  *    medians, [[Harness.prevBoard]]; name-sort fallback), so if a
+  *    time limit ever cuts the run short, only the most expensive
   *    tail is lost — and `_manifest.json` (attempted vs completed,
   *    rewritten after every query) records exactly where it stopped.
   */

@@ -184,7 +184,7 @@ object CowTable {
 
   /** Depth-first delete of `p` if it exists, closing the walk stream
     * (an unclosed `Files.walk` leaks a directory fd until GC —
-    * repeated commit-collision retries on a long-lived driver add up).
+    * repeated commit-collision retries in a long-lived JVM add up).
     */
   private[graft] def walkDelete(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {

@@ -162,7 +162,7 @@ class BenchSpec extends AnyFunSuite {
       Seq("q100_c" -> 2.0), Seq("q293_x"), 225.0,
       Seq("q100_c" -> 40.0), Seq("q100_c" -> 9.5),
       Seq("q02_b" -> "IOException: path \"a\\b\"\nline2\ttab"),
-      Seq("q9_skip", "q8_skip"), "/root/testdata/sf0.1", 1500.0, 812.3456, 3)
+      Seq("q9_skip", "q8_skip"), "/data/sf0.1", 1500.0, 812.3456, 3)
     assert((Bench.resultLine _).tupled(args) ===
       (handBuiltLine _).tupled(args))
     val empty = (Seq.empty[(String, (Double, Double))], Nil, Nil, Nil, 0.0,

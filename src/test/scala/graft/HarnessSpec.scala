@@ -28,45 +28,44 @@ class HarnessSpec extends AnyFunSuite {
     assert(Harness.prefixes(" , ") === None)
   }
 
-  private def dir(files: (String, String)*): String = {
+  /** [[Harness.prevBoard]] over a temp dir holding `files`. */
+  private def board(files: (String, String)*) = {
     val d = Files.createTempDirectory("graft-harness")
     files.foreach { case (n, body) => Files.writeString(d.resolve(n), body) }
-    d.toString
+    try Harness.prevBoard(d.toString)
+    finally graft.sources.CowTable.walkDelete(d)
   }
 
   private val none = (Map.empty[String, Double], Map.empty[String, Double])
 
-  test("previous board: bench_full.json wins over the driver files") {
-    val d = dir(
+  test("previous board: bench_full.json wins over the BENCH_r files") {
+    assert(board(
       "bench_full.json" ->
         """{"queries":{"q01":0.5,"q02":-1.0},"solo":{"q02":7.25},"value":1}""",
-      "BENCH_r15.json" -> """{"parsed":{"queries":{"q01":9.0}}}""")
-    assert(Harness.prevBoard(d) ===
+      "BENCH_r15.json" -> """{"parsed":{"queries":{"q01":9.0}}}""") ===
       ((Map("q01" -> 0.5, "q02" -> -1.0), Map("q02" -> 7.25))))
   }
 
-  test("previous board: without bench_full.json the newest driver " +
+  test("previous board: without bench_full.json the newest BENCH_r " +
     "file's parsed object is read") {
-    val d = dir(
+    assert(board(
       "BENCH_r14.json" ->
         """{"n":14,"tail":"…","parsed":{"queries":{"q01":1.0},"solo":{}}}""",
       "BENCH_r15.json" ->
         """{"n":15,"tail":"…","parsed":{"queries":{"q01":2.0},"solo":{"q09":3.0}}}""",
-      "BENCH_r15_c8.json" -> """{"parsed":{"queries":{"q01":8.0}}}""")
-    assert(Harness.prevBoard(d) === ((Map("q01" -> 2.0), Map("q09" -> 3.0))))
+      "BENCH_r15_c8.json" -> """{"parsed":{"queries":{"q01":8.0}}}""") ===
+      ((Map("q01" -> 2.0), Map("q09" -> 3.0))))
   }
 
-  test("previous board: a driver file with parsed null gives empty maps") {
-    val d = dir("BENCH_r13.json" ->
-      """{"n":13,"tail":"{\"queries\":{\"q01\":1.0}}","parsed":null}""")
-    assert(Harness.prevBoard(d) === none)
+  test("previous board: a BENCH_r file with parsed null gives empty maps") {
+    assert(board("BENCH_r13.json" ->
+      """{"n":13,"tail":"{\"queries\":{\"q01\":1.0}}","parsed":null}""") ===
+      none)
   }
 
   test("previous board: malformed files give empty maps, never throw") {
-    val d = dir("bench_full.json" -> """{"queries":{"q01":0.5""",
-      "BENCH_r15.json" -> "not json")
-    assert(Harness.prevBoard(d) === none)
-    assert(Harness.prevBoard(Files.createTempDirectory("graft-empty")
-      .toString) === none)
+    assert(board("bench_full.json" -> """{"queries":{"q01":0.5""",
+      "BENCH_r15.json" -> "not json") === none)
+    assert(board() === none)
   }
 }
