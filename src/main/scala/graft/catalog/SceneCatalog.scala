@@ -3,11 +3,11 @@ package graft.catalog
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{GraftFunctions => G}
 import graft.model.{Scene, SensorSchema, SensorSchemas}
 import graft.operators.{RelationalOps => R, SceneQueryOps => S}
+import graft.plans.BoundValues
 import graft.sources.{CowTable, PartitionedCowTable, VersionedTable}
 
 /** The reference sensor's query API (EODataDownSensor's ~60 methods,
@@ -17,11 +17,24 @@ import graft.sources.{CowTable, PartitionedCowTable, VersionedTable}
   * decide collect vs further composition), and the empty-result-raises
   * semantics of the reference API (SURVEY.md §5) is the caller's
   * choice via `strictNonEmpty`.
+  *
+  * The catalogue keeps no rows of its own: every read starts from
+  * [[VersionedTable.snapshot]]. Over a [[PartitionedCowTable]] a small
+  * version is served from the table's one in-memory copy, which the
+  * table advances by manifest diff as it commits, so a monitoring
+  * tick's reads and ingest's anti-join share it. On that path the
+  * per-call values of the date-range and bbox reads reach generated
+  * code as references ([[BoundValues]]), so a read repeated with new
+  * values reuses its compiled classes; a file read keeps plain
+  * literals for parquet pushdown and partition pruning.
   */
 class SceneCatalog(val table: VersionedTable, spark: SparkSession,
                    val sensor: SensorSchema = SensorSchemas.landsat) {
 
-  def scenes: DataFrame = current().merge
+  /** The table's current rows; a [[PartitionedCowTable]] serves a small
+    * version from its in-memory copy ([[VersionedTable.snapshot]]).
+    */
+  def scenes: DataFrame = table.snapshot().merge
 
   /** Typed view for the Landsat-canonical schema only; other sensors
     * use their own case class via `scenes.as[...]`.
@@ -29,53 +42,6 @@ class SceneCatalog(val table: VersionedTable, spark: SparkSession,
   def typedScenes: Dataset[Scene] = {
     import spark.implicits._
     scenes.as[Scene]
-  }
-
-  /** The snapshot: (version, planned bytes, rows) of the version this
-    * catalogue last read, when that version was small enough to hold.
-    */
-  private var held: Option[(Int, BigInt, DataFrame)] = None
-
-  /** The table's current rows: Right when they come from the snapshot,
-    * Left when they are a file read.
-    *
-    * The catalogue's reads repeat over the same version (a step's work
-    * list and its write-back, then the cycle's reads), and each file
-    * read re-opens every day's parquet files; on a small table that
-    * per-file cost is most of the read. So a [[PartitionedCowTable]]
-    * version whose planned size is at most
-    * `spark.sql.autoBroadcastJoinThreshold` (the manifest's recorded
-    * bytes — the size at which Spark would ship the relation whole to
-    * every task) is read from its files once, into one in-memory
-    * partition; with one partition the catalogue's sorts and
-    * aggregates plan with no exchange. Every later read of that version
-    * is served from memory. The snapshot is keyed by the version in
-    * `_current`, so a commit through any writer moves the catalogue
-    * on, and the previous snapshot is released then, or as soon as the
-    * version no longer fits the threshold. A [[CowTable]] and a version
-    * above the threshold read their files every time. Synchronized: a
-    * monitor stream calls in from its own thread.
-    */
-  private def current(): Either[DataFrame, DataFrame] = table match {
-    case p: PartitionedCowTable => synchronized {
-      val v = p.version
-      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-      held match {
-        case Some((`v`, bytes, rows)) if bytes <= limit => Right(rows)
-        case _ =>
-          held.foreach(_._3.unpersist(blocking = false))
-          held = None
-          val files = p.readVersion(v)
-          val bytes = files.queryExecution.optimizedPlan.stats.sizeInBytes
-          if (bytes > limit) Left(files)
-          else {
-            val rows = files.repartition(1).persist(StorageLevel.MEMORY_ONLY)
-            held = Some((v, bytes, rows))
-            Right(rows)
-          }
-      }
-    }
-    case t => Left(t.read())
   }
 
   private def obsDate: Column = sensor.obsDate
@@ -105,11 +71,17 @@ class SceneCatalog(val table: VersionedTable, spark: SparkSession,
     require(cloudThres.isEmpty || sensor.cloud.isDefined,
       s"sensor ${sensor.sensor} has no cloud-cover column")
     val valid = if (validOnly) !col("Invalid") && col("ARDProduct") else lit(true)
-    scenesPrunedTo(end, start).filter(
-      S.dateRangeClosed(obsDate, end, start) &&
-        S.maxThreshold(cloudCol, cloudThres) && valid)
+    val rows = scenesPrunedTo(end, start)
+    rows.filter(BoundValues.bind(rows, S.dateRangeClosed(obsDate, end, start) &&
+        S.maxThreshold(cloudCol, cloudThres) && valid))
       .orderBy(obsDate.desc, col("PID"))
   }
+
+  /** Cloud threshold only exists for optical sensors; passing a
+    * threshold for a sensor without a cloud column is a caller bug.
+    */
+  private def cloudCol: Column =
+    sensor.cloud.map(col).getOrElse(lit(null).cast("double"))
 
   /** Date-range scans start from a manifest-pruned read when the
     * backend is date-partitioned: only partitions inside the closed
@@ -117,12 +89,6 @@ class SceneCatalog(val table: VersionedTable, spark: SparkSession,
     * The row-level filter still applies on top, so semantics are
     * identical on any backend.
     */
-  /** Cloud threshold only exists for optical sensors; passing a
-    * threshold for a sensor without a cloud column is a caller bug.
-    */
-  private def cloudCol: Column =
-    sensor.cloud.map(col).getOrElse(lit(null).cast("double"))
-
   private def scenesPrunedTo(lo: String, hi: String): DataFrame = table match {
     // prune only when the partition column is a DATE: ISO date strings
     // compare lexically, but a TIMESTAMP-typed obs-date column (S1/S2/
@@ -134,15 +100,18 @@ class SceneCatalog(val table: VersionedTable, spark: SparkSession,
     case p: PartitionedCowTable
         if p.partCol == sensor.obsDateCol &&
           sensor.schema(sensor.obsDateCol).dataType == DateType =>
-      current().getOrElse(p.readWhere(v => v >= lo && v <= hi))
+      p.snapshot().getOrElse(p.readWhere(v => v >= lo && v <= hi))
     case _ => scenes
   }
 
   /** Strict bbox-overlap query (F7, .py:2074-2103). */
   def scenesIntersectBBox(north: Double, south: Double,
-                          east: Double, west: Double): DataFrame =
-    scenes.filter(S.bboxOverlap(col("North_Lat"), col("South_Lat"),
-      col("East_Lon"), col("West_Lon"), north, south, east, west))
+                          east: Double, west: Double): DataFrame = {
+    val rows = scenes
+    rows.filter(BoundValues.bind(rows, S.bboxOverlap(col("North_Lat"),
+      col("South_Lat"), col("East_Lon"), col("West_Lon"),
+      north, south, east, west)))
+  }
 
   /** Paged scene listing (O3, .py:1994). */
   def scenesPage(offset: Int, n: Int): DataFrame =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.SceneCatalog
 import graft.model.UsageLog
+import graft.plans.BoundValues
 
 /** The reference's per-scene processing state machine
   * (`process_scenes_all_steps`, eodatadownrun.py:768-788 → SURVEY.md
@@ -77,8 +78,10 @@ object StepRunner {
     if (nOk > 0) {
       val okPids = ok.toDF().select(col("PID"))
       val updated = cat.scenes.join(okPids, Seq("PID"), "left_semi")
+      // a tick's timestamps are new values, not a new query: bound,
+      // they reuse the write-back's compiled classes
       val withFlags = step.onSuccess.foldLeft(updated) {
-        case (df, (c, v)) => df.withColumn(c, v)
+        case (df, (c, v)) => df.withColumn(c, BoundValues.bind(df, v))
       }
       cat.upsertScenes(withFlags)
     }

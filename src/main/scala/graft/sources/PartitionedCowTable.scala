@@ -7,11 +7,14 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, InMemoryCopy, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, StructType,
   StructField, TimestampNTZType, TimestampType}
+
+import graft.plans.BoundValues
 
 /** Partition-level copy-on-write table — the 100 TB layout promised by
   * [[CowTable]]'s scaladoc, implemented. A version is a MANIFEST
@@ -360,13 +363,149 @@ class PartitionedCowTable(val root: String, val partCol: String,
       cur.entries.forall(_.pcol == spec),
       s"changedPartitionValuesSince: legacy-spec dirs present — " +
         s"migrate (compact) before value-grain diffing")
-    def byValue(m: Manifest) =
-      m.entries.map(e => e.value -> (e.dir, m.dir(e.dir).dvs)).toMap
-    val om = byValue(old)
-    val cm = byValue(cur)
+    valueDiff(old, cur)
+  }
+
+  /** (changed, removed) partition values from `old` to `cur`, both on
+    * one spec with no legacy dirs: a value is changed when its (dir,
+    * deletion vectors) identity differs, removed when `cur` no longer
+    * has it.
+    */
+  private def valueDiff(old: Manifest, cur: Manifest)
+      : (Set[String], Set[String]) = {
+    val om = identities(old)
+    val cm = identities(cur)
     val changed = cm.collect {
       case (v, s) if !om.get(v).contains(s) => v }.toSet
     (changed, om.keySet -- cm.keySet)
+  }
+
+  /** partition value -> (dir, deletion vectors) of `m`'s entries. */
+  private def identities(m: Manifest): Map[String, (String, Seq[String])] =
+    m.entries.map(e => e.value -> (e.dir, m.dir(e.dir).dvs)).toMap
+
+  /** The in-memory copy this table serves `version` from: `mem` holds
+    * the rows of manifest `base`, `rows` are those of `version` (`mem`
+    * minus the partitions removed since `base`), `bytes` the version's
+    * planned size.
+    */
+  private case class Held(version: Int, base: Manifest, bytes: BigInt,
+                          mem: InMemoryCopy, rows: DataFrame)
+  private var held: Option[Held] = None
+
+  /** The current version's rows, from memory when the version is small.
+    *
+    * The catalogue reads one version several times (a step's work list
+    * and its write-back, then the cycle's reads), and ingest's key
+    * anti-join reads it too; each file read re-opens every partition's
+    * parquet files, and on a small table that per-file cost is most of
+    * the read. So a version whose planned size (the manifest's recorded
+    * bytes) is at most `spark.sql.autoBroadcastJoinThreshold` — the
+    * size at which Spark would ship the relation whole to every task —
+    * is served from one in-memory partition ([[InMemoryCopy]]). The
+    * table holds at most one copy, keyed by version, so a commit by
+    * any writer, this object or another on the same root, moves it on.
+    *
+    * When the version moves on, the copy ADVANCES by the manifest diff
+    * ([[valueDiff]], the diff [[changedPartitionValuesSince]] reports):
+    * it keeps the rows of every partition whose (dir, deletion vectors)
+    * identity is unchanged, drops removed values and reads only the
+    * changed dirs, in one job, so a commit that touched a few
+    * partitions costs a read of those few. A diff that only removes
+    * partitions (a whole-day delete) filters the held copy and runs no
+    * job, and [[compact]], which keeps rows, points the copy at the
+    * dirs it wrote ([[carryOver]]). The next copy reads the
+    * held one by block id, never through its plan, so no copy
+    * references an earlier version's plan or files, and a vacuum
+    * between two reads is safe. A version the diff cannot serve — a
+    * schema, defaults or spec change, legacy-spec dirs, or a held copy
+    * whose block is gone — is read in full. The old copy is released
+    * once its successor is filled, or as soon as the version outgrows
+    * the threshold. Synchronized: a monitor stream calls in from its
+    * own thread.
+    */
+  override def snapshot(): Either[DataFrame, DataFrame] = synchronized {
+    val v = requireVersion
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    held.filter(h => h.version == v && h.bytes <= limit && h.mem.held) match {
+      case Some(h) => Right(h.rows)
+      case None =>
+        val files = readVersion(v)
+        val bytes = files.queryExecution.optimizedPlan.stats.sizeInBytes
+        if (bytes > limit) {
+          releaseCopy()
+          Left(files)
+        } else {
+          val m = manifestAt(v)
+          val diff = held.filter(_.mem.held)
+            .flatMap(h => diffFrom(h, m).map(h -> _))
+          diff match {
+            case Some((h, (changed, removed))) if changed.isEmpty =>
+              held = Some(h.copy(version = v, bytes = bytes,
+                rows = without(h.mem.rows, m.spec, removed)))
+            case _ =>
+              val source = diff.fold(files) { case (h, (changed, removed)) =>
+                val kept = without(h.mem.rowsByBlock, m.spec, changed ++ removed)
+                val dirs = m.entries.filter(e => changed(e.value))
+                  .map(e => s"$root/${e.dir}")
+                kept.unionByName(readConformed(v, dirs))
+              }
+              val next = new InMemoryCopy(source, bytes)
+              releaseCopy()
+              held = Some(Held(v, m, bytes, next, next.rows))
+          }
+          Right(held.get.rows)
+        }
+    }
+  }
+
+  /** `rows` without the partitions `values` of spec column `spec`. One
+    * array literal, not an IN list: the generated code does not change
+    * with the values.
+    */
+  private def without(rows: DataFrame, spec: String,
+                      values: Set[String]): DataFrame =
+    if (values.isEmpty) rows
+    else rows.filter(!array_contains(typedLit(values.toSeq),
+      col(spec).cast("string")))
+
+  /** Compaction rewrote the partitions `rewritten` from the version of
+    * manifest `fm` into version `to` without changing their rows. Where
+    * the held copy's rows of such a partition are its rows at `fm` (same dir
+    * and deletion vectors), they are also its rows at `to`: the copy's
+    * base points them at the new dirs, so the next read does not read
+    * them again.
+    */
+  private def carryOver(fm: Manifest, to: Int, rewritten: Set[String]): Unit =
+    synchronized {
+      // a version a concurrent vacuum already removed carries nothing over
+      for (h <- held; tm <- scala.util.Try(manifestAt(to)).toOption
+           if diffFrom(h, fm).isDefined && diffFrom(h, tm).isDefined) {
+        val (was, at) = (identities(h.base), identities(fm))
+        val moved = tm.entries
+          .filter(e => rewritten(e.value) && was.get(e.value) == at.get(e.value))
+          .map(e => e.value -> e).toMap
+        val entries = h.base.entries.map(e => moved.getOrElse(e.value, e))
+        val live = entries.map(_.dir).toSet
+        held = Some(h.copy(base = h.base.copy(entries = entries,
+          dirs = (h.base.dirs ++ tm.dirs).filter { case (d, _) => live(d) })))
+      }
+    }
+
+  /** [[valueDiff]] from the held copy's manifest to `m`, or None when
+    * the diff cannot carry the copy over: a schema, defaults or spec
+    * change, or legacy-spec dirs on either side.
+    */
+  private def diffFrom(h: Held, m: Manifest): Option[(Set[String], Set[String])] =
+    if (m.schema == h.base.schema && m.spec == h.base.spec &&
+        m.defaults == h.base.defaults &&
+        (m.entries ++ h.base.entries).forall(_.pcol == m.spec))
+      Some(valueDiff(h.base, m))
+    else None
+
+  private def releaseCopy(): Unit = {
+    held.foreach(_.mem.release())
+    held = None
   }
 
   /** CDC-lite: rows of every partition whose data directory differs
@@ -573,7 +712,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * refused partition value, a failed job — deletes the stage, so a
     * write that does not commit leaves nothing behind.
     */
-  private def staging(body: String => Unit): Unit = {
+  private def staging[T](body: String => T): T = {
     val stage = s"_stage_${java.util.UUID.randomUUID()}"
     try body(stage)
     catch {
@@ -694,7 +833,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
   /** Core commit: publish the rows staged in `stage` as the new
     * content of exactly the partitions in `touched` (a touched
     * partition absent from the stage is dropped — it became empty);
-    * carry every untouched partition from `carried`.
+    * carry every untouched partition from `carried`. Returns the
+    * version it published.
     *
     * STAGE-FIRST: the caller has already written every row of the
     * touched partitions into `stage` (see [[staging]]) — usually the
@@ -744,7 +884,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
                      narrowRead: Boolean = false,
                      keyProbe: Option[(Seq[Entry], String) => Boolean] =
                        None)
-      : Unit = {
+      : Int = {
     val m0 = base0.map(manifestAt)
     val spec = m0.map(_.spec).getOrElse(partCol)
     val dataSchema = schema.getOrElse(m0.get.schema)
@@ -1112,6 +1252,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       }
       committed = publishAttempt(wdir)
     }
+    base.map(_ + 1).getOrElse(0)
   }
 
   /** Write `m` as version `v` and flip the pointer to it. Only dirs
@@ -1513,11 +1654,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (!exact || m.entries.exists(_.pcol != m.spec) ||
         m.dirs.values.exists(_.dvs.nonEmpty) || !onSpecOnly) None
     else {
-      val values = m.entries.map(_.value)
-      Some(spark.createDataFrame(values.map(Row(_)).asJava,
+      val values = spark.createDataFrame(m.entries.map(e => Row(e.value)).asJava,
           StructType(Seq(StructField("__v", StringType))))
         .select(col("__v"), col("__v").cast(specType).as(m.spec))
-        .filter(pred).select("__v").as(Encoders.STRING).collect().toSet)
+      // bound: a retire loop's new date each time reuses the compiled
+      // predicate
+      Some(values.filter(BoundValues.bind(values, pred)).select("__v")
+        .as(Encoders.STRING).collect().toSet)
     }
   }
 
@@ -1754,11 +1897,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
           .repartition(width, col(spec0), col("__salt"))
           .drop("__pv", "__nf", "__salt")
       }
-    staging { stage =>
+    val to = staging { stage =>
       stageRows(shaped, spec0, stage)
       commit(Some(base), stage, touched,
         bm.entries.filterNot(legacy.contains), narrowRead = true)
     }
+    carryOver(bm, to, touched)
   }
 
   /** OPTIMIZE ZORDER BY for an EXISTING table (q285 demonstrates the

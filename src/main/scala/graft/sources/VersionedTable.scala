@@ -12,6 +12,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 trait VersionedTable {
   def exists: Boolean
   def read(): DataFrame
+  /** The current version's rows: Right when they are served from an
+    * in-memory copy the table holds, Left when they are a file read.
+    * Only [[PartitionedCowTable]] holds a copy.
+    */
+  def snapshot(): Either[DataFrame, DataFrame] = Left(read())
   def overwrite(df: DataFrame): Unit
   def append(df: DataFrame): Unit
   def upsert(updates: DataFrame, keys: Seq[String]): Unit

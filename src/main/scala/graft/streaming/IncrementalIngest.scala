@@ -22,13 +22,16 @@ object IncrementalIngest {
   /** One micro-batch: in-batch dedup (J6 keep-newest) → anti-join
     * against existing keys (J1) → append. Both joins shuffle on the
     * key once; at scale the existing-side is pruned to the partitions
-    * the watermark admits.
+    * the watermark admits. The existing side is the table's
+    * [[VersionedTable.snapshot]]: a small [[graft.sources.PartitionedCowTable]]
+    * version comes from its in-memory copy, which the catalogue's
+    * reads of the same version then reuse.
     */
   def ingestBatch(table: VersionedTable, batch: DataFrame, keys: Seq[String],
                   newestFirst: Seq[org.apache.spark.sql.Column]): Unit = {
     val deduped = RelationalOps.dedupKeepNewest(batch, keys, newestFirst)
     if (!table.exists) table.overwrite(deduped)
-    else table.append(RelationalOps.antiJoin(deduped, table.read(), keys))
+    else table.append(RelationalOps.antiJoin(deduped, table.snapshot().merge, keys))
   }
 
   /** Watermark for the next remote query (A2): max event time, or None

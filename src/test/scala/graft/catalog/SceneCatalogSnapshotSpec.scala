@@ -1,8 +1,8 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -10,13 +10,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.model.Scene
+import graft.plans.BoundValue
 import graft.sources.PartitionedCowTable
 import graft.streaming.IncrementalIngest
 
-/** The catalogue's in-memory snapshot of a small PartitionedCowTable
-  * version: every read after a commit sees the new version, whichever
-  * writer made it, and the catalogue never holds more than one
-  * snapshot — none when the version does not fit the threshold.
+/** The catalogue over a small PartitionedCowTable version reads the
+  * table's in-memory copy: every read after a commit sees the new
+  * version, whichever writer made it, and a table never holds more than
+  * one copy — none when the version does not fit the threshold.
+  * Per-call values reach the copy's generated code as references.
   */
 class SceneCatalogSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -33,7 +35,7 @@ class SceneCatalogSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       ExtendedInfo = None)
 
   private def mk(): (SceneCatalog, PartitionedCowTable, String) = {
-    val root = Files.createTempDirectory("snap").toString + "/scenes"
+    val root = tempDir("snap") + "/scenes"
     val t = new PartitionedCowTable(root, "Date_Acquired", spark)
     t.overwrite((1 to 6).map(i => scene(i.toLong, f"2020-03-0${i % 3 + 1}")).toDF())
     (new SceneCatalog(t, spark), t, root)
@@ -117,7 +119,7 @@ class SceneCatalogSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         Seq(col("Date_Acquired").desc, col("PID")), 1, 2).collect().toSeq)
   }
 
-  test("at most one snapshot per catalogue; none at threshold -1 or " +
+  test("at most one snapshot per table; none at threshold -1 or " +
     "above the threshold") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -149,5 +151,35 @@ class SceneCatalogSnapshotSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     cat.table.append(Seq(scene(13, "2020-03-05")).toDF())
     withThreshold("-1")(cat.scenes.count())
     assert(heldNow === 0)
+  }
+
+  test("new date-range and bbox values reuse the copy's compiled classes; " +
+    "each answer equals the file path's, which keeps plain literals") {
+    val (cat, _, _) = mk()
+    def compiles[T](body: => T): (T, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val r = body
+      (r, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    def rowsOf(df: DataFrame) = df.collect().map(_.toString).toSeq
+    val reads: Seq[Int => DataFrame] = Seq(
+      i => cat.scenesForDateRange(f"2020-03-0${i % 3 + 2}", "2020-03-01",
+        Some(8.0 + i), validOnly = false),
+      i => cat.scenesIntersectBBox(60.0 + i, 40.0 - i, 10.0 + i, 1.0 + 0.3 * i))
+    for (read <- reads) {
+      val (got, counts) = (1 to 4).map(i => compiles(rowsOf(read(i)))).unzip
+      // the file path releases the copy: read it after the copy's calls
+      withThreshold("-1") {
+        for (i <- 1 to 4) {
+          val files = read(i)
+          val plan = files.queryExecution.executedPlan
+          assert(collect(plan) { case s: FileSourceScanExec => s }.nonEmpty)
+          assert(!plan.exists(_.expressions.exists(_.exists(
+            _.isInstanceOf[BoundValue]))))
+          assert(got(i - 1) === rowsOf(files), s"call $i")
+        }
+      }
+      assert(counts.tail === Seq(0L, 0L, 0L), s"compiles per call: $counts")
+    }
   }
 }

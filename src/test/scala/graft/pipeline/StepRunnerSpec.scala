@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -62,6 +62,17 @@ private[pipeline] class BatchedDownloadStep extends SceneStep {
   def onSuccess = Map("Downloaded" -> lit(true))
 }
 
+/** A download step that succeeds for the scenes of one round
+  * (`PID % 4 == round`) and stamps them with `at`.
+  */
+private[pipeline] class StampStep(round: Int, at: Timestamp) extends SceneStep {
+  val name = "stamp"
+  def workList(cat: SceneCatalog): DataFrame = cat.scnlistNeedDownload()
+  def process(pid: Long): StepResult = StepResult(pid, pid % 4 == round, "")
+  def onSuccess = Map("Downloaded" -> lit(true),
+    "Download_Start_Date" -> lit(at), "Download_End_Date" -> lit(at))
+}
+
 class StepRunnerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -73,7 +84,7 @@ class StepRunnerSpec extends SparkSpec {
       DCLoaded = false, Invalid = false, Archived = false, ExtendedInfo = None)
 
   private def mkCatalog(n: Int): SceneCatalog = {
-    val root = Files.createTempDirectory("pipe").toString + "/scenes"
+    val root = tempDir("pipe") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark)
     cat.table.overwrite((1 to n).map(i => scene(i.toLong, "2020-03-01")).toDF())
     cat
@@ -94,7 +105,7 @@ class StepRunnerSpec extends SparkSpec {
   test("runStep job count is pinned on a date-partitioned catalogue: " +
     "the work-list sort is dropped, the write-back stages its delta " +
     "once; the catalogue's own work-lists keep their order") {
-    val root = Files.createTempDirectory("pipe_pcow").toString + "/scenes"
+    val root = tempDir("pipe_pcow") + "/scenes"
     val cat = new SceneCatalog(
       new PartitionedCowTable(root, "Date_Acquired", spark), spark)
     cat.table.overwrite((1 to 12).map(i =>
@@ -102,11 +113,11 @@ class StepRunnerSpec extends SparkSpec {
     val ((n, ok), jobs) = org.apache.spark.JobCount(spark.sparkContext)(
       StepRunner.runStep(spark, cat, new DownloadStep(4), parallelism = 4))
     assert(n == 12 && ok == 9)
-    // the catalogue's snapshot of the new version (its one-partition
-    // exchange, then its cache), the tallies over the cached results,
-    // then the upsert's two stage writes (the flagged rows, then the
-    // touched dates' others); 8 with no snapshot
-    assert(jobs == 10)
+    // the fill of the table's in-memory copy of the new version (one
+    // job: the copy is one partition, so no exchange), the tallies
+    // over the cached results, then the upsert's two stage writes (the
+    // flagged rows, then the touched dates' others); 8 with no copy
+    assert(jobs == 9)
     // failures 12 (03-01), 4 (03-02), 8 (03-03): date order, then PID
     assert(cat.scnlistNeedDownload().as[Long].collect().toSeq ==
       Seq(12L, 4L, 8L))
@@ -114,7 +125,7 @@ class StepRunnerSpec extends SparkSpec {
 
   test("a work-list sort under a limit is kept: the step processes " +
     "the first scenes in catalogue order, not the first rows stored") {
-    val root = Files.createTempDirectory("pipe_lim").toString + "/scenes"
+    val root = tempDir("pipe_lim") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark)
     cat.table.overwrite((10 to 1 by -1).map(i =>
       scene(i.toLong, "2020-03-01")).toDF().coalesce(1))
@@ -141,7 +152,7 @@ class StepRunnerSpec extends SparkSpec {
     val l8 = mkCatalog(3)
     // sentinel-1-shaped catalog: one scene at EXACTLY the colliding
     // midnight timestamp, one later the same day
-    val s1root = Files.createTempDirectory("pipe_s1").toString + "/scenes"
+    val s1root = tempDir("pipe_s1") + "/scenes"
     val s1 = new SceneCatalog(new CowTable(s1root, spark), spark,
       SensorSchemas.sentinel1)
     s1.table.overwrite(Seq(
@@ -174,7 +185,7 @@ class StepRunnerSpec extends SparkSpec {
   test("ordered multi-step run honors state-machine ordering + audit") {
     val cat = mkCatalog(5)
     val audit = new AuditLog(
-      Files.createTempDirectory("audit").toString + "/log", spark)
+      tempDir("audit") + "/log", spark)
     val res = StepRunner.runAll(spark, cat,
       Seq(new DownloadStep(0), new ArdStep), parallelism = 2, Some(audit))
     assert(res == Seq(("download", 5L, 5L), ("ard", 5L, 5L)))
@@ -182,5 +193,28 @@ class StepRunnerSpec extends SparkSpec {
     val log = audit.entries().select("Description").as[String].collect()
     assert(log.length == 2)
     assert(log.exists(_.startsWith("download:")) && log.exists(_.startsWith("ard:")))
+  }
+
+  test("a step whose onSuccess timestamp is new compiles no more classes " +
+    "than one that repeats it") {
+    val cat = new SceneCatalog(new PartitionedCowTable(
+      tempDir("pipe_stamp") + "/scenes", "Date_Acquired", spark), spark)
+    cat.table.overwrite((1 to 16).map(i =>
+      scene(i.toLong, f"2020-03-${i % 3 + 1}%02d")).toDF())
+    val t1 = Timestamp.valueOf("2020-03-10 12:00:00")
+    def compiles(round: Int, at: Timestamp): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (n, ok) = StepRunner.runStep(spark, cat, new StampStep(round, at), 4)
+      assert(ok == 4 && n == 16 - 4 * round)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    compiles(0, t1)
+    compiles(1, t1)
+    val repeated = compiles(2, t1)
+    val renewed = compiles(3, Timestamp.valueOf("2020-03-11 12:00:00"))
+    assert(renewed <= repeated, s"new timestamp $renewed, repeated $repeated")
+    assert(cat.scenes.filter(col("PID") === 3L)
+      .select("Download_Start_Date").as[Timestamp].head() ===
+      Timestamp.valueOf("2020-03-11 12:00:00"))
   }
 }

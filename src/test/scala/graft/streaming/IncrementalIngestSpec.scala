@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
-import java.sql.Timestamp
+import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.CowTable
+import graft.sources.{CowTable, PartitionedCowTable}
 
 case class CatRow(scene_id: String, product_id: String, ts: Timestamp, v: Int)
 
@@ -16,7 +15,7 @@ class IncrementalIngestSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tempDir(p)
 
   test("ingestBatch: in-batch dedup + anti-join append, idempotent") {
     val t = new CowTable(tmp("ing") + "/t", spark)
@@ -87,5 +86,26 @@ class IncrementalIngestSpec extends SparkSpec {
     q2.awaitTermination(30000)
     assert(t.read().count() == 3)
     assert(t.read().filter($"scene_id" === "B").select("v").as[Int].head() == 2)
+  }
+
+  test("ingestBatch's key anti-join reads the table's in-memory copy, " +
+    "not the version's files") {
+    val t = new PartitionedCowTable(tmp("ingcopy") + "/t", "day", spark)
+    val order = Seq(col("product_id").desc)
+    def page(ids: Seq[(String, String)]) = ids.map { case (id, d) =>
+      (id, "P1", ts(d + " 00:00:00"), 1, Date.valueOf(d)) }
+      .toDF("scene_id", "product_id", "ts", "v", "day")
+    IncrementalIngest.ingestBatch(t, page((1 to 40).map(i =>
+      (s"S$i", f"2020-01-${i % 8 + 1}%02d"))), Seq("scene_id"), order)
+    assert(t.snapshot().isRight)
+    // one re-delivery and one new scene on a new day: the anti-join
+    // reads the copy (one cached batch), the append no existing day
+    val (_, read) = org.apache.spark.JobCount.recordsRead(spark.sparkContext)(
+      IncrementalIngest.ingestBatch(t,
+        page(Seq("S3" -> "2020-01-04", "S99" -> "2020-01-20")),
+        Seq("scene_id"), order))
+    assert(read < 40, s"$read records read")
+    assert(t.read().count() == 41)
+    assert(t.read().filter($"scene_id" === "S3").count() == 1)
   }
 }

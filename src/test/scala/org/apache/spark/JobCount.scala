@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 
 /** Exact count of the Spark jobs a block starts, through a
   * SparkListener. Jobs are attributed by a thread-local property that
@@ -20,6 +21,25 @@ object JobCount {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
     val (r, js) = jobs(sc)(body)
     (r, js.size)
+  }
+
+  /** The input records the tasks of `body`'s jobs read, attributed as
+    * above: a parquet row counts one, a cached partition's block one
+    * per stored element.
+    */
+  def recordsRead[T](sc: SparkContext)(body: => T): (T, Long) = {
+    val ends = new ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          ends.add(e.stageId -> e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (r, js) = jobs(sc)(body)
+      val stages = js.flatMap(_.stageIds).toSet
+      (r, ends.asScala.collect { case (st, n) if stages(st) => n }.sum)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** The start events of the jobs `body` starts, attributed as above;

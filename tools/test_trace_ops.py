@@ -17,10 +17,11 @@ SITE = "graft.sources.PartitionedCowTable.stageRows(PartitionedCowTable.scala:{}
 READ = "perfbench.CatalogCycle.read(CatalogCycle.scala:179)"
 
 
-def records(stage_line, read_jobs, read_ms):
+def records(stage_line, read_jobs, read_ms, rows_per_read_job=0):
     """One traced tick: a `write` op with two jobs at `stage_line` and a
-    `read` op taking `read_ms` with `read_jobs` jobs, plus an untimed op
-    (unit -1) whose job must not count."""
+    `read` op taking `read_ms` with `read_jobs` jobs, each of whose stage
+    reads `rows_per_read_job` records, plus an untimed op (unit -1) whose
+    job must not count."""
     recs = [{"type": "meta", "workload": "w", "trace": True}]
     ops = [(0, -1, "seed", 0, 50), (1, 0, "write", 100, 1_000_100),
            (2, 0, "read", 2_000_000, 2_000_000 + read_ms * 1000)]
@@ -33,7 +34,8 @@ def records(stage_line, read_jobs, read_ms):
         recs += [{"type": "job", "job": n, "start": 0, "op": str(op), "site": site,
                   "sql_exec": "", "stages": 1},
                  {"type": "job_end", "job": n, "end": 1000, "ok": True},
-                 {"type": "stage", "stage": n, "job": n, "tasks": 4}]
+                 {"type": "stage", "stage": n, "job": n, "tasks": 4,
+                  "records_read": rows_per_read_job if op == 2 else 0}]
     return recs
 
 
@@ -78,10 +80,30 @@ class TraceOpsTest(unittest.TestCase):
         self.assertEqual(set(rows), {"write", "read"})
         # a moved line is the same site, not a vanished and a new one
         self.assertEqual(rows["write"][1:],
-                         ["2", "2", "1000", "1000", "1.00",
+                         ["2", "2", "1000", "1000", "1.00", "0", "0",
                           "PartitionedCowTable.stageRows 2→2"])
         self.assertEqual(rows["read"][1:],
-                         ["3", "1", "300", "150", "0.50", "CatalogCycle.read 3→1"])
+                         ["3", "1", "300", "150", "0.50", "0", "0",
+                          "CatalogCycle.read 3→1"])
+
+    def test_rows_read_sum_an_ops_stages(self):
+        run = trace_ops.metrics.Run(records(602, 3, 300, rows_per_read_job=1200))
+        table = {r[0]: r for r in trace_ops.op_table(run)}
+        self.assertEqual(table["read"][6], 3600)
+        self.assertEqual(table["write"][6], 0)
+        out = self.run_main("--markdown", self.write(records(602, 3, 300, 1200)))
+        head, _, read = [l for l in out.splitlines() if l.startswith("| ")][:3]
+        self.assertIn("rows read", head)
+        self.assertEqual(read.split(" | ")[6], "3600")
+
+    def test_diff_shows_rows_read_before_and_after(self):
+        before = self.write(records(602, 3, 300, rows_per_read_job=1200))
+        after = self.write(records(602, 1, 150, rows_per_read_job=1))
+        rows = trace_ops.diff_rows(
+            *[trace_ops.op_table(trace_ops.metrics.Run(trace_ops.metrics.load(p)),
+                                 trace_ops.site_key) for p in (before, after)])
+        read = [r for r in rows if r[0] == "read"][0]
+        self.assertEqual(read[6:8], ["3600", "1"])
 
     def test_diff_lists_an_op_kind_of_one_side(self):
         before = records(602, 3, 300)

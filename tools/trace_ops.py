@@ -2,14 +2,17 @@
 """Per-op Spark job table from a perfbench trace (records.jsonl).
 
 For every traced op kind: how many ops ran, Spark jobs per op, job wall
-ms per op, op wall ms, the widest job in tasks, and the call sites the
-jobs came from (the innermost graft.* frame, with a job count each).
-Figures are medians over the traced ops of that kind; the site counts
-are per op.
+ms per op, op wall ms, the widest job in tasks, the rows read per op,
+and the call sites the jobs came from (the innermost graft.* frame, with
+a job count each). Rows read are the op's stages' summed input records:
+one per parquet row, and one per element of a cached block (a columnar
+cache stores one batch per element). Figures are medians over the traced
+ops of that kind; the site counts are per op.
 
 With --diff BEFORE AFTER it prints two traces side by side: per op kind,
-jobs/op and op ms before and after, and the call sites keyed by
-`Class.method` alone, so a site keeps its name when an edit moves its line.
+jobs/op, op ms and rows read before and after, and the call sites keyed
+by `Class.method` alone, so a site keeps its name when an edit moves its
+line.
 
 Usage:
     python3 tools/trace_ops.py .bench_run/catalog_cycle-s12-t1/records.jsonl
@@ -48,12 +51,14 @@ def short_site(site):
 
 
 def op_table(run, site_name=short_site):
-    """[(kind, n_ops, jobs, job_ms, op_ms, max_tasks, [(site, jobs/op)])]
-    over the traced timed ops, in first-seen order; `site_name` names a
-    job's call site."""
+    """[(kind, n_ops, jobs, job_ms, op_ms, max_tasks, rows_read,
+    [(site, jobs/op)])] over the traced timed ops, in first-seen order;
+    `site_name` names a job's call site."""
     tasks_of = collections.defaultdict(int)
+    read_of = collections.defaultdict(int)
     for s in run.stages:
         tasks_of[s["job"]] = max(tasks_of[s["job"]], s["tasks"])
+        read_of[s["job"]] += s.get("records_read", 0)
     jobs_of = collections.defaultdict(list)
     for j in run.jobs:
         jobs_of[j["op"]].append(j)
@@ -72,6 +77,7 @@ def op_table(run, site_name=short_site):
                               for js in per),
             statistics.median(run.ms(o) for o in ops),
             max((tasks_of[j["job"]] for js in per for j in js), default=0),
+            statistics.median(sum(read_of[j["job"]] for j in js) for js in per),
             [(s, c / len(ops)) for s, c in sites.most_common()]))
     return rows
 
@@ -86,28 +92,33 @@ def diff_rows(before, after):
     lines = []
     for k in kinds:
         rb, ra = b.get(k), a.get(k)
-        sb = dict(rb[6]) if rb else {}
-        sa = dict(ra[6]) if ra else {}
+        sb = dict(rb[7]) if rb else {}
+        sa = dict(ra[7]) if ra else {}
         order = list(sb) + [s for s in sa if s not in sb]
         site_txt = ", ".join(f"{s} {sb.get(s, 0):g}→{sa.get(s, 0):g}" for s in order)
         ratio = f"{ra[4] / rb[4]:.2f}" if rb and ra and rb[4] > 0 else "-"
         lines.append([k,
                       f"{rb[2]:g}" if rb else "-", f"{ra[2]:g}" if ra else "-",
                       f"{rb[4]:.0f}" if rb else "-", f"{ra[4]:.0f}" if ra else "-",
-                      ratio, site_txt])
+                      ratio,
+                      f"{rb[6]:g}" if rb else "-", f"{ra[6]:g}" if ra else "-",
+                      site_txt])
     return lines
 
 
 DIFF_HEAD = ["op", "jobs/op before", "jobs/op after", "op ms before",
-             "op ms after", "ms after/before", "call sites (jobs/op before→after)"]
+             "op ms after", "ms after/before", "rows read before", "rows read after",
+             "call sites (jobs/op before→after)"]
 
 
 def render(rows, markdown):
-    head = ["op", "ops", "jobs/op", "job ms/op", "op ms", "max tasks", "call sites (jobs/op)"]
+    head = ["op", "ops", "jobs/op", "job ms/op", "op ms", "max tasks", "rows read",
+            "call sites (jobs/op)"]
     lines = []
-    for kind, n, jobs, jms, oms, mt, sites in rows:
+    for kind, n, jobs, jms, oms, mt, read, sites in rows:
         site_txt = ", ".join(f"{s} ×{c:g}" for s, c in sites)
-        lines.append([kind, str(n), f"{jobs:g}", f"{jms:.0f}", f"{oms:.0f}", str(mt), site_txt])
+        lines.append([kind, str(n), f"{jobs:g}", f"{jms:.0f}", f"{oms:.0f}", str(mt),
+                      f"{read:g}", site_txt])
     return layout(head, lines, markdown)
 
 
