@@ -1,5 +1,10 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.Harness.Json
+import graft.operators.Staging
+
 object Bench {
   /** What to publish for one query given its suite (median, min) and
     * steady-state reference → (published median, published min,
@@ -130,6 +135,15 @@ object Bench {
       if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
+    // One timed rep, in seconds: the query's build and its `.count()`
+    // in one staging scope, whose blocks are freed after the clock
+    // stops.
+    def timed(fn: (SparkSession, String) => DataFrame): Double =
+      Staging.scope(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
     // Read BEFORE this round's bench_full.json write, so the file still
     // holds last round's ledger. The medians seed the per-query cost
     // ESTIMATES that the wall budget plans with; the solo map is
@@ -191,10 +205,7 @@ object Bench {
         if (e <= 0) planned else math.floor(room / e).toInt))
       if (reps < planned) degraded += 1
       val times = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case ex: Throwable =>
+        try Some(timed(fn)) catch { case ex: Throwable =>
           failures.getOrElseUpdate(name,
             s"${ex.getClass.getSimpleName}: ${Option(ex.getMessage).getOrElse("").take(200)}")
           // a dead context fails every remaining query vacuously —
@@ -211,11 +222,10 @@ object Bench {
           None
         }
       }
-      // Inter-query hygiene: queries materialize bounded intermediates
-      // with localCheckpoint, and in a big-SF sitting those blocks
-      // accumulate across hundreds of queries until execution memory
-      // starves mid-board (two sf10 OOMs that pass solo — the blocks
-      // belong to QUERIES ALREADY MEASURED, so dropping them is free).
+      // Inter-query hygiene, a backstop behind the staging scopes:
+      // blocks left by queries already measured accumulate across
+      // hundreds of queries until execution memory starves mid-board
+      // (two sf10 OOMs that pass solo), so drop whatever is left.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       val row = if (times.isEmpty) (-1.0, -1.0)
@@ -255,10 +265,7 @@ object Bench {
       else {
         val fn = SparkEntry.queries(name)
         val times = (1 to 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
+          try Some(timed(fn)) catch { case _: Throwable => None }
         }
         val v = if (times.isEmpty) -1.0 else times.min
         logProgress(Json.line("q" -> name, "solo" -> v, "elapsed" -> elapsed()))

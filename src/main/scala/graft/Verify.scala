@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.JsonNode
 
 import graft.Harness.Json
+import graft.operators.Staging
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -50,8 +51,10 @@ object Verify {
 
     attempted.foreach { name =>
       try {
-        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        Staging.scope(spark) {
+          queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
         completed += name
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -146,8 +146,8 @@ object IncrementalDedup {
     */
   def auto(batchSets: DataFrame, corpusSets: DataFrame, k: Int, bands: Int,
            jacThreshold: Double, switchPerSet: Double = 4096.0): Decision = {
-    val batchIdx = bandIndex(batchSets, "nsid", k, bands).localCheckpoint()
-    val corpusIdx = bandIndex(corpusSets, "osid", k, bands).localCheckpoint()
+    val batchIdx = bandIndex(batchSets, "nsid", k, bands).transform(Staging(_))
+    val corpusIdx = bandIndex(corpusSets, "osid", k, bands).transform(Staging(_))
     // Bounded driver metadata: one 1-row agg + one count — the price of
     // not running a family-quadratic join by accident.
     val pf = preflight(batchIdx, corpusIdx).head()

@@ -117,7 +117,7 @@ object RelationalOps {
     // when the plan is dropped, so no persist handle leaks to callers.
     val parted = incoming.repartitionByRange(partitions, col(orderCol))
       .withColumn("__part", spark_partition_id())
-      .localCheckpoint(true)
+      .transform(Staging(_))
     val local = parted.withColumn("__rk",
       row_number().over(Window.partitionBy(col("__part")).orderBy(col(orderCol))))
     // exclusive prefix sum over ONE COUNT PER PARTITION — bounded
@@ -162,7 +162,7 @@ object RelationalOps {
                        partitions: Int = 32): DataFrame = {
     val parted = df.repartitionByRange(partitions, col(groupCol), col(orderCol))
       .withColumn("__part", spark_partition_id())
-      .localCheckpoint(true)
+      .transform(Staging(_))
     val w = Window.partitionBy(col("__part"), col(groupCol))
       .orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

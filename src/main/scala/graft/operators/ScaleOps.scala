@@ -7,30 +7,12 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §4 optimizer table): skew mitigation and co-located
   * joins. On the toy test tables they change nothing semantically —
   * specs assert plan shape and result equivalence.
+  *
+  * Lineage cuts (the iterative loops' edge tables and label rounds) go
+  * through [[Staging]], at Spark's default level; their blocks belong
+  * to the caller's staging scope, which frees them when it ends.
   */
 object ScaleOps {
-
-  /** Lineage-cutting materialization point for big iterative/reused
-    * state (q184's positives, q190's undirected edge table, the CC
-    * label rounds). Default = plain `localCheckpoint()` (Spark's
-    * MEMORY_AND_DISK block store — right when state fits executor
-    * memory). With `spark.graft.stage.diskOnly=true` the blocks go
-    * to DISK_ONLY instead:
-    * on a single JVM whose MemoryStore a multi-GB checkpoint would
-    * thrash ("Not enough space to cache" → eviction storms, the
-    * round-8 sf10 probes on q184/q190), paying the sequential disk
-    * read per round is far cheaper than evicting every other block.
-    * On a real cluster the flag stays off — aggregate executor memory
-    * is the point of having executors.
-    */
-  def stage(df: DataFrame): DataFrame = {
-    val disk = df.sparkSession.conf
-      .getOption("spark.graft.stage.diskOnly")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    if (disk)
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    else df.localCheckpoint()
-  }
 
   /** Scale-adaptive block width for a reused, checkpointed edge table
     * (the iterative-graph loops: q134/q178/q190 and
@@ -218,7 +200,7 @@ object ScaleOps {
     * star-reduction guard ([[bandedCandidatePairs]]) additionally caps
     * pathological components at diameter ≤ 2 per bucket. Each round is
     * one shuffle-on-`dst` join + one partial-aggregated groupBy;
-    * labels are `localCheckpoint`ed every round so lineage stays flat
+    * labels are staged ([[Staging]]) every round so lineage stays flat
     * at any iteration count. Convergence is detected by the label sum
     * (labels only ever decrease, so an unchanged sum ⇔ a fixpoint) —
     * one cheap aggregate per round instead of a change-count join.
@@ -248,7 +230,7 @@ object ScaleOps {
     val sym = edges.select(col(aCol).cast("long").as("src"),
         col(bCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val both = stage(
+    val both = Staging(
       sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
     // `both` holds TWO rows per distinct undirected edge — probe
@@ -256,7 +238,10 @@ object ScaleOps {
     val symRowCap = (2L * localEdgeThreshold).min(Int.MaxValue.toLong - 1)
     if (localEdgeThreshold > 0) {
       val local = localComponents(both, symRowCap.toInt)
-      if (local.isDefined) return local.get
+      if (local.isDefined) {
+        Staging.release(both)
+        return local.get
+      }
     }
     // Iterative path only: spread the edge table's blocks before the
     // per-round loop (explicit repartition is exempt from AQE
@@ -272,27 +257,27 @@ object ScaleOps {
     val w = edgeWidth(spark, 16L * both.count())
     val bothByDst =
       if (w <= 1) both
-      else stage(both.repartition(w, col("dst"))
+      else Staging(both.repartition(w, col("dst"))
         .sortWithinPartitions("dst")) // sorted blocks compress smaller
         // through every round's exchange and pre-sort the SMJ runs
-    var labels = stage(bothByDst.select(col("src").as("id")).distinct()
+    var labels = Staging(bothByDst.select(col("src").as("id")).distinct()
       .withColumn("lab", col("id")))
     // `both` is dead once the spread copy and the label init are
     // materialized (r14 advice: holding TWO staged copies of the edge
     // table for the whole run doubles edge storage at exactly the
-    // scale this path targets). `Dataset.unpersist` cannot free it: a
-    // checkpointed frame is not in the cache manager, its blocks
-    // belong to the RDD under its LogicalRDD
-    if (!(bothByDst eq both))
-      both.queryExecution.analyzed
-        .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-        .rdd.unpersist(blocking = false)
+    // scale this path targets)
+    if (!(bothByDst eq both)) Staging.release(both)
     def labelSum(): Long =
       labels.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
     var lastSum = labelSum()
     var converged = false
     var i = 0
-    while (!converged && i < maxIters) {
+    // only the live label generation and the edge copies stay staged:
+    // a round frees the generation it read once the next is staged,
+    // and the edges go when the loop ends (the last generation's
+    // lineage is cut, so the returned frame reads its blocks alone;
+    // they belong to the caller's staging scope)
+    try while (!converged && i < maxIters) {
       val nbrMin = bothByDst
         .join(labels.select(col("id").as("dst"), col("lab").as("nlab")),
           Seq("dst"))
@@ -302,14 +287,16 @@ object ScaleOps {
       // — O(log diameter) rounds — is SLOWER here: the extra join per
       // round outweighs the saved rounds on dedup graphs, whose
       // diameter is already small. Plain one-hop propagation wins.)
-      labels = stage(labels.join(nbrMin, Seq("id"), "left")
+      val next = Staging(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("lab")))
+      Staging.release(labels)
+      labels = next
       val s = labelSum()
       converged = s == lastSum
       lastSum = s
       i += 1
-    }
+    } finally Staging.release(bothByDst)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds — " +

@@ -288,9 +288,9 @@ object VectorOps {
     // probe; crawl embeddings repeat exactly when the text does) now
     // costs one groupBy instead of a family-quadratic candidate join.
     val corpusSets = corpus.groupBy("v").agg(min("vec_id").as("match_cand"))
-      .localCheckpoint()
+      .transform(Staging(_))
     val batchSets = batch.groupBy("v").agg(min("vec_id").as("bsid"))
-      .localCheckpoint()
+      .transform(Staging(_))
     // Corpus index: nearest-centroid assignment + per-cell radius.
     // UNROUNDED angles feed the bound (blockedCosineCandidates'
     // rationale: rounding belongs to the verify, not the metric).

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{RelationalOps => R, ScaleOps => SO}
+import graft.Tables.{load => t}
+import graft.operators.{RelationalOps => R, ScaleOps => SO, Staging}
 
 /** Remaining SURVEY.md §2 operator families not yet demonstrated by
   * q01–q35: strict ranges (F3), top-1 (O2), key allocation (A3),
@@ -14,9 +15,6 @@ import graft.operators.{RelationalOps => R, ScaleOps => SO}
   * and the JSON export→import round trip (S7/S8).
   */
 object CoverageQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** The CF family's shared (user, item) positive signal: customer
     * bought part, distinct — one order-keyed equi join, the only
@@ -29,6 +27,36 @@ object CoverageQueries {
         .select(col("l_orderkey").as("o_orderkey"),
           col("l_partkey").as("p")), Seq("o_orderkey"))
       .select("u", "p").distinct()
+
+  /** q226's and q254's fixture: orders with `o_orderkey <= maxKey`
+    * (table a: PID, month, cents) and their per-order quantities
+    * (table b: PID, month, qty), both partitioned by month under a
+    * fresh scratch root for `tag`, with a SnapshotCatalog over them.
+    * Step 0 records the loaded pair; step 1 records a's update of
+    * every fourth order's cents.
+    */
+  private def snapshotPair(s: SparkSession, dir: String, tag: String,
+                           maxKey: Int): (graft.sources.PartitionedCowTable,
+      graft.sources.PartitionedCowTable, graft.sources.SnapshotCatalog) = {
+    val root = Tables.scratchDir(s, tag, fresh = true)
+    val o = t(s, dir, "orders").filter(col("o_orderkey") <= maxKey)
+      .select(col("o_orderkey").as("PID"),
+        date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
+        round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val li = t(s, dir, "lineitem")
+      .groupBy(col("l_orderkey").as("PID"))
+      .agg(sum(col("l_quantity").cast("long")).as("qty"))
+      .join(o.select("PID", "month"), "PID")
+    val a = new graft.sources.PartitionedCowTable(s"$root/a", "month", s)
+    val b = new graft.sources.PartitionedCowTable(s"$root/b", "month", s)
+    val snap = new graft.sources.SnapshotCatalog(s"$root/log", s)
+    a.overwrite(o); b.overwrite(li)
+    snap.record(0, Map("a" -> a.version, "b" -> b.version))
+    a.updateWhere(col("PID") % 4 === 0,
+      Map("cents" -> (col("cents") + 1000L)))
+    snap.record(1, Map("a" -> a.version, "b" -> b.version))
+    (a, b, snap)
+  }
 
   /** Closed-form fake CMR service for q292: granule i ∈ [0, n) —
     * product by parity, hourly time_start from 2024-01-01Z, geometry
@@ -550,7 +578,7 @@ object CoverageQueries {
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       // the materialized view at v1 (checkpointed: a view is a TABLE,
       // not a recomputable plan over data that has since changed)
-      val mv1 = partials(tbl.read()).localCheckpoint(true)
+      val mv1 = partials(tbl.read()).transform(Staging(_))
       // the mutation: clicks in the first 10 days double in value —
       // rewrites exactly the partitions containing matched rows
       tbl.updateWhere(
@@ -558,7 +586,7 @@ object CoverageQueries {
         Map("cents" -> (col("cents") * 2)))
       // incremental maintenance: only rewritten partitions re-aggregate
       val changed = tbl.changedSince(v1)
-      val changedDays = changed.select("day").distinct().localCheckpoint(true)
+      val changedDays = changed.select("day").distinct().transform(Staging(_))
       val nChanged = changedDays.count() // bounded: partitions, not rows
       val mv2 = mv1.join(changedDays, Seq("day"), "left_anti")
         .unionByName(partials(changed))
@@ -676,16 +704,16 @@ object CoverageQueries {
         else edges0.repartition(w, col("p"))
           .sortWithinPartitions("p")) // sorted blocks: ~15% smaller
         // exchanges + pre-sorted SMJ runs every round
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val deg = edges.groupBy("p").agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val nDf = broadcast(deg.agg(count(lit(1)).cast("double").as("nn")))
       // outdeg rides INSIDE the rank table so each iteration is one
       // edge⋈rank join + one destination rollup — not a second
       // rank⋈deg join per step
       var rank = deg.crossJoin(nDf)
         .select(col("p"), col("outdeg"), (lit(1.0) / col("nn")).as("r"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       for (_ <- 1 to 3) {
         val contrib = edges
           .join(rank.select(col("p"),
@@ -698,7 +726,7 @@ object CoverageQueries {
           .select(col("p"), col("outdeg"),
             ((lit(1.0) - d) / col("nn") +
               d * coalesce(col("in_mass"), lit(0.0))).as("r"))
-          .localCheckpoint(true)
+          .transform(Staging(_))
       }
       rank.select(col("p").as("part"), round(col("r") * 1000, 6).as("score"))
         .orderBy(col("score").desc, col("part"))
@@ -876,7 +904,7 @@ object CoverageQueries {
           col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
         .select(col("x.p").as("u"), col("y.p").as("v"))
         .distinct()
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val deg = e.select(col("u").as("p"))
         .unionAll(e.select(col("v").as("p")))
         .groupBy("p").agg(count(lit(1)).as("dg"))
@@ -890,7 +918,7 @@ object CoverageQueries {
             .otherwise(struct(col("v").as("s"), col("u").as("t")))
             .as("e"))
         .select(col("e.s").as("s"), col("e.t").as("t"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val adj = ed.groupBy("s").agg(collect_list("t").as("nbrs"))
       val emptyArr = array().cast("array<long>")
       val common = ed
@@ -942,7 +970,7 @@ object CoverageQueries {
       val m = pts.groupBy("price").agg(max("size").as("msize"))
       val parted = m.repartitionByRange(32, col("price"))
         .withColumn("__part", spark_partition_id())
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val wLoc = Window.partitionBy("__part").orderBy("price")
         .rowsBetween(Window.unboundedPreceding, -1)
       val local = parted.withColumn("__lm", max("msize").over(wLoc))
@@ -1228,7 +1256,7 @@ object CoverageQueries {
       val daily = t(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val a = daily
         .select(col("event_type").as("type_a"), col("day"),
           col("y").as("ya"),
@@ -1616,7 +1644,7 @@ object CoverageQueries {
       var edges = li.alias("a").join(li.alias("b"),
           col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-        .localCheckpoint()
+        .transform(Staging(_))
       var nEdges = edges.count()
       var converged = false
       var iters = 0
@@ -1628,7 +1656,7 @@ object CoverageQueries {
         val pruned = edges
           .join(keep.withColumnRenamed("x", "u"), Seq("u"))
           .join(keep.withColumnRenamed("x", "v"), Seq("v"))
-          .select("u", "v").localCheckpoint()
+          .select("u", "v").transform(Staging(_))
         val nAfter = pruned.count()
         if (nAfter == nEdges) converged = true
         else { edges = pruned; nEdges = nAfter }
@@ -1737,7 +1765,7 @@ object CoverageQueries {
       val daily = t(s, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .transform(Staging(_))
       def shifted(days: Int, as: String) = daily.select(
         col("event_type"), date_add(col("day"), days).as("day"),
         col("c").as(as))
@@ -1951,12 +1979,12 @@ object CoverageQueries {
       val edges = (if (wE <= 1) edges0
         else edges0.repartition(wE, col("u"))
           .sortWithinPartitions("u")) // q134's note: compression + runs
-        .localCheckpoint()
+        .transform(Staging(_))
       val nodes = edges.select(col("u").as("node")).distinct()
-        .localCheckpoint()
+        .transform(Staging(_))
       val src = nodes.agg(min("node")).head().getLong(0) // 1-row scalar
       var dist = nodes.filter(col("node") === src)
-        .select(col("node"), lit(0).as("dist")).localCheckpoint()
+        .select(col("node"), lit(0).as("dist")).transform(Staging(_))
       var converged = false
       var round = 0
       while (!converged && round < 15) {
@@ -1964,7 +1992,7 @@ object CoverageQueries {
           .select(col("v").as("node"), (col("dist") + 1).as("dist"))
         val merged = dist.unionByName(next)
           .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
+          .transform(Staging(_))
         converged = merged.exceptAll(dist).isEmpty
         dist = merged
         round += 1
@@ -2019,7 +2047,7 @@ object CoverageQueries {
           floor(datediff(to_date(col("ts")), lit("2024-01-01")) / 7)
             .as("wk"))
         .agg(sum(expr("cast(round(value * 100) as bigint)")).as("cents"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val maxWk = broadcast(rev.agg(max("wk").as("max_wk")))
       val prev = rev.select(col("user_id"), (col("wk") + 1).as("wk"),
         col("cents").as("prev_cents"))
@@ -2083,10 +2111,7 @@ object CoverageQueries {
     "q184_negative_sampling" -> { (s, dir) =>
       val draws = 4
       val keep = 2
-      // SO.stage: lineage cut; DISK_ONLY under the single-JVM sf10
-      // probe conf (spark.graft.stage.diskOnly) where this table
-      // thrashed the MemoryStore in round 8
-      val pos = SO.stage(t(s, dir, "orders")
+      val pos = Staging(t(s, dir, "orders")
         .select(col("o_custkey").as("u"), col("o_orderkey"))
         .join(t(s, dir, "lineitem")
           .select(col("l_orderkey").as("o_orderkey"),
@@ -2141,7 +2166,7 @@ object CoverageQueries {
           sum(round(col("value") * 1e6).cast("long")).as("sv"))
         .select(col("etype"), col("day"), col("n"),
           round(col("sv") / (col("n") * 1e6), 6).as("avg_v"))
-        .localCheckpoint() // grid-sized; span, keys, and the join reuse it
+        .transform(Staging(_)) // grid-sized; span, keys, and the join reuse it
       val span = broadcast(daily.agg(min("day").as("d0"), max("day").as("d1")))
       val grid = daily.select("etype").distinct()
         .crossJoin(span)
@@ -2232,7 +2257,7 @@ object CoverageQueries {
           .select(col("l_orderkey").as("o_orderkey"),
             col("l_partkey").as("p")), Seq("o_orderkey"))
         .select("u", "p").distinct()
-        .localCheckpoint() // reused by all walkLen steps
+        .transform(Staging(_)) // reused by all walkLen steps
       def h(step: Int) = conv(substring(md5(concat_ws(":", lit("walk"),
         col("walk"), lit(step), col("cand"))), 1, 15), 16, 10).cast("long")
       var frontier = edges.select("p").distinct().filter(col("p") <= 200)
@@ -2253,7 +2278,7 @@ object CoverageQueries {
         frontier = cands.withColumn("hh", h(step))
           .withColumn("r", row_number().over(w)).filter(col("r") === 1)
           .select(col("walk"), col("cand").as("cur"))
-          .localCheckpoint() // each step computed once, not re-derived
+          .transform(Staging(_)) // each step computed once, not re-derived
         steps += frontier.select(col("walk"), lit(step).as("step"),
           concat(lit(if (fromPart) "c:" else "p:"), col("cur")).as("node"))
       }
@@ -2289,8 +2314,7 @@ object CoverageQueries {
       val wE = SO.edgeWidth(s, SO.pathBytes(s"$dir/lineitem.parquet"))
       val und0 =
         e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      val und = SO.stage( // reused by all rounds; DISK_ONLY under the
-        // single-JVM probe flag (see ScaleOps.stage)
+      val und = Staging( // reused by all rounds
         if (wE <= 1) und0
         else und0.repartition(wE, col("b"))
           .sortWithinPartitions("b")) // sorted blocks: smaller
@@ -2306,7 +2330,7 @@ object CoverageQueries {
         // window: drops one full sort of the (node, label) table per
         // round (sf1 5-round run ~25 s vs ~30 s same-day for the
         // window form; sf0.1 within noise)
-        labels = SO.stage(cnt.groupBy("node") // bound lineage per round
+        labels = Staging(cnt.groupBy("node") // bound lineage per round
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("node"), (-col("m.nl")).as("lbl")))
       }
@@ -2355,7 +2379,7 @@ object CoverageQueries {
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .as("x"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-        .localCheckpoint() // grid-sized; the pair algebra reuses it
+        .transform(Staging(_)) // grid-sized; the pair algebra reuses it
       val x0 = broadcast(monthly.agg(min("x").as("x0")))
       val g = monthly.crossJoin(x0)
         .select((col("x") - col("x0")).as("x"), col("cents"))
@@ -2464,12 +2488,12 @@ object CoverageQueries {
         .select(coalesce(col("mask"), lit(0L)).as("mask"),
           col("pts").isNotNull.cast("long").as("conv"))
         .groupBy("mask").agg(count(lit(1)).as("nu"), sum("conv").as("nc"))
-        .localCheckpoint() // ≤16 rows; the subset algebra reuses it
+        .transform(Staging(_)) // ≤16 rows; the subset algebra reuses it
       val v = s.range(0, 16).select(col("id").as("m"))
         .join(grid, col("m") === col("mask"), "left")
         .select(col("m"),
           round(coalesce(col("nc") / col("nu"), lit(0.0)), 6).as("v"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val chan = s.range(0, 4).select(
         element_at(array(lit("click"), lit("error"), lit("signup"),
           lit("view")), (col("id") + 1).cast("int")).as("channel"),
@@ -2585,7 +2609,7 @@ object CoverageQueries {
         .groupBy(col("l_partkey").as("part"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
-        .localCheckpoint() // part grid; prior fit + ranking reuse it
+        .transform(Staging(_)) // part grid; prior fit + ranking reuse it
       val prior = broadcast(g.filter(col("n") >= 5)
         .select((col("x") / col("n")).as("r"))
         .agg(avg("r").as("m"), var_samp(col("r")).as("v"))
@@ -2619,7 +2643,7 @@ object CoverageQueries {
           Window.partitionBy("user_id")))
         .filter(col("nxt").isNotNull)
         .withColumn("is_train", col("pos") <= col("cnt") / 2)
-        .localCheckpoint() // one corpus pass; train + test reuse it
+        .transform(Staging(_)) // one corpus pass; train + test reuse it
       val model = pairs.filter(col("is_train"))
         .groupBy("cur", "nxt").agg(count(lit(1)).as("c"))
         .withColumn("r", row_number().over(Window.partitionBy("cur")
@@ -2655,7 +2679,7 @@ object CoverageQueries {
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
         .withColumn("dow", dayofweek(col("day")))
-        .localCheckpoint() // grid
+        .transform(Staging(_)) // grid
       val grand = broadcast(daily.agg(avg("n").as("g")))
       val idx = daily.groupBy("dow").agg(avg("n").as("dn"))
         .crossJoin(grand)
@@ -2687,7 +2711,7 @@ object CoverageQueries {
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         col("o_custkey") % 25 as "stratum", // nation-proxy strata
         round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .localCheckpoint()
+        .transform(Staging(_))
       // decimal(38,0) keeps Σx and Σx² EXACT (cents² sums overflow
       // long beyond ~10⁵ rows/stratum); the one double division
       // happens on identical integers in both engines
@@ -2708,7 +2732,7 @@ object CoverageQueries {
         .select(col("stratum"), col("nh"),
           least(col("nh"), round(lit(k) * col("nh") * col("sigma") /
             col("z")).cast("long")).as("quota"))
-        .localCheckpoint() // |strata| rows
+        .transform(Staging(_)) // |strata| rows
       val ranked = o.join(broadcast(alloc), "stratum")
         .withColumn("rk", row_number().over(Window.partitionBy("stratum")
           .orderBy(conv(substring(md5(concat(lit("ney:"),
@@ -2801,7 +2825,7 @@ object CoverageQueries {
       val daily = t(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint() // grid
+        .transform(Staging(_)) // grid
       val idx = daily.withColumn("t",
         row_number().over(Window.orderBy("day"))) // grid-bounded window
       val mx = broadcast(idx.agg(max("t").as("tmax")))
@@ -2867,7 +2891,7 @@ object CoverageQueries {
           col("l_quantity").cast("long").as("qty"),
           round(col("l_extendedprice") * 100).cast("long").as("w"))
         .groupBy("flag", "qty").agg(sum("w").as("w"))
-        .localCheckpoint() // bounded grid; prefix + totals reuse it
+        .transform(Staging(_)) // bounded grid; prefix + totals reuse it
       val tot = g.groupBy("flag").agg(sum("w").as("wt"))
       val wv = Window.partitionBy("flag").orderBy("qty")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2908,7 +2932,7 @@ object CoverageQueries {
         .groupBy(col("event_type").as("et"),
           dayofweek(to_date(col("ts"))).as("dow"))
         .agg(count(lit(1)).as("o"))
-        .localCheckpoint() // ≤ types×7 grid
+        .transform(Staging(_)) // ≤ types×7 grid
       val rowT = cells.groupBy("et").agg(sum("o").as("rt"))
       val colT = cells.groupBy("dow").agg(sum("o").as("ct"))
       val tot = broadcast(cells.agg(sum("o").as("n"),
@@ -2943,7 +2967,7 @@ object CoverageQueries {
           .as("x"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("y"))
-        .localCheckpoint() // grid
+        .transform(Staging(_)) // grid
       val p = daily.as("i").join(daily.as("j"), col("i.day") < col("j.day"))
         .select((col("i.x") - col("j.x")).as("dx"),
           (col("i.y") - col("j.y")).as("dy"))
@@ -2980,71 +3004,12 @@ object CoverageQueries {
     // identical draw. Map-side pair enumeration stays basket-bounded
     // (compose with q211's cap when the q89 pre-flight flags whales);
     // only SAMPLED pairs reach the exchange — the explode→filter
-    // pipeline never materializes the unsampled stream.
+    // pipeline never materializes the unsampled stream. The operator
+    // is q227's with no cap: `Int.MaxValue` keeps every basket whole.
     "q214_item_item_cf_dimsum" -> { (s, dir) =>
-      val gamma = 8.0
-      val M = 1L << 20
-      val pos = t(s, dir, "orders")
-        .select(col("o_custkey").as("u"), col("o_orderkey"))
-        .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("p")), Seq("o_orderkey"))
-        .select("u", "p").distinct()
-        .localCheckpoint()
-      val nu = pos.groupBy("p").agg(count(lit(1)).as("n"))
-      val sampled = pos.join(nu, "p")
-        .groupBy("u")
-        .agg(sort_array(collect_list(struct(col("p"), col("n"))))
-          .as("sp"))
-        .select(col("u"), explode(expr(
-          """flatten(transform(sp, (a, i) ->
-            |  transform(slice(sp, i + 2, size(sp)), b ->
-            |    named_struct('p1', a.p, 'n1', a.n,
-            |                 'p2', b.p, 'n2', b.n))))""".stripMargin))
-          .as("pr"))
-        .select(col("u"), col("pr.p1").as("p1"), col("pr.n1").as("n1"),
-          col("pr.p2").as("p2"), col("pr.n2").as("n2"))
-        .withColumn("pq", round(least(lit(1.0),
-          lit(gamma) / sqrt(col("n1") * col("n2"))) * M).cast("long"))
-        // pq == 2^20 ⇔ p = 1 ⇔ the 40-bit draw always passes — the
-        // leading disjunct short-circuits codegen past the md5 for
-        // every exact-regime pair (the common case off the whale
-        // tail; measured ~12 → ~7 s at sf0.1), with IDENTICAL
-        // semantics, so the oracle replays the unconditional form
-        .filter(col("pq") >= M ||
-          conv(substring(md5(concat_ws(":", lit("ds"), col("u"),
-            col("p1"), col("p2"))), 1, 10), 16, 10).cast("long") <
-            col("pq") * M)
-      val sim = sampled
-        // (r15 probe, rejected: an explicit (p1,p2) repartition before
-        // this groupBy — post-shuffle double aggregation instead of
-        // the combine-factor-1 map-side partial — measured WORSE here
-        // and on every ItemItemCf arm; see pairCounts's finding note)
-        .groupBy("p1", "p2", "n1", "n2", "pq")
-        .agg(count(lit(1)).as("c"))
-        .select(col("p1"), col("p2"),
-          round(col("c") * M.toDouble / col("pq") /
-            sqrt(col("n1") * col("n2")), 6).as("cosine_est"))
-      // symmetrize by EXPLODING both orientations from one pass, not
-      // a self-union (ItemItemCf.rankTopK's r15 device): the union
-      // planned the sampled-pair subtree twice — AQE reused the
-      // exchange but each branch re-ran the post-exchange aggregate —
-      // and the r14 staging probe (10.4 s staged vs 9.6 lazy) showed
-      // materializing blocks is the wrong fix at this row count
-      val both = sim.select(explode(array(
-          struct(col("p1").as("a"), col("p2").as("b"),
-            col("cosine_est").as("cosine_est")),
-          struct(col("p2").as("a"), col("p1").as("b"),
-            col("cosine_est").as("cosine_est")))).as("e"))
-        .select(col("e.a").as("p1"), col("e.b").as("p2"),
-          col("e.cosine_est").as("cosine_est"))
-      val w = Window.partitionBy("p1")
-        .orderBy(col("cosine_est").desc, col("p2"))
-      both.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("p1").as("part"), col("rank"),
-          col("p2").as("similar"), col("cosine_est"))
-        .orderBy("part", "rank")
+      graft.operators.ItemItemCf
+        .cappedDimsum(cfPositives(s, dir), cap = Int.MaxValue, gamma = 8.0)
+        .withColumnRenamed("cosine", "cosine_est")
     },
 
     // Multi-step catalog mutation under the driver gate (round-9
@@ -3124,7 +3089,7 @@ object CoverageQueries {
         .withColumn("h", conv(substring(md5(concat(lit("kmv:"),
           col("user_id").cast("string"), lit(":"), col("d"))),
           1, 15), 16, 10).cast("long"))
-        .localCheckpoint() // reused by sketches and both exact sides
+        .transform(Staging(_)) // reused by sketches and both exact sides
       val nEx = u.groupBy("et").agg(count(lit(1)).as("n"))
       val sk = u.withColumn("rn", row_number().over(
           Window.partitionBy("et").orderBy("h", "user_id", "d")))
@@ -3225,7 +3190,7 @@ object CoverageQueries {
           .select(col("l_orderkey").as("o_orderkey"),
             col("l_partkey").as("p")), Seq("o_orderkey"))
         .select("u", "p").distinct()
-        .localCheckpoint() // four iteration joins reuse it
+        .transform(Staging(_)) // four iteration joins reuse it
       val h1 = e.groupBy("u").agg(count(lit(1)).as("h1"))
       val a1 = e.join(h1, "u").groupBy("p").agg(sum("h1").as("a1"))
       val h2 = e.join(a1, "p").groupBy("u").agg(sum("a1").as("h2"))
@@ -3267,7 +3232,7 @@ object CoverageQueries {
         .withColumn("rho", when(col("w") === 0, lit(27))
           .otherwise(lit(26) - floor(log2(col("w"))).cast("long")))
         .groupBy("day", "bucket").agg(max("rho").as("register"))
-        .localCheckpoint() // the persisted per-day sketch table
+        .transform(Staging(_)) // the persisted per-day sketch table
       val probes = regs.select("day").distinct()
         .withColumn("off", explode(sequence(lit(0), lit(6))))
         .select(col("day").as("tday"),
@@ -3354,7 +3319,7 @@ object CoverageQueries {
         .select(col("event_type").as("et"),
           round(col("value") * 1e6).cast("long").as("v"))
         .groupBy("et", "v").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // thresholds + clipped sums reuse it
+        .transform(Staging(_)) // thresholds + clipped sums reuse it
       val cum = R.groupedPrefixSum(h, "et", "v", "cnt", "pre")
         .withColumn("cum", col("pre") + col("cnt"))
       val n = h.groupBy("et").agg(sum("cnt").as("n"))
@@ -3388,23 +3353,7 @@ object CoverageQueries {
     // the pair AT each snapshot; the oracle computes both joined
     // states closed-form.
     "q226_snapshot_consistent_read" -> { (s, dir) =>
-      val root = Tables.scratchDir(s, "q226", fresh = true)
-      val o = t(s, dir, "orders").filter(col("o_orderkey") <= 400)
-        .select(col("o_orderkey").as("PID"),
-          date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-      val li = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("PID"))
-        .agg(sum(col("l_quantity").cast("long")).as("qty"))
-        .join(o.select("PID", "month"), "PID")
-      val a = new graft.sources.PartitionedCowTable(s"$root/a", "month", s)
-      val b = new graft.sources.PartitionedCowTable(s"$root/b", "month", s)
-      val snap = new graft.sources.SnapshotCatalog(s"$root/log", s)
-      a.overwrite(o); b.overwrite(li)
-      snap.record(0, Map("a" -> a.version, "b" -> b.version))
-      a.updateWhere(col("PID") % 4 === 0,
-        Map("cents" -> (col("cents") + 1000L)))
-      snap.record(1, Map("a" -> a.version, "b" -> b.version))
+      val (a, b, snap) = snapshotPair(s, dir, "q226", 400)
       b.updateWhere(col("PID") % 3 === 0, Map("qty" -> (col("qty") + 5L)))
       snap.record(2, Map("a" -> a.version, "b" -> b.version))
       // step 3: ONE logical commit touching BOTH tables
@@ -3479,7 +3428,7 @@ object CoverageQueries {
         .groupBy(least(col("win"), col("lose")).as("i"),
           greatest(col("win"), col("lose")).as("j"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint() // ≤T² rows
+        .transform(Staging(_)) // ≤T² rows
       val wins = duels.groupBy(col("win").as("ty"))
         .agg(count(lit(1)).as("w"))
       // items with ≥1 duel are rated; an all-losing item keeps w = 0
@@ -3490,11 +3439,11 @@ object CoverageQueries {
         .groupBy("ty").agg(sum("n").as("m"))
         .join(wins, Seq("ty"), "left")
         .select(col("ty"), coalesce(col("w"), lit(0L)).as("w"), col("m"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val directed = nij
         .unionByName(nij.select(col("j").as("i"), col("i").as("j"),
           col("n")))
-        .localCheckpoint()
+        .transform(Staging(_))
       var strength = items.select(col("ty"), lit(1000000L).as("st"))
       for (_ <- 1 to rounds) {
         val denom = directed
@@ -3507,7 +3456,7 @@ object CoverageQueries {
           .groupBy("ty").agg(sum("term").as("dn"))
         strength = items.join(denom, "ty")
           .select(col("ty"), expr(s"(w * ${SC}L) div dn").as("st"))
-          .localCheckpoint() // ≤T rows per round
+          .transform(Staging(_)) // ≤T rows per round
       }
       strength.join(items, "ty")
         .withColumn("rank", row_number().over(
@@ -3886,23 +3835,7 @@ object CoverageQueries {
     // reclaimed (5 = a's v0,v1,v2-orphan + b's v0,v1-orphan; the
     // restore commits are the survivors).
     "q254_snapshot_crash_recovery" -> { (s, dir) =>
-      val root = Tables.scratchDir(s, "q254", fresh = true)
-      val o = t(s, dir, "orders").filter(col("o_orderkey") <= 200)
-        .select(col("o_orderkey").as("PID"),
-          date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-      val li = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("PID"))
-        .agg(sum(col("l_quantity").cast("long")).as("qty"))
-        .join(o.select("PID", "month"), "PID")
-      val a = new graft.sources.PartitionedCowTable(s"$root/a", "month", s)
-      val b = new graft.sources.PartitionedCowTable(s"$root/b", "month", s)
-      val snap = new graft.sources.SnapshotCatalog(s"$root/log", s)
-      a.overwrite(o); b.overwrite(li)
-      snap.record(0, Map("a" -> a.version, "b" -> b.version))
-      a.updateWhere(col("PID") % 4 === 0,
-        Map("cents" -> (col("cents") + 1000L)))
-      snap.record(1, Map("a" -> a.version, "b" -> b.version))
+      val (a, b, snap) = snapshotPair(s, dir, "q254", 200)
       // step 2 CRASHES between the table commits and the log append:
       // both deletes are durable, the record() never runs
       a.deleteWhere(col("PID") % 9 === 0)
@@ -3918,13 +3851,13 @@ object CoverageQueries {
       // materialized BEFORE vacuum: post-vacuum, the undone version
       // manifests are gone (the same retention contract as Delta)
       val crashedView = joined(vs("a"), vs("b"), "crashed_view")
-        .localCheckpoint()
+        .transform(Staging(_))
       // recovery: roll back to the logged versions, reclaim orphans,
       // redo the step, publish atomically
       a.restore(vs("a")); b.restore(vs("b"))
-      def manifests(sub: String): Long = {
+      def manifests(tbl: graft.sources.PartitionedCowTable): Long = {
         val listing = java.nio.file.Files.list(
-          java.nio.file.Paths.get(s"$root/$sub"))
+          java.nio.file.Paths.get(tbl.root))
         try {
           var n = 0L
           listing.forEach { p =>
@@ -3934,15 +3867,15 @@ object CoverageQueries {
           n
         } finally listing.close()
       }
-      val before = manifests("a") + manifests("b")
+      val before = manifests(a) + manifests(b)
       a.vacuum(); b.vacuum()
-      val reclaimed = before - (manifests("a") + manifests("b"))
+      val reclaimed = before - (manifests(a) + manifests(b))
       a.deleteWhere(col("PID") % 9 === 0)
       b.deleteWhere(col("PID") % 9 === 0)
       snap.record(2, Map("a" -> a.version, "b" -> b.version))
       val vs2 = snap.versionsAt(snap.currentStep)
       val recovered = joined(vs2("a"), vs2("b"), "recovered")
-        .localCheckpoint()
+        .transform(Staging(_))
       import s.implicits._
       val audit = Seq(("audit", crashStep, snap.currentStep, reclaimed))
         .toDF("snapshot", "n", "sum_cents", "sum_qty")
@@ -3970,7 +3903,7 @@ object CoverageQueries {
         col("c_nationkey").cast("long").as("nat"),
         floor(col("c_acctbal") / 1000).cast("long").as("balb"),
         col("c_mktsegment").as("seg"))
-        .localCheckpoint() // both levels + global reuse it
+        .transform(Staging(_)) // both levels + global reuse it
       val gl = broadcast(c.groupBy("seg").agg(count(lit(1)).as("gs")))
       val tot = broadcast(c.agg(count(lit(1)).as("nn")))
       def audit(level: Int, keys: Seq[String]): DataFrame = {
@@ -4051,7 +3984,7 @@ object CoverageQueries {
       val ev = t(s, dir, "events")
         .select(col("event_type").as("et"),
           round(col("value") * 1e6).cast("long").as("vm"))
-        .localCheckpoint() // sketch + exact arms share the scan
+        .transform(Staging(_)) // sketch + exact arms share the scan
       val n = ev.groupBy("et").agg(count(lit(1)).as("n"))
       val ranks = n.crossJoin(broadcast(Seq(50L, 95L, 99L).toDF("p")))
         .withColumn("r", expr("(n * p + 99) div 100"))
@@ -4180,7 +4113,7 @@ object CoverageQueries {
       // the masked store: payloads XOR the owner's keystream
       val store = ev.select(col("event_id"), col("user_id"),
         (col("vm").bitwiseXOR(keyOf(col("user_id")))).as("enc"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val keys = new graft.sources.CowTable(s"$root/keys", s)
       keys.overwrite(ev.select("user_id").distinct()
         .withColumn("k", keyOf(col("user_id"))))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Tables.{load => t}
 import graft.functions.{GraftFunctions => G}
 import graft.operators.{SceneQueryOps => S}
 
@@ -14,9 +15,6 @@ import graft.operators.{SceneQueryOps => S}
   * exercised against that arithmetic oracle.
   */
 object GeoQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Derived integer footprint per customer (exact in both engines):
     * south = key%160-80, north = south+1+key%7,

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => t}
 import graft.functions.{GraftFunctions => G}
 import graft.multimodal.{Multimodal => M}
+import graft.operators.Staging
 
 /** Multimodal binary-column pipeline under the driver gate
   * (SURVEY.md builder extension; previously spec-only).
@@ -21,9 +22,6 @@ import graft.multimodal.{Multimodal => M}
   * collect, no interpretation outside the codec.
   */
 object MultimodalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -76,7 +74,7 @@ object MultimodalQueries {
       // frame (q291's rationale; narrow metadata rows)
       val feats = M.extractFeaturesMd5(media).toDF()
         .select(col("media_id").as("vec_id"), col("feature").as("v"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val batch = feats.filter(col("vec_id") % 10 === 0)
       val corpus = feats.filter(col("vec_id") % 10 =!= 0)
       val distinctCorpus = corpus.groupBy("v")
@@ -128,7 +126,7 @@ object MultimodalQueries {
         .select(col("media_id").as("vec_id"),
           expr("transform(bands, s -> cast(s - 12240 as double) / 65536.0D)")
             .as("v"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val batch = feats.filter(col("vec_id") % 10 === 0)
       val corpus = feats.filter(col("vec_id") % 10 =!= 0)
       val distinctCorpus = corpus.groupBy("v")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Tables.{load => t}
 import graft.operators.{RelationalOps => R, ScaleOps => Sc, SceneQueryOps => S}
 
 /** SURVEY.md §2.2–§2.7 operator inventory re-expressed over the driver's
@@ -15,9 +16,6 @@ import graft.operators.{RelationalOps => R, ScaleOps => Sc, SceneQueryOps => S}
   * aggregation.
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

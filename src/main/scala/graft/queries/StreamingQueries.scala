@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress,
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.Tables.{load => t}
 import graft.sources.CowTable
-import graft.operators.ScaleOps
+import graft.operators.{ScaleOps, Staging}
 import graft.streaming.StreamOps
 
 /** SURVEY.md §2.9 under the DRIVER GATE (round-5 verdict item 3):
@@ -42,9 +43,6 @@ import graft.streaming.StreamOps
   * semantics, which is precisely what the oracle states in SQL.
   */
 object StreamingQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Scale-adaptive shuffle/state partition count for one streaming
     * drain (guide §2: derive partitioning from the input, never from a
@@ -643,7 +641,7 @@ object StreamingQueries {
         .filter(size(col("ws")) > 0)
       val corpusSets = d.filter(col("doc_id") % 10 =!= 0)
         .groupBy("ws").agg(min("doc_id").as("osid"))
-        .localCheckpoint()
+        .transform(Staging(_))
       // Spread the k=128 signature pass (r15, guide §2.5): AQE
       // coalesces the distinct-set exchange to ~1 block at gate scale
       // and the checkpoint freezes it, so the corpus index build (the
@@ -657,7 +655,7 @@ object StreamingQueries {
         if (corpusSets.rdd.getNumPartitions >= nShuf) corpusSets
         else corpusSets.repartition(nShuf, col("osid"))
       val corpusIdx = IncrementalDedup.bandIndex(corpusWide, "osid", 128, 16)
-        .localCheckpoint()
+        .transform(Staging(_))
       val input = t(s, dir, "documents")
         .filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
@@ -727,7 +725,7 @@ object StreamingQueries {
       table.read()
         .select("user_id", "event_id", "event_type")
         .orderBy("user_id")
-        .localCheckpoint()
+        .transform(Staging(_))
     },
 
     // q137's count-min sketch BUILT AS A STREAM — the proof that
@@ -757,7 +755,7 @@ object StreamingQueries {
             explode(sequence(lit(0), lit(d - 1))).as("r"))
           .withColumn("c", cellOf(col("r"), col("user_id")))
           .groupBy("r", "c").agg(count(lit(1)).as("cnt"))
-      }._1.localCheckpoint()
+      }._1.transform(Staging(_))
       val exact = t(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("exact_n"))
       exact.orderBy(col("exact_n").desc, col("user_id")).limit(10)
@@ -931,7 +929,7 @@ object StreamingQueries {
           min("PID").as("min_pid"), max("PID").as("max_pid"))
         .withColumn("audit_rows", lit(auditRows))
         .orderBy("Downloaded", "ARDProduct")
-        .localCheckpoint()
+        .transform(Staging(_))
     },
 
     // Watermark LATE-DATA DROP semantics — the one streaming contract
@@ -1054,7 +1052,7 @@ object StreamingQueries {
           lit(sink.read().filter(col("kind") === "b").count()))
         .withColumn("replay_skipped", lit(replaySkipped))
         .withColumn("n_commits", lit(sink.version.toLong + 1L))
-        .localCheckpoint()
+        .transform(Staging(_))
     },
 
     // END-TO-END incremental pipeline: q287's exactly-once partitioned
@@ -1093,7 +1091,7 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_months"), sum("n").as("n_rows"),
           sum("cents").as("sum_cents"))
         .withColumn("recomputed_total", lit(recomputedTotal))
-        .localCheckpoint()
+        .transform(Staging(_))
     },
 
     "q266_exactly_once_sink" -> { (s, dir) =>
@@ -1128,7 +1126,7 @@ object StreamingQueries {
         .withColumn("n_batches_applied",
           lit(sink.read().filter(col("kind") === "b").count()))
         .withColumn("replay_skipped", lit(replaySkipped))
-        .localCheckpoint()
+        .transform(Staging(_))
     },
 
     // FULL-OUTER stream-stream join — the last join mode (q165 inner,

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => t}
 import graft.functions.{GraftFunctions => G}
-import graft.operators.{RelationalOps => R, ScaleOps => Sc}
+import graft.operators.{RelationalOps => R, ScaleOps => Sc, Staging}
 
 /** LLM-training-data text operators over the `documents` table
   * (SURVEY.md §7.2 scale extensions): exact dedup, MinHash+LSH and
@@ -28,9 +28,6 @@ import graft.operators.{RelationalOps => R, ScaleOps => Sc}
   * DuckDB side of every text oracle in this file.
   */
 object TextQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def toks(c: Column): Column = G.tokens(c)
 
@@ -165,7 +162,7 @@ object TextQueries {
         // probe added ~1 s to q73's 3.7 s steady state at sf0.1)
         val df = sets.select(explode(col("ws")).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("df"))
-          .localCheckpoint()
+          .transform(Staging(_))
         val probe = df.agg(min(col("df")).as("min_df")).head()
         val nSets = sets.count()
         if (probe.getLong(0) * 20 > nSets) hashMinKey(sets)
@@ -223,10 +220,10 @@ object TextQueries {
       .select(col("doc_id"), G.sortedWordSet(col("text")).as("ws"))
       .filter(size(col("ws")) > 0)
       .withColumn("fp", md5(array_join(col("ws"), " ")))
-      .localCheckpoint()
+      .transform(Staging(_))
     val sets = d.groupBy("fp")
       .agg(min("doc_id").as("sid"), first(col("ws")).as("ws"))
-      .localCheckpoint()
+      .transform(Staging(_))
     val members = d.select("doc_id", "fp")
       .join(sets.select("fp", "sid"), "fp")
       .select(col("doc_id"), col("sid"))
@@ -315,11 +312,11 @@ object TextQueries {
     // multiple references, so the plain lineage stays.)
     val sets0 = d.groupBy("ws")
       .agg(min("doc_id").as("sid"), count(lit(1)).as("gsz"))
-    val sets = if (checkpointMaps) sets0.localCheckpoint() else sets0
+    val sets = if (checkpointMaps) Staging(sets0) else sets0
     // id-only membership map doc_id → set id (no arrays downstream)
     val members0 = d.join(sets.select(col("ws"), col("sid")), Seq("ws"))
       .select(col("sid"), col("doc_id"))
-    val members = if (checkpointMaps) members0.localCheckpoint() else members0
+    val members = if (checkpointMaps) Staging(members0) else members0
     // (r15 probe, rejected: spreading the checkpointed sets before
     // the k=128 signature pass — q114's corpus-index device — was
     // measured FLAT here, 6.8-8.4 s before vs 6.8-7.8 s after at
@@ -387,7 +384,7 @@ object TextQueries {
     // artifact a production simhash index IS — and without the cut
     // both join sides recompute scan+explode+60-bit-agg (the q108
     // lesson; measured 1.9 → 1.2 s on q60 at sf0.1)
-    val d = sums.select(col("doc_id"), fp.as("sh")).localCheckpoint()
+    val d = sums.select(col("doc_id"), fp.as("sh")).transform(Staging(_))
     val banded = d.select(col("doc_id"), col("sh"),
       posexplode(array((0 until 4).map(i =>
         col("sh").bitwiseAND(lit(0x7fffL << (bandBits * i)))): _*)))
@@ -1114,7 +1111,7 @@ object TextQueries {
       // ACTION, and without truncation step k's action re-executes
       // every earlier step's scan+fold (measured 9.2 s vs 1.4 s for 3
       // steps) — the same device q55 uses between its two actions
-      var cur = w0.localCheckpoint()
+      var cur = Staging(w0)
       // headOption, not head(): a degenerate corpus can exhaust its
       // mergeable pairs before the step budget (every word collapsed
       // to one symbol), and BPE training simply stops there — an
@@ -1127,7 +1124,7 @@ object TextQueries {
               (top.getString(0), top.getString(1), top.getLong(2))
             // the final merge result feeds no further pairs() scan — an
             // eager checkpoint there would be one fully wasted job per run
-            cur = if (step < 3) applyMerge(cur, a, b).localCheckpoint()
+            cur = if (step < 3) applyMerge(cur, a, b).transform(Staging(_))
                   else cur
             (step.toLong, a, b, f)
           }
@@ -1571,7 +1568,7 @@ object TextQueries {
             .cast("long").as("h"))
         .distinct()
         .groupBy("h", "split").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val a = hs.select(col("h"), col("split").as("split_a"),
         col("c").as("ca"))
       val b = hs.select(col("h"), col("split").as("split_b"),
@@ -1992,7 +1989,7 @@ object TextQueries {
         .filter(size(col("tk")) >= 3)
         .select(col("doc_id"), col("text"), minGramFp(col("tk")).as("fp"))
         .repartition(col("doc_id"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       val a = d.select(col("fp"), col("doc_id").as("doc_a"),
         col("text").as("text_a"))
       val b = d.select(col("fp"), col("doc_id").as("doc_b"),
@@ -2015,7 +2012,7 @@ object TextQueries {
           greatest(length(col("text_a")), length(col("text_b"))) * 0.2)
         .repartition(s.sessionState.conf.numShufflePartitions,
           col("doc_a"))
-        .localCheckpoint(true)
+        .transform(Staging(_))
       cands
         .withColumn("mx",
           greatest(length(col("text_a")), length(col("text_b"))))
@@ -2081,7 +2078,7 @@ object TextQueries {
           least(floor(col("score") * 10).cast("long"), lit(9L)).as("b"))
         .groupBy("b").agg(count(lit(1)).as("n"),
           sum(when(col("lang") === "en", 1L).otherwise(0L)).as("pos"))
-        .localCheckpoint() // ≤10 rows, reused by the interval algebra
+        .transform(Staging(_)) // ≤10 rows, reused by the interval algebra
       val wb = Window.orderBy("b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val pre = grid.withColumn("cp", sum("n").over(wb))
@@ -2159,7 +2156,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n"), sum("o").as("so"),
           sum("sq").as("ssq"),
           sum((col("d") * col("d")).cast("decimal(38,0)")).as("sd2"))
-        .localCheckpoint() // ≤10 rows
+        .transform(Staging(_)) // ≤10 rows
       val tot = broadcast(g.agg(sum("n").as("nt"), sum("so").as("sot"),
         sum("sd2").as("sd2t")))
       val m2 = M.toDouble * M
@@ -2208,7 +2205,7 @@ object TextQueries {
         .filter(size(col("tk")) >= 3)
         .select(minGramFp(col("tk")).as("h"), col("source"))
         .groupBy("h", "source").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .transform(Staging(_))
       val a = hs.select(col("h"), col("source").as("source_a"),
         col("c").as("ca"))
       val b = hs.select(col("h"), col("source").as("source_b"),
@@ -2569,7 +2566,7 @@ object TextQueries {
     "q220_temperature_resample" -> { (s, dir) =>
       val budget = 500
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"))
-        .localCheckpoint() // histogram + ranked keep reuse it
+        .transform(Staging(_)) // histogram + ranked keep reuse it
       val g = d.groupBy("source").agg(count(lit(1)).as("n"))
         .withColumn("w", pow(col("n").cast("double"), 0.5))
       val tot = broadcast(g.agg(sum("w").as("z")))
@@ -2577,7 +2574,7 @@ object TextQueries {
         .select(col("source"), col("n"),
           least(col("n"), round(lit(budget) * col("w") / col("z"))
             .cast("long")).as("quota"))
-        .localCheckpoint() // |sources| rows
+        .transform(Staging(_)) // |sources| rows
       val ranked = d.join(broadcast(alloc), "source")
         .withColumn("rk", row_number().over(Window.partitionBy("source")
           .orderBy(conv(substring(md5(concat(lit("tmp:"),
@@ -2626,7 +2623,7 @@ object TextQueries {
       val clean = distinctDocs
         .filter(col("n_tokens") >= 5 &&
           col("n_stop") * 100 >= col("n_tokens"))
-        .localCheckpoint() // histogram + draw reuse it
+        .transform(Staging(_)) // histogram + draw reuse it
       // 3. temperature mix over the survivors
       val g = clean.groupBy("source").agg(count(lit(1)).as("n"))
         .withColumn("w", pow(col("n").cast("double"), 0.5))
@@ -2715,7 +2712,7 @@ object TextQueries {
         .select(col("source"),
           size(toks(col("text"))).cast("long").as("sc"))
         .groupBy("source", "sc").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // |sources| x |score domain| rows
+        .transform(Staging(_)) // |sources| x |score domain| rows
       val srcCdf = hist
         .withColumn("k",
           sum("c").over(Window.partitionBy("source").orderBy("sc")))
@@ -2816,7 +2813,7 @@ object TextQueries {
     "q236_budget_waterfill" -> { (s, dir) =>
       val caps = t(s, dir, "documents")
         .groupBy("source").agg(count(lit(1)).as("cap"))
-        .localCheckpoint() // ≤|sources| rows
+        .transform(Staging(_)) // ≤|sources| rows
       val st = broadcast(caps.agg(count(lit(1)).as("m"),
         sum("cap").as("tot"), max("cap").as("maxcap")))
       val wr = Window.orderBy("cap", "source") // ≤m-row window
@@ -2856,7 +2853,7 @@ object TextQueries {
         .groupBy("source").agg(sum("nt").as("tok"))
         .withColumn("w",
           round(sqrt(col("tok").cast("double")) * 1e6).cast("long"))
-        .localCheckpoint() // ≤|sources| rows
+        .transform(Staging(_)) // ≤|sources| rows
       val tot = broadcast(g.agg(sum("tok").as("corpus"),
         sum("w").as("z")))
       g.crossJoin(tot)
@@ -3047,7 +3044,7 @@ object TextQueries {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"),
           size(toks(col("text"))).cast("long").as("len"))
-        .localCheckpoint() // both strategies rank the same snapshot
+        .transform(Staging(_)) // both strategies rank the same snapshot
       def waste(tag: String, key: Column): DataFrame =
         R.allocateKeys(docs.withColumn("__k", key), "__k", lit(0L), "rn")
           .withColumn("batch", expr(s"(rn - 1) div $bs"))
@@ -3171,7 +3168,7 @@ object TextQueries {
           col("vocab_cum"),
           round(log(col("tokens_cum")) * 1000).cast("long").as("x"),
           round(log(col("vocab_cum")) * 1000).cast("long").as("y"))
-        .localCheckpoint() // 10 rows; the fit and output reuse them
+        .transform(Staging(_)) // 10 rows; the fit and output reuse them
       val beta = broadcast(pts.agg(count(lit(1)).as("n"),
           sum("x").as("sx"), sum("y").as("sy"),
           sum(col("x") * col("y")).as("sxy"),

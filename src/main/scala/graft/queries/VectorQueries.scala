@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => t}
 import graft.functions.{GraftFunctions => G}
-import graft.operators.{VectorOps => V}
+import graft.operators.{VectorOps => V, Staging}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §7.2):
   * brute-force cosine top-k as the exact baseline, an IVF-style
@@ -21,9 +21,6 @@ import graft.operators.{VectorOps => V}
   * shrinks by ~nlist/nprobe at identical plan shape.
   */
 object VectorQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def emb(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings")
@@ -398,7 +395,7 @@ object VectorQueries {
         .groupBy("cx", "cy").agg(count(lit(1)).as("npts"))
         .filter(col("npts") >= minPts)
         .withColumn("cell", (col("cx") + 100) * 1000 + (col("cy") + 100))
-        .localCheckpoint()
+        .transform(Staging(_))
       val probes = dense
         .select(col("cell").as("cell_a"), col("cx"), col("cy"))
         .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
@@ -471,14 +468,14 @@ object VectorQueries {
         .orderBy(col("rel").desc, col("vec_id"))
         .limit(poolN)
         .select("vec_id", "rel", "v")
-        .localCheckpoint() // pool + pairs reuse it across the k steps
+        .transform(Staging(_)) // pool + pairs reuse it across the k steps
       val pairs = pool.select(col("vec_id").as("a"), col("v").as("av"))
         .join(broadcast(pool.select(col("vec_id").as("b"),
           col("v").as("bv"))), col("a") =!= col("b"))
         .select(col("a"), col("b"),
           round(G.cosineSim(col("av"), col("bv")) * 1e6).cast("long")
             .as("sim"))
-        .localCheckpoint()
+        .transform(Staging(_))
       // Greedy selection: each step is an argmax over the ≤16-row pool
       // (bounded metadata, the kmeansFit precedent) — max(struct) so
       // the argmax is one hash aggregate, no sort. Struct comparison
@@ -548,7 +545,7 @@ object VectorQueries {
         .crossJoin(broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("nv"))))
         .select(col("vec_id"), col("v"), distTo(col("nv")).as("mind"))
-        .localCheckpoint()
+        .transform(Staging(_))
       var step = 2
       var exhausted = false
       while (step <= k && !exhausted) {
@@ -565,7 +562,7 @@ object VectorQueries {
               st.filter(col("vec_id") === picked).select(col("v").as("nv"))))
             .select(col("vec_id"), col("v"),
               least(col("mind"), distTo(col("nv"))).as("mind"))
-            .localCheckpoint()
+            .transform(Staging(_))
           step += 1
         }
       }
@@ -645,7 +642,7 @@ object VectorQueries {
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val assigned = V.assignToCentroids(e, cents)
         .filter(col("vec_id") >= 5)
-        .localCheckpoint() // reused by both the probe and the counts
+        .transform(Staging(_)) // reused by both the probe and the counts
       val qs = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
       val nCorpus = broadcast(assigned.agg(count(lit(1)).as("nc")))

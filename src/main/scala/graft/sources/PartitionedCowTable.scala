@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   StructField, TimestampNTZType, TimestampType}
 
 import graft.plans.BoundValues
+import graft.operators.Staging
 
 /** Partition-level copy-on-write table — the 100 TB layout promised by
   * [[CowTable]]'s scaladoc, implemented. A version is a MANIFEST
@@ -584,39 +585,36 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val m = manifestAt(cur)
     val spec = m.spec
     val selCols = (keys :+ spec).distinct
-    val hit = read().filter(pred).select(selCols.map(col): _*)
-      .localCheckpoint() // reused: key projection + touched values
-    // the block is this call's alone, so every way out frees it: a
-    // checkpointed frame's blocks belong to the RDD under its
-    // LogicalRDD, which Dataset.unpersist does not reach
-    try {
+    // the block is this call's alone: its scope frees it on every way
+    // out (success, no match, a lost race)
+    Staging.scope(spark) {
+      val hit = Staging(read().filter(pred).select(selCols.map(col): _*))
       val matches = hit.select(keys.map(col): _*).distinct()
       val nKeys = matches.count()
-      if (nKeys == 0) return
-      val touched = touchedValues(hit, spec)
-      val rel = f"dv/dv_${cur + 1}%06d_" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
-      (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
-        .write.parquet(s"$root/$rel")
-      val attached = m.entries
-        .filter(e => e.pcol != spec || touched.contains(e.value))
-        .map { e => val d = m.dir(e.dir); e.dir -> d.copy(dvs = d.dvs :+ rel) }
-      raceSeam()
-      try publish(cur + 1, m.copy(dirs = m.dirs ++ attached))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // the just-written vector file is ours and no manifest
-          // references it — reclaim it in the same failure path, the
-          // commit() symmetry (an orphan would otherwise linger until
-          // vacuum)
-          try CowTable.walkDelete(Paths.get(root, rel))
-          catch { case c: Exception => e.addSuppressed(c) }
-          throw e
+      if (nKeys > 0) {
+        val touched = touchedValues(hit, spec)
+        val rel = f"dv/dv_${cur + 1}%06d_" +
+          s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+        val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
+        (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
+          .write.parquet(s"$root/$rel")
+        val attached = m.entries
+          .filter(e => e.pcol != spec || touched.contains(e.value))
+          .map { e => val d = m.dir(e.dir); e.dir -> d.copy(dvs = d.dvs :+ rel) }
+        raceSeam()
+        try publish(cur + 1, m.copy(dirs = m.dirs ++ attached))
+        catch {
+          case e: java.util.ConcurrentModificationException =>
+            // the just-written vector file is ours and no manifest
+            // references it — reclaim it in the same failure path, the
+            // commit() symmetry (an orphan would otherwise linger until
+            // vacuum)
+            try CowTable.walkDelete(Paths.get(root, rel))
+            catch { case c: Exception => e.addSuppressed(c) }
+            throw e
+        }
       }
-    } finally hit.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      .rdd.unpersist(blocking = false)
+    }
   }
 
   /** Deletion-vector files the current version references (audit). */

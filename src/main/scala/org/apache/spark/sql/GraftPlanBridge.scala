@@ -36,6 +36,13 @@ object GraftPlanBridge {
   def ofLocalRows(spark: SparkSession, rows: Seq[InternalRow],
                   schema: StructType): DataFrame =
     ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Drops RDD `rddId`'s blocks. Not through `RDD.unpersist`, which
+    * warns that a locally checkpointed RDD cannot be recomputed: the
+    * callers free blocks nothing reads again.
+    */
+  def unpersist(spark: SparkSession, rddId: Int): Unit =
+    spark.sparkContext.unpersistRDD(rddId, blocking = false)
 }
 
 /** One partition of Spark's columnar cache, filled from `source` by one
@@ -89,9 +96,8 @@ final class InMemoryCopy(source: DataFrame, sizeInBytes: BigInt) {
       rows.schema)
   }
 
-  /** Drops the blocks. Not through `RDD.unpersist`, which warns that a
-    * locally checkpointed RDD cannot be recomputed: this copy is never
-    * recomputed, a caller that finds it not [[held]] reads its files.
+  /** Drops the blocks. This copy is never recomputed: a caller that
+    * finds it not [[held]] reads its files.
     */
-  def release(): Unit = session.sparkContext.unpersistRDD(blocks.id, blocking = false)
+  def release(): Unit = GraftPlanBridge.unpersist(session, blocks.id)
 }

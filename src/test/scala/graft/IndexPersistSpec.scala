@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +17,7 @@ import graft.operators.{IncrementalDedup, VectorOps}
   */
 class IndexPersistSpec extends SparkSpec {
 
-  private val base = Files.createTempDirectory("graft-idx").toString
+  private val base = tempDir("graft-idx")
   private val dir = "/root/testdata/sf0.001"
 
   private def collectSorted(df: DataFrame): Seq[String] =

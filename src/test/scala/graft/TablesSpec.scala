@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types._
   */
 class TablesSpec extends SparkSpec {
 
-  private val base = Files.createTempDirectory("graft-tables").toString
+  private val base = tempDir("graft-tables")
 
   // Three instants with sub-second precision that survives micros.
   private val micros = Seq(

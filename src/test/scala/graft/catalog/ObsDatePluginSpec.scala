@@ -1,6 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.functions._
@@ -31,7 +30,7 @@ class ObsDatePluginSpec extends SparkSpec {
 
   test("obs-date refresh derives both tables; flags survive refresh") {
     implicit val s = spark
-    val root = Files.createTempDirectory("obs").toString
+    val root = tempDir("obs")
     val cat = ObsDateCatalog("LandsatGOOG", root)
     cat.refresh(mkScenes().toDF())
     // invalid scene 4 excluded -> 2 distinct (platform, date) rows
@@ -50,7 +49,7 @@ class ObsDatePluginSpec extends SparkSpec {
 
   test("refresh on a date-partitioned backend rewrites only touched dates") {
     import graft.sources.PartitionedCowTable
-    val root = Files.createTempDirectory("obsp").toString
+    val root = tempDir("obsp")
     val scns = new PartitionedCowTable(s"$root/obs_date_scns", "ObsDate", spark)
     val cat = new ObsDateCatalog(graft.model.SensorSchemas.landsat,
       new CowTable(s"$root/obs_dates", spark), scns, spark)
@@ -80,7 +79,7 @@ class ObsDatePluginSpec extends SparkSpec {
       (4L, "Sentinel-1A", Timestamp.valueOf("2020-03-03 05:00:00"), true)
     ).toDF("PID", "Platform", "Acquisition_Date", "Invalid")
     val c1 = ObsDateCatalog(SensorSchemas.sentinel1,
-      Files.createTempDirectory("obs_s1").toString)
+      tempDir("obs_s1"))
     c1.refresh(s1)
     assert(c1.obsDates.count() == 2) // invalid 4 excluded
     assert(c1.scenesFor("Sentinel-1A", "2020-03-01").select("Scene_PID")
@@ -93,7 +92,7 @@ class ObsDatePluginSpec extends SparkSpec {
       (11L, "Sentinel-2B", Timestamp.valueOf("2020-04-02 10:00:00"), false)
     ).toDF("PID", "Platform_ID", "Sensing_Time", "Invalid")
     val c2 = ObsDateCatalog(SensorSchemas.sentinel2,
-      Files.createTempDirectory("obs_s2").toString)
+      tempDir("obs_s2"))
     // inclusive refresh window (the reference's start/end args)
     c2.refresh(s2, startIncl = Some("2020-04-02"))
     assert(c2.obsDates.count() == 1)
@@ -103,13 +102,13 @@ class ObsDatePluginSpec extends SparkSpec {
     val g = Seq((20L, Date.valueOf("2020-05-01"), false))
       .toDF("PID", "Date_Acquired", "Invalid")
     val cg = ObsDateCatalog(SensorSchemas.gedi,
-      Files.createTempDirectory("obs_g").toString)
+      tempDir("obs_g"))
     intercept[UnsupportedOperationException] { cg.refresh(g) }
   }
 
   test("overviews JSON: write-back, path rewrite, export/import roundtrip") {
     implicit val s = spark
-    val root = Files.createTempDirectory("obs3").toString
+    val root = tempDir("obs3")
     val cat = ObsDateCatalog("LandsatGOOG", root)
     cat.refresh(mkScenes().toDF())
     cat.markProcessed("L8", "2020-03-01",
@@ -120,7 +119,7 @@ class ObsDatePluginSpec extends SparkSpec {
     // export -> import into a fresh catalog with a path rewrite
     cat.exportJson(s"$root/dates.json", s"$root/scns.json")
     val cat2 = ObsDateCatalog("LandsatGOOG",
-      Files.createTempDirectory("obs4").toString)
+      tempDir("obs4"))
     cat2.importJson(s"$root/dates.json", s"$root/scns.json",
       pathRewrites = Map("/archive/vis" -> "/new/vis"))
     assert(cat2.obsDates.count() == 2 && cat2.obsDateScns.count() == 4)
@@ -131,7 +130,7 @@ class ObsDatePluginSpec extends SparkSpec {
   test("strict obs-date range uses open bounds") {
     implicit val s = spark
     val cat = ObsDateCatalog("LandsatGOOG",
-      Files.createTempDirectory("obs2").toString)
+      tempDir("obs2"))
     cat.refresh(mkScenes().toDF())
     // (2020-03-01, 2020-03-02) strictly between -> nothing
     assert(cat.datesInRangeStrict("2020-03-01", "2020-03-02").count() == 0)
@@ -140,7 +139,7 @@ class ObsDatePluginSpec extends SparkSpec {
 
   test("plugin catalog: need-list, upsert, reset, summary") {
     implicit val s = spark
-    val plug = PluginCatalog(Files.createTempDirectory("plug").toString + "/t")
+    val plug = PluginCatalog(tempDir("plug") + "/t")
     val scenes = mkScenes().toDF().filter(!$"Invalid")
     // nothing recorded yet -> all 4 eligible scenes need the plugin
     assert(plug.scenesNeedingPlugin(scenes, "ndvi").as[Long].collect().length == 4)
@@ -163,7 +162,7 @@ class ObsDatePluginSpec extends SparkSpec {
   }
 
   test("scene catalog: json work-lists, date query toggles, path rewrite") {
-    val root = Files.createTempDirectory("sc").toString + "/scenes"
+    val root = tempDir("sc") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark)
     cat.table.overwrite(mkScenes().toDF())
     // scene 5 has a quicklook key; 4 is invalid -> 1,2,3 need quicklook

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.Date
 
 import graft.SparkSpec
@@ -10,7 +9,7 @@ class ReportRegistrySpec extends SparkSpec {
   import spark.implicits._
 
   private def mk(): (ReportRegistry, String) = {
-    val root = Files.createTempDirectory("rpt").toString + "/reports"
+    val root = tempDir("rpt") + "/reports"
     (new ReportRegistry(new CowTable(root, spark), spark), root)
   }
 

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.functions._
@@ -26,7 +25,7 @@ class SceneCatalogSpec extends SparkSpec {
       ExtendedInfo = None)
 
   private def mkCatalog(): SceneCatalog = {
-    val root = Files.createTempDirectory("cat").toString + "/scenes"
+    val root = tempDir("cat") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark)
     cat.table.overwrite(Seq(
       scene(1, "S1", "P_001", "2020-03-01", 10, 52, 50, 2, 0, dl = true, ard = true),
@@ -253,9 +252,9 @@ class SceneCatalogSpec extends SparkSpec {
 
   test("single-file dump bootstraps a FRESH catalog (import_sensor_db path)") {
     val cat = mkCatalog()
-    val dump = Files.createTempDirectory("dump").toString + "/db.json"
+    val dump = tempDir("dump") + "/db.json"
     cat.exportDbToJson(dump)
-    val freshRoot = Files.createTempDirectory("fresh").toString + "/scenes"
+    val freshRoot = tempDir("fresh") + "/scenes"
     val fresh = new SceneCatalog(new CowTable(freshRoot, spark), spark)
     fresh.importDbFromJson(dump) // table does not exist yet
     assert(fresh.scenes.count() == 5)
@@ -264,7 +263,7 @@ class SceneCatalogSpec extends SparkSpec {
   }
 
   test("jsonPathRewrite rewrites paths INSIDE ExtendedInfo; siblings survive") {
-    val root = Files.createTempDirectory("cat").toString + "/scenes"
+    val root = tempDir("cat") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark)
     val ext = """{"quicklook":{"quicklookimgs":["/data/vis/s1_a.png",""" +
       """"/data/vis/s1_b.png"]},"tilecache":{"visgtiff":"/data/vis/s1.tif",""" +
@@ -325,7 +324,7 @@ class SceneCatalogSpec extends SparkSpec {
   test("full API runs over the partition-level COW backend") {
     implicit val s = spark
     val t = graft.sources.PartitionedCowTable(
-      Files.createTempDirectory("pcat").toString + "/scenes", "Date_Acquired")
+      tempDir("pcat") + "/scenes", "Date_Acquired")
     val cat = new SceneCatalog(t, spark)
     cat.table.overwrite(Seq(
       scene(1, "S1", "P_001", "2020-03-01", 10, 52, 50, 2, 0, dl = true, ard = true),

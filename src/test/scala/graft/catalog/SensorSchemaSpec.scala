@@ -1,6 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.functions._
@@ -46,7 +45,7 @@ class SensorSchemaSpec extends SparkSpec {
       ExtendedInfo = None)
 
   private def mkS1(): SceneCatalog = {
-    val root = Files.createTempDirectory("s1cat").toString + "/scenes"
+    val root = tempDir("s1cat") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark,
       SensorSchemas.sentinel1)
     cat.table.overwrite(Seq(
@@ -95,7 +94,7 @@ class SensorSchemaSpec extends SparkSpec {
   }
 
   test("ICESAT2: date derives from Start_Time; no platform column") {
-    val root = Files.createTempDirectory("is2cat").toString + "/scenes"
+    val root = tempDir("is2cat") + "/scenes"
     val cat = new SceneCatalog(new CowTable(root, spark), spark,
       SensorSchemas.icesat2)
     cat.table.overwrite(Seq(

@@ -141,28 +141,12 @@ class ScaleOpsSpec extends SparkSpec {
       val live = spark.sparkContext.getPersistentRDDs
       assert(!live.contains(staged.head),
         s"pre-spread edge table (RDD ${staged.head}) still persisted")
-      assert(live.contains(staged(1)))
+      // the spread copy goes when the loop ends; the result reads
+      // only the last label round
+      assert(!live.contains(staged(1)),
+        s"spread edge copy (RDD ${staged(1)}) still persisted")
+      assert(live.contains(staged.last))
     } finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
-  }
-
-  test("stage() honors the disk-only flag without changing results") {
-    val df = spark.range(0, 1000).toDF("id")
-    // default path: plain localCheckpoint, results intact
-    assert(ScaleOps.stage(df).count() === 1000L)
-    // flagged path: blocks land DISK_ONLY (no memory residency) — the
-    // single-JVM big-state escape for the q184/q190 sf10 probes
-    spark.conf.set("spark.graft.stage.diskOnly", "true")
-    try {
-      val staged = ScaleOps.stage(df)
-      assert(staged.count() === 1000L)
-      val info = spark.sparkContext.getRDDStorageInfo
-      assert(info.exists(i =>
-        i.storageLevel.useDisk && !i.storageLevel.useMemory),
-        s"no DISK_ONLY block found in ${info.map(_.storageLevel).toSeq}")
-      // results identical across the two paths
-      assert(staged.as[Long].collect().sorted
-        .sameElements(ScaleOps.stage(df).as[Long].collect().sorted))
-    } finally spark.conf.unset("spark.graft.stage.diskOnly")
   }
 
   test("partition-pruned range predicate composes month + row bounds") {

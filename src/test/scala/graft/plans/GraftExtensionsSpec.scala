@@ -40,7 +40,7 @@ class GraftExtensionsSpec extends SparkSpec {
   test("ExpandPolygonEnvelope derives a pushable prefilter from literal WKT") {
     assert(installed)
     // a parquet-backed table so PushedFilters is observable
-    val dir = java.nio.file.Files.createTempDirectory("poly").toString + "/t"
+    val dir = tempDir("poly") + "/t"
     (1 to 200).map(i => (i.toLong, (i % 50).toDouble, (i % 50) - 1.0,
         (i % 90).toDouble, (i % 90) - 1.0))
       .toDF("pid", "north", "south", "east", "west")

@@ -36,7 +36,7 @@ class ContainmentSkewSpec extends SparkSpec {
     } ++ (0 until 40).map { i => // containers: the full vocab
       ((1000 + i).toLong, vocab.mkString(" "))
     }
-    val d = java.nio.file.Files.createTempDirectory("containment-skew")
+    val d = tempDir("containment-skew")
     docs.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     d.toString
@@ -135,7 +135,7 @@ class ContainmentSkewSpec extends SparkSpec {
         (Seq(s"rare$i", "common1", "common2", "common3", "common4",
           "common5", "common6", "common7") ++ Seq(s"pad$i")).mkString(" "))
     }
-    val zd = java.nio.file.Files.createTempDirectory("containment-zipf")
+    val zd = tempDir("containment-zipf")
     zipfDocs.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$zd/documents.parquet")
     val zsets = wordSets(zd.toString)

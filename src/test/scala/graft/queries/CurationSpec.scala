@@ -18,7 +18,7 @@ class CurationSpec extends SparkSpec {
 
   /** Write a documents table into a temp dir and return the dir. */
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("curation").toString
+    val dir = tempDir("curation")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -26,7 +26,7 @@ class CurationSpec extends SparkSpec {
   }
 
   private def embDir(rows: Seq[(Long, Array[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("curation").toString
+    val dir = tempDir("curation")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

@@ -17,7 +17,7 @@ class EventAnalyticsSpec extends SparkSpec {
   private val T0 = 1704067200L * 1000 * 1000 * 1000
 
   private def eventsDir(rows: Seq[(Long, Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("events").toString
+    val dir = tempDir("events")
     rows.zipWithIndex.map { case ((uid, t, typ), i) =>
       (i.toLong, T0 + t, uid, typ, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

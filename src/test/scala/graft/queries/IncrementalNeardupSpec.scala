@@ -17,7 +17,7 @@ class IncrementalNeardupSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(rows: Seq[(Long, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("incdup").toString
+    val d = tempDir("incdup")
     rows.map { case (id, tx) => (id, tx, "en", "s") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -164,7 +164,7 @@ class PlanQualitySpec extends SparkSpec {
         DCLoaded = false, Invalid = false, Archived = false,
         ExtendedInfo = None)
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("pq").toString + "/scenes"
+    val root = tempDir("pq") + "/scenes"
     val tbl = new PartitionedCowTable(root, "Date_Acquired", spark)
     val cat = new SceneCatalog(tbl, spark)
     cat.table.overwrite(Seq(scene(1, "2020-03-01"), scene(2, "2020-03-02"),
@@ -210,8 +210,7 @@ class PlanQualitySpec extends SparkSpec {
     import graft.sources.PartitionedCowTable
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("pq_auto")
-      .toString + "/t"
+    val root = tempDir("pq_auto") + "/t"
     val tbl = new PartitionedCowTable(root, "month", spark)
     tbl.overwrite(Seq(
       (1L, "2020-03"), (2L, "2020-04"), (3L, "2020-05"))
@@ -253,8 +252,7 @@ class PlanQualitySpec extends SparkSpec {
     import graft.sources.PartitionedCowTable
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("pq_bloom")
-      .toString + "/t"
+    val root = tempDir("pq_bloom") + "/t"
     val tbl = new PartitionedCowTable(root, "month", spark,
       bloomColumns = Seq("pid"))
     tbl.overwrite(Seq(

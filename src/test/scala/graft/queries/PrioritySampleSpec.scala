@@ -17,7 +17,7 @@ class PrioritySampleSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(rows: Seq[(Long, Long)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("psample").toString
+    val d = tempDir("psample")
     rows.map { case (id, nc) => (id, "x", "en", "s", nc) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")

@@ -18,7 +18,7 @@ class Round10OpsSpec extends SparkSpec {
   // ---- q255 t-closeness ----
 
   private def customerDir(rows: Seq[(Long, Int, Double, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10cust").toString
+    val dir = tempDir("r10cust")
     rows.toDF("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     dir
@@ -50,7 +50,7 @@ class Round10OpsSpec extends SparkSpec {
   // ---- q256 MoE routing ----
 
   private def embDir(rows: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10emb").toString
+    val dir = tempDir("r10emb")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -84,7 +84,7 @@ class Round10OpsSpec extends SparkSpec {
   // ---- q258 padding waste ----
 
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10doc").toString
+    val dir = tempDir("r10doc")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
@@ -156,7 +156,7 @@ class Round10OpsSpec extends SparkSpec {
       (2L, five),            // exact dup of 1 -> loses keep-min
       (3L, "a b c d e f"),   // kept
       (4L, "a b"))           // below the 5-token floor
-    val dir = java.nio.file.Files.createTempDirectory("r10lin").toString
+    val dir = tempDir("r10lin")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")))
@@ -173,7 +173,7 @@ class Round10OpsSpec extends SparkSpec {
 
   test("q264: the cascade removes exactly the erased parents' child " +
     "rows, zero orphans, one commit per table") {
-    val dir = java.nio.file.Files.createTempDirectory("r10casc").toString
+    val dir = tempDir("r10casc")
     // parents 1..7 (7 erased by %7); children: 2 rows for id 7,
     // 1 row each for 1..6
     (1L to 7L).map(i => (i, s"2020-0${(i % 3 + 1)}", i * 100.0))
@@ -216,7 +216,7 @@ class Round10OpsSpec extends SparkSpec {
       if (day1(id)) at("2024-01-01 12:00:00")
       else at("2024-01-05 12:00:00"),
       id, "view", 1.0))
-    val dir = java.nio.file.Files.createTempDirectory("r10wm").toString
+    val dir = tempDir("r10wm")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -257,7 +257,7 @@ class Round10OpsSpec extends SparkSpec {
       1L - 2L * (java.lang.Long.parseLong(
         dig.map("%02x".format(_)).mkString.take(15), 16) % 2)
     }
-    val dir = java.nio.file.Files.createTempDirectory("r10jl").toString
+    val dir = tempDir("r10jl")
     Seq((0L, Seq(1f, 0f), 0), (1L, Seq(0f, 1f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -281,7 +281,7 @@ class Round10OpsSpec extends SparkSpec {
     val rows = Seq(
       (1L, at("2024-01-10 01:00:00"), 1L, "view", 1.0),
       (2L, at("2024-01-10 07:00:00"), 1L, "view", 1.0))
-    val dir = java.nio.file.Files.createTempDirectory("r10sw").toString
+    val dir = tempDir("r10sw")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -296,7 +296,7 @@ class Round10OpsSpec extends SparkSpec {
   test("q268: all-unique vocabulary fits beta=1 exactly, a recycled " +
     "corpus fits beta=0; cumulative counts are per-decile exact") {
     def dirOf(rows: Seq[(Long, String)]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("r10hp").toString
+      val dir = tempDir("r10hp")
       rows.toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("s"))
         .withColumn("n_chars", length(col("text")))
@@ -334,7 +334,7 @@ class Round10OpsSpec extends SparkSpec {
       (2L, at("2024-01-01 10:00:00"), 7L, "view", 2.5),
       (3L, at("2024-01-01 10:00:00"), 1L, "view", 3.5),
       (4L, at("2024-01-01 10:00:00"), 2L, "view", 4.0))
-    val dir = java.nio.file.Files.createTempDirectory("r10shred").toString
+    val dir = tempDir("r10shred")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -372,7 +372,7 @@ class Round10OpsSpec extends SparkSpec {
       sorted(7) -> (2L, "2024-01-05 12:59:00"), // dup, state alive -> suppressed
       sorted(8) -> (9L, "2024-01-05 10:30:00")) // hts == wm -> strict drop
     val rows = ids.map(id => (id, at(ts(id)._2), ts(id)._1, "view", 1.0))
-    val dir = java.nio.file.Files.createTempDirectory("r10ddw").toString
+    val dir = tempDir("r10ddw")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -391,7 +391,7 @@ class Round10OpsSpec extends SparkSpec {
     def at(s: String) = java.sql.Timestamp.valueOf(s)
     val rows = (1 to 8).map(i =>
       (i.toLong, at("2024-01-01 10:00:00"), i.toLong, "view", i.toDouble))
-    val dir = java.nio.file.Files.createTempDirectory("r10q").toString
+    val dir = tempDir("r10q")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -416,7 +416,7 @@ class Round10OpsSpec extends SparkSpec {
       (i.toLong, at("2024-03-05 10:00:00"), i.toLong, "view", 1.0)) ++
       (1 to 2).map(i =>
         (100L + i, at("2024-04-01 10:00:00"), 1L, "view", 1.0))
-    val dir = java.nio.file.Files.createTempDirectory("r10dp").toString
+    val dir = tempDir("r10dp")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -15,7 +15,7 @@ class Round8OpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8ops").toString
+    val dir = tempDir("r8ops")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -95,7 +95,7 @@ class Round8OpsSpec extends SparkSpec {
     }
     val rows = (0 until 8).map(i => (i.toLong, unit(i), 1)) ++ Seq(
       (8L, Array(1f, 0.1f, 0f, 0f, 0f, 0f, 0f, 0f), 2))
-    val dir = java.nio.file.Files.createTempDirectory("r8ops").toString
+    val dir = tempDir("r8ops")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = q("q119_cluster_profile", dir).collect()
@@ -130,7 +130,7 @@ class Round8OpsSpec extends SparkSpec {
       .zipWithIndex.map { case ((uid, t), i) =>
         (i.toLong, T0 + t * S, uid, "view", 1.0, "{}")
       }
-    val dir = java.nio.file.Files.createTempDirectory("r8ops").toString
+    val dir = tempDir("r8ops")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = q("q124_session_stats", dir).collect()
@@ -158,7 +158,7 @@ class Round8OpsSpec extends SparkSpec {
       Seq.fill(8)(4L)).zipWithIndex.map { case (uid, i) =>
       (i.toLong, T0 + i * 1000L, uid, "view", 1.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("r8ops").toString
+    val dir = tempDir("r8ops")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = q("q122_key_skew_histogram", dir).collect()

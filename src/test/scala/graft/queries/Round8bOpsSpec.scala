@@ -16,7 +16,7 @@ class Round8bOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8bops").toString
+    val dir = tempDir("r8bops")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -25,7 +25,7 @@ class Round8bOpsSpec extends SparkSpec {
 
   private def eventsDir(
       rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8bev").toString
+    val dir = tempDir("r8bev")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -264,7 +264,7 @@ class Round8bOpsSpec extends SparkSpec {
   }
 
   private def lineitemDir(rows: Seq[(Long, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8bli").toString
+    val dir = tempDir("r8bli")
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir
@@ -304,7 +304,7 @@ class Round8bOpsSpec extends SparkSpec {
   }
 
   private def customerDir(keys: Seq[Long]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8bcu").toString
+    val dir = tempDir("r8bcu")
     keys.toDF("c_custkey")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     dir

@@ -20,7 +20,7 @@ class Round8cOpsSpec extends SparkSpec {
 
   private def eventsDir(
       rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cev").toString
+    val dir = tempDir("r8cev")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -28,21 +28,21 @@ class Round8cOpsSpec extends SparkSpec {
   }
 
   private def lineitemDir(rows: Seq[(Long, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cli").toString
+    val dir = tempDir("r8cli")
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir
   }
 
   private def partDir(rows: Seq[(Long, Double, Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cpt").toString
+    val dir = tempDir("r8cpt")
     rows.toDF("p_partkey", "p_retailprice", "p_size")
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
     dir
   }
 
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cdoc").toString
+    val dir = tempDir("r8cdoc")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -175,7 +175,7 @@ class Round8cOpsSpec extends SparkSpec {
   // ---- q141 semantic decontamination ----
 
   private def embDir(rows: Seq[(Long, Seq[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cemb").toString
+    val dir = tempDir("r8cemb")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
@@ -641,7 +641,7 @@ class Round8cOpsSpec extends SparkSpec {
   // ---- q159 Benford ----
 
   private def ordersDir(rows: Seq[(Long, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8cord").toString
+    val dir = tempDir("r8cord")
     rows.toDF("o_orderkey", "o_totalprice")
       .withColumn("o_custkey", lit(1L))
       .withColumn("o_orderstatus", lit("O"))

@@ -24,7 +24,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   private def eventsDir(
       rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8dev").toString
+    val dir = tempDir("r8dev")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -32,7 +32,7 @@ class Round8dOpsSpec extends SparkSpec {
   }
 
   private def ordersDir(rows: Seq[(Long, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8dor").toString
+    val dir = tempDir("r8dor")
     rows.toDF("o_orderkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     dir
@@ -147,7 +147,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q163: legacy-generation rows read back with NULL for the " +
     "added column, new-generation rows keep it") {
-    val dir = java.nio.file.Files.createTempDirectory("r8ddoc").toString
+    val dir = tempDir("r8ddoc")
     (1L to 10L).map(i => (i, s"doc $i", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -187,7 +187,7 @@ class Round8dOpsSpec extends SparkSpec {
   }
 
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8ddoc2").toString
+    val dir = tempDir("r8ddoc2")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -246,7 +246,7 @@ class Round8dOpsSpec extends SparkSpec {
     // order 10 = K4 over parts 1-4; order 20 hangs part 5 off part 4
     // (degree 1, peeled); order 30 = triangle 6-7-8 (degree 2, peeled
     // — BELOW k even though connected)
-    val dir = java.nio.file.Files.createTempDirectory("r8dli").toString
+    val dir = tempDir("r8dli")
     val rows = Seq(
       (10L, 1L), (10L, 2L), (10L, 3L), (10L, 4L),
       (20L, 4L), (20L, 5L),
@@ -412,7 +412,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q178: hop distances along a path graph; disconnected component " +
     "reported as unreachable") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dli2").toString
+    val dir = tempDir("r8dli2")
     // path 1-2-3-4 via pairwise orders; 8-9 disconnected
     Seq((10L, 1L), (10L, 2L), (20L, 2L), (20L, 3L), (30L, 3L), (30L, 4L),
       (40L, 8L), (40L, 9L))
@@ -470,7 +470,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q182: adjacent dense cells merge, separated blob stays its " +
     "own cluster, sparse points drop") {
-    val dir = java.nio.file.Files.createTempDirectory("r8demb").toString
+    val dir = tempDir("r8demb")
     def pt(id: Long, x: Float, y: Float) = (id, Seq(x, y, 0.0f), 0)
     val rows =
       (1L to 12L).map(i => pt(i, 0.01f + i.toFloat / 10000, 0.01f)) ++ // cell (0,0)
@@ -509,7 +509,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q184: kept set matches an independent JVM replay of the draws " +
     "(rejection, keep-2, order-independent checksum)") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dns").toString
+    val dir = tempDir("r8dns")
     // user 1 buys parts 1,2 (order 10); user 2 buys part 3 (order 20)
     Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -598,7 +598,7 @@ class Round8dOpsSpec extends SparkSpec {
   // ---- q187 partition diff ----
 
   private def ordersStDir(rows: Seq[(Long, Double, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r8dos").toString
+    val dir = tempDir("r8dos")
     rows.toDF("o_orderkey", "o_totalprice", "o_orderstatus")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     dir
@@ -652,7 +652,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q188: walks follow the md5-argmin neighbor at every step " +
     "(JVM replay on a micro-graph)") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dwk").toString
+    val dir = tempDir("r8dwk")
     // customer 1 buys parts 100,200; customer 2 buys part 100
     Seq((10L, 1L), (20L, 2L)).toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -729,7 +729,7 @@ class Round8dOpsSpec extends SparkSpec {
     val li = edges.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq((i.toLong + 1, a), (i.toLong + 1, b))
     }
-    val dir = java.nio.file.Files.createTempDirectory("r8dlpa").toString
+    val dir = tempDir("r8dlpa")
     li.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = q("q190_lpa_communities", dir).collect()
@@ -763,7 +763,7 @@ class Round8dOpsSpec extends SparkSpec {
     // monthly cents [1000,2000,3000,4000,100000] at x=0..4:
     // 6 of 10 pairwise slopes are exactly 1000 -> median 1000;
     // intercept = median(y - 1000x) = 1000
-    val dir = java.nio.file.Files.createTempDirectory("r8dts").toString
+    val dir = tempDir("r8dts")
     Seq((1L, 10.0, "2024-01-15"), (2L, 20.0, "2024-02-15"),
       (3L, 30.0, "2024-03-15"), (4L, 40.0, "2024-04-15"),
       (5L, 1000.0, "2024-05-15"))
@@ -780,7 +780,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q193: the generalization ladder absorbs one risky group per " +
     "level (hand-counted)") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dka").toString
+    val dir = tempDir("r8dka")
     val rows =
       (1 to 6).map(i => (i.toLong, 1, 500.0, "A")) ++   // safe everywhere
         (7 to 8).map(i => (i.toLong, 1, 1500.0, "A")) ++ // risky at L0 only
@@ -916,7 +916,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q199: cosine over customer sets, hand-computed on a 3-item " +
     "catalog") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dcf").toString
+    val dir = tempDir("r8dcf")
     // u1:{1,2} u2:{1,2} u3:{1,3} -> n=(3,2,1); co(1,2)=2, co(1,3)=1
     Seq((10L, 1L), (20L, 2L), (30L, 3L))
       .toDF("o_orderkey", "o_custkey")
@@ -937,7 +937,7 @@ class Round8dOpsSpec extends SparkSpec {
   // ---- q200 referential integrity ----
 
   test("q200: orphans and null keys classified per FK edge") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dri").toString
+    val dir = tempDir("r8dri")
     Seq((0, "r")).toDF("r_regionkey", "r_name")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     Seq((0, 0, "n")).toDF("n_nationkey", "n_regionkey", "n_name")
@@ -970,7 +970,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q201: shrinkage demotes a 3/3 part below a 40/45 part and " +
     "matches a JVM replay of the method-of-moments fit") {
-    val dir = java.nio.file.Files.createTempDirectory("r8deb").toString
+    val dir = tempDir("r8deb")
     // part 1: 3/3 returns; part 2: 40/45; parts 3..10: 10 each with
     // varied return counts so the prior variance is positive
     val tail = Seq(1, 2, 3, 2, 1, 3, 2, 2)
@@ -1055,7 +1055,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q204: zero-variance stratum gets zero quota; the volatile " +
     "stratum takes its full population with the replayed checksum") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dny").toString
+    val dir = tempDir("r8dny")
     // stratum 1 (custkey 1): sigma > 0; stratum 2 (custkey 2): constant
     Seq((11L, 1L, 10.0), (12L, 1L, 20.0), (13L, 1L, 30.0),
       (21L, 2L, 50.0), (22L, 2L, 50.0), (23L, 2L, 50.0), (24L, 2L, 50.0))
@@ -1082,7 +1082,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q205: tie semantics — rank gaps, dense_rank doesn't, " +
     "percent_rank/cume_dist tie-aware, ntile deterministic") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dwr").toString
+    val dir = tempDir("r8dwr")
     // nations 1,2 tie at 300 cents; nation 3 trails at 100
     Seq((1L, 1), (2L, 2), (3L, 3))
       .toDF("c_custkey", "c_nationkey")
@@ -1116,7 +1116,7 @@ class Round8dOpsSpec extends SparkSpec {
       e(1, "view", 3), e(2, "view", 3), e(3, "view", 7), e(4, "view", 5),
       e(5, "click", 3), e(6, "click", 3), e(7, "click", 3),
       e(8, "click", 7), e(9, "click", 14))
-    val dir = java.nio.file.Files.createTempDirectory("r8dns2").toString
+    val dir = tempDir("r8dns2")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = q("q206_null_safe_join", dir).collect()
@@ -1157,7 +1157,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q210: the crossing rule lands where half the WEIGHT sits, " +
     "lower median on an exact split") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dwm").toString
+    val dir = tempDir("r8dwm")
     // flag A: qty 1 (w 1.00), qty 2 (w 1.00), qty 3 (w 5.00)
     //   -> half of 700 cents sits at qty 3 despite 2/3 of ROWS below
     // flag B: qty 5 and 7, equal weight -> exact split, lower wins
@@ -1177,7 +1177,7 @@ class Round8dOpsSpec extends SparkSpec {
 
   test("q211: a 12-item whale basket is capped to the 8 md5-smallest " +
     "items; dropped items vanish from the graph (JVM replay)") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dcc").toString
+    val dir = tempDir("r8dcc")
     Seq((10L, 1L)).toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     (1L to 12L).map(p => (10L, p)).toDF("l_orderkey", "l_partkey")
@@ -1251,7 +1251,7 @@ class Round8dOpsSpec extends SparkSpec {
   // ---- q180 equal-frequency binning ----
 
   test("q180: 100 uniform distinct values land 10 per decile bin") {
-    val dir = java.nio.file.Files.createTempDirectory("r8dor2").toString
+    val dir = tempDir("r8dor2")
     (1L to 100L).map(k => (k, k / 100.0)) // cents = 1..100
       .toDF("o_orderkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")

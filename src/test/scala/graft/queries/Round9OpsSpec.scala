@@ -20,7 +20,7 @@ class Round9OpsSpec extends SparkSpec {
 
   private def basketDir(baskets: Seq[(Long, Seq[Long])]): String = {
     // one order per customer; basket items via lineitem
-    val dir = java.nio.file.Files.createTempDirectory("r9cf").toString
+    val dir = tempDir("r9cf")
     baskets.map { case (u, _) => (u * 100, u) }
       .toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -88,7 +88,7 @@ class Round9OpsSpec extends SparkSpec {
   // ---- q215 CoW step interleave ----
 
   private def ordersDateDir(n: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9cow").toString
+    val dir = tempDir("r9cow")
     (1 to n).map(i => (i.toLong, f"2024-${i % 3 + 1}%02d-15"))
       .toDF("o_orderkey", "o_orderdate")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -142,7 +142,7 @@ class Round9OpsSpec extends SparkSpec {
     // are far below k = 1024, so kk < k and the estimator must
     // degrade to EXACT set algebra.
     val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    val dir = java.nio.file.Files.createTempDirectory("r9kmv").toString
+    val dir = tempDir("r9kmv")
     ((1L to 6L).map(u => (u, ts, u, "view", 1.0)) ++
       (4L to 9L).map(u => (u + 100, ts, u, "click", 1.0)))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
@@ -166,7 +166,7 @@ class Round9OpsSpec extends SparkSpec {
     // 96 docs from 'big', 4 from 'small': shares 96% / 4%, but
     // sqrt-weights are sqrt(96)=9.8 vs 2 -> small gets ~17% of the
     // budget (capped at its own size here) instead of 4%
-    val dir = java.nio.file.Files.createTempDirectory("r9tmp").toString
+    val dir = tempDir("r9tmp")
     ((1L to 96L).map(i => (i, "big")) ++
       (97L to 100L).map(i => (i, "small")))
       .toDF("doc_id", "source")
@@ -188,7 +188,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q221: the mined negative is the nearest WRONG-label vector, " +
     "same-label near-duplicates are skipped") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9hnm").toString
+    val dir = tempDir("r9hnm")
     // anchor 0 (label A) at (1,0); 11 = same label, nearly identical
     // (must be SKIPPED); 12 = label B at 45 degrees (the hard
     // negative); 13 = label B, orthogonal (rank 2)
@@ -276,7 +276,7 @@ class Round9OpsSpec extends SparkSpec {
 
   private def eventsDir(
       rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r9ev").toString
+    val dir = tempDir("r9ev")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -304,7 +304,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q222: the 7-day register merge window includes day T-6 and " +
     "excludes older days (exact side pins the calendar)") {
     def at(s: String) = java.sql.Timestamp.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("r9hll").toString
+    val dir = tempDir("r9hll")
     Seq(
       (1L, at("2024-01-01 10:00:00"), 1L, "view", 1.0),
       (2L, at("2024-01-01 11:00:00"), 2L, "view", 1.0),
@@ -328,7 +328,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("q223: dedup drops the copy, quality floors drop short and " +
     "stopword-free docs, survivors all reach the manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("r9cur").toString
+    val dir = tempDir("r9cur")
     Seq(
       (1L, "the cat sat on a mat", "en", "A"),
       (2L, "the cat sat on a mat", "en", "A"), // exact dup -> dropped
@@ -367,7 +367,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q228: MMR prefers a diverse lower-relevance candidate over a " +
     "redundant higher-relevance one, and drains small pools early") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9mmr").toString
+    val dir = tempDir("r9mmr")
     // query q=(1,0,0). B=(2.1,1,0) has top relevance (step 1).
     // A=(2.05,1,0) outranks C=(2,0,1) on relevance (898768 > 894427
     // micro) but is nearly identical to B (sim ~0.99996), so MMR's
@@ -394,7 +394,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q229: logits are exactly linear in token occurrences and " +
     "weights stay on the md5 integer grid") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9fh").toString
+    val dir = tempDir("r9fh")
     // same token repeated: doc y's logit must be EXACTLY 2x doc x's
     // (the hashing trick is a linear map of the count vector)
     Seq((1L, "x", "alpha"), (2L, "y", "alpha alpha"))
@@ -443,7 +443,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q231: equal within-source quantiles map to the same global " +
     "score regardless of each source's raw scale") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9qn").toString
+    val dir = tempDir("r9qn")
     // srcA scores {1,2}, srcB scores {10,20}: global order 1,2,10,20.
     // Both sources' medians (k/n = 1/2 -> gr = 2) normalize to 2 and
     // both maxima (gr = 4) to 20 — srcB's inflated raw scale cancels.
@@ -466,7 +466,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q232: farthest-point traversal picks the antipode, then the " +
     "orthogonal, and leaves the near-duplicate of the seed for last") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9kc").toString
+    val dir = tempDir("r9kc")
     // seed 0=(1,0); 1=(1,0.01) is a near-dup of the seed (dist 50
     // micro); 2=(-1,0) is the antipode (dist 2e6); 3=(0,1) is
     // orthogonal to both 0 and 2 (dist 1e6)
@@ -494,7 +494,7 @@ class Round9OpsSpec extends SparkSpec {
 
   private def srcDocsDir(docs: Seq[(Long, String, Int)]): String = {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9np").toString
+    val dir = tempDir("r9np")
     docs.map { case (id, src, nTok) =>
       (id, src, Seq.fill(nTok)("w").mkString(" ")) }
       .toDF("doc_id", "source", "text")
@@ -558,7 +558,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q235: a group is risky when its distinct sensitive values " +
     "fall below l, and coarsening can repair it") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9ld").toString
+    val dir = tempDir("r9ld")
     // (nat=1, balb=0): segs A,B,C -> safe; (1,1): A,A -> risky(2 rows);
     // (2,0): A,B -> risky(2 rows). Coarsened to nat alone: nat=1 has
     // {A,B,C} (repaired), nat=2 still {A,B}.
@@ -672,7 +672,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q239: truncation to the 16-dim prefix flips a rank the " +
     "audit must report as displacement, not loss") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9mk").toString
+    val dir = tempDir("r9mk")
     def vec(parts: (Int, Double)*): Seq[Double] = {
       val a = Array.fill(20)(0.0); parts.foreach { case (i, x) => a(i) = x }
       a.toSeq
@@ -698,7 +698,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q240: a probe that skips the cell holding no true neighbors " +
     "keeps recall 1.0 at a sub-full scanned share") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9ra").toString
+    val dir = tempDir("r9ra")
     // cents 1 = e1; cents 0 and 2..15 all = e0 (duplicate directions
     // tie-break to the smallest cid, so cell 0 holds every e0-ish
     // vector and cells 2..15 stay empty). Corpus (ids >= 5, which by
@@ -730,7 +730,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q243: the two biggest languages stay named, the tail folds " +
     "into OTHER, ties break on language") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9to").toString
+    val dir = tempDir("r9to")
     Seq((1L, "srcA", "en", 10L), (2L, "srcA", "en", 10L),
       (3L, "srcA", "en", 10L), (4L, "srcA", "fr", 20L),
       (5L, "srcA", "fr", 20L), (6L, "srcA", "de", 30L),
@@ -777,7 +777,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q245: cheap stage routes the clear cases, only the " +
     "borderline band reaches the expensive scorer") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9ca").toString
+    val dir = tempDir("r9ca")
     Seq(
       (1L, "s", "a b c"),                            // n=3 -> reject_cheap
       (2L, "s", Seq.fill(60)("w").mkString(" ")),    // n=60 -> accept_cheap
@@ -801,7 +801,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q246: smoothed growth ranks a fresh token above a stable " +
     "one, and the df floor drops one-off noise") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9tt").toString
+    val dir = tempDir("r9tt")
     // odd doc_ids = newer epoch. 'hot': 5 newer / 0 older (growth
     // 6e6); 'old': 5 newer / 10 older (545454); 'rare': 4 newer
     // (below the df floor, must vanish)
@@ -824,7 +824,7 @@ class Round9OpsSpec extends SparkSpec {
   test("q247: orthogonal half-centroids read as full drift, " +
     "identical halves as zero") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9cd").toString
+    val dir = tempDir("r9cd")
     // label x: even half on e0, odd half on e1 -> cos 0 -> drift 1e6;
     // label y: both halves identical -> drift 0
     Seq((0L, "x", Seq(1.0, 0.0)), (2L, "x", Seq(1.0, 0.0)),
@@ -844,7 +844,7 @@ class Round9OpsSpec extends SparkSpec {
 
   private def langDocsDir(docs: Seq[(Long, String, String)]): String = {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9ws").toString
+    val dir = tempDir("r9ws")
     docs.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -911,7 +911,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("q250: the one-row datasheet counts exactly") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("r9dc").toString
+    val dir = tempDir("r9dc")
     Seq((1L, "en", "s1", "w w"), (2L, "en", "s1", "w w"), // exact dup
       (3L, "fr", "s2", "w w w"), (4L, "de", "s2", "w w w w w"))
       .toDF("doc_id", "lang", "source", "text")

@@ -16,7 +16,7 @@ class SubstringSpanSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(rows: Seq[(Long, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("spanspec").toString
+    val d = tempDir("spanspec")
     rows.map { case (id, tx) => (id, tx, "en", "s") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

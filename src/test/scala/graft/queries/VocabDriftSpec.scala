@@ -14,7 +14,7 @@ class VocabDriftSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(rows: Seq[(Long, String)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("drift").toString
+    val d = tempDir("drift")
     rows.map { case (id, tx) => (id, tx, "en", "s") }
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

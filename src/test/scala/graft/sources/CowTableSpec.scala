@@ -10,7 +10,7 @@ import graft.SparkSpec
 class CowTableSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("cow").toString + "/t"
+  private def tmp() = tempDir("cow") + "/t"
 
   test("overwrite/read round trip and versioning") {
     val t = new CowTable(tmp(), spark)

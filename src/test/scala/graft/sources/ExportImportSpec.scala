@@ -14,7 +14,7 @@ class ExportImportSpec extends SparkSpec {
     val df = Seq(
       (1L, "catA", "/old/root/scene1.tif"),
       (2L, "catB", "/old/root/scene2.tif")).toDF("id", "category", "path")
-    val dir = Files.createTempDirectory("ei").toString + "/t"
+    val dir = tempDir("ei") + "/t"
     // export under the legacy (typo) column name, as the reference did
     ExportImport.exportJson(df.withColumnRenamed("category", "Catagory"), dir)
     val schema = StructType(Seq(
@@ -36,7 +36,7 @@ class ExportImportSpec extends SparkSpec {
       (2L, "S2", Date.valueOf("2020-03-02"), None, 10.0, 8.0, -10.0, -12.0))
       .toDF("PID", "Scene_ID", "Date_Acquired", "Cloud_Cover",
         "North_Lat", "South_Lat", "East_Lon", "West_Lon")
-    val file = Files.createTempDirectory("gj").toString + "/scenes.geojson"
+    val file = tempDir("gj") + "/scenes.geojson"
     ExportImport.exportGeoJson(scenes, file,
       props = Seq("PID", "Scene_ID", "Date_Acquired", "Cloud_Cover"))
     val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
@@ -72,7 +72,7 @@ class ExportImportSpec extends SparkSpec {
       .toDF("PID", "Scene_ID", "North_Lat", "South_Lat",
         "East_Lon", "West_Lon")
       .repartition(4)
-    val dir = Files.createTempDirectory("gjs").toString + "/export"
+    val dir = tempDir("gjs") + "/export"
     val n = ExportImport.exportGeoJsonSharded(scenes, dir,
       props = Seq("PID", "Scene_ID"))
     assert(n === 40L)
@@ -114,7 +114,7 @@ class ExportImportSpec extends SparkSpec {
     val plugins = Seq(
       (1L, "ndvi", true), (2L, "ndvi", false), (1L, "water", true))
       .toDF("Scene_PID", "PlugInName", "Completed")
-    val file = Files.createTempDirectory("ei3").toString + "/dump.json"
+    val file = tempDir("ei3") + "/dump.json"
     ExportImport.exportJsonSingleFile(scenes, file, Some(plugins))
     // exactly ONE file, with the reference's nesting and ISO strings
     val text = new String(java.nio.file.Files.readAllBytes(
@@ -149,7 +149,7 @@ class ExportImportSpec extends SparkSpec {
       (i, s"S$i", Date.valueOf("2020-03-01"), 52.0, 50.0, 2.0, 0.0))
       .toDF("PID", "Scene_ID", "Date_Acquired",
         "North_Lat", "South_Lat", "East_Lon", "West_Lon")
-    val dir = Files.createTempDirectory("guard").toString
+    val dir = tempDir("guard")
     // over the cap: both single-file paths fail loudly, naming the
     // distributed alternative, and write nothing
     val e1 = intercept[IllegalArgumentException] {
@@ -176,7 +176,7 @@ class ExportImportSpec extends SparkSpec {
   test("typed columns survive the round trip (schema-on-read)") {
     val df = Seq((1L, 2.5, java.sql.Date.valueOf("2020-05-05"), true))
       .toDF("k", "x", "d", "b")
-    val dir = Files.createTempDirectory("ei2").toString + "/t"
+    val dir = tempDir("ei2") + "/t"
     ExportImport.exportJson(df, dir)
     val back = ExportImport.importJson(spark, dir, df.schema)
     // JSON read is always nullable; names+types must survive

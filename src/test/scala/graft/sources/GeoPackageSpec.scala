@@ -30,7 +30,7 @@ class GeoPackageSpec extends SparkSpec {
   }
 
   test("single-page table round-trips all value types") {
-    val dir = Files.createTempDirectory("sqlite").toString
+    val dir = tempDir("sqlite")
     val path = s"$dir/t.db"
     SqliteFile.write(path, Seq(Table("t",
       "CREATE TABLE t (a INTEGER, b REAL, c TEXT, d BLOB, e TEXT)",
@@ -50,7 +50,7 @@ class GeoPackageSpec extends SparkSpec {
 
   test("multi-page + multi-level interior + overflow chains: 20k rows " +
     "and a 100 KB blob both round-trip") {
-    val dir = Files.createTempDirectory("sqlite").toString
+    val dir = tempDir("sqlite")
     val path = s"$dir/big.db"
     val bigBlob = Array.tabulate[Byte](100000)(i => (i % 251).toByte)
     SqliteFile.write(path, Seq(Table("big",
@@ -77,7 +77,7 @@ class GeoPackageSpec extends SparkSpec {
   test("exportGeoPackage writes a complete container: required " +
     "metadata tables, GPKG header stamps, features readable back " +
     "with exact bboxes and typed attributes") {
-    val dir = Files.createTempDirectory("gpkg").toString
+    val dir = tempDir("gpkg")
     val path = s"$dir/scenes.gpkg"
     val df = Seq(
       (1L, "LS8_A", 0.75, -24.0, -26.0, -59.0, -61.0, true),
@@ -123,7 +123,7 @@ class GeoPackageSpec extends SparkSpec {
     val python = Seq("/usr/bin/python3", "/usr/local/bin/python3")
       .find(p => Files.isExecutable(java.nio.file.Paths.get(p)))
     assume(python.isDefined, "python3 not present")
-    val dir = Files.createTempDirectory("gpkg").toString
+    val dir = tempDir("gpkg")
     val path = s"$dir/scenes.gpkg"
     val df = (1 to 500).map(i =>
       (i.toLong, s"S$i", i / 100.0, i % 50 - 24.0, i % 50 - 25.0,

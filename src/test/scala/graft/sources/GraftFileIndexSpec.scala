@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,6 +16,12 @@ class GraftFileIndexSpec extends AnyFunSuite {
   import GraftFileIndex._
 
   private def attr(n: String, dt: DataType) = AttributeReference(n, dt)()
+
+  /** Runs `body` on a fresh temp dir, deleted with its contents after. */
+  private def withTempDir(prefix: String)(body: Path => Unit): Unit = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally CowTable.walkDelete(dir)
+  }
 
   test("timestamp literal vs a plain-long zone map NEVER prunes " +
     "(the round-11 seconds-vs-micros hazard, closed)") {
@@ -130,77 +138,79 @@ class GraftFileIndexSpec extends AnyFunSuite {
   test("bloom sidecar eval: EQUALITY prunes on definite absence, " +
     "keeps on maybe; ranges, unsupported literal types, and missing " +
     "sidecars stay Unknown") {
-    val dir = java.nio.file.Files.createTempDirectory("gfi_bloom")
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 4096L)
-    Seq("42", "hello").foreach(v =>
-      bf.putBinary(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val side = dir.resolve("_bloom_k.bf")
-    val out = java.nio.file.Files.newOutputStream(side)
-    try bf.writeTo(out) finally out.close()
-    val d = ScanDir("p", Map.empty, Map.empty,
-      blooms = Map("k" -> side.toString))
-    // integral literal probes its decimal render
-    assert(eval(EqualTo(attr("k", LongType), Literal(42L, LongType)), d)
-      == Unknown) // maybe present — never a prune
-    assert(eval(EqualTo(attr("k", LongType), Literal(43L, LongType)), d)
-      == False) // definitely absent
-    // string literal probes itself; null-safe equality routes the same
-    val hello = Literal(UTF8String.fromString("hello"), StringType)
-    val nope = Literal(UTF8String.fromString("nope"), StringType)
-    assert(eval(EqualTo(attr("k", StringType), hello), d) == Unknown)
-    assert(eval(EqualNullSafe(attr("k", StringType), nope), d) == False)
-    // IN decomposes per element: one maybe keeps the dir
-    assert(eval(In(attr("k", LongType),
-      Seq(Literal(43L, LongType), Literal(42L, LongType))), d) == Unknown)
-    assert(eval(In(attr("k", LongType),
-      Seq(Literal(43L, LongType), Literal(44L, LongType))), d) == False)
-    // ranges never consult the bloom
-    assert(eval(LessThan(attr("k", LongType), Literal(43L, LongType)), d)
-      == Unknown)
-    // a double literal has no canonical byte render — not modeled
-    assert(eval(EqualTo(attr("k", DoubleType),
-      Literal(42.0, DoubleType)), d) == Unknown)
-    // missing sidecar file: conservative keep
-    val dMissing = ScanDir("p", Map.empty, Map.empty,
-      blooms = Map("k" -> dir.resolve("absent.bf").toString))
-    assert(eval(EqualTo(attr("k", LongType), Literal(43L, LongType)),
-      dMissing) == Unknown)
+    withTempDir("gfi_bloom") { dir =>
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 4096L)
+      Seq("42", "hello").foreach(v =>
+        bf.putBinary(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val side = dir.resolve("_bloom_k.bf")
+      val out = java.nio.file.Files.newOutputStream(side)
+      try bf.writeTo(out) finally out.close()
+      val d = ScanDir("p", Map.empty, Map.empty,
+        blooms = Map("k" -> side.toString))
+      // integral literal probes its decimal render
+      assert(eval(EqualTo(attr("k", LongType), Literal(42L, LongType)), d)
+        == Unknown) // maybe present — never a prune
+      assert(eval(EqualTo(attr("k", LongType), Literal(43L, LongType)), d)
+        == False) // definitely absent
+      // string literal probes itself; null-safe equality routes the same
+      val hello = Literal(UTF8String.fromString("hello"), StringType)
+      val nope = Literal(UTF8String.fromString("nope"), StringType)
+      assert(eval(EqualTo(attr("k", StringType), hello), d) == Unknown)
+      assert(eval(EqualNullSafe(attr("k", StringType), nope), d) == False)
+      // IN decomposes per element: one maybe keeps the dir
+      assert(eval(In(attr("k", LongType),
+        Seq(Literal(43L, LongType), Literal(42L, LongType))), d) == Unknown)
+      assert(eval(In(attr("k", LongType),
+        Seq(Literal(43L, LongType), Literal(44L, LongType))), d) == False)
+      // ranges never consult the bloom
+      assert(eval(LessThan(attr("k", LongType), Literal(43L, LongType)), d)
+        == Unknown)
+      // a double literal has no canonical byte render — not modeled
+      assert(eval(EqualTo(attr("k", DoubleType),
+        Literal(42.0, DoubleType)), d) == Unknown)
+      // missing sidecar file: conservative keep
+      val dMissing = ScanDir("p", Map.empty, Map.empty,
+        blooms = Map("k" -> dir.resolve("absent.bf").toString))
+      assert(eval(EqualTo(attr("k", LongType), Literal(43L, LongType)),
+        dMissing) == Unknown)
+    }
   }
 
   test("bloom cache invalidation on out-of-band restore: a sidecar " +
     "REWRITTEN AT THE SAME PATH (table deleted and recreated / " +
     "restored) misses the (path, size, mtime) cache and reloads — a " +
     "stale cached filter would wrongly prune the restored key") {
-    val dir = java.nio.file.Files.createTempDirectory("gfi_bloom_inv")
-    val side = dir.resolve("_bloom_k.bf")
-    def writeFilter(keys: Seq[String]): Unit = {
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 4096L)
-      keys.foreach(v =>
-        bf.putBinary(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      val out = java.nio.file.Files.newOutputStream(side)
-      try bf.writeTo(out) finally out.close()
+    withTempDir("gfi_bloom_inv") { dir =>
+      val side = dir.resolve("_bloom_k.bf")
+      def writeFilter(keys: Seq[String]): Unit = {
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 4096L)
+        keys.foreach(v =>
+          bf.putBinary(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        val out = java.nio.file.Files.newOutputStream(side)
+        try bf.writeTo(out) finally out.close()
+      }
+      writeFilter(Seq("1"))
+      val d = ScanDir("p", Map.empty, Map.empty,
+        blooms = Map("k" -> side.toString))
+      // prime the cache: 7 definitely absent under the original filter
+      assert(eval(EqualTo(attr("k", LongType), Literal(7L, LongType)), d)
+        == False)
+      // out-of-band restore: same path, new content CONTAINING 7 —
+      // bump mtime explicitly (same-millisecond rewrites are the
+      // adversarial case a wall-clock test can't rely on dodging)
+      writeFilter(Seq("7"))
+      val attrs = java.nio.file.Files.readAttributes(side,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      java.nio.file.Files.setLastModifiedTime(side,
+        java.nio.file.attribute.FileTime.fromMillis(
+          attrs.lastModifiedTime().toMillis + 2000))
+      // the restored filter must be consulted: 7 is now maybe-present
+      assert(eval(EqualTo(attr("k", LongType), Literal(7L, LongType)), d)
+        == Unknown)
+      // and the old key is now definitely absent under the new filter
+      assert(eval(EqualTo(attr("k", LongType), Literal(1L, LongType)), d)
+        == False)
     }
-    writeFilter(Seq("1"))
-    val d = ScanDir("p", Map.empty, Map.empty,
-      blooms = Map("k" -> side.toString))
-    // prime the cache: 7 definitely absent under the original filter
-    assert(eval(EqualTo(attr("k", LongType), Literal(7L, LongType)), d)
-      == False)
-    // out-of-band restore: same path, new content CONTAINING 7 —
-    // bump mtime explicitly (same-millisecond rewrites are the
-    // adversarial case a wall-clock test can't rely on dodging)
-    writeFilter(Seq("7"))
-    val attrs = java.nio.file.Files.readAttributes(side,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    java.nio.file.Files.setLastModifiedTime(side,
-      java.nio.file.attribute.FileTime.fromMillis(
-        attrs.lastModifiedTime().toMillis + 2000))
-    // the restored filter must be consulted: 7 is now maybe-present
-    assert(eval(EqualTo(attr("k", LongType), Literal(7L, LongType)), d)
-      == Unknown)
-    // and the old key is now definitely absent under the new filter
-    assert(eval(EqualTo(attr("k", LongType), Literal(1L, LongType)), d)
-      == False)
   }
 
   test("shared listing pool really runs up to 32 tasks CONCURRENTLY " +

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +18,7 @@ class IncrementalInvertedIndexSpec extends SparkSpec {
       : PartitionedCowTable = {
     implicit val s: SparkSession = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("iix_base").toString + "/t", "src")
+      tempDir("iix_base") + "/t", "src")
     t.overwrite(rows.toDF("doc_id", "src", "text"))
     t
   }
@@ -28,7 +26,7 @@ class IncrementalInvertedIndexSpec extends SparkSpec {
   private def mkIndex(base: PartitionedCowTable): IncrementalInvertedIndex = {
     implicit val s: SparkSession = spark
     new IncrementalInvertedIndex(base,
-      Files.createTempDirectory("iix_idx").toString,
+      tempDir("iix_idx"),
       "doc_id", "text", graft.functions.GraftFunctions.tokens(_),
       ngram = 2, topK = 3, buckets = 8)
   }

@@ -11,7 +11,7 @@ class IncrementalRollupSpec extends SparkSpec {
 
   private def mk(): (PartitionedCowTable, IncrementalRollup, String) = {
     implicit val s = spark
-    val root = Files.createTempDirectory("rollup").toString
+    val root = tempDir("rollup")
     val t = PartitionedCowTable(s"$root/b", "month")
     t.overwrite(Seq(
       (1L, "2020-03", 10L), (2L, "2020-03", 20L),
@@ -87,7 +87,7 @@ class IncrementalRollupSpec extends SparkSpec {
     "partition-confined, a refresh re-aggregates one month's groups " +
     "and leaves the rest carried") {
     implicit val s = spark
-    val root = Files.createTempDirectory("rollup_md").toString
+    val root = tempDir("rollup_md")
     val t = PartitionedCowTable(s"$root/b", "month")
     t.overwrite(Seq(
       (1L, "2020-03", "a", 10L), (2L, "2020-03", "b", 20L),

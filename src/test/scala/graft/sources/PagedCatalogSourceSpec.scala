@@ -171,8 +171,7 @@ class PagedCatalogSourceSpec extends SparkSpec {
   test("end-to-end with IncrementalIngest: backfill, replayed sweep " +
     "absorbed, incremental sweep lands only the delta") {
     implicit val s = spark
-    val root = java.nio.file.Files
-      .createTempDirectory("paged_src").toString
+    val root = tempDir("paged_src")
     val table = new CowTable(s"$root/granules", spark)
     def sweep(total: Int): Unit = {
       val wm = graft.streaming.IncrementalIngest

@@ -12,7 +12,7 @@ class PartitionedCowTableSpec extends SparkSpec {
   private def mk(): PartitionedCowTable = {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow").toString + "/t", "month")
+      tempDir("pcow") + "/t", "month")
     t.overwrite(Seq(
       (1L, "2020-03", "a", false),
       (2L, "2020-03", "b", false),
@@ -25,7 +25,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "manifest keys, raw-literal pruning, scoped DV attach (r11 ADVICE)") {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow_esc").toString + "/t", "month")
+      tempDir("pcow_esc") + "/t", "month")
     // ':' and '%' percent-escape in the __part= dir name; Entry.value
     // must come back RAW or exact pruning / scoped attach / touched
     // membership silently miss every comparison against the raw value
@@ -57,7 +57,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     // null / empty / the Hive sentinel can NOT round-trip (Spark
     // writes all of them as the same default-partition dir) — loud
     val t2 = PartitionedCowTable(
-      Files.createTempDirectory("pcow_esc2").toString + "/t", "month")
+      tempDir("pcow_esc2") + "/t", "month")
     intercept[IllegalArgumentException] {
       t2.overwrite(Seq((1L, null.asInstanceOf[String], "a", false))
         .toDF("pid", "month", "v", "flag"))
@@ -77,7 +77,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "prunes in micros, date in days; unsupported types refused loudly") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_typed").toString + "/t", "month",
+      tempDir("pcow_typed") + "/t", "month",
       spark, statsColumns = Seq("ets", "ed"))
     def ts(v: String) = java.sql.Timestamp.valueOf(v)
     def dt(v: String) = java.sql.Date.valueOf(v)
@@ -107,7 +107,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     // EPSG refuse-loudly precedent): a silently mis-unit'd zone map
     // would be a wrong-prune hazard, not a perf miss
     val t2 = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_typed2").toString + "/t", "month",
+      tempDir("pcow_typed2") + "/t", "month",
       spark, statsColumns = Seq("flag"))
     val err = intercept[IllegalArgumentException] {
       t2.overwrite(Seq((1L, "2020-03", true)).toDF("pid", "month", "flag"))
@@ -341,7 +341,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "(r13 verdict item 3)") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_od").toString + "/t", "k",
+      tempDir("pcow_od") + "/t", "k",
       spark, statsColumns = Seq("v"))
     t.overwrite((1 to 2000).map(i => (s"p${i % 200}", i.toLong))
       .toDF("k", "v"))
@@ -393,7 +393,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     // read-modify-write / nondeterministic-input stand-in: if the
     // probe re-evaluated the plan at probe time, it would see
     // whatever the dir holds THEN, not what was staged
-    val inDir = Files.createTempDirectory("pcow_in").toString + "/u"
+    val inDir = tempDir("pcow_in") + "/u"
     Seq((1L, "2020-03", "L", true)).toDF("pid", "month", "v", "flag")
       .write.parquet(inDir)
     t.commitSeam = () => {
@@ -451,7 +451,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     // the winner lands the loser's key pid 4 in a NEW month, from
     // inside the loser's one evaluation of its updates: entries are
     // disjoint, so only the key probe can refuse the rebase
-    val winner = Files.createTempDirectory("pcow_win").toString + "/w"
+    val winner = tempDir("pcow_win") + "/w"
     Seq((4L, "2020-09", "dup", false)).toDF("pid", "month", "v", "flag")
       .coalesce(1).write.parquet(winner)
     PcowKeyRacer.root = t.root
@@ -507,7 +507,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     // Seq's distinct is answered without a job, which would hide every
     // re-evaluation of the delta this spec is here to count
     def landed(rows: (Long, String, String, Boolean)*) = {
-      val p = Files.createTempDirectory("pcow_delta").toString + "/d"
+      val p = tempDir("pcow_delta") + "/d"
       rows.toDF("pid", "month", "v", "flag").write.parquet(p)
       spark.read.parquet(p)
     }
@@ -815,7 +815,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "dirs, recomputed for rewritten ones; pruning is conservative") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_zm").toString + "/t", "month",
+      tempDir("pcow_zm") + "/t", "month",
       spark, statsColumns = Seq("k"))
     t.overwrite(Seq(
       (1L, "2020-03", 10L), (2L, "2020-03", 20L),
@@ -888,7 +888,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "manifest + zone maps through the table's FileIndex") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_auto").toString + "/t", "month",
+      tempDir("pcow_auto") + "/t", "month",
       spark, statsColumns = Seq("k"))
     t.overwrite(Seq(
       (1L, "2020-03", 10L), (2L, "2020-03", 20L),
@@ -929,7 +929,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "manifest-recorded bytes") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_lazy").toString + "/t", "month",
+      tempDir("pcow_lazy") + "/t", "month",
       spark, statsColumns = Seq("k"))
     t.overwrite(Seq(
       (1L, "2020-03", 10L), (2L, "2020-04", 100L),
@@ -965,7 +965,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "unsupported types refused loudly") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_bloom").toString + "/t", "month",
+      tempDir("pcow_bloom") + "/t", "month",
       spark, bloomColumns = Seq("pid", "tag"))
     t.overwrite(Seq(
       (10L, "2020-03", "a"), (11L, "2020-03", "b"),
@@ -1006,7 +1006,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     assert(t.autoPruneLedger === ((3, 1)))
     // unsupported bloom-column type is refused at commit
     val t2 = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_bloom2").toString + "/t", "month",
+      tempDir("pcow_bloom2") + "/t", "month",
       spark, bloomColumns = Seq("score"))
     val err = intercept[IllegalArgumentException] {
       t2.overwrite(Seq((1L, "2020-03", 0.5)).toDF("pid", "month", "score"))
@@ -1019,7 +1019,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "one; content identical") {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow_tgt").toString + "/t", "month")
+      tempDir("pcow_tgt") + "/t", "month")
     // one fat month (600 rows of padded payload), two slim ones
     val fat = (0 until 600).map(i =>
       (i.toLong, "2020-03", "x" * 200 + i))
@@ -1065,7 +1065,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "coords land in the sentinel cell, old versions time-travel") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_zre").toString + "/t", "month",
+      tempDir("pcow_zre") + "/t", "month",
       spark, statsColumns = Seq("x", "y"))
     // 3 ingest months, coords spread over the full [0,1000]^2 plane
     // in every month — the layout zone maps can't prune on
@@ -1106,7 +1106,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "lexicographically; non-ASCII comparisons stay conservative") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_sstat").toString + "/t", "month",
+      tempDir("pcow_sstat") + "/t", "month",
       spark, statsColumns = Seq("d", "k"))
     t.overwrite(Seq(
       (1L, "2020-03", "2020-03-05", 10L),
@@ -1180,7 +1180,7 @@ class PartitionedCowTableSpec extends SparkSpec {
   test("deletion vectors delete NULL-keyed rows (null-safe anti-join)") {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow_dvnull").toString + "/t", "month")
+      tempDir("pcow_dvnull") + "/t", "month")
     t.overwrite(Seq(
       (Option(1L), "2020-03", 10L),
       (Option.empty[Long], "2020-03", 999L),
@@ -1309,7 +1309,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "URI-encodes differently (space passes the path-safe guard)") {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow_sp").toString + "/t", "cat")
+      tempDir("pcow_sp") + "/t", "cat")
     // 'a b' contains a space: path-safe per Hive escapePathName, but
     // input_file_name() URI-encodes it (%20) — a raw substring match
     // would silently skip migrating its dir (round-9 ADVICE bug)
@@ -1462,7 +1462,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "duplication (r12 ADVICE)") {
     implicit val s = spark
     val t = PartitionedCowTable(
-      Files.createTempDirectory("pcow_col").toString + "/t", "month")
+      tempDir("pcow_col") + "/t", "month")
     // month value 'x' will collide with a v-spec value 'x' post-evolve
     t.overwrite(Seq((1L, "x", "a"), (2L, "y", "b"))
       .toDF("pid", "month", "v"))
@@ -1512,7 +1512,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "sentinel cell and do not poison the global bounds (r12 ADVICE)") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_nan").toString + "/t", "month",
+      tempDir("pcow_nan") + "/t", "month",
       spark, statsColumns = Seq("x", "y"))
     val rows = (0 until 32).map(i =>
       (i.toLong, "2020-01", (i % 8) * 100.0, (i / 8) * 100.0)) ++
@@ -1533,7 +1533,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "section populated as the same JSON tree, and reads match") {
     implicit val s = spark
     val t = new PartitionedCowTable(
-      Files.createTempDirectory("pcow_rt").toString + "/t", "month",
+      tempDir("pcow_rt") + "/t", "month",
       spark, statsColumns = Seq("name", "n", "x", "ts", "d"),
       bloomColumns = Seq("pid"))
     def ts(v: String) = java.sql.Timestamp.valueOf(v)
@@ -1627,7 +1627,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     implicit val s = spark
     def dateTable() = {
       val t = PartitionedCowTable(
-        Files.createTempDirectory("pcow_retire").toString + "/t", "day")
+        tempDir("pcow_retire") + "/t", "day")
       t.overwrite(Seq(
         (1L, java.sql.Date.valueOf("2020-03-01"), "a"),
         (2L, java.sql.Date.valueOf("2020-03-01"), "b"),
@@ -1637,7 +1637,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     }
     def intTable() = {
       val t = PartitionedCowTable(
-        Files.createTempDirectory("pcow_retire").toString + "/t", "bucket")
+        tempDir("pcow_retire") + "/t", "bucket")
       t.overwrite(Seq((1L, 7, "a"), (2L, 7, "b"), (3L, 8, "c"), (4L, 9, "d"))
         .toDF("pid", "bucket", "v"))
       t
@@ -1695,7 +1695,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     "a timestamp spec, a non-spec column, a legacy dir") {
     implicit val s = spark
     val ts = PartitionedCowTable(
-      Files.createTempDirectory("pcow_ts").toString + "/t", "at")
+      tempDir("pcow_ts") + "/t", "at")
     val at = java.sql.Timestamp.valueOf("2020-03-01 10:00:00")
     ts.overwrite(Seq((1L, at, "a"),
       (2L, java.sql.Timestamp.valueOf("2020-03-02 10:00:00"), "b"))
@@ -1716,7 +1716,7 @@ class PartitionedCowTableSpec extends SparkSpec {
     */
   private def landed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val p = Files.createTempDirectory("pcow_in").toString + "/d"
+    val p = tempDir("pcow_in") + "/d"
     df.write.parquet(p)
     spark.read.parquet(p)
   }

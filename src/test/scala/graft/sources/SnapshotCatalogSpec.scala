@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   private def mk(): (PartitionedCowTable, PartitionedCowTable,
       SnapshotCatalog) = {
     implicit val s = spark
-    val base = Files.createTempDirectory("snapcat").toString
+    val base = tempDir("snapcat")
     val a = PartitionedCowTable(s"$base/a", "m")
     val b = PartitionedCowTable(s"$base/b", "m")
     a.overwrite(Seq((1L, "x", 10L)).toDF("pid", "m", "v"))
@@ -68,7 +66,7 @@ class SnapshotCatalogSpec extends SparkSpec {
   test("a table first recorded later is absent from earlier snapshots") {
     implicit val s = spark
     val (a, _, snap) = mk()
-    val base = Files.createTempDirectory("snapcat2").toString
+    val base = tempDir("snapcat2")
     val c = PartitionedCowTable(s"$base/c", "m")
     c.overwrite(Seq((1L, "x", 7L)).toDF("pid", "m", "v"))
     snap.record(5, Map("a" -> a.version, "c" -> c.version))

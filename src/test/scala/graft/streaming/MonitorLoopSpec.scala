@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
@@ -12,7 +11,7 @@ import graft.catalog.SceneCatalog
 import graft.model.Scene
 import graft.pipeline.AuditLog
 import graft.pipeline.StepRunner.{SceneStep, StepResult}
-import graft.sources.CowTable
+import graft.sources.{CowTable, PartitionedCowTable}
 
 /** Top-level (ships to executors; must not capture the suite). */
 private[streaming] class MonitorDownloadStep extends SceneStep {
@@ -41,7 +40,7 @@ class MonitorLoopSpec extends SparkSpec {
 
   test("monitoring loop: stream -> dedup ingest -> steps -> audit") {
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("mon").toString
+    val root = tempDir("mon")
     val cat = new SceneCatalog(new CowTable(s"$root/scenes", spark), spark)
     val audit = new AuditLog(s"$root/audit", spark)
     val mem = MemoryStream[Scene]
@@ -70,5 +69,31 @@ class MonitorLoopSpec extends SparkSpec {
     assert(log.count(_.startsWith("download:")) == 2)
     assert(log.exists(_.contains("processed=2 ok=2")))
     assert(log.exists(_.contains("processed=1 ok=1")))
+  }
+
+  test("five ticks, each with a mergeSync and a deleteWhereDV, leave no " +
+    "persistent RDD but the table's in-memory copy") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val t = new PartitionedCowTable(tempDir("montick") + "/scenes",
+      "Date_Acquired", spark)
+    val cat = new SceneCatalog(t, spark)
+    for (tick <- 1 to 5) {
+      val day = f"2020-03-$tick%02d"
+      MonitorLoop.tick(spark, cat,
+        Seq(scene(tick, s"S$tick", day), scene(10 + tick, s"S${10 + tick}", day))
+          .toDF(), Seq("PID"), Seq(col("Product_ID").desc),
+        Seq(new MonitorDownloadStep), parallelism = 2)
+      // write back the tick's new cloud cover, then retire the extra scene
+      assert(t.mergeSync(t.read().withColumn("Cloud_Cover",
+        when(col("PID") === tick, lit(50.0)).otherwise(col("Cloud_Cover"))),
+        Seq("PID"))._2 === 1L)
+      t.deleteWhereDV(col("PID") === 10L + tick, Seq("PID"))
+      assert(cat.scnlistNeedDownload().isEmpty)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.size <= 1, s"tick $tick left RDDs $left")
+    }
+    assert(cat.scenes.select("PID").as[Long].collect().sorted ===
+      (1L to 5L).toArray)
   }
 }

@@ -213,8 +213,7 @@ class MultiBatchStreamingSpec extends SparkSpec {
       (3L, ts(3), 20L, "c"), (4L, ts(4), 10L, "d"),
       (5L, ts(5), 20L, "e"), (6L, ts(6), 30L, "f"))
       .toDF("event_id", "ts", "user_id", "event_type")
-    val root = java.nio.file.Files
-      .createTempDirectory("mbspec_cow").toString + "/t"
+    val root = tempDir("mbspec_cow") + "/t"
     val table = new graft.sources.CowTable(root, spark)
     val n = StreamingQueries.drainEach(
       spark, "mbspec_fe", rows,

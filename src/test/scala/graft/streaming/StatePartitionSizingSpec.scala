@@ -15,11 +15,10 @@ import graft.SparkSpec
 class StatePartitionSizingSpec extends SparkSpec {
 
   private def dirWithBytes(n: Long): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-spart")
-    val f = d.resolve("batch000.parquet")
-    java.nio.file.Files.write(f, new Array[Byte](n.toInt))
-    d.toFile.deleteOnExit(); f.toFile.deleteOnExit()
-    d.toString
+    val d = tempDir("graft-spart")
+    java.nio.file.Files.write(java.nio.file.Paths.get(d, "batch000.parquet"),
+      new Array[Byte](n.toInt))
+    d
   }
 
   test("tiny staged input sizes to ONE state partition") {

@@ -21,7 +21,7 @@ class StreamOpsSpec extends SparkSpec {
     * append to the returned path.
     */
   private def toParquet(df: DataFrame): (DataStreamWriter[Row], String) = {
-    val dir = java.nio.file.Files.createTempDirectory("sosink").toString
+    val dir = tempDir("sosink")
     (df.writeStream.option("checkpointLocation", s"$dir/ckpt")
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.write.mode("append").parquet(s"$dir/out")
@@ -80,7 +80,7 @@ class StreamOpsSpec extends SparkSpec {
       StepEvent("A", "ard", ts("2024-01-01 11:00:00")))
     val out = StreamOps.sceneStateMachine(mem.toDS(), "10 minutes",
       idleGapMs = 3600L * 1000)
-    val cp = java.nio.file.Files.createTempDirectory("smcp").toString
+    val cp = tempDir("smcp")
     // memory sink can't recover a checkpoint; foreachBatch can — and
     // the function runs on the driver, so a local buffer is a sink
     val sink = scala.collection.mutable.ArrayBuffer

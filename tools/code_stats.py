@@ -5,7 +5,7 @@
     python3 tools/code_stats.py --root DIR # another checkout
     python3 tools/code_stats.py --json     # one JSON object instead
 
-Prints three sections for `src/main/scala`:
+Prints these sections for `src/main/scala`:
 
 - lines: physical lines and code lines (not blank, not comment) per
   file and in total, so a change that only strips comments or blank
@@ -24,7 +24,9 @@ Prints three sections for `src/main/scala`:
   environment variables read through `sys.env` / `System.getenv`, and
   the `spark.graft.*` conf keys — with the places that read them.
   Comment text is ignored, so a knob named only in a doc comment does
-  not count.
+  not count;
+- lineage cuts: every `.localCheckpoint(` code site (comments ignored),
+  with its place.
 """
 import argparse
 import collections
@@ -38,6 +40,7 @@ ENV_RE = re.compile(
     r'(?:sys\.env\.(?:get|getOrElse|contains)\(\s*|sys\.env\(\s*|'
     r'System\.getenv\(\s*)"([^"]+)"')
 CONF_RE = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
+CUT = ".localCheckpoint("
 ORACLE_RE = re.compile(
     r'val\s+oracleSql\s*:\s*Map\[\s*String\s*,\s*String\s*\]\s*=\s*Map\(')
 
@@ -143,6 +146,7 @@ def stats(root):
     lines, code_n, windows = {}, {}, {}
     contract_lines, contract_code, first_in = {}, {}, {}
     knobs = collections.defaultdict(list)
+    cuts = []
     where = collections.defaultdict(list)
     for f in files:
         rel = os.path.relpath(f, root)
@@ -166,6 +170,7 @@ def stats(root):
                 knobs[("env", m.group(1))].append(f"{rel}:{n}")
             for m in CONF_RE.finditer(c):
                 knobs[("conf", m.group(1))].append(f"{rel}:{n}")
+            cuts += [f"{rel}:{n}"] * c.count(CUT)
     dup, dup_contract = {}, {}
     for rel, ws in windows.items():
         hits = [len(where[w]) > 1 for w in ws]
@@ -196,6 +201,8 @@ def stats(root):
         "contract_totals": part(True),
         "knobs": {f"{kind} {name}": sorted(set(at))
                   for (kind, name), at in sorted(knobs.items())},
+        "local_checkpoint_sites": cuts,
+        "local_checkpoint_total": len(cuts),
     }
 
 
@@ -231,6 +238,10 @@ def main():
     kinds = collections.Counter(k.split()[0] for k in s["knobs"])
     print(f"  {len(s['knobs'])} total ({kinds['env']} env, "
           f"{kinds['conf']} conf)")
+    print(f"== lineage cuts ({CUT} code sites)")
+    for at in s["local_checkpoint_sites"]:
+        print(f"  {at}")
+    print(f"  {s['local_checkpoint_total']} total")
 
 
 if __name__ == "__main__":
