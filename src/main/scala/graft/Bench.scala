@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.Harness.Json
-import graft.operators.Staging
 
 object Bench {
   /** What to publish for one query given its suite (median, min) and
@@ -135,15 +132,21 @@ object Bench {
       if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // One timed rep, in seconds: the query's build and its `.count()`
-    // in one staging scope, whose blocks are freed after the clock
-    // stops.
-    def timed(fn: (SparkSession, String) => DataFrame): Double =
-      Staging.scope(spark) {
+    // in one staging scope ([[Harness.scoped]]), whose blocks are
+    // freed after the clock stops. A leak goes into the query's
+    // `failed` entry; its timing still counts.
+    def timed(name: String): Double = {
+      val (secs, leaked) = Harness.scoped(spark) {
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        SparkEntry.queries(name)(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
+      if (leaked.nonEmpty)
+        failures.getOrElseUpdate(name, Harness.leakMessage(leaked))
+      secs
+    }
     // Read BEFORE this round's bench_full.json write, so the file still
     // holds last round's ledger. The medians seed the per-query cost
     // ESTIMATES that the wall budget plans with; the solo map is
@@ -179,7 +182,6 @@ object Bench {
     val estTail = names.scanRight(0.0)((n, acc) => acc + est(n))
     // solo-phase reservation (r14 verdict item 1; see soloReserve)
     val soloReserveSec = Bench.soloReserve(names.map(est), budget)
-    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var degraded = 0
     // Incremental artifact (round-13 lesson: the sf10 sitting that
     // deadlocked inside q293 erased 2 h of completed measurements
@@ -197,7 +199,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] progress write failed: $e") }
     val results = names.zipWithIndex.map { case (name, i) =>
-      val fn = SparkEntry.queries(name)
       val e = est(name)
       val planned = flatReps.getOrElse(tier(e))
       val room = budget - soloReserveSec - elapsed() - estTail(i + 1)
@@ -205,7 +206,7 @@ object Bench {
         if (e <= 0) planned else math.floor(room / e).toInt))
       if (reps < planned) degraded += 1
       val times = (1 to reps).flatMap { _ =>
-        try Some(timed(fn)) catch { case ex: Throwable =>
+        try Some(timed(name)) catch { case ex: Throwable =>
           failures.getOrElseUpdate(name,
             s"${ex.getClass.getSimpleName}: ${Option(ex.getMessage).getOrElse("").take(200)}")
           // a dead context fails every remaining query vacuously —
@@ -222,12 +223,6 @@ object Bench {
           None
         }
       }
-      // Inter-query hygiene, a backstop behind the staging scopes:
-      // blocks left by queries already measured accumulate across
-      // hundreds of queries until execution memory starves mid-board
-      // (two sf10 OOMs that pass solo), so drop whatever is left.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
       val row = if (times.isEmpty) (-1.0, -1.0)
         else (median(times), times.min)
       logProgress(progressRow(name, row._1, row._2, times.size,
@@ -263,9 +258,8 @@ object Bench {
     val solo = soloCandidates.flatMap { case (name, (med, _)) =>
       if (elapsed() + 3 * med > budget) { soloSkipped += name; None }
       else {
-        val fn = SparkEntry.queries(name)
         val times = (1 to 3).flatMap { _ =>
-          try Some(timed(fn)) catch { case _: Throwable => None }
+          try Some(timed(name)) catch { case _: Throwable => None }
         }
         val v = if (times.isEmpty) -1.0 else times.min
         logProgress(Json.line("q" -> name, "solo" -> v, "elapsed" -> elapsed()))

@@ -7,7 +7,9 @@ import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{DoubleNode, IntNode, TextNode}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+
+import graft.operators.Staging
 
 /** What every entry point (Bench, Verify, PlanDump and the examples)
   * shares: one session builder, one name-selection rule, one JSON
@@ -45,6 +47,30 @@ object Harness {
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** Runs one query's build and action in one [[Staging.scope]], then
+    * lists the persistent RDDs it added and left behind and frees them
+    * → (its value, their ids, ascending). The ids are a leak: a staged
+    * block outlives its scope only when something outside [[Staging]]
+    * persisted it. Freeing them keeps a sitting bounded: blocks left
+    * by queries already measured accumulate across hundreds of queries
+    * until execution memory starves mid-board (two sf10 OOMs that pass
+    * solo). The sweep runs however the body ends.
+    */
+  def scoped[A](spark: SparkSession)(body: => A): (A, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var leaked = Seq.empty[Int]
+    val out = try Staging.scope(spark)(body) finally {
+      leaked = (sc.getPersistentRDDs.keySet -- before).toSeq.sorted
+      leaked.foreach(GraftPlanBridge.unpersist(spark, _))
+    }
+    (out, leaked)
+  }
+
+  /** A leak report for [[scoped]]'s ids. */
+  def leakMessage(ids: Seq[Int]): String =
+    s"leaked ${ids.size} persistent RDDs: ${ids.mkString(", ")}"
 
   /** A comma-separated prefix list, blanks dropped; None when empty. */
   def prefixes(csv: String): Option[Set[String]] =

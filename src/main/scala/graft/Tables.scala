@@ -24,21 +24,48 @@ object Tables {
     if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm"
     else System.getProperty("java.io.tmpdir")
 
-  /** The one owner of query scratch: `graft_<tag>_<appId>` under
-    * [[scratchBase]], plus a fresh UUID leaf when `fresh` (a root
+  /** The one owner of query scratch: `graft_<tag>_<appId>_pid<pid>`
+    * under [[scratchBase]], plus a fresh UUID leaf when `fresh` (a root
     * reused across reps would accumulate table versions, or make a
     * stream checkpoint see "no new data"). Every per-app dir handed
     * out is walk-deleted at JVM exit and never before: lazily returned
-    * results and the stage cache read their roots across reps.
+    * results and the stage cache read their roots across reps. A JVM
+    * that dies without running its exit hooks (SIGKILL, an OOM kill)
+    * leaves its roots; the first call in a later JVM deletes those
+    * ([[reclaimDead]]).
     */
   def scratchDir(s: SparkSession, tag: String, fresh: Boolean = false): String = {
-    val root = Paths.get(scratchBase, s"graft_${tag}_${s.sparkContext.applicationId}")
+    val root = Paths.get(scratchBase,
+      s"graft_${tag}_${s.sparkContext.applicationId}_pid${ProcessHandle.current().pid()}")
     scratchRoots.synchronized(scratchRoots += root)
     if (fresh) root.resolve(java.util.UUID.randomUUID().toString).toString
     else root.toString
   }
 
+  private val PidTagged = "graft_.+_pid(\\d+)".r
+
+  /** Walk-deletes the scratch roots under `base` whose owning JVM is
+    * no longer alive → the roots deleted. A root names its JVM by the
+    * `_pid<pid>` suffix; roots without one (written before roots were
+    * tagged) are left alone, since nothing tells whether their JVM
+    * still runs. A dead JVM's pid reused by a live process keeps its
+    * root until that process ends too.
+    */
+  private[graft] def reclaimDead(base: Path): Seq[Path] = {
+    val names = Option(base.toFile.list()).map(_.toSeq).getOrElse(Nil)
+    names.sorted.collect {
+      case n @ PidTagged(pid) if !ProcessHandle.of(pid.toLong).isPresent =>
+        base.resolve(n)
+    }.filter { p =>
+      try { graft.sources.CowTable.walkDelete(p); true }
+      catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException => false
+      }
+    }
+  }
+
   private[graft] lazy val scratchRoots = {
+    reclaimDead(Paths.get(scratchBase))
     val roots = scala.collection.mutable.LinkedHashSet.empty[Path]
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       roots.synchronized(roots.toList).foreach { p =>

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.JsonNode
 
 import graft.Harness.Json
-import graft.operators.Staging
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -15,7 +14,8 @@ import graft.operators.Staging
   *  - per-query exceptions land in `_errors.json` (name → message) next
   *    to oracle_sql.json, and the process exits non-zero if any query
   *    failed — a broken query poisons the round's artifact visibly
-  *    instead of vanishing;
+  *    instead of vanishing; so does a query that leaves persistent
+  *    RDDs behind ([[Harness.scoped]]), whose ids the message names;
   *  - queries run cheapest-first (by the previous bench board's
   *    medians, [[Harness.prevBoard]]; name-sort fallback), so if a
   *    time limit ever cuts the run short, only the most expensive
@@ -51,11 +51,15 @@ object Verify {
 
     attempted.foreach { name =>
       try {
-        Staging.scope(spark) {
+        val (_, leaked) = Harness.scoped(spark) {
           queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
         }
         completed += name
+        if (leaked.nonEmpty) {
+          System.err.println(s"[verify] $name ${Harness.leakMessage(leaked)}")
+          errors(name) = Harness.leakMessage(leaked)
+        }
       } catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name FAILED: $msg")

@@ -200,10 +200,11 @@ object ScaleOps {
     * star-reduction guard ([[bandedCandidatePairs]]) additionally caps
     * pathological components at diameter ≤ 2 per bucket. Each round is
     * one shuffle-on-`dst` join + one partial-aggregated groupBy;
-    * labels are staged ([[Staging]]) every round so lineage stays flat
-    * at any iteration count. Convergence is detected by the label sum
-    * (labels only ever decrease, so an unchanged sum ⇔ a fixpoint) —
-    * one cheap aggregate per round instead of a change-count join.
+    * labels are staged every round ([[Staging.iterate]]) so lineage
+    * stays flat at any iteration count. Convergence is detected by the
+    * label sum (labels only ever decrease, so an unchanged sum ⇔ a
+    * fixpoint) — one cheap aggregate per round, reused by the next
+    * round, instead of a change-count join.
     * Fails loudly if `maxIters` rounds don't converge (a silently
     * half-merged component would split dedup groups).
     *
@@ -260,24 +261,21 @@ object ScaleOps {
       else Staging(both.repartition(w, col("dst"))
         .sortWithinPartitions("dst")) // sorted blocks compress smaller
         // through every round's exchange and pre-sort the SMJ runs
-    var labels = Staging(bothByDst.select(col("src").as("id")).distinct()
+    val init = Staging(bothByDst.select(col("src").as("id")).distinct()
       .withColumn("lab", col("id")))
     // `both` is dead once the spread copy and the label init are
     // materialized (r14 advice: holding TWO staged copies of the edge
     // table for the whole run doubles edge storage at exactly the
     // scale this path targets)
     if (!(bothByDst eq both)) Staging.release(both)
-    def labelSum(): Long =
+    def labelSum(labels: DataFrame): Long =
       labels.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
-    var lastSum = labelSum()
-    var converged = false
-    var i = 0
     // only the live label generation and the edge copies stay staged:
-    // a round frees the generation it read once the next is staged,
-    // and the edges go when the loop ends (the last generation's
-    // lineage is cut, so the returned frame reads its blocks alone;
-    // they belong to the caller's staging scope)
-    try while (!converged && i < maxIters) {
+    // `iterate` frees each generation once the next is staged, and the
+    // edges go when the loop ends (the last generation's lineage is
+    // cut, so the returned frame reads its blocks alone; they belong
+    // to the caller's staging scope)
+    val (labels, converged) = try Staging.iterate(init, maxIters) { labels =>
       val nbrMin = bothByDst
         .join(labels.select(col("id").as("dst"), col("lab").as("nlab")),
           Seq("dst"))
@@ -287,16 +285,10 @@ object ScaleOps {
       // — O(log diameter) rounds — is SLOWER here: the extra join per
       // round outweighs the saved rounds on dedup graphs, whose
       // diameter is already small. Plain one-hop propagation wins.)
-      val next = Staging(labels.join(nbrMin, Seq("id"), "left")
+      labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("lab")))
-      Staging.release(labels)
-      labels = next
-      val s = labelSum()
-      converged = s == lastSum
-      lastSum = s
-      i += 1
-    } finally Staging.release(bothByDst)
+          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("lab"))
+    }(Staging.unchanged(labelSum)) finally Staging.release(bothByDst)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds — " +

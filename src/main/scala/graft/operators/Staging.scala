@@ -7,6 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one owner of lineage cuts. A staged frame is an eager local
   * checkpoint (Spark's default level): its rows are computed once into
@@ -29,6 +30,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * property, which a thread inherits from the thread that creates it,
   * so blocks staged by a thread a query starts (a streaming batch, for
   * one) belong to the query's scope.
+  *
+  * Loop rule: an iteration whose state is staged every round runs
+  * through [[iterate]], which frees each generation once its successor
+  * is staged, so a loop holds its fixed inputs plus at most two
+  * generations, and one when it ends.
   */
 object Staging {
   private val ScopeKey = "graft.staging.scope"
@@ -99,6 +105,61 @@ object Staging {
     val id = rddId(ds)
     open.values.forEach(_.remove(id))
     GraftPlanBridge.unpersist(ds.sparkSession, id)
+  }
+
+  /** Runs a staged loop from `init`: each round stages `step` of the
+    * current generation, asks `fixed(previous, staged)` whether the
+    * loop reached its fixpoint, then frees the previous generation. A
+    * step that returns its input unchanged (a search with nothing left
+    * to do) is a fixpoint found with no job. Stops at a fixpoint or
+    * after `maxRounds` rounds → (the last generation, converged?).
+    *
+    * `init` becomes the loop's: when it is a staged frame it is freed
+    * once replaced; a lazily built one has no blocks to free. The last
+    * generation belongs to the caller's scope, like any staged frame.
+    * Without `fixed` the loop runs all `maxRounds` rounds.
+    */
+  def iterate[T](init: Dataset[T], maxRounds: Int)(
+      step: Dataset[T] => Dataset[T])(
+      fixed: (Dataset[T], Dataset[T]) => Boolean = (_: Any, _: Any) => false)
+      : (Dataset[T], Boolean) = {
+    var cur = init
+    var converged = false
+    var round = 0
+    while (!converged && round < maxRounds) {
+      val built = step(cur)
+      if (built eq cur) converged = true
+      else {
+        val next = apply(built)
+        converged = fixed(cur, next)
+        if (staged(cur)) release(cur)
+        cur = next
+      }
+      round += 1
+    }
+    (cur, converged)
+  }
+
+  /** An [[iterate]] fixpoint test: `measure` of the staged generation
+    * equals that of the one it replaces. Each generation is measured
+    * once; a round reuses its predecessor's measure.
+    */
+  def unchanged[T, M](measure: Dataset[T] => M)
+      : (Dataset[T], Dataset[T]) => Boolean = {
+    var last: Option[(Dataset[T], M)] = None
+    (prev, next) => {
+      val before = last.collect { case (g, m) if g eq prev => m }
+        .getOrElse(measure(prev))
+      val after = measure(next)
+      last = Some((next, after))
+      before == after
+    }
+  }
+
+  /** Whether `ds` is a staged frame whose blocks are still held. */
+  private def staged(ds: Dataset[_]): Boolean = ds.queryExecution.analyzed match {
+    case r: LogicalRDD => r.rdd.getStorageLevel != StorageLevel.NONE
+    case _ => false
   }
 
   /** The most blocks the innermost open scope has held at once (0

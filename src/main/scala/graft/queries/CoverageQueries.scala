@@ -58,6 +58,73 @@ object CoverageQueries {
     (a, b, snap)
   }
 
+  /** The first 8 md5 hex digits of `user_id` as a long: the user hash
+    * that the experiment arms and the HLL sketches share.
+    */
+  private def userH32: Column =
+    conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
+      .cast("long")
+
+  /** A user's experiment arm, 0 or 1: the low bit of [[userH32]]. */
+  private def userArm: Column = (userH32 % 2).cast("int")
+
+  /** q160's and q224's per-user cents (user_id, arm, x, y): x summed
+    * before the fixed period cut (2024-01-16), y from it on.
+    */
+  private def prePostCents(s: SparkSession, dir: String): DataFrame = {
+    val cut = lit("2024-01-16").cast("timestamp")
+    t(s, dir, "events")
+      .select(col("user_id"), col("ts"),
+        expr("cast(round(value * 100) as bigint)").as("cents"))
+      .withColumn("arm", userArm)
+      .groupBy("user_id", "arm")
+      .agg(
+        sum(when(col("ts") < cut, col("cents")).otherwise(0L)).as("x"),
+        sum(when(col("ts") >= cut, col("cents")).otherwise(0L)).as("y"))
+  }
+
+  /** q164's and q174's value grid (v, n0, n1, grp = 0): per total
+    * purchase cents v, how many users of arm 0 and of arm 1 spent it.
+    */
+  private def armCentsCells(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .select(col("user_id"),
+        when(col("event_type") === "purchase",
+          expr("cast(round(value * 100) as bigint)")).otherwise(0L)
+          .as("cents"))
+      .groupBy("user_id").agg(sum("cents").as("v"))
+      .withColumn("arm", userArm)
+      .groupBy("v").agg(
+        sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
+        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
+      .withColumn("grp", lit(0))
+
+  /** HLL registers with `m` buckets over `h`'s 32-bit hash `h32`, per
+    * `key`: (key, bucket, register), q136's notes.
+    */
+  private def hllRegisters(h: DataFrame, key: String, m: Int): DataFrame =
+    h.select(col(key), (col("h32") % m).as("bucket"),
+        expr(s"h32 div $m").as("w"))
+      .withColumn("rho", when(col("w") === 0, lit(27))
+        .otherwise(lit(26) - floor(log2(col("w"))).cast("long")))
+      .groupBy(key, "bucket").agg(max("rho").as("register"))
+
+  /** q136's estimate from `m`-bucket registers (key, bucket, register)
+    * → (key, n_buckets, reg_xor, est_distinct, ...).
+    */
+  private def hllEstimate(regs: DataFrame, key: String, m: Int): DataFrame =
+    regs.groupBy(key).agg(
+        count(lit(1)).as("n_buckets"),
+        expr("bit_xor(bucket * 100 + register)").as("reg_xor"),
+        // dyadic terms: this sum is order-independent-exact
+        sum(pow(lit(2.0), -col("register"))).as("ssum"))
+      .withColumn("v", lit(m.toDouble) - col("n_buckets"))
+      .withColumn("raw", lit(0.709 * m * m) / (col("ssum") + col("v")))
+      .withColumn("est_distinct", round(
+        when(col("v") > 0 && col("raw") <= lit(2.5 * m),
+          lit(m.toDouble) * log(lit(m.toDouble) / col("v")))
+          .otherwise(col("raw")), 6))
+
   /** Closed-form fake CMR service for q292: granule i ∈ [0, n) —
     * product by parity, hourly time_start from 2024-01-01Z, geometry
     * by residue (i%14=0 none+small, i%7=0 polygon ring, i%3=0 two
@@ -119,27 +186,6 @@ object CoverageQueries {
 
   private object CmrFormulaFetcher {
     val baseMs: Long = 1704067200000L // 2024-01-01T00:00:00Z
-  }
-
-  /** Deterministic scene step for q58: succeeds unless PID % failMod
-    * == 0, work-list = rows with `flagCol` unset (and `preCol` set,
-    * for ordered pipelines). Top-level case class with primitive
-    * fields only — ships to executors without capturing the suite
-    * (SceneStep is Serializable).
-    */
-  private final case class ModStep(stepName: String, preCol: Option[String],
-                                   flagCol: String, failMod: Int)
-      extends graft.pipeline.StepRunner.SceneStep {
-    override def name: String = stepName
-    override def workList(cat: graft.catalog.SceneCatalog): DataFrame = {
-      val pre = preCol.map(col(_)).getOrElse(lit(true))
-      cat.scenes.filter(pre && !col(flagCol) && !col("Invalid"))
-        .orderBy(col("Date_Acquired"), col("PID")).select("PID")
-    }
-    override def process(pid: Long): graft.pipeline.StepRunner.StepResult =
-      graft.pipeline.StepRunner.StepResult(pid, pid % failMod != 0, "")
-    override def onSuccess: Map[String, org.apache.spark.sql.Column] =
-      Map(flagCol -> lit(true))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -711,23 +757,22 @@ object CoverageQueries {
       // outdeg rides INSIDE the rank table so each iteration is one
       // edge⋈rank join + one destination rollup — not a second
       // rank⋈deg join per step
-      var rank = deg.crossJoin(nDf)
+      val rank0 = deg.crossJoin(nDf)
         .select(col("p"), col("outdeg"), (lit(1.0) / col("nn")).as("r"))
         .transform(Staging(_))
-      for (_ <- 1 to 3) {
+      val (rank, _) = Staging.iterate(rank0, 3) { rank =>
         val contrib = edges
           .join(rank.select(col("p"),
             (col("r") / col("outdeg")).as("share")), "p")
           .groupBy(col("q").as("p2"))
           .agg(sum("share").as("in_mass"))
-        rank = rank.select("p", "outdeg")
+        rank.select("p", "outdeg")
           .join(contrib.withColumnRenamed("p2", "p"), Seq("p"), "left")
           .crossJoin(nDf)
           .select(col("p"), col("outdeg"),
             ((lit(1.0) - d) / col("nn") +
               d * coalesce(col("in_mass"), lit(0.0))).as("r"))
-          .transform(Staging(_))
-      }
+      }()
       rank.select(col("p").as("part"), round(col("r") * 1000, 6).as("score"))
         .orderBy(col("score").desc, col("part"))
         .limit(20)
@@ -801,28 +846,10 @@ object CoverageQueries {
     // (the q29 rule), never the production path.
     "q136_hll_sketch" -> { (s, dir) =>
       val m = 64
-      val h = t(s, dir, "events").select(col("event_type"),
-        conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long").as("h32"))
-      val regs = h
-        .select(col("event_type"), (col("h32") % m).as("bucket"),
-          expr(s"h32 div $m").as("w"))
-        .withColumn("rho", when(col("w") === 0, lit(27))
-          .otherwise(lit(26) - floor(log2(col("w"))).cast("long")))
-        .groupBy("event_type", "bucket")
-        .agg(max("rho").as("register"))
-      val sketch = regs.groupBy("event_type").agg(
-        count(lit(1)).as("n_buckets"),
-        expr("bit_xor(bucket * 100 + register)").as("reg_xor"),
-        // dyadic terms: this sum is order-independent-exact
-        sum(pow(lit(2.0), -col("register"))).as("ssum"))
-      val est = sketch
-        .withColumn("v", lit(m.toDouble) - col("n_buckets"))
-        .withColumn("raw", lit(0.709 * m * m) / (col("ssum") + col("v")))
-        .withColumn("est_distinct", round(
-          when(col("v") > 0 && col("raw") <= lit(2.5 * m),
-            lit(m.toDouble) * log(lit(m.toDouble) / col("v")))
-            .otherwise(col("raw")), 6))
+      val h = t(s, dir, "events")
+        .select(col("event_type"), userH32.as("h32"))
+      val est = hllEstimate(hllRegisters(h, "event_type", m),
+        "event_type", m)
       val exact = t(s, dir, "events")
         .select("event_type", "user_id").distinct()
         .groupBy("event_type").agg(count(lit(1)).as("exact_distinct"))
@@ -1044,9 +1071,7 @@ object CoverageQueries {
     "q144_srm_check" -> { (s, dir) =>
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"))
       val perUser = ev
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
+        .withColumn("arm", userArm)
         .groupBy("user_id", "arm")
         .agg(count(lit(1)).as("ne"),
           max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -1360,17 +1385,7 @@ object CoverageQueries {
     // the adjustment is applied (the q106 round-before-use rule), so
     // every cross-engine float crosses only through a round.
     "q160_cuped" -> { (s, dir) =>
-      val cut = lit("2024-01-16").cast("timestamp")
-      val perUser = t(s, dir, "events")
-        .select(col("user_id"), col("ts"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
-        .groupBy("user_id", "arm")
-        .agg(
-          sum(when(col("ts") < cut, col("cents")).otherwise(0L)).as("x"),
-          sum(when(col("ts") >= cut, col("cents")).otherwise(0L)).as("y"))
+      val perUser = prePostCents(s, dir)
       val pool = broadcast(perUser.agg(
         count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("x")).as("sxx"),
@@ -1555,19 +1570,7 @@ object CoverageQueries {
     // sqrt is IEEE-correctly-rounded (the q157 rule). Doc rows are
     // never globally ranked.
     "q164_mann_whitney" -> { (s, dir) =>
-      val perUser = t(s, dir, "events")
-        .select(col("user_id"),
-          when(col("event_type") === "purchase",
-            expr("cast(round(value * 100) as bigint)")).otherwise(0L)
-            .as("cents"))
-        .groupBy("user_id").agg(sum("cents").as("v"))
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
-      val cells = perUser.groupBy("v").agg(
-        sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
-        .withColumn("grp", lit(0))
+      val cells = armCentsCells(s, dir)
       val agg = R.groupedPrefixSum(cells, "grp", "v", "n0", "below0")
         .agg(sum("n0").as("n0t"), sum("n1").as("n1t"),
           sum(col("n1") * (lit(2) * col("below0") + col("n0"))).as("u2x"),
@@ -1641,30 +1644,23 @@ object CoverageQueries {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct()
-      var edges = li.alias("a").join(li.alias("b"),
+      val edges0 = li.alias("a").join(li.alias("b"),
           col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
         .transform(Staging(_))
-      var nEdges = edges.count()
-      var converged = false
-      var iters = 0
-      while (!converged && iters < 30) {
+      val (edges, converged) = Staging.iterate(edges0, 30) { edges =>
         val deg = edges.select(col("u").as("x"))
           .unionAll(edges.select(col("v").as("x")))
           .groupBy("x").agg(count(lit(1)).as("d"))
         val keep = deg.filter(col("d") >= k).select("x")
-        val pruned = edges
+        edges
           .join(keep.withColumnRenamed("x", "u"), Seq("u"))
           .join(keep.withColumnRenamed("x", "v"), Seq("v"))
-          .select("u", "v").transform(Staging(_))
-        val nAfter = pruned.count()
-        if (nAfter == nEdges) converged = true
-        else { edges = pruned; nEdges = nAfter }
-        iters += 1
-      }
+          .select("u", "v")
+      }(Staging.unchanged(_.count()))
       require(converged,
         s"q168: 3-core peel did not converge within 30 rounds " +
-          s"($nEdges edges at round $iters)")
+          s"(${edges.count()} edges at round 30)")
       val coreDeg = edges.select(col("u").as("part"))
         .unionAll(edges.select(col("v").as("part")))
         .groupBy("part").agg(count(lit(1)).as("core_degree"))
@@ -1880,19 +1876,7 @@ object CoverageQueries {
     // value each spend ONE IEEE division/sqrt at the end. Doc rows
     // are never globally ranked.
     "q174_ks_test" -> { (s, dir) =>
-      val perUser = t(s, dir, "events")
-        .select(col("user_id"),
-          when(col("event_type") === "purchase",
-            expr("cast(round(value * 100) as bigint)")).otherwise(0L)
-            .as("cents"))
-        .groupBy("user_id").agg(sum("cents").as("v"))
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
-      val cells = perUser.groupBy("v").agg(
-        sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
-        .withColumn("grp", lit(0))
+      val cells = armCentsCells(s, dir)
       val cum = R.groupedPrefixSum(
         R.groupedPrefixSum(cells, "grp", "v", "n0", "b0"),
         "grp", "v", "n1", "b1")
@@ -1983,20 +1967,14 @@ object CoverageQueries {
       val nodes = edges.select(col("u").as("node")).distinct()
         .transform(Staging(_))
       val src = nodes.agg(min("node")).head().getLong(0) // 1-row scalar
-      var dist = nodes.filter(col("node") === src)
+      val dist0 = nodes.filter(col("node") === src)
         .select(col("node"), lit(0).as("dist")).transform(Staging(_))
-      var converged = false
-      var round = 0
-      while (!converged && round < 15) {
+      val (dist, converged) = Staging.iterate(dist0, 15) { dist =>
         val next = dist.join(edges, col("node") === col("u"))
           .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-        val merged = dist.unionByName(next)
+        dist.unionByName(next)
           .groupBy("node").agg(min("dist").as("dist"))
-          .transform(Staging(_))
-        converged = merged.exceptAll(dist).isEmpty
-        dist = merged
-        round += 1
-      }
+      }((dist, merged) => merged.exceptAll(dist).isEmpty)
       require(converged,
         s"q178: BFS did not reach a fixpoint within 15 rounds")
       val unreached = nodes.join(dist, Seq("node"), "left_anti")
@@ -2319,9 +2297,9 @@ object CoverageQueries {
         else und0.repartition(wE, col("b"))
           .sortWithinPartitions("b")) // sorted blocks: smaller
           // exchanges + pre-sorted SMJ runs every round (q134's note)
-      var labels = und.select(col("a").as("node")).distinct()
+      val labels0 = und.select(col("a").as("node")).distinct()
         .withColumn("lbl", col("node"))
-      for (_ <- 1 to rounds) {
+      val (labels, _) = Staging.iterate(labels0, rounds) { labels =>
         val cnt = und.join(labels, und("b") === labels("node"))
           .select(col("a").as("node"), col("lbl"))
           .groupBy("node", "lbl").agg(count(lit(1)).as("c"))
@@ -2330,10 +2308,10 @@ object CoverageQueries {
         // window: drops one full sort of the (node, label) table per
         // round (sf1 5-round run ~25 s vs ~30 s same-day for the
         // window form; sf0.1 within noise)
-        labels = Staging(cnt.groupBy("node") // bound lineage per round
+        cnt.groupBy("node")
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("lbl")))
-      }
+          .select(col("node"), (-col("m.nl")).as("lbl"))
+      }()
       labels.select(col("node"), col("lbl").as("community"))
         .orderBy("node")
     },
@@ -3223,15 +3201,9 @@ object CoverageQueries {
     // REPLACES at scale) so the estimate is auditable per day.
     "q222_hll_trailing_distinct" -> { (s, dir) =>
       val m = 64
-      val h = t(s, dir, "events").select(to_date(col("ts")).as("day"),
-        conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long").as("h32"))
-      val regs = h
-        .select(col("day"), (col("h32") % m).as("bucket"),
-          expr(s"h32 div $m").as("w"))
-        .withColumn("rho", when(col("w") === 0, lit(27))
-          .otherwise(lit(26) - floor(log2(col("w"))).cast("long")))
-        .groupBy("day", "bucket").agg(max("rho").as("register"))
+      val h = t(s, dir, "events")
+        .select(to_date(col("ts")).as("day"), userH32.as("h32"))
+      val regs = hllRegisters(h, "day", m)
         .transform(Staging(_)) // the persisted per-day sketch table
       val probes = regs.select("day").distinct()
         .withColumn("off", explode(sequence(lit(0), lit(6))))
@@ -3240,17 +3212,7 @@ object CoverageQueries {
       val merged = probes.join(regs, "day")
         .groupBy(col("tday"), col("bucket"))
         .agg(max("register").as("register"))
-      val sketch = merged.groupBy("tday").agg(
-        count(lit(1)).as("n_buckets"),
-        expr("bit_xor(bucket * 100 + register)").as("reg_xor"),
-        sum(pow(lit(2.0), -col("register"))).as("ssum"))
-      val est = sketch
-        .withColumn("v", lit(m.toDouble) - col("n_buckets"))
-        .withColumn("raw", lit(0.709 * m * m) / (col("ssum") + col("v")))
-        .withColumn("est_distinct", round(
-          when(col("v") > 0 && col("raw") <= lit(2.5 * m),
-            lit(m.toDouble) * log(lit(m.toDouble) / col("v")))
-            .otherwise(col("raw")), 6))
+      val est = hllEstimate(merged, "tday", m)
       val ud = t(s, dir, "events")
         .select(to_date(col("ts")).as("day"), col("user_id")).distinct()
       val exact = probes.join(ud, "day")
@@ -3273,17 +3235,7 @@ object CoverageQueries {
     // mean/did is one division on identical integers. One summary
     // row — the experimentation dashboard's headline number.
     "q224_diff_in_diff" -> { (s, dir) =>
-      val cut = lit("2024-01-16").cast("timestamp")
-      val perUser = t(s, dir, "events")
-        .select(col("user_id"), col("ts"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
-        .groupBy("user_id", "arm")
-        .agg(
-          sum(when(col("ts") < cut, col("cents")).otherwise(0L)).as("x"),
-          sum(when(col("ts") >= cut, col("cents")).otherwise(0L)).as("y"))
+      val perUser = prePostCents(s, dir)
       perUser.groupBy("arm").agg(count(lit(1)).as("n"),
           sum("x").as("sx"), sum("y").as("sy"))
         .agg(
@@ -3444,8 +3396,8 @@ object CoverageQueries {
         .unionByName(nij.select(col("j").as("i"), col("i").as("j"),
           col("n")))
         .transform(Staging(_))
-      var strength = items.select(col("ty"), lit(1000000L).as("st"))
-      for (_ <- 1 to rounds) {
+      val strength0 = items.select(col("ty"), lit(1000000L).as("st"))
+      val (strength, _) = Staging.iterate(strength0, rounds) { strength =>
         val denom = directed
           .join(strength.select(col("ty").as("i"), col("st").as("si")),
             "i")
@@ -3454,10 +3406,9 @@ object CoverageQueries {
           .select(col("i").as("ty"),
             expr(s"(n * ${SC}L) div (si + sj)").as("term"))
           .groupBy("ty").agg(sum("term").as("dn"))
-        strength = items.join(denom, "ty")
+        items.join(denom, "ty") // ≤T rows per round
           .select(col("ty"), expr(s"(w * ${SC}L) div dn").as("st"))
-          .transform(Staging(_)) // ≤T rows per round
-      }
+      }()
       strength.join(items, "ty")
         .withColumn("rank", row_number().over(
           Window.orderBy(col("st").desc, col("ty"))))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => t}
@@ -23,6 +23,43 @@ import graft.operators.Staging
   */
 object MultimodalQueries {
 
+  /** q54's and q113's media rows: one per document, payload = its
+    * UTF-8 bytes, kind cycling image/audio/video by doc_id, synthetic
+    * dimensions from its length.
+    */
+  private def mediaRows(s: SparkSession, dir: String): Dataset[M.MediaRow] = {
+    import s.implicits._
+    t(s, dir, "documents")
+      .select(col("doc_id").as("media_id"),
+        when(col("doc_id") % 3 === 0, "image")
+          .when(col("doc_id") % 3 === 1, "audio")
+          .otherwise("video").as("kind"),
+        col("text").cast("binary").as("payload"),
+        (col("n_chars") % 640 + 32).cast("int").as("width"),
+        (col("n_chars") % 480 + 32).cast("int").as("height"))
+      .as[M.MediaRow]
+  }
+
+  /** q113's and q291's probe over staged features (vec_id, v): every
+    * tenth vector against the rest, through cells trained on the
+    * distinct rest → each batch vector's best match at cosine ≥ 0.95.
+    */
+  private def neardupProbe(feats: DataFrame): DataFrame = {
+    val batch = feats.filter(col("vec_id") % 10 === 0)
+    val corpus = feats.filter(col("vec_id") % 10 =!= 0)
+    val distinctCorpus = corpus.groupBy("v")
+      .agg(min("vec_id").as("vec_id"))
+    // nlist = ⌈√n⌉ (NOT a constant): fixed k=8 measured 30×/160× at
+    // 10× data in the r14 sf1 sittings — the probe degenerates
+    // toward all-pairs when cells stop shrinking. Exactness is the
+    // triangle bound's, so the cell count is pure performance.
+    val cents = graft.operators.VectorOps
+      .kmeansFitScaled(distinctCorpus, iters = 2)
+    graft.operators.VectorOps
+      .incrementalBestMatch(batch, corpus, cents, tau = 0.95)
+      .orderBy("vec_id")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // decode+embed feature extraction over a binary media column:
@@ -30,17 +67,7 @@ object MultimodalQueries {
     // image/audio/video, synthetic dimensions) → per-partition stub
     // codec → checksum + 4-dim feature vector.
     "q54_media_features" -> { (s, dir) =>
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          when(col("doc_id") % 3 === 0, "image")
-            .when(col("doc_id") % 3 === 1, "audio")
-            .otherwise("video").as("kind"),
-          col("text").cast("binary").as("payload"),
-          (col("n_chars") % 640 + 32).cast("int").as("width"),
-          (col("n_chars") % 480 + 32).cast("int").as("height"))
-        .as[M.MediaRow]
-      M.extractFeaturesMd5(media).toDF()
+      M.extractFeaturesMd5(mediaRows(s, dir)).toDF()
         .select(col("media_id"), col("kind"), col("n_bytes"), col("checksum"),
           round(element_at(col("feature"), 1), 6).as("f0"),
           round(element_at(col("feature"), 2), 6).as("f1"),
@@ -60,34 +87,11 @@ object MultimodalQueries {
     // over the same md5-derived features gates the whole chain —
     // codec stub, typed mapPartitions, k-means, probe.
     "q113_media_neardup" -> { (s, dir) =>
-      import s.implicits._
-      val media = t(s, dir, "documents")
-        .select(col("doc_id").as("media_id"),
-          when(col("doc_id") % 3 === 0, "image")
-            .when(col("doc_id") % 3 === 1, "audio")
-            .otherwise("video").as("kind"),
-          col("text").cast("binary").as("payload"),
-          (col("n_chars") % 640 + 32).cast("int").as("width"),
-          (col("n_chars") % 480 + 32).cast("int").as("height"))
-        .as[M.MediaRow]
       // materialized once: kmeans + the probe run ~6 actions over this
       // frame (q291's rationale; narrow metadata rows)
-      val feats = M.extractFeaturesMd5(media).toDF()
+      neardupProbe(M.extractFeaturesMd5(mediaRows(s, dir)).toDF()
         .select(col("media_id").as("vec_id"), col("feature").as("v"))
-        .transform(Staging(_))
-      val batch = feats.filter(col("vec_id") % 10 === 0)
-      val corpus = feats.filter(col("vec_id") % 10 =!= 0)
-      val distinctCorpus = corpus.groupBy("v")
-        .agg(min("vec_id").as("vec_id"))
-      // nlist = ⌈√n⌉ (NOT a constant): fixed k=8 measured 30×/160× at
-      // 10× data in the r14 sf1 sittings — the probe degenerates
-      // toward all-pairs when cells stop shrinking. Exactness is the
-      // triangle bound's, so the cell count is pure performance.
-      val cents = graft.operators.VectorOps
-        .kmeansFitScaled(distinctCorpus, iters = 2)
-      graft.operators.VectorOps
-        .incrementalBestMatch(batch, corpus, cents, tau = 0.95)
-        .orderBy("vec_id")
+        .transform(Staging(_)))
     },
 
     // q113's sibling on the REAL codec (r12 verdict item 4): a real
@@ -127,19 +131,7 @@ object MultimodalQueries {
           expr("transform(bands, s -> cast(s - 12240 as double) / 65536.0D)")
             .as("v"))
         .transform(Staging(_))
-      val batch = feats.filter(col("vec_id") % 10 === 0)
-      val corpus = feats.filter(col("vec_id") % 10 =!= 0)
-      val distinctCorpus = corpus.groupBy("v")
-        .agg(min("vec_id").as("vec_id"))
-      // nlist = ⌈√n⌉ (NOT a constant): fixed k=8 measured 30×/160× at
-      // 10× data in the r14 sf1 sittings — the probe degenerates
-      // toward all-pairs when cells stop shrinking. Exactness is the
-      // triangle bound's, so the cell count is pure performance.
-      val cents = graft.operators.VectorOps
-        .kmeansFitScaled(distinctCorpus, iters = 2)
-      graft.operators.VectorOps
-        .incrementalBestMatch(batch, corpus, cents, tau = 0.95)
-        .orderBy("vec_id")
+      neardupProbe(feats)
     },
 
     // Frame sampling over the video-shaped rows: k evenly-spaced

@@ -438,26 +438,6 @@ object StreamingQueries {
     dl.unionByName(ard).unionByName(dc)
   }
 
-  /** Deterministic scene step for q216 (q58's ModStep, redeclared here
-    * so the streaming gate ships no cross-object closure): succeeds
-    * unless PID % failMod == 0, work-list = rows with `flagCol` unset
-    * (and `preCol` set, for ordered pipelines).
-    */
-  private final case class MonitorModStep(stepName: String,
-      preCol: Option[String], flagCol: String, failMod: Int)
-      extends graft.pipeline.StepRunner.SceneStep {
-    override def name: String = stepName
-    override def workList(cat: graft.catalog.SceneCatalog): DataFrame = {
-      val pre = preCol.map(col(_)).getOrElse(lit(true))
-      cat.scenes.filter(pre && !col(flagCol) && !col("Invalid"))
-        .orderBy(col("Date_Acquired"), col("PID")).select("PID")
-    }
-    override def process(pid: Long): graft.pipeline.StepRunner.StepResult =
-      graft.pipeline.StepRunner.StepResult(pid, pid % failMod != 0, "")
-    override def onSuccess: Map[String, org.apache.spark.sql.Column] =
-      Map(flagCol -> lit(true))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Streaming as-of enrichment (the continuous twin of q62, same
@@ -907,8 +887,8 @@ object StreamingQueries {
         new graft.sources.CowTable(s"$root/scenes", s), s)
       val audit = new graft.pipeline.AuditLog(s"$root/audit", s)
       val steps = Seq(
-        MonitorModStep("download", None, "Downloaded", failMod = 7),
-        MonitorModStep("ard", Some("Downloaded"), "ARDProduct",
+        ModStep("download", None, "Downloaded", failMod = 7),
+        ModStep("ard", Some("Downloaded"), "ARDProduct",
           failMod = 5))
       // slice order (rev, PID): all originals precede every replay,
       // and the replayed PIDs (first half) sit ≥ a full slice ahead

@@ -1107,30 +1107,31 @@ object TextQueries {
              |                array(${lit1(a)} || ${lit1(b)}))
              |    ELSE concat(acc, array(x)) END,
              |  acc -> array_join(acc, ' '))""".stripMargin).as("sym"))
-      // localCheckpoint after each merge: the per-step argmax is an
-      // ACTION, and without truncation step k's action re-executes
-      // every earlier step's scan+fold (measured 9.2 s vs 1.4 s for 3
-      // steps) — the same device q55 uses between its two actions
-      var cur = Staging(w0)
       // headOption, not head(): a degenerate corpus can exhaust its
       // mergeable pairs before the step budget (every word collapsed
       // to one symbol), and BPE training simply stops there — an
       // empty merge table, not a NoSuchElementException.
-      val merges = Iterator.from(1).take(3).map { step =>
-        pairs(cur)
-          .orderBy(col("f").desc, col("a"), col("b")).limit(1)
-          .collect().headOption.map { top =>
-            val (a, b, f) =
-              (top.getString(0), top.getString(1), top.getLong(2))
-            // the final merge result feeds no further pairs() scan — an
-            // eager checkpoint there would be one fully wasted job per run
-            cur = if (step < 3) applyMerge(cur, a, b).transform(Staging(_))
-                  else cur
-            (step.toLong, a, b, f)
-          }
-      }.takeWhile(_.isDefined).flatten.toSeq
+      def best(df: DataFrame): Option[(String, String, Long)] =
+        pairs(df).orderBy(col("f").desc, col("a"), col("b")).limit(1)
+          .collect().headOption
+          .map(top => (top.getString(0), top.getString(1), top.getLong(2)))
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+      // staged after each merge: the per-step argmax is an ACTION, and
+      // without truncation step k's action re-executes every earlier
+      // step's scan+fold (measured 9.2 s vs 1.4 s for 3 steps) — the
+      // same device q55 uses between its two actions
+      val (last, exhausted) = Staging.iterate(Staging(w0), 2) { cur =>
+        best(cur).fold(cur) { case m @ (a, b, _) =>
+          merges += m
+          applyMerge(cur, a, b)
+        }
+      }()
+      // the third merge's result feeds no further pairs() scan — staging
+      // it would be one fully wasted job per run — so it is not applied
+      if (!exhausted) merges ++= best(last)
       import s.implicits._
-      merges.toDF("step", "lhs", "rhs", "f").orderBy("step")
+      merges.toSeq.zipWithIndex.map { case ((a, b, f), i) => (i + 1L, a, b, f) }
+        .toDF("step", "lhs", "rhs", "f").orderBy("step")
     },
 
     // Quality-aware dedup resolution: bag-of-words duplicate groups

@@ -541,31 +541,28 @@ object VectorQueries {
         lit(1000000L) - round(G.cosineSim(col("v"), nv) * 1e6).cast("long")
       // seed: dist recorded as the metric's upper bound (cos ≥ −1)
       var sel = Vector((1, 0L, 2000000L))
-      var st = e.filter(col("vec_id") =!= 0)
+      val st0 = e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("nv"))))
         .select(col("vec_id"), col("v"), distTo(col("nv")).as("mind"))
         .transform(Staging(_))
-      var step = 2
-      var exhausted = false
-      while (step <= k && !exhausted) {
+      // picks 2..k; a drained pool (every vector selected) ends early
+      val (st, _) = Staging.iterate(st0, k - 1) { st =>
         val top = st.filter(!col("vec_id").isInCollection(sel.map(_._2)))
           .agg(max(struct(col("mind").as("d"), (-col("vec_id")).as("nid")))
             .as("m"))
           .select(col("m.d"), (-col("m.nid")).as("vec_id"))
           .head()
-        if (top.isNullAt(0)) exhausted = true
+        if (top.isNullAt(0)) st
         else {
           val picked = top.getLong(1)
-          sel = sel :+ ((step, picked, top.getLong(0)))
-          st = st.crossJoin(broadcast(
+          sel = sel :+ ((sel.length + 1, picked, top.getLong(0)))
+          st.crossJoin(broadcast(
               st.filter(col("vec_id") === picked).select(col("v").as("nv"))))
             .select(col("vec_id"), col("v"),
               least(col("mind"), distTo(col("nv"))).as("mind"))
-            .transform(Staging(_))
-          step += 1
         }
-      }
+      }()
       // measured invariants over the engine's own result
       val picks = sel.drop(1) // (step, id, dist) for steps 2..k
       val dLast = picks.last._3

@@ -87,10 +87,34 @@ class TablesSpec extends SparkSpec {
     val a = Tables.scratchDir(spark, "spec")
     val b = Tables.scratchDir(spark, "spec", fresh = true)
     assert(a === s"${Tables.scratchBase}/graft_spec_" +
-      spark.sparkContext.applicationId)
+      spark.sparkContext.applicationId + s"_pid${ProcessHandle.current().pid()}")
     assert(java.nio.file.Paths.get(b).getParent.toString === a)
     assert(Tables.scratchDir(spark, "spec", fresh = true) !== b)
     assert(Tables.scratchRoots.synchronized(
       Tables.scratchRoots.contains(java.nio.file.Paths.get(a))))
+  }
+
+  test("scratch roots of dead JVMs are reclaimed; the live JVM's roots " +
+    "and untagged roots stay") {
+    import java.nio.file.{Files, Paths}
+    val base = Paths.get(tempDir("graft-scratch"))
+    // the highest pid not alive below Linux's ceiling (2^22); no
+    // process is started to find it
+    val dead = Iterator.iterate(4194303L)(_ - 1)
+      .find(p => !ProcessHandle.of(p).isPresent).get
+    val live = ProcessHandle.current().pid()
+    def plant(name: String) = {
+      val root = base.resolve(name)
+      Files.createDirectories(root.resolve("leaf"))
+      Files.writeString(root.resolve("leaf/part-0.parquet"), "x")
+      root
+    }
+    val gone = plant(s"graft_q44_local-1_pid$dead")
+    val kept = Seq(plant(s"graft_q44_local-2_pid$live"),
+      plant("graft_q44_local-3"), plant(s"other_pid$dead"))
+    assert(Tables.reclaimDead(base) === Seq(gone))
+    assert(!Files.exists(gone))
+    kept.foreach(k => assert(Files.exists(k.resolve("leaf/part-0.parquet")), k))
+    assert(Tables.reclaimDead(base.resolve("absent")).isEmpty)
   }
 }

@@ -3,14 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{Harness, SparkEntry, SparkSpec}
 import graft.sources.PartitionedCowTable
 
 /** The scope rules of [[Staging]]: a scope frees what was staged inside
   * it, however it ends and on whichever thread the staging ran; a
   * nested scope frees only its own blocks; a frame staged outside any
-  * scope stays readable; connectedComponents holds only its live label
-  * generation and edge copies while it iterates.
+  * scope stays readable; connectedComponents and the iterative queries
+  * hold only their fixed inputs and live generations while they
+  * iterate.
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -21,6 +22,18 @@ class StagingSpec extends SparkSpec {
   private def added(before: collection.Set[Int]): collection.Set[Int] =
     sc.getPersistentRDDs.keySet -- before
 
+  /** The graph queries' one input: parts 10-13 co-ordered in three
+    * pairs and one order of all four (a 3-core), and part 14 hanging
+    * off part 13 (peeled by q168's first round).
+    */
+  private lazy val tables = {
+    val dir = tempDir("staging_tables")
+    Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L), (3L, 12L), (3L, 13L),
+      (4L, 10L), (4L, 11L), (4L, 12L), (4L, 13L), (5L, 13L), (5L, 14L))
+      .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
   test("a scope frees every block staged inside it: CC's iterative " +
     "path, deleteWhereDV and q134") {
     implicit val s = spark
@@ -29,10 +42,6 @@ class StagingSpec extends SparkSpec {
       (3L, "2020-04", "c")).toDF("pid", "month", "v"))
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    // q134's one input: parts 10-13 co-ordered in three orders
-    val tables = tempDir("staging_tables")
-    Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L), (3L, 12L), (3L, 13L))
-      .toDF("l_orderkey", "l_partkey").write.parquet(s"$tables/lineitem.parquet")
     val before = sc.getPersistentRDDs.keySet
     val (labs, ranks) = Staging.scope(spark) {
       val labs = ScaleOps.connectedComponents(edges, localEdgeThreshold = 0)
@@ -111,5 +120,43 @@ class StagingSpec extends SparkSpec {
         assert(added(before).isEmpty)
       } finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
     }
+  }
+
+  test("an iterative query holds its fixed inputs and at most two " +
+    "generations while it runs, and one when its scope closes") {
+    // (query, staged fixed inputs): q134 its edges and degrees, q168
+    // none (its edge table is the first generation), q178 its edges
+    // and nodes, q190 its undirected edges
+    for ((q, fixed) <- Seq("q134_pagerank" -> 2, "q168_kcore" -> 0,
+        "q178_sssp" -> 2, "q190_lpa_communities" -> 1)) {
+      val before = sc.getPersistentRDDs.keySet
+      Staging.scope(spark) {
+        assert(SparkEntry.queries(q)(spark, tables).count() > 0, q)
+        assert(Staging.peak(spark) <= fixed + 2, q)
+        // at most: Spark's ContextCleaner may already have freed a
+        // block the result no longer reaches (q178's edges)
+        assert(added(before).size <= fixed + 1, q)
+      }
+      assert(added(before).isEmpty, q)
+    }
+  }
+
+  test("Harness.scoped frees a query's staged blocks, and reports and " +
+    "frees what it persisted outside Staging") {
+    val before = sc.getPersistentRDDs.keySet
+    val (n, none) = Harness.scoped(spark) {
+      Staging(spark.range(10).toDF("id")).count()
+    }
+    assert((n, none) === ((10L, Nil)))
+    var cached = -1
+    val (_, leaked) = Harness.scoped(spark) {
+      Staging(spark.range(10).toDF("id")).count()
+      val rdd = sc.parallelize(1 to 3).cache()
+      rdd.count()
+      cached = rdd.id
+    }
+    assert(leaked === Seq(cached))
+    assert(Harness.leakMessage(leaked) === s"leaked 1 persistent RDDs: $cached")
+    assert(added(before).isEmpty)
   }
 }
