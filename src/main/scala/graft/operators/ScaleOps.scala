@@ -47,19 +47,25 @@ object ScaleOps {
     */
   def edgeWidth(s: org.apache.spark.sql.SparkSession,
                 estBytes: Long): Int = {
-    val per = s.conf.getOption("spark.graft.graph.bytesPerEdgePartition")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
-        if (parsed.isEmpty) System.err.println(
-          "[graft] ignoring malformed " +
-            s"spark.graft.graph.bytesPerEdgePartition value '$v' — " +
-            "using the 8 MiB default")
-        parsed
-      }.getOrElse(8L << 20)
-    val cur = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val w = math.max(1, math.min(cur,
-      math.ceil(estBytes.toDouble / per).toInt))
+    val w = partitionsFor(s, "spark.graft.graph.bytesPerEdgePartition",
+      estBytes)
     if (w < 4) 1 else w
+  }
+
+  /** ceil(`bytes` / the byte target set in `key`, default 8 MiB),
+    * clamped to [1, session shuffle partitions]. A target that is not a
+    * positive whole number fails loudly, naming the key and the value:
+    * a typo must not run a sitting on a silently different size.
+    */
+  private[graft] def partitionsFor(s: org.apache.spark.sql.SparkSession,
+                                   key: String, bytes: Long): Int = {
+    val per = s.conf.getOption(key).fold(8L << 20) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key must be a positive byte count, got '$v'"))
+    }
+    val cur = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    math.max(1, math.min(cur, math.ceil(bytes.toDouble / per).toInt))
   }
 
   /** Recursive on-disk byte count of a file/dir (0 when absent) — the

@@ -64,25 +64,9 @@ object StreamingQueries {
     * uses a fresh checkpoint, so re-sizing between calls is safe.
     */
   private[graft] def statePartitionsFor(s: SparkSession,
-                                        stagedDirs: Seq[String]): Int = {
-    val bytes = stagedDirs.map(ScaleOps.pathBytes).sum
-    // malformed overrides degrade LOUDLY to the default instead of
-    // throwing NumberFormatException from inside every streaming gate
-    // (r14 advice): the message names the conf so a typo'd sitting is
-    // diagnosable from stderr
-    val per = s.conf.getOption("spark.graft.stream.bytesPerStatePartition")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
-        if (parsed.isEmpty) System.err.println(
-          "[graft] ignoring malformed " +
-            s"spark.graft.stream.bytesPerStatePartition value '$v' — " +
-            "using the 8 MiB default")
-        parsed
-      }.getOrElse(8L << 20)
-    val cur = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    math.max(1, math.min(cur,
-      math.ceil(bytes.toDouble / per).toInt))
-  }
+                                        stagedDirs: Seq[String]): Int =
+    ScaleOps.partitionsFor(s, "spark.graft.stream.bytesPerStatePartition",
+      stagedDirs.map(ScaleOps.pathBytes).sum)
 
   /** Run `body` (a streaming start + awaitTermination) with the
     * session's shuffle partitions temporarily set to the drain-sized

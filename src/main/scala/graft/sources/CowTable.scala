@@ -1,7 +1,10 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
+
+import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -95,10 +98,7 @@ class CowTable(val root: String, spark: SparkSession) extends VersionedTable {
           s"${base.getOrElse("<none>")}, found " +
           s"${currentVersion.getOrElse("<none>")}")
     }
-    val tmp = Paths.get(root, s"_current.tmp.$next")
-    Files.write(tmp, next.getBytes(UTF_8))
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    CowTable.atomicWrite(pointer, next.getBytes(UTF_8))
   }
 
   private def deleteRecursively(name: String): Unit =
@@ -186,11 +186,46 @@ object CowTable {
     * (an unclosed `Files.walk` leaks a directory fd until GC —
     * repeated commit-collision retries in a long-lived JVM add up).
     */
-  private[graft] def walkDelete(p: java.nio.file.Path): Unit =
+  private[graft] def walkDelete(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => Files.delete(f))
       finally s.close()
     }
+
+  /** Replace `p`'s content with `bytes` through a sibling temp file and
+    * an atomic rename: a reader, or a crash at any point, sees the old
+    * file or the new one, never a torn one. A crash can leave the temp
+    * file behind, never a half-written `p`.
+    */
+  private[graft] def atomicWrite(p: Path, bytes: Array[Byte]): Unit = {
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp.${UUID.randomUUID()}")
+    Files.write(tmp, bytes)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private val mapper = new ObjectMapper()
+
+  /** The base version an incrementally maintained table last synced
+    * from — its checkpoint file `p` holds `{"base": N}` — or None when
+    * there is no checkpoint. A file that is not that object fails
+    * loudly, naming the file: guessing a version would re-derive the
+    * wrong increment.
+    */
+  private[graft] def syncedBase(p: Path): Option[Int] =
+    if (!Files.exists(p)) None
+    else {
+      val text = new String(Files.readAllBytes(p), UTF_8)
+      val base = scala.util.Try(mapper.readTree(text).get("base")).toOption
+        .filter(n => n != null && n.canConvertToInt)
+      Some(base.getOrElse(throw new IllegalStateException("sync checkpoint " +
+        p + " is not {\"base\": <version>}: '" + text + "'")).asInt)
+    }
+
+  /** Record base version `v` in the checkpoint file `p` ([[atomicWrite]]). */
+  private[graft] def syncBase(p: Path, v: Int): Unit =
+    atomicWrite(p, mapper.writeValueAsBytes(
+      mapper.createObjectNode().put("base", v)))
 }

@@ -62,35 +62,9 @@ class GraftFileIndex(spark: SparkSession, sch: StructType,
         !f.getPath.getName.startsWith("."))
     })
 
-  /** List `ds`, fanning out to a bounded thread pool above the same
-    * threshold Spark's `InMemoryFileIndex` uses for parallel partition
-    * discovery (`spark.sql.sources.parallelPartitionDiscovery
-    * .threshold`, default 32) — listing is pure I/O wait, so a driver-
-    * side pool of up to 32 concurrent lists collapses the metadata
-    * wall-clock by the pool width without touching executors.
-    */
-  private def listDirs(ds: Seq[ScanDir]): Unit = {
-    val missing = ds.filterNot(d => listedCache.containsKey(d.path))
-    val threshold = spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
-    if (missing.size > threshold) {
-      missing.map { d =>
-        GraftFileIndex.listPool.submit(
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = { listDir(d); () }
-          })
-      }.foreach { f =>
-        // surface the listing's REAL failure (an IOException), not the
-        // pool's ExecutionException wrapper — callers and retry logic
-        // must see the same exception type the serial path throws
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }
-    } else missing.foreach(listDir)
-  }
+  /** List the dirs of `ds` not listed yet ([[inParallel]]). */
+  private def listDirs(ds: Seq[ScanDir]): Unit =
+    inParallel(spark, ds.filterNot(d => listedCache.containsKey(d.path)))(listDir)
 
   /** (dirs total, dirs listed) of the most recent [[listFiles]] — the
     * pruning ledger an I/O gate reads after forcing the scan.
@@ -174,6 +148,28 @@ object GraftFileIndex {
     pool.allowCoreThreadTimeOut(true)
     pool
   }
+
+  /** `f` of each of `xs` — a per-dir listing — run through [[listPool]]
+    * above the threshold Spark's `InMemoryFileIndex` uses for parallel
+    * partition discovery (`spark.sql.sources.parallelPartitionDiscovery
+    * .threshold`, default 32), serially at or below it: listing is pure
+    * I/O wait, so a local thread pool collapses the metadata wall-clock
+    * by its width without touching executors (serial listings at
+    * ~50 ms/dir on object storage would make a 100k-dir read or commit
+    * wait on them). A failure surfaces as what `f` threw, not the
+    * pool's ExecutionException wrapper, so callers see the same
+    * exception either way.
+    */
+  private[sources] def inParallel[A, B](spark: SparkSession, xs: Seq[A])
+                                       (f: A => B): Seq[B] =
+    if (xs.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      xs.map(f)
+    else xs.map(x => listPool.submit(new java.util.concurrent.Callable[B] {
+      override def call(): B = f(x)
+    })).map { r =>
+      try r.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
 
   /** What the manifest knows about one data directory: `exact` holds
     * columns with a CONSTANT known value in the dir (the partition
@@ -297,8 +293,8 @@ object GraftFileIndex {
     *  - timestamp → Unknown (its string render is session-zone-
     *    dependent; never sound to compare).
     * Lexicographic ORDERING comparisons carry the same ASCII guard as
-    * [[cmpRangeStr]] — Java compares UTF-16 code units while Spark
-    * compares UTF-8 bytes, and the two orders disagree for
+    * the string zone maps in [[cmp]] — Java compares UTF-16 code units
+    * while Spark compares UTF-8 bytes, and the two orders disagree for
     * supplementary characters; EQUALITY is order-free (byte equality
     * and code-unit equality coincide for any valid string), so `=`
     * stays unguarded.
@@ -339,69 +335,27 @@ object GraftFileIndex {
     }
   }
 
-  /** Compare a zone-map interval [mn, mx] against a long literal:
-    * False when NO value in the interval can satisfy the op (prune),
+  /** Compare a zone-map interval [mn, mx] against the literal `v`:
+    * False when NO value in the interval can satisfy `op` (prune),
     * Unknown otherwise (keep). Never True: the zone map doesn't track
     * nulls, and a pruning decision only needs False to be sound — a
     * null never satisfies a comparison, so disjointness stays sound.
+    * Each family's guard stays at its call site in [[cmp]].
     */
-  private def cmpRange(mn: Long, mx: Long, lit: Any, op: String): Tri =
-    litLong(lit) match {
-      case None => Unknown
-      case Some(v) =>
-        val disjoint = op match {
-          case "=" => v < mn || v > mx
-          case "<" => mn >= v
-          case "<=" => mn > v
-          case ">" => mx <= v
-          case ">=" => mx < v
-        }
-        if (disjoint) False else Unknown
+  private def cmpRange[A](mn: A, mx: A, v: A, op: String)
+                         (implicit ord: Ordering[A]): Tri = {
+    import ord._
+    val disjoint = op match {
+      case "=" => v < mn || v > mx
+      case "<" => mn >= v
+      case "<=" => mn > v
+      case ">" => mx <= v
+      case ">=" => mx < v
     }
+    if (disjoint) False else Unknown
+  }
 
   private def isAscii(s: String): Boolean = s.forall(_ < 128)
-
-  /** String zone-map compare: False only when the [mn, mx] interval
-    * is provably disjoint from the op. Pruned ONLY when every
-    * participant is ASCII — Java String ordering is UTF-16 code-unit
-    * order while Spark compares UTF-8 bytes, and the two disagree for
-    * supplementary characters; on ASCII they coincide exactly.
-    */
-  private def cmpRangeStr(mn: String, mx: String, lit: Any,
-                          op: String): Tri =
-    litStr(lit) match {
-      case Some(v) if isAscii(v) && isAscii(mn) && isAscii(mx) =>
-        val disjoint = op match {
-          case "=" => v < mn || v > mx
-          case "<" => mn >= v
-          case "<=" => mn > v
-          case ">" => mx <= v
-          case ">=" => mx < v
-        }
-        if (disjoint) False else Unknown
-      case _ => Unknown
-    }
-
-  /** Double zone-map compare — [[cmpRange]]'s double-family twin
-    * (lat/lon bbox bounds, measurements). NaN disables pruning: a
-    * NaN literal satisfies no comparison anyway, and NaN bounds mean
-    * the dir holds NaNs whose ordering Spark defines but a prune
-    * must not guess about.
-    */
-  private def cmpRangeDbl(mn: Double, mx: Double, lit: Any,
-                          op: String): Tri =
-    litDouble(lit) match {
-      case Some(v) if !v.isNaN && !mn.isNaN && !mx.isNaN =>
-        val disjoint = op match {
-          case "=" => v < mn || v > mx
-          case "<" => mn >= v
-          case "<=" => mn > v
-          case ">" => mx <= v
-          case ">=" => mx < v
-        }
-        if (disjoint) False else Unknown
-      case _ => Unknown
-    }
 
   /** Driver-side cache of loaded Bloom sidecars, keyed by
     * (path, size, mtime). Sidecar files are copy-on-write like the
@@ -476,18 +430,27 @@ object GraftFileIndex {
     val r = d.exact.get(attr) match {
       case Some(v) => cmpExact(v, lit, dt, op)
       case None => dt match {
-        case DoubleType | FloatType => d.dranges.get(attr) match {
-          case Some((mn, mx)) => cmpRangeDbl(mn, mx, lit, op)
-          case None => Unknown
+        // NaN disables pruning: a NaN literal satisfies no comparison
+        // anyway, and NaN bounds mean the dir holds NaNs whose ordering
+        // Spark defines but a prune must not guess about. IEEE order,
+        // so -0.0 and 0.0 compare equal as they do in Spark
+        case DoubleType | FloatType => (d.dranges.get(attr), litDouble(lit)) match {
+          case (Some((mn, mx)), Some(v)) if !v.isNaN && !mn.isNaN && !mx.isNaN =>
+            cmpRange(mn, mx, v, op)(Ordering.Double.IeeeOrdering)
+          case _ => Unknown
         }
-        case StringType => d.sranges.get(attr) match {
-          case Some((mn, mx)) => cmpRangeStr(mn, mx, lit, op)
-          case None => Unknown
+        // ASCII only: Java String ordering is UTF-16 code-unit order
+        // while Spark compares UTF-8 bytes, and the two disagree for
+        // supplementary characters; on ASCII they coincide exactly
+        case StringType => (d.sranges.get(attr), litStr(lit)) match {
+          case (Some((mn, mx)), Some(v)) if isAscii(v) && isAscii(mn) && isAscii(mx) =>
+            cmpRange(mn, mx, v, op)
+          case _ => Unknown
         }
-        case _ => d.ranges.get(attr) match {
-          case Some((mn, mx))
+        case _ => (d.ranges.get(attr), litLong(lit)) match {
+          case (Some((mn, mx)), Some(v))
             if kindOf(dt).contains(d.kinds.getOrElse(attr, "long")) =>
-            cmpRange(mn, mx, lit, op)
+            cmpRange(mn, mx, v, op)
           case _ => Unknown
         }
       }

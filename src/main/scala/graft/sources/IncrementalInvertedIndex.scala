@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,10 +61,7 @@ class IncrementalInvertedIndex(val base: PartitionedCowTable,
 
   private def syncFile = Paths.get(indexRoot, "_index_sync.json")
 
-  def syncedVersion: Option[Int] =
-    if (!Files.exists(syncFile)) None
-    else Some(new String(Files.readAllBytes(syncFile), "UTF-8")
-      .replaceAll("[^0-9]", "").toInt)
+  def syncedVersion: Option[Int] = CowTable.syncedBase(syncFile)
 
   private val pcol = base.currentPartCol
 
@@ -196,7 +193,7 @@ class IncrementalInvertedIndex(val base: PartitionedCowTable,
           index.read().join(affected, Seq("term"), "left_anti")
             .unionByName(recomputed),
           Seq("term"))
-      Files.write(syncFile, s"""{"base": $cur}""".getBytes("UTF-8"))
+      CowTable.syncBase(syncFile, cur)
       (last.getOrElse(-1), changed.size, nAffected, iud)
     } finally {
       // every consumer above ran eagerly (commits + count), so the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,10 +58,7 @@ class IncrementalRollup(val base: PartitionedCowTable,
   private def syncFile = Paths.get(summaryRoot, "_rollup_sync.json")
 
   /** The base version the summary reflects, if any. */
-  def syncedVersion: Option[Int] =
-    if (!Files.exists(syncFile)) None
-    else Some(new String(Files.readAllBytes(syncFile), "UTF-8")
-      .replaceAll("[^0-9]", "").toInt)
+  def syncedVersion: Option[Int] = CowTable.syncedBase(syncFile)
 
   private def aggregate(rows: DataFrame): DataFrame =
     rows.groupBy(dims.map(col): _*)
@@ -92,7 +89,7 @@ class IncrementalRollup(val base: PartitionedCowTable,
       // WHOLE summary to re-discover a change set this refresh
       // derived from the manifest diff in the first place
       else summary.mergeSyncInPartitions(touched, fresh, dims)
-    Files.write(syncFile, s"""{"base": $cur}""".getBytes("UTF-8"))
+    CowTable.syncBase(syncFile, cur)
     (last.getOrElse(-1), changed.size, removed.size, iud)
   }
 }

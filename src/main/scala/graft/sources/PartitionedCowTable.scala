@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -9,10 +9,12 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, InMemoryCopy, Row,
   SparkSession}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
   FloatType, IntegerType, LongType, ShortType, StringType, StructType,
   StructField, TimestampNTZType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.plans.BoundValues
 import graft.operators.Staging
@@ -72,7 +74,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     extends VersionedTable {
 
   import PartitionedCowTable.{DirMeta, Entry, HiveSentinel, Manifest,
-    ManifestName, mapper}
+    ManifestName, Zone, mapper}
 
   /** Decoded-manifest cache. Manifest files are IMMUTABLE per version
     * (a commit writes v_N exactly once; vacuum deletes, never
@@ -364,26 +366,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
       cur.entries.forall(_.pcol == spec),
       s"changedPartitionValuesSince: legacy-spec dirs present — " +
         s"migrate (compact) before value-grain diffing")
-    valueDiff(old, cur)
+    cur.changedFrom(old, _.value)
   }
-
-  /** (changed, removed) partition values from `old` to `cur`, both on
-    * one spec with no legacy dirs: a value is changed when its (dir,
-    * deletion vectors) identity differs, removed when `cur` no longer
-    * has it.
-    */
-  private def valueDiff(old: Manifest, cur: Manifest)
-      : (Set[String], Set[String]) = {
-    val om = identities(old)
-    val cm = identities(cur)
-    val changed = cm.collect {
-      case (v, s) if !om.get(v).contains(s) => v }.toSet
-    (changed, om.keySet -- cm.keySet)
-  }
-
-  /** partition value -> (dir, deletion vectors) of `m`'s entries. */
-  private def identities(m: Manifest): Map[String, (String, Seq[String])] =
-    m.entries.map(e => e.value -> (e.dir, m.dir(e.dir).dvs)).toMap
 
   /** The in-memory copy this table serves `version` from: `mem` holds
     * the rows of manifest `base`, `rows` are those of `version` (`mem`
@@ -408,7 +392,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * any writer, this object or another on the same root, moves it on.
     *
     * When the version moves on, the copy ADVANCES by the manifest diff
-    * ([[valueDiff]], the diff [[changedPartitionValuesSince]] reports):
+    * ([[Manifest.changedFrom]] by value, the diff
+    * [[changedPartitionValuesSince]] reports):
     * it keeps the rows of every partition whose (dir, deletion vectors)
     * identity is unchanged, drops removed values and reads only the
     * changed dirs, in one job, so a commit that touched a few
@@ -480,11 +465,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private def carryOver(fm: Manifest, to: Int, rewritten: Set[String]): Unit =
     synchronized {
       // a version a concurrent vacuum already removed carries nothing over
-      for (h <- held; tm <- scala.util.Try(manifestAt(to)).toOption
-           if diffFrom(h, fm).isDefined && diffFrom(h, tm).isDefined) {
-        val (was, at) = (identities(h.base), identities(fm))
+      for (h <- held; tm <- scala.util.Try(manifestAt(to)).toOption;
+           (changed, removed) <- diffFrom(h, fm) if diffFrom(h, tm).isDefined) {
         val moved = tm.entries
-          .filter(e => rewritten(e.value) && was.get(e.value) == at.get(e.value))
+          .filter(e => rewritten(e.value) && !changed(e.value) && !removed(e.value))
           .map(e => e.value -> e).toMap
         val entries = h.base.entries.map(e => moved.getOrElse(e.value, e))
         val live = entries.map(_.dir).toSet
@@ -493,7 +477,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       }
     }
 
-  /** [[valueDiff]] from the held copy's manifest to `m`, or None when
+  /** The value-grain diff from the held copy's manifest to `m`, or None when
     * the diff cannot carry the copy over: a schema, defaults or spec
     * change, or legacy-spec dirs on either side.
     */
@@ -501,7 +485,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (m.schema == h.base.schema && m.spec == h.base.spec &&
         m.defaults == h.base.defaults &&
         (m.entries ++ h.base.entries).forall(_.pcol == m.spec))
-      Some(valueDiff(h.base, m))
+      Some(m.changedFrom(h.base, _.value))
     else None
 
   private def releaseCopy(): Unit = {
@@ -521,27 +505,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   def changedSince(sinceVersion: Int): DataFrame = {
     val cur = requireVersion
-    // diff on (DIRECTORY, deletion vectors): an evolve commit relabels
-    // entries (spec moves to legacy) without touching a byte — its
-    // dirs are unchanged, so it must produce an empty change set; a
+    val m = manifestAt(cur)
+    // diff at DIRECTORY grain: an evolve commit relabels entries (spec
+    // moves to legacy) without touching a byte — its dirs are
+    // unchanged, so it must produce an empty change set; a
     // deleteWhereDV commit changes a dir's CONTENT without touching
     // its bytes, so the dv list is part of the identity
-    val old: Map[String, Seq[String]] =
-      if (sinceVersion < 0) Map.empty
-      else {
-        val m0 = manifestAt(sinceVersion)
-        m0.entries.map(e => e.dir -> m0.dir(e.dir).dvs).toMap
-      }
-    val m = manifestAt(cur)
-    val dirs = m.entries
-      .filter { e =>
-        if (sinceVersion < 0) true
-        else old.get(e.dir) match {
-          case Some(prevDv) => m.dir(e.dir).dvs != prevDv
-          case None => true
-        }
-      }
-      .map(e => s"$root/${e.dir}")
+    val old =
+      if (sinceVersion < 0) m.copy(entries = Seq.empty)
+      else manifestAt(sinceVersion)
+    val (changed, _) = m.changedFrom(old, _.dir)
+    val dirs = m.entries.filter(e => changed(e.dir)).map(e => s"$root/${e.dir}")
     if (dirs.isEmpty) emptyLike(cur) else readConformed(cur, dirs)
   }
 
@@ -660,10 +634,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private def writeRefs(m: Map[String, Int]): Unit = {
     val node = mapper.createObjectNode()
     m.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    val tmp = Paths.get(root, s"_refs.tmp.${java.util.UUID.randomUUID()}")
-    Files.write(tmp, mapper.writeValueAsBytes(node))
-    Files.move(tmp, refsFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    CowTable.atomicWrite(refsFile, mapper.writeValueAsBytes(node))
   }
 
   /** The distinct partition values present in a DataFrame — small by
@@ -786,6 +757,152 @@ class PartitionedCowTable(val root: String, val partCol: String,
     spark.read.schema(schema).option("recursiveFileLookup", "true")
       .parquet(s"$root/$stage")
 
+  /** What the manifest records about each dir of `stage`, by partition
+    * value, and the unit of each long-family zone-map column
+    * ([[Manifest.kinds]]):
+    *  - bytes: the dir's data files, listed (no job);
+    *  - zone maps for [[statsColumns]]: one pass in which each task
+    *    keeps, per partition value, its row count and each column's
+    *    (min, max) in Catalyst's internal form, and the collected
+    *    partials are merged. Internal values are the units a pushed
+    *    literal carries (micros for both timestamp types, days for
+    *    dates), so no conversion and no session time zone is involved;
+    *  - Bloom sidecars for [[bloomColumns]]: a second pass, sized by
+    *    those row counts, writes `_bloom_<col>.bf` into each stage dir,
+    *    and the claim's rename carries it along.
+    * The stage is read with an explicit schema that declares `__part` a
+    * string, which bypasses partition-type inference (SPARK-26188): a
+    * value such as `0123` stays raw, as its Entry.value does.
+    */
+  private def stagedRecords(stage: String, spec: String, schema: StructType)
+      : (Map[String, DirMeta], Map[String, String]) = {
+    val parts = listParts(stage, spec)
+    // the data files' bytes, by the name filter the index's listing
+    // applies, so plan-time sizeInBytes never needs a listing
+    val bytes = GraftFileIndex.inParallel(spark, parts) { e =>
+      val listing = Files.list(Paths.get(root, e.dir))
+      try e.value -> listing.iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith("_") &&
+          !p.getFileName.toString.startsWith("."))
+        .map(Files.size).sum
+      finally listing.close()
+    }.toMap
+    // each stats column records its bounds in the family its schema
+    // type picks; anything else is refused loudly (the EPSG precedent):
+    // a silently mis-unit'd zone map is a wrong-prune hazard, not a
+    // perf miss
+    val stats = statsColumns.filter(schema.fieldNames.contains).map { c =>
+      c -> (schema(c).dataType match {
+        case StringType => "str"
+        case DoubleType | FloatType => "dbl"
+        case TimestampType | TimestampNTZType => "micros"
+        case DateType => "days"
+        case ByteType | ShortType | IntegerType | LongType => "long"
+        case other => throw new IllegalArgumentException(
+          s"statsColumns: column '$c' has unsupported type " +
+            s"${other.simpleString} — supported: integral, string, " +
+            s"float/double, date, timestamp")
+      })
+    }
+    val blooms = bloomColumns.filter(schema.fieldNames.contains)
+    blooms.foreach { c =>
+      schema(c).dataType match {
+        case StringType | ByteType | ShortType | IntegerType | LongType => ()
+        case other => throw new IllegalArgumentException(
+          s"bloomColumns: column '$c' has unsupported type " +
+            s"${other.simpleString} — supported: integral, string" +
+            s" (equality point-lookups; ranges belong to statsColumns)")
+      }
+    }
+    val kinds = stats.collect { case (c, k @ ("micros" | "days")) => c -> k }.toMap
+    if (parts.isEmpty || stats.isEmpty && blooms.isEmpty)
+      return (bytes.map { case (v, b) => v -> DirMeta(bytes = Some(b)) },
+        Map.empty)
+    val src = spark.read.schema(schema.add("__part", StringType))
+      .parquet(s"$root/$stage")
+    val types = stats.map(c => schema(c._1).dataType)
+    val zones: Map[String, Zone] = {
+      val ords = types.map(TypeUtils.getInterpretedOrdering)
+      src.select((col("__part") +: stats.map(c => col(c._1))): _*)
+        .queryExecution.toRdd.mapPartitions { it =>
+          // each task builds its own orderings rather than receive them
+          val taskOrds = types.map(TypeUtils.getInterpretedOrdering)
+          val acc = scala.collection.mutable.HashMap.empty[String, Zone]
+          it.foreach { r =>
+            val z = acc.getOrElseUpdate(r.getUTF8String(0).toString,
+              new Zone(types.size))
+            z.rows += 1
+            for (i <- types.indices if !r.isNullAt(i + 1))
+              z.add(i, r.get(i + 1, types(i)), taskOrds(i))
+          }
+          acc.iterator
+        }.collect().toSeq.groupMapReduce(_._1)(_._2)(_.merge(_, ords))
+    }
+    // Bloom sidecars: per-task filters merged by (value, column) and
+    // written by the executors straight into their stage dir (an
+    // overwrite of 100k dirs would otherwise collect 100k × 512 KiB in
+    // one JVM); only the (value, column) keys come back, and an
+    // all-null column in a dir has no filter and stays unflagged.
+    // Values go in as the UTF-8 bytes of their string cast, the
+    // rendering the read side probes; nulls are skipped (equality with
+    // null never matches, so absence stays sound). Bits are capped at
+    // 2^22 (512 KiB): a huge dir degrades to a higher false-positive
+    // rate, never to an unbounded sidecar.
+    val sidecars: Map[String, Seq[String]] =
+      if (blooms.isEmpty) Map.empty
+      else {
+        val sizes = spark.sparkContext.broadcast(
+          zones.map { case (v, z) => v -> z.rows })
+        val dirs = spark.sparkContext.broadcast(
+          parts.map(e => e.value -> s"$root/${e.dir}").toMap)
+        src.select((col("__part") +: blooms.map(c => col(c).cast("string"))): _*)
+          .queryExecution.toRdd.mapPartitions { it =>
+            val acc = scala.collection.mutable.HashMap.empty[(String, Int),
+              org.apache.spark.util.sketch.BloomFilter]
+            it.foreach { r =>
+              val part = r.getUTF8String(0).toString
+              for (i <- blooms.indices if !r.isNullAt(i + 1))
+                acc.getOrElseUpdate((part, i), {
+                  val rows = math.max(1L, sizes.value(part))
+                  // m = -n ln(p) / (ln 2)^2, p = 1e-9 — a thousandfold
+                  // under the usual 1e-6: the sketch's 32-bit double
+                  // hashing runs above its theoretical rate on small
+                  // filters, and bits are cheap at metadata grain
+                  org.apache.spark.util.sketch.BloomFilter.create(rows,
+                    math.min(1L << 22, math.max(64L,
+                      math.ceil(rows * 43.133).toLong)))
+                }).putBinary(r.getUTF8String(i + 1).getBytes)
+            }
+            acc.iterator
+          }.reduceByKey { (a, b) => a.mergeInPlace(b); a }
+          .map { case ((part, i), bf) =>
+            // idempotent (create+truncate): a task retry or a
+            // speculative twin rewrites identical bytes
+            val out = Files.newOutputStream(
+              Paths.get(dirs.value(part), s"_bloom_${blooms(i)}.bf"))
+            try bf.writeTo(out) finally out.close()
+            part -> blooms(i)
+          }.collect().toSeq.groupMap(_._1)(_._2).map { case (v, cs) =>
+            v -> cs.sorted }
+      }
+    (parts.map { e =>
+      val z = zones(e.value)
+      // one (min, max) per column of the given families with a value
+      def bounds[A](fams: Set[String], as: Any => A): Map[String, (A, A)] =
+        stats.indices.collect { case i if fams(stats(i)._2) &&
+          z.lo(i) != null => stats(i)._1 -> (as(z.lo(i)), as(z.hi(i)))
+        }.toMap
+      e.value -> DirMeta(
+        stats = bounds(Set("long", "micros", "days"),
+          _.asInstanceOf[Number].longValue),
+        sstats = bounds(Set("str"), _.toString),
+        dstats = bounds(Set("dbl"), _.asInstanceOf[Number].doubleValue),
+        bytes = Some(bytes(e.value)),
+        blooms = sidecars.getOrElse(e.value, Seq.empty))
+    }.toMap, kinds)
+  }
+
   /** Test seam: fires after the commit's data is staged, before the
     * claim/publish loop — the window where a competing writer's full
     * commit lands between this writer's base snapshot and its pointer
@@ -816,16 +933,13 @@ class PartitionedCowTable(val root: String, val partCol: String,
     if (mc.spec != mb.spec) return None
     if (mc.defaults != mb.defaults) return None
     if (mc.kinds != mb.kinds) return None
-    val eb = mb.entries.map(e => (e.pcol, e.value) -> e.dir).toMap
-    val ec = mc.entries.map(e => (e.pcol, e.value) -> e.dir).toMap
-    val changed = (eb.keySet ++ ec.keySet).filter { k =>
-      eb.get(k) != ec.get(k) ||
-        eb.get(k).map(mb.dir(_).dvs) != ec.get(k).map(mc.dir(_).dvs)
-    }
-    if ((changed & affected).nonEmpty) None
-    else Some(mc.entries.filter(e =>
-      changed((e.pcol, e.value)) &&
-        !eb.get((e.pcol, e.value)).contains(e.dir)))
+    val (changed, removed) = mc.changedFrom(mb, e => (e.pcol, e.value))
+    // the spec is unchanged, so a dir `mb` does not reference is new or
+    // re-pointed content, and an entry keeping its dir changed only its
+    // deletion vectors
+    val had = mb.entries.map(_.dir).toSet
+    if (((changed ++ removed) & affected).nonEmpty) None
+    else Some(mc.entries.filterNot(e => had(e.dir)))
   }
 
   /** Core commit: publish the rows staged in `stage` as the new
@@ -837,9 +951,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * STAGE-FIRST: the caller has already written every row of the
     * touched partitions into `stage` (see [[staging]]) — usually the
     * delta first, read back by listing for the touched set, then the
-    * rows that carry forward — so the caller's plan is evaluated once
-    * and this method starts no job of its own except the optional
-    * zone-map and bloom passes over the written dirs.
+    * rows that carry forward — so the caller's plan is evaluated once.
+    * Before it claims a data dir, this method builds the staged dirs'
+    * records once ([[stagedRecords]]: bytes, plus the zone-map and
+    * Bloom passes when the table declares such columns); the
+    * claim/publish loop starts no job, and a rebase renames the dirs
+    * and keeps their records.
     *
     * PINNED BASE: `base0` is the version the mutation snapshotted when
     * it started; its read, its carried entries and the schema the
@@ -897,6 +1014,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
         (m0.map(_.entries).getOrElse(Seq.empty)
           .map(e => (e.pcol, e.value)).toSet --
           carried.map(e => (e.pcol, e.value)).toSet)
+    // built once: a rebase renames the dirs and keeps their records
+    val (records, kinds) = stagedRecords(stage, spec, dataSchema)
     // the stage has a writer-unique name; claim w_<next> with a
     // no-replace rename (see CowTable.commit): two writers racing from
     // the same base both target w_<next>, and the loser's overwrite
@@ -945,11 +1064,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
       base = cur
       attempts += 1
     }
-    // The whole publish step for one claimed data dir: list written
-    // entries, aggregate zone maps and byte counts, write the
-    // manifest. Returns true when committed; a version race inside
-    // publish rebases (when sound) and returns false so the
-    // claim/publish loop below re-claims under the new base.
+    // The whole publish step for one claimed data dir: list it, attach
+    // each dir's record by partition value and write the manifest. No
+    // job: the records were built from the stage above. Returns true
+    // when committed; a version race inside publish rebases (when
+    // sound) and returns false so the claim/publish loop below
+    // re-claims under the new base.
     def publishAttempt(wdir: String): Boolean = {
       val next = base.map(_ + 1).getOrElse(0)
       val written: Seq[Entry] = listParts(wdir, spec)
@@ -963,258 +1083,15 @@ class PartitionedCowTable(val root: String, val partCol: String,
       // carried dirs keep their records verbatim: zone maps, bytes and
       // blooms (unchanged bytes, unchanged metadata), and deletion
       // vectors (rewritten dirs read THROUGH their vectors above, so
-      // the rewrite materialized them); freshly-written dirs get ONE
-      // footer-sized aggregate over the new files. Zero jobs when
-      // statsColumns is empty. Read from `base` — the version this
-      // attempt publishes against.
+      // the rewrite materialized them). Read from `base` — the version
+      // this attempt publishes against.
       val bm = base.map(manifestAt)
         .getOrElse(Manifest(dataSchema, spec, Seq.empty))
-      // per-dir data bytes from the just-written local files (the same
-      // name filter the index's listing applies) — recorded so plan-time
-      // sizeInBytes never needs a listing
-      val writtenBytes: Map[String, Long] = {
-        def sizeOf(dir: String): Long = {
-          val listing = Files.list(Paths.get(root, dir))
-          try listing.iterator().asScala
-            .filter(p => Files.isRegularFile(p) &&
-              !p.getFileName.toString.startsWith("_") &&
-              !p.getFileName.toString.startsWith("."))
-            .map(Files.size).sum
-          finally listing.close()
-        }
-        // wide commits (overwrite/compact at 100k dirs) fan the per-
-        // dir listing through the shared I/O pool — serial driver
-        // listings at ~50 ms/dir on object storage would make the
-        // byte ledger the commit wall; narrow commits stay serial
-        if (written.size <= 32) written.map(e => e.dir -> sizeOf(e.dir)).toMap
-        else {
-          val fs = written.map(e => e.dir ->
-            GraftFileIndex.listPool.submit(
-              new java.util.concurrent.Callable[Long] {
-                override def call(): Long = sizeOf(e.dir)
-              }))
-          fs.map { case (d, f) =>
-            try d -> f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
-          }.toMap
-        }
-      }
-      // Bloom sidecars for declared bloomColumns: ONE executor-side
-      // pass over the just-written dirs builds a per-(dir, column)
-      // filter (per-partition HashMap build, then a (dir,col)-keyed
-      // merge — never a collect of values), each written as
-      // `_bloom_<col>.bf` INSIDE its data dir. Values are inserted as
-      // their cast-to-string UTF-8 bytes (the rendering the read side
-      // probes); nulls are skipped (equality with null never matches,
-      // so absence stays sound). Bits per filter are sized for fpp
-      // 1e-6 and CAPPED at 2^22 (512 KiB) — a huge dir degrades to a
-      // higher false-positive rate, never to an unbounded sidecar.
-      val writtenBlooms: Map[String, Seq[String]] =
-        if (bloomColumns.isEmpty || written.isEmpty) Map.empty
-        else {
-          val cols = bloomColumns.filter(dataSchema.fieldNames.contains)
-          cols.foreach { c =>
-            dataSchema(c).dataType match {
-              case StringType | ByteType | ShortType | IntegerType |
-                   LongType => ()
-              case other => throw new IllegalArgumentException(
-                s"bloomColumns: column '$c' has unsupported type " +
-                  s"${other.simpleString} — supported: integral, string" +
-                  s" (equality point-lookups; ranges belong to " +
-                  s"statsColumns)")
-            }
-          }
-          if (cols.isEmpty) Map.empty
-          else {
-            val infKey =
-              "spark.sql.sources.partitionColumnTypeInference.enabled"
-            val infPrev = spark.conf.get(infKey, "true")
-            val writtenKeys: Array[(String, Int)] =
-              try {
-                spark.conf.set(infKey, "false")
-                val src = spark.read.parquet(s"$root/$wdir")
-                  .select((col("__part").cast("string").as("__part") +:
-                    cols.map(c => col(c).cast("string").as(c))): _*)
-                val sizes = src.groupBy("__part")
-                  .agg(count(lit(1)).as("n")).collect()
-                  .map(r => r.getString(0) -> r.getLong(1)).toMap
-                val bSizes = spark.sparkContext.broadcast(sizes)
-                // value -> dir for the sidecar write; tiny (touched
-                // dirs only), broadcast so EXECUTORS write each
-                // filter straight into its dir — the merged filters
-                // never visit the driver (an overwrite of 100k dirs
-                // would otherwise collect 100k × 512 KiB there), only
-                // the (dir, column) key list comes back
-                val bDirs = spark.sparkContext.broadcast(
-                  written.map(e => e.value -> e.dir).toMap)
-                val bCols = spark.sparkContext.broadcast(cols)
-                val rootStr = root
-                val nCols = cols.size
-                src.rdd.mapPartitions { it =>
-                  val acc = scala.collection.mutable.HashMap.empty[
-                    (String, Int),
-                    org.apache.spark.util.sketch.BloomFilter]
-                  it.foreach { r =>
-                    val part = r.getString(0)
-                    var i = 0
-                    while (i < nCols) {
-                      if (!r.isNullAt(i + 1)) {
-                        val bf = acc.getOrElseUpdate((part, i), {
-                          val n = math.max(1L,
-                            bSizes.value.getOrElse(part, 1L))
-                          // m = -n ln(p) / (ln 2)^2, p = 1e-9 — sized
-                          // a thousandfold under the usual 1e-6: the
-                          // sketch's 32-bit double hashing runs above
-                          // its theoretical rate on small filters, and
-                          // bits are cheap at metadata grain
-                          val bits = math.min(1L << 22, math.max(64L,
-                            math.ceil(n * 43.133).toLong))
-                          org.apache.spark.util.sketch.BloomFilter
-                            .create(n, bits)
-                        })
-                        bf.putBinary(r.getString(i + 1)
-                          .getBytes(UTF_8))
-                      }
-                      i += 1
-                    }
-                  }
-                  acc.iterator
-                }.reduceByKey { (a, b) => a.mergeInPlace(b); a }
-                  .map { case ((part, ci), bf) =>
-                    // idempotent (create+truncate): a task retry or a
-                    // speculative twin rewrites identical bytes
-                    bDirs.value.get(part).foreach { d =>
-                      val out = Files.newOutputStream(Paths.get(
-                        rootStr, d, s"_bloom_${bCols.value(ci)}.bf"))
-                      try bf.writeTo(out) finally out.close()
-                    }
-                    (part, ci)
-                  }.collect()
-              } finally spark.conf.set(infKey, infPrev)
-            // flag per (dir, column) actually written — an all-null
-            // column in a dir has no filter and stays unflagged
-            val presentCols: Map[String, Seq[String]] =
-              writtenKeys.groupBy(_._1).map { case (p, ks) =>
-                p -> ks.map(k => cols(k._2)).toSeq.sorted }
-            written.flatMap(e =>
-              presentCols.get(e.value).map(e.dir -> _)).toMap
-          }
-        }
-      // Each stats column records its bounds in the family its SCHEMA
-      // TYPE picks — and in Catalyst INTERNAL units for the long
-      // family, so a pushed literal's raw value compares directly:
-      //   string       → lexicographic (min, max) strings
-      //   float/double → (min, max) doubles
-      //   timestamp    → (min, max) micros-since-epoch ("micros")
-      //   date         → (min, max) days-since-epoch  ("days")
-      //   integral     → (min, max) longs             ("long")
-      // Anything else is REFUSED LOUDLY at commit (the EPSG precedent):
-      // a silently mis-unit'd zone map is a wrong-prune hazard, not a
-      // perf miss. One footer-sized aggregate covers all families.
-      def statFamily(c: String): String = {
-        val f = dataSchema(c)
-        f.dataType match {
-          case StringType => "str"
-          case DoubleType | FloatType => "dbl"
-          case TimestampType => "micros"
-          // TIMESTAMP_NTZ's internal value IS naive micros-since-epoch
-          // — same unit as a pushed NTZ literal; recorded through a
-          // UTC-pinned cast below so the stats job is session-zone-
-          // independent
-          case TimestampNTZType => "ntzmicros"
-          case DateType => "days"
-          case ByteType | ShortType | IntegerType | LongType => "long"
-          case other => throw new IllegalArgumentException(
-            s"statsColumns: column '$c' has unsupported type " +
-              s"${other.simpleString} — supported: integral, string, " +
-              s"float/double, date, timestamp")
-        }
-      }
-      // (partition value → its zone maps, column → recorded kind)
-      val (zones, writtenKinds)
-          : (Map[String, DirMeta], Map[String, String]) =
-        if (statsColumns.isEmpty || written.isEmpty) (Map.empty, Map.empty)
-        else {
-          val cols = statsColumns.filter(dataSchema.fieldNames.contains)
-          val fam = cols.map(c => c -> statFamily(c)).toMap
-          if (cols.isEmpty) (Map.empty, Map.empty)
-          else {
-            val aggs = cols.flatMap { c =>
-              val e = fam(c) match {
-                case "str" => col(c)
-                case "dbl" => col(c).cast("double")
-                case "micros" => expr(s"unix_micros(`$c`)")
-                // the UTC-pinned session tz (set around the job below)
-                // makes cast(ntz as timestamp) preserve the naive
-                // micros exactly — the unit a pushed NTZ literal carries
-                case "ntzmicros" =>
-                  expr(s"unix_micros(cast(`$c` as timestamp))")
-                case "days" => expr(s"unix_date(`$c`)").cast("long")
-                case _ => col(c).cast("long")
-              }
-              Seq(min(e).as(s"__mn_$c"), max(e).as(s"__mx_$c"))
-            }
-            // partition-type inference must be OFF for this read: the
-            // stats rows key on the RAW __part string (matched against
-            // Entry.value), and inference would coerce e.g. '0123' to
-            // int 123 or an ISO date to DateType — a normalized
-            // rendering that never matches the raw value, silently
-            // dropping the dir's zone map. Toggle the conf just around
-            // the (eagerly collected) job.
-            val infKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-            val infPrev = spark.conf.get(infKey, "true")
-            val tzKey = "spark.sql.session.timeZone"
-            val tzPrev = spark.conf.get(tzKey)
-            val rows =
-              try {
-                spark.conf.set(infKey, "false")
-                // UTC-pin the NTZ→timestamp cast (no-op for every other
-                // family): recorded ntz bounds must be session-zone-
-                // independent or a reader in another zone wrong-prunes
-                spark.conf.set(tzKey, "UTC")
-                spark.read.parquet(s"$root/$wdir")
-                  .groupBy(col("__part").cast("string").as("__part"))
-                  .agg(aggs.head, aggs.tail: _*)
-                  .collect()
-              } finally {
-                spark.conf.set(infKey, infPrev)
-                spark.conf.set(tzKey, tzPrev)
-              }
-            (rows.map { r =>
-              // one (min, max) per non-null column of the given families
-              def bounds[A](fs: String*): Map[String, (A, A)] =
-                cols.filter(c => fs.contains(fam(c)) &&
-                    !r.isNullAt(r.fieldIndex(s"__mn_$c")))
-                  .map(c => c -> (r.getAs[A](s"__mn_$c"),
-                    r.getAs[A](s"__mx_$c"))).toMap
-              r.getAs[String]("__part") -> DirMeta(
-                stats = bounds[Long]("long", "micros", "ntzmicros", "days"),
-                sstats = bounds[String]("str"),
-                dstats = bounds[Double]("dbl"))
-            }.toMap,
-             cols.flatMap(c => fam(c) match {
-               case k @ ("micros" | "days") => Some(c -> k)
-               // both timestamp flavors record micros; the literal a
-               // reader pushes for the column carries the SAME flavor
-               // as the column's (fixed) schema type, so one persisted
-               // kind serves both
-               case "ntzmicros" => Some(c -> "micros")
-               case _ => None
-             }).toMap)
-          }
-        }
-      val writtenDirs = written.map { e =>
-        e.dir -> zones.getOrElse(e.value, DirMeta()).copy(
-          bytes = Some(writtenBytes(e.dir)),
-          blooms = writtenBlooms.getOrElse(e.dir, Seq.empty))
-      }
       try {
         publish(next, bm.copy(schema = dataSchema, spec = spec,
           entries = kept ++ written, defaults = defaults,
-          kinds = bm.kinds ++ writtenKinds, dirs = bm.dirs ++ writtenDirs))
+          kinds = bm.kinds ++ kinds,
+          dirs = bm.dirs ++ written.map(e => e.dir -> records(e.value))))
         true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1270,10 +1147,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     val live = m.entries.map(_.dir).toSet
     Files.write(versionFile(v),
       m.copy(dirs = m.dirs.filter { case (d, _) => live(d) }).encode)
-    val tmp = Paths.get(root, s"_current.tmp.$v")
-    Files.write(tmp, v.toString.getBytes(UTF_8))
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    CowTable.atomicWrite(pointer, v.toString.getBytes(UTF_8))
   }
 
   /** Switch the partition spec for future writes — a METADATA-ONLY
@@ -2075,9 +1949,12 @@ object PartitionedCowTable {
     *
     * @param stats  integral ZONE MAPS: column → (min, max) for the
     *   [[statsColumns]] of integral, timestamp and date type, in
-    *   Catalyst INTERNAL units (see [[Manifest.kinds]]). One extra
-    *   aggregate over just-written dirs — zero cost when statsColumns
-    *   is empty. [[GraftFileIndex]] prunes on them at plan time, so a
+    *   Catalyst INTERNAL units (see [[Manifest.kinds]]). Built with the
+    *   rest of the record from the commit's stage, before it claims a
+    *   data dir, by one pass over the staged files — none when
+    *   statsColumns and bloomColumns are empty
+    *   ([[PartitionedCowTable.stagedRecords]]). [[GraftFileIndex]]
+    *   prunes on them at plan time, so a
     *   plain `read().filter(...)` opens only intersecting dirs; a dir
     *   with no recorded stats for a column is kept conservatively.
     * @param sstats STRING zone maps (ISO dates, month keys, status
@@ -2156,6 +2033,20 @@ object PartitionedCowTable {
                               kinds: Map[String, String] = Map.empty,
                               dirs: Map[String, DirMeta] = Map.empty) {
     def dir(d: String): DirMeta = dirs.getOrElse(d, DirMeta())
+
+    /** The manifest diff from `old`, at the grain `key` picks (the
+      * partition value, the dir, or (spec column, value)): (changed,
+      * removed), where a key is changed when its entry's (dir, deletion
+      * vectors) identity here differs from `old`'s or is new, and
+      * removed when `old` has it and this manifest does not.
+      */
+    def changedFrom[K](old: Manifest, key: Entry => K): (Set[K], Set[K]) = {
+      def ids(m: Manifest) =
+        m.entries.map(e => key(e) -> (e.dir, m.dir(e.dir).dvs)).toMap
+      val (was, now) = (ids(old), ids(this))
+      (now.collect { case (k, id) if !was.get(k).contains(id) => k }.toSet,
+        was.keySet -- now.keySet)
+    }
 
     def encode: Array[Byte] = {
       val node = mapper.createObjectNode()
@@ -2265,6 +2156,28 @@ object PartitionedCowTable {
         }.toMap,
         fields("statskinds").map { case (c, k) => c -> k.asText() }.toMap,
         dirs)
+    }
+  }
+
+  /** One partition value's row count and, per stats column, its
+    * (min, max) in Catalyst's internal form by Spark's own ordering;
+    * null bounds for a column with no non-null value.
+    */
+  private final class Zone(n: Int) extends Serializable {
+    var rows = 0L
+    val lo, hi = new Array[Any](n)
+
+    def add(i: Int, v: Any, ord: Ordering[Any]): Unit = if (v != null) {
+      // a string read from a row points into the row's reused buffer
+      def own = v match { case s: UTF8String => s.clone(); case x => x }
+      if (lo(i) == null || ord.lt(v, lo(i))) lo(i) = own
+      if (hi(i) == null || ord.gt(v, hi(i))) hi(i) = own
+    }
+
+    def merge(o: Zone, ords: Seq[Ordering[Any]]): Zone = {
+      rows += o.rows
+      for (i <- ords.indices) { add(i, o.lo(i), ords(i)); add(i, o.hi(i), ords(i)) }
+      this
     }
   }
 

@@ -83,6 +83,29 @@ class IncrementalRollupSpec extends SparkSpec {
     assert(ru.syncedVersion.contains(t.version))
   }
 
+  test("the sync checkpoint is written atomically over a torn file and " +
+    "read as JSON; a torn file fails loudly, naming it") {
+    implicit val s = spark
+    val (t, ru, root) = mk()
+    ru.refresh()
+    val sync = Paths.get(s"$root/s", "_rollup_sync.json")
+    // what a crash in the middle of a plain write could leave behind
+    Files.write(sync, "{\"ba".getBytes("UTF-8"))
+    val err = intercept[IllegalStateException](ru.syncedVersion)
+    assert(err.getMessage.contains(sync.toString))
+    CowTable.syncBase(sync, t.version)
+    assert(ru.syncedVersion.contains(t.version))
+    assert(new String(Files.readAllBytes(sync), "UTF-8") ===
+      s"""{"base":${t.version}}""")
+    import scala.jdk.CollectionConverters._
+    val listing = Files.list(sync.getParent)
+    try assert(!listing.iterator().asScala
+      .exists(_.getFileName.toString.contains(".tmp.")))
+    finally listing.close()
+    // the refresh reads the rewritten checkpoint: nothing to do
+    assert(ru.refresh() === ((t.version, 0, 0, (0L, 0L, 0L))))
+  }
+
   test("multi-dim rollup (partition col + another dim): groups stay " +
     "partition-confined, a refresh re-aggregates one month's groups " +
     "and leaves the rest carried") {

@@ -1865,6 +1865,124 @@ class PartitionedCowTableSpec extends SparkSpec {
     assert(t.read().count() === 3L)
     assert(t.orphanReport === ((0L, 0L, 0L, 0L)))
   }
+
+  // ---- dir records: zone maps, Bloom sidecars and bytes ----
+
+  private def manifestTree(t: PartitionedCowTable, v: Int) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Paths.get(t.root, f"v_$v%06d.json").toFile)
+
+  test("TIMESTAMP_NTZ zone maps record naive micros: tables written " +
+    "under two session time zones record the same bounds and prune the " +
+    "same dirs under a third") {
+    def ntz(v: String) = java.time.LocalDateTime.parse(v)
+    val rows = Seq(
+      (1L, "2020-03", ntz("2020-03-05T10:00:00")),
+      (2L, "2020-03", ntz("2020-03-28T23:30:00")),
+      (3L, "2020-04", ntz("2020-04-07T10:00:00")),
+      (4L, "2020-05", ntz("2020-05-09T10:00:00")))
+    val tzKey = "spark.sql.session.timeZone"
+    def underZone[T](tz: String)(f: => T): T = {
+      spark.conf.set(tzKey, tz)
+      try f finally spark.conf.set(tzKey, "UTC")
+    }
+    val tables = Seq("America/Los_Angeles", "Asia/Tokyo").map { tz =>
+      underZone(tz) {
+        val t = new PartitionedCowTable(tempDir("pcow_ntz") + "/t", "month",
+          spark, statsColumns = Seq("ets"))
+        t.overwrite(rows.toDF("pid", "month", "ets"))
+        t
+      }
+    }
+    val Seq(la, tokyo) = tables.map(manifestTree(_, 0))
+    assert(la.get("stats") == tokyo.get("stats"))
+    assert(la.get("statskinds").get("ets").asText() === "micros")
+    val naive = ntz("2020-03-05T10:00:00")
+      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    assert(la.get("stats").toString.contains(naive.toString))
+    for (t <- tables; tz <- Seq("UTC", "Pacific/Auckland")) underZone(tz) {
+      assert(t.read().filter($"ets" >= lit(ntz("2020-04-01T00:00:00")) &&
+        $"ets" < lit(ntz("2020-05-01T00:00:00"))).count() === 1)
+      assert(t.autoPruneLedger === ((3, 1)))
+    }
+  }
+
+  test("a partition value that reads as a number (0123) stays raw and " +
+    "keeps its zone map") {
+    val t = new PartitionedCowTable(tempDir("pcow_raw") + "/t", "code",
+      spark, statsColumns = Seq("k"))
+    t.overwrite(Seq((1L, "0123", 10L), (2L, "0123", 20L),
+      (3L, "0456", 100L), (4L, "2020-05-01", 1000L))
+      .toDF("pid", "code", "k"))
+    assert(t.manifest.keySet === Set("0123", "0456", "2020-05-01"))
+    import scala.jdk.CollectionConverters._
+    assert(manifestTree(t, 0).get("stats").fieldNames().asScala.toSet ===
+      t.manifest.values.toSet)
+    assert(t.read().filter(col("k").between(15L, 30L))
+      .select("pid").as[Long].collect().toSeq === Seq(2L))
+    assert(t.autoPruneLedger === ((3, 1)))
+  }
+
+  test("a commit's dir records cost one aggregate over the stage for " +
+    "zone maps and Bloom sizes plus one Bloom pass; bytes alone cost no " +
+    "job") {
+    val rows = Seq((1L, "2020-03", "a"), (2L, "2020-03", "b"),
+      (3L, "2020-04", "c")).toDF("pid", "month", "tag")
+    def commitJobs(stats: Seq[String], blooms: Seq[String]): Int = {
+      val t = new PartitionedCowTable(tempDir("pcow_rec") + "/t", "month",
+        spark, statsColumns = stats, bloomColumns = blooms)
+      jobs(t.overwrite(rows))
+    }
+    val write = commitJobs(Nil, Nil) // the stage write alone
+    val cols = Seq("pid", "tag")
+    assert((commitJobs(cols, Nil) - write, commitJobs(Nil, cols) - write,
+      commitJobs(cols, cols) - write) === ((1, 2, 2)))
+  }
+
+  test("a rebased commit records the same zone maps and Blooms as an " +
+    "unraced one and runs no job again") {
+    def table(): PartitionedCowTable = {
+      val t = new PartitionedCowTable(tempDir("pcow_rb") + "/t", "month",
+        spark, statsColumns = Seq("k", "tag"), bloomColumns = Seq("pid"))
+      t.overwrite(Seq((1L, "2020-03", 10L, "a"), (2L, "2020-04", 20L, "b"))
+        .toDF("pid", "month", "k", "tag"))
+      t
+    }
+    val add = Seq((5L, "2020-06", 50L, "e"), (6L, "2020-06", 60L, "f"))
+      .toDF("pid", "month", "k", "tag")
+    val (raced, plain) = (table(), table())
+    // the winner only attaches a deletion vector, so the loser claims
+    // w_000001, loses the version race at publish and rebases: its dir
+    // is renamed to w_000002 and published again. The winner's jobs
+    // are counted apart from the loser's
+    val rival = new PartitionedCowTable(raced.root, "month", spark)
+    raced.commitSeam = () => {
+      raced.commitSeam = () => ()
+      jobs(rival.deleteWhereDV(col("pid") === 1L, Seq("pid")))
+    }
+    val racedJobs = jobs(raced.append(add))
+    plain.deleteWhereDV(col("pid") === 1L, Seq("pid"))
+    val plainJobs = jobs(plain.append(add))
+    assert(raced.version === 2 && plain.version === 2)
+    assert(racedJobs === plainJobs)
+    val dir = raced.manifest("2020-06")
+    assert(dir === plain.manifest("2020-06"))
+    def record(t: PartitionedCowTable) = {
+      val n = manifestTree(t, 2)
+      Seq("stats", "sstats", "blooms", "bytes").map(k => n.get(k).get(dir)) :+
+        n.get("statskinds")
+    }
+    assert(record(raced) === record(plain))
+    assert(Files.exists(java.nio.file.Paths.get(raced.root, dir,
+      "_bloom_pid.bf")))
+    // the renamed dir's Bloom and zone maps prune as the unraced one's
+    def probes(t: PartitionedCowTable) =
+      Seq($"pid" === 6L, $"pid" === 2L, $"k" >= 40L, $"tag" < "c").map { p =>
+        (t.read().filter(p).count(), t.autoPruneLedger)
+      }
+    assert(probes(raced) === probes(plain))
+    assert(probes(raced).map(_._1) === Seq(1L, 1L, 2L, 1L))
+  }
 }
 
 /** Simulates a competing writer's COMPLETED commit firing from inside

@@ -63,15 +63,18 @@ class StatePartitionSizingSpec extends SparkSpec {
       .unset("spark.graft.stream.bytesPerStatePartition")
   }
 
-  test("a malformed override degrades to the 8 MB default instead of " +
-    "throwing from inside every gate (r14 advice)") {
+  test("a malformed override fails loudly, naming key and value") {
     val dir = dirWithBytes(100 * 1024)
     spark.conf.set("spark.graft.stream.bytesPerStatePartition",
       "eight-megabytes")
-    try assert(graft.queries.StreamingQueries
-      .statePartitionsFor(spark, Seq(dir)) === 1)
-    finally spark.conf
-      .unset("spark.graft.stream.bytesPerStatePartition")
+    val err =
+      try intercept[IllegalArgumentException](graft.queries.StreamingQueries
+        .statePartitionsFor(spark, Seq(dir)))
+      finally spark.conf
+        .unset("spark.graft.stream.bytesPerStatePartition")
+    assert(err.getMessage.contains(
+      "spark.graft.stream.bytesPerStatePartition") &&
+      err.getMessage.contains("eight-megabytes"))
   }
 
   // r15: the same rule applied to iterative-graph edge tables
@@ -91,11 +94,14 @@ class StatePartitionSizingSpec extends SparkSpec {
       (if (cur >= 4) math.min(5, cur) else 1))
     assert(graft.operators.ScaleOps.edgeWidth(spark, 1L << 40) ===
       (if (cur >= 4) cur else 1))
-    // malformed override degrades to the default, like the streaming
-    // knob
+    // a malformed override fails loudly, like the streaming knob
     spark.conf.set("spark.graft.graph.bytesPerEdgePartition", "lots")
-    try assert(graft.operators.ScaleOps.edgeWidth(spark, 100 * 1024) === 1)
-    finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
+    val err =
+      try intercept[IllegalArgumentException](
+        graft.operators.ScaleOps.edgeWidth(spark, 100 * 1024))
+      finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
+    assert(err.getMessage.contains("spark.graft.graph.bytesPerEdgePartition")
+      && err.getMessage.contains("'lots'"))
   }
 
   test("edgeWidth: per-partition byte target is conf-overridable; " +
